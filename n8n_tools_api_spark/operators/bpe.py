@@ -135,9 +135,9 @@ def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2,
     mat = RoundMaterializer(checkpoint_dir)
     # eager=False throughout the loop: each round's cut materializes
     # inside the NEXT round's argmax job instead of paying its own job
-    # (guide §1.2 — the loop is job-count-bound at vocabulary scale),
-    # and the final round's never-consumed cut never materializes at
-    # all. Reliable mode (checkpoint_dir=) stays eager by construction.
+    # (guide §1.2 — the loop is job-count-bound at vocabulary scale).
+    # The final merge builds no cut: nothing reads its words, and
+    # reliable mode (checkpoint_dir=) would write them eagerly.
     # Safe ordering: argmax r+1 materializes words_{r+1} while its
     # parent words_r blocks still exist (release() is a local-mode
     # no-op), so the lazy chain never recomputes a truncated lineage.
@@ -157,6 +157,8 @@ def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2,
         row = best[0]
         merges.append((r, row["left"], row["right"],
                        row["left"] + row["right"], row["pair_count"]))
+        if r == n_merges - 1:
+            break
         tag = f"bpe_round{r + 1}"
         words = mat(
             words.select(

@@ -24,12 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str,
-       rescue: bool = True) -> DataFrame:
-    from n8n_tools_api_spark.sources.tables import read_sf_table
-
-    return read_sf_table(spark, sf_dir, name, rescue=rescue)
+from n8n_tools_api_spark.sources.tables import read_sf_table as _t
 
 
 # exact-decimal money sum: deterministic under any partitioning
@@ -148,12 +143,8 @@ ORDER BY r_name, n_name
 def q10_returned_items(spark, sf_dir):
     """TPC-H Q10 analog: returned-item revenue per customer, top 20."""
     cust = _t(spark, sf_dir, "customer")
-    # rescue="force" on both join sides: the sort-merge map work
-    # (hash+serialize both shuffles) otherwise runs on the input's few
-    # row groups (interleaved A/B at the 10x dataset: 2.09 s -> 1.41 s)
-    orders = _t(spark, sf_dir, "orders", rescue="force")
-    li = _t(spark, sf_dir, "lineitem", rescue="force") \
-        .where(F.col("l_returnflag") == "R")
+    orders = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -229,12 +220,7 @@ def nation_revenue_rollup(spark, sf_dir):
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
     cust = _t(spark, sf_dir, "customer")
-    # rescue="force": the rollup triples every row through three
-    # grouping sets of overflow-checked decimal partial sums — that
-    # CPU-dense map side must not stay pinned to the input's few row
-    # groups (interleaved A/B at the 10x dataset: 2.95 s -> 1.47 s;
-    # simple scan+agg queries measured NO win, so this stays per-query)
-    orders = _t(spark, sf_dir, "orders", rescue="force")
+    orders = _t(spark, sf_dir, "orders")
     return (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -452,7 +438,7 @@ ORDER BY doc_id
 
 def exact_dedup_stats(spark, sf_dir):
     """Exact dedup (hash-groupBy): corpus-level duplication summary."""
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents")
     return docs.agg(
         F.count("*").alias("total_docs"),
         F.countDistinct(F.md5(F.col("text").cast("binary"))).alias("distinct_texts"),
@@ -1179,7 +1165,7 @@ def doc_language_scores(spark, sf_dir):
     reference order (ocr_response_formatter.py:667-713)."""
     from n8n_tools_api_spark.operators.textstats import detect_language
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
+    docs = _t(spark, sf_dir, "documents", below=300)
     return (
         detect_language(docs)
         .select("doc_id", "detected", "confidence")
@@ -1379,13 +1365,13 @@ def stream_dedup_first_seen(spark, sf_dir):
     from n8n_tools_api_spark.streaming import dedup_batch_twin
 
     base_ts = F.to_timestamp(F.lit("2024-06-01 12:00:00"))
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200).select(
+    docs = _t(spark, sf_dir, "documents", below=200).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         (base_ts + F.make_interval(mins=F.col("doc_id").cast("int")))
         .alias("event_time"),
         "text",
     )
-    dups = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 50).select(
+    dups = _t(spark, sf_dir, "documents", below=50).select(
         F.concat(F.lit("dup_"), F.col("doc_id").cast("string")).alias("doc_id"),
         (base_ts + F.make_interval(mins=(F.col("doc_id") + 500).cast("int")))
         .alias("event_time"),
@@ -1539,7 +1525,7 @@ def processing_info_rollup(spark, sf_dir):
     duration 'unknown' path and the model default."""
     from n8n_tools_api_spark.operators.formatter import processing_info
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
+    docs = _t(spark, sf_dir, "documents", below=200)
     metrics = docs.select(
         F.col("doc_id").alias("req_id"),
         ((F.col("doc_id") % 40) * 1000).cast("double").alias("processing_time_ms"),
@@ -1600,7 +1586,7 @@ def url_landing(spark, sf_dir):
     whole ladder on hex strings."""
     from n8n_tools_api_spark.operators.landing import url_landing_plan
 
-    docs = _t(spark, sf_dir, "documents", rescue=False).where(F.col("doc_id") < 240)
+    docs = _t(spark, sf_dir, "documents", below=240)
     m = (F.col("doc_id") % 12).cast("int")
     did = F.col("doc_id").cast("string")
     url = (
@@ -1795,7 +1781,7 @@ def media_resize_plan(spark, sf_dir):
         resize_plan,
     )
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
+    docs = _t(spark, sf_dir, "documents", below=300)
     w = (64 + (F.col("doc_id") * 37) % 1200).cast("bigint")
     h = (48 + (F.col("doc_id") * 53) % 900).cast("bigint")
     color = F.element_at(F.array(F.lit(0), F.lit(2), F.lit(3), F.lit(4),
@@ -1853,7 +1839,7 @@ def media_frame_samples(spark, sf_dir):
     the cap's frames_dropped accounting."""
     from n8n_tools_api_spark.operators.multimodal import sample_frames
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
+    docs = _t(spark, sf_dir, "documents", below=200)
     n_bytes = (256 + (F.col("doc_id") * 97) % 16384).cast("int")
     assets = docs.select(
         F.concat(F.lit("m"),
@@ -1905,9 +1891,9 @@ def gopher_repetition_q(spark, sf_dir):
     ties broken (count DESC, gram ASC))."""
     from n8n_tools_api_spark.operators.textstats import gopher_repetition
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", below=300)
     did = F.col("doc_id").cast("string")
-    base = docs.where(F.col("doc_id") < 300).select(
+    base = docs.select(
         did.alias("doc_id"), "text")
     line40 = F.regexp_replace(F.substring(F.col("text"), 1, 40), "\n", " ")
     rep = docs.where(F.col("doc_id") < 30).select(
@@ -2023,7 +2009,7 @@ def lineage_health(spark, sf_dir):
     the DuckDB replay is bit-identical."""
     from n8n_tools_api_spark.operators.health import health_rollup
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 400)
+    docs = _t(spark, sf_dir, "documents", below=400)
     svc = (
         F.when(F.col("doc_id") < 4, F.lit(0))
         .otherwise(1 + F.col("doc_id") % 7)
@@ -2164,7 +2150,7 @@ def _paged_format_corpus(spark, sf_dir):
     markers (probed) — so the A7 average is a single value and immune
     to float-sum ordering.
     """
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 400)
+    docs = _t(spark, sf_dir, "documents", below=400)
     did = F.col("doc_id").cast("string")
     parent = F.floor(F.col("doc_id") / 4).cast("bigint")
     page_idx = (F.col("doc_id") % 4).cast("int")
@@ -2411,19 +2397,16 @@ ORDER BY doc_id
 
 def _curation_corpus(spark, sf_dir):
     """documents<300 ∪ 40 planted exact copies ∪ 25 planted 90%-truncated
-    near-dups — the deterministic corpus both curation queries share.
-    Bounded fixture: skip the scan rescue (guide §1.2; interleaved A/B
-    at the 10x dataset measured every consumer faster without it)."""
-    docs = _t(spark, sf_dir, "documents", rescue=False).select(
+    near-dups — the deterministic corpus both curation queries share."""
+    docs = _t(spark, sf_dir, "documents", below=300).select(
         F.col("doc_id").cast("string").alias("doc_id"), "text")
-    base = docs.where(F.col("doc_id").cast("bigint") < 300)
     copies = docs.where(F.col("doc_id").cast("bigint") < 40).select(
         F.concat(F.lit("copy_"), "doc_id").alias("doc_id"), "text")
     muts = docs.where(F.col("doc_id").cast("bigint") < 25).select(
         F.concat(F.lit("mut_"), "doc_id").alias("doc_id"),
         F.expr("substring(text, 1, cast(length(text) * 0.9 as int))")
         .alias("text"))
-    return base.unionByName(copies).unionByName(muts)
+    return docs.unionByName(copies).unionByName(muts)
 
 
 def curation_keep_list(spark, sf_dir):
@@ -2599,9 +2582,9 @@ def gopher_word_stats_q(spark, sf_dir):
     docs. DuckDB replays the list comprehensions exactly."""
     from n8n_tools_api_spark.operators.textstats import gopher_word_stats
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", below=300)
     did = F.col("doc_id").cast("string")
-    base = docs.where(F.col("doc_id") < 300).select(
+    base = docs.select(
         did.alias("doc_id"), "text")
     bul = docs.where(F.col("doc_id") < 15).select(
         F.concat(F.lit("bul_"), did).alias("doc_id"),
@@ -2714,9 +2697,9 @@ def c4_line_filter_q(spark, sf_dir):
     split exactly."""
     from n8n_tools_api_spark.operators.textstats import c4_line_filter
 
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents", below=300)
     did = F.col("doc_id").cast("string")
-    base = docs.where(F.col("doc_id") < 300).select(
+    base = docs.select(
         did.alias("doc_id"), "text")
     good = "The good line stays with enough words today.\n"
     js = docs.where(F.col("doc_id") < 15).select(
@@ -2813,9 +2796,9 @@ def c4_span_dedup_q(spark, sf_dir):
     sentence rebuild exactly."""
     from n8n_tools_api_spark.operators.dedup import c4_span_dedup
 
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents", below=250)
     did = F.col("doc_id").cast("string")
-    base = docs.where(F.col("doc_id") < 250).select(
+    base = docs.select(
         did.alias("doc_id"), "text")
     shared = F.concat(
         F.lit("Shared first sentence number "), did, F.lit(" stays. "),
@@ -2942,7 +2925,7 @@ def pii_redaction_q(spark, sf_dir):
     subset with 'g'-flag replaces in the same order."""
     from n8n_tools_api_spark.operators.pii import redact_pii
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", below=400)
     did = F.col("doc_id").cast("string")
     b = F.col("doc_id") % 5
     planted = (
@@ -2959,7 +2942,7 @@ def pii_redaction_q(spark, sf_dir):
             F.lit(" Reach 123.456.7890@mail.test or 555-867-5309 at 10.0.0."),
             (F.col("doc_id") % 9).cast("string"), F.lit(" soon.")))
         .otherwise(F.lit("")))
-    base = docs.where(F.col("doc_id") < 400).select(
+    base = docs.select(
         did.alias("doc_id"), F.concat("text", planted).alias("text"))
     nulls = docs.where(F.col("doc_id") < 8).select(
         F.concat(F.lit("nul_"), did).alias("doc_id"),
@@ -3040,9 +3023,9 @@ def host_cap_keep_list(spark, sf_dir):
     global window."""
     from n8n_tools_api_spark.operators.curation import per_host_cap
 
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents", below=400)
     did = F.col("doc_id").cast("string")
-    base = docs.where(F.col("doc_id") < 400).select(
+    base = docs.select(
         did.alias("doc_id"),
         F.concat(F.lit("https://"), F.col("source"),
                  F.lit(".example.com/doc/"), did).alias("url"),
@@ -3238,9 +3221,8 @@ def c4_badwords_q(spark, sf_dir):
     phrase scan closed-form."""
     from n8n_tools_api_spark.operators.textstats import c4_badwords_filter
 
-    docs = _t(spark, sf_dir, "documents", rescue=False).select(
+    base = _t(spark, sf_dir, "documents", below=300).select(
         F.col("doc_id").cast("string").alias("doc_id"), "text")
-    base = docs.where(F.col("doc_id").cast("bigint") < 300)
     planted = spark.createDataFrame([
         ("bw_punct", "contains Badterm! mid sentence"),
         ("bw_phrase", "the zoo zebra phrase spans tokens"),
@@ -3317,10 +3299,9 @@ def corpus_expectations_q(spark, sf_dir):
     from n8n_tools_api_spark.operators.expectations import (
         corpus_expectations)
 
-    docs = _t(spark, sf_dir, "documents", rescue=False).select(
+    base = _t(spark, sf_dir, "documents", below=300).select(
         F.col("doc_id").cast("string").alias("doc_id"), "text", "lang",
         F.col("n_chars").cast("bigint").alias("n_chars"))
-    base = docs.where(F.col("doc_id").cast("bigint") < 300)
     planted = spark.createDataFrame(
         [("7", None, None, -5), ("xp_null", None, "en", 42)],
         "doc_id string, text string, lang string, n_chars bigint")
@@ -3397,7 +3378,7 @@ def classifier_curation_keep_list_q(spark, sf_dir):
     from n8n_tools_api_spark.operators.curation import (
         classifier_curation_keep_list)
 
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents", below=360)
     reps = "CAST(doc_id % 3 + 1 AS INT)"
 
     def marked(lo, hi, prefix, marker, even_only=False):
@@ -3489,9 +3470,7 @@ def c4_curation_keep_list_q(spark, sf_dir):
     replay → curation replay."""
     from n8n_tools_api_spark.operators.curation import c4_curation_keep_list
 
-    # bounded fixture (docs<300 + planted branches): the scan-rescue
-    # repartition would cost more scheduling than it buys (guide §1.2)
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents", below=300)
     did = F.col("doc_id").cast("string")
     t = F.trim(F.regexp_replace(F.regexp_replace(
         F.coalesce(F.col("text"), F.lit("")), "[^a-z0-9 ]", " "), " +", " "))
@@ -3502,7 +3481,7 @@ def c4_curation_keep_list_q(spark, sf_dir):
     sent4 = F.concat_ws("\n", line(1), line(2), line(3), line(4))
     sent3 = F.concat_ws("\n", line(1), line(2), line(3))
     rep_line = F.concat(F.substring(t, 1, 40), F.lit("."))
-    base = docs.where(F.col("doc_id") < 300).select(
+    base = docs.select(
         did.alias("doc_id"), sent4.alias("text"))
     copies = docs.where(F.col("doc_id") < 40).select(
         F.concat(F.lit("copy_"), did).alias("doc_id"), sent4.alias("text"))
@@ -3682,7 +3661,7 @@ def _stream_agreement_corpus(spark, sf_dir, with_exact_dups):
     batch 2 is arbitrated.
     """
     base_ts = F.to_timestamp(F.lit("2024-06-01 12:00:00"))
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 150)
+    docs = _t(spark, sf_dir, "documents", below=150)
     w = Window.partitionBy("text").orderBy("doc_id")
     # every word is tagged with its doc id: the synthetic corpus's tiny
     # vocabulary makes NATURAL docs near-identical under shingled
@@ -3933,7 +3912,7 @@ def boilerplate_strip_q(spark, sf_dir):
         strip_boilerplate_stage,
     )
 
-    docs = _t(spark, sf_dir, "documents", rescue=False).where(F.col("doc_id") < 240)
+    docs = _t(spark, sf_dir, "documents", below=240)
     s = F.trim(F.regexp_replace(
         F.regexp_replace("text", "[^a-z0-9 ]", " "), " +", " "))
     t1 = F.substring(s, 1, 110)
@@ -4024,7 +4003,7 @@ def benchmark_decontam_q(spark, sf_dir):
         ngram_decontaminate,
     )
 
-    raw = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 600)
+    raw = _t(spark, sf_dir, "documents", below=600)
     docs = raw.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
     planted = spark.range(1).select(
         F.lit("null_doc").alias("doc_id"),
@@ -4148,7 +4127,7 @@ def url_blocklist_q(spark, sf_dir):
     generation, and both match tiers closed-form."""
     from n8n_tools_api_spark.operators.curation import url_blocklist_filter
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 400)
+    docs = _t(spark, sf_dir, "documents", below=400)
     i = F.col("doc_id").cast("string")
     shape = (F.col("doc_id") % 8).cast("int")
     url = (
@@ -4241,7 +4220,7 @@ def mixture_sample_report_q(spark, sf_dir):
     realized per-stratum counts are exact, not statistical."""
     from n8n_tools_api_spark.operators.sampling import mixture_report
 
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents")
     i = F.col("doc_id").cast("string")
     corpus = docs.select(i.alias("doc_id"), "lang").unionByName(
         docs.where(F.col("doc_id") < 20).select(
@@ -4315,11 +4294,7 @@ def _web_pipeline(spark, sf_dir, use_lsh=False):
     hash."""
     from n8n_tools_api_spark.operators.curation import web_curation_keep_list
 
-    # bounded fixture (docs<300 + planted branches): skip the scan
-    # rescue — its keyed repartition fans the tiny slice into
-    # cores-sized exchanges of empty tasks (guide §1.2, measured ~30%
-    # of this chain's wall time)
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents", below=300)
     did = F.col("doc_id").cast("string")
     idn = F.col("doc_id")
     t = F.trim(F.regexp_replace(F.regexp_replace(
@@ -4343,7 +4318,7 @@ def _web_pipeline(spark, sf_dir, use_lsh=False):
               F.concat(F.lit("https://www.www.bighost.example/p"), did))
         .otherwise(F.concat(F.lit("https://"), did, F.lit(".example/p")))
     )
-    base = docs.where(idn < 300).select(
+    base = docs.select(
         did.alias("doc_id"), sent4.alias("text"), base_url.alias("url"))
 
     def branch(prefix, cond, text_col):
@@ -4600,7 +4575,7 @@ def exact_substr_dedup_q(spark, sf_dir):
     first-occurrence ranking, and the covered-token rebuild."""
     from n8n_tools_api_spark.operators.dedup import exact_substr_dedup
 
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents", below=400)
     did = F.col("doc_id").cast("string")
     idn = F.col("doc_id")
     sp25 = F.concat_ws(" ", *[
@@ -4614,7 +4589,7 @@ def exact_substr_dedup_q(spark, sf_dir):
             text_col.alias("text"))
 
     corpus = (
-        docs.where(idn < 400).select(did.alias("doc_id"), "text")
+        docs.select(did.alias("doc_id"), "text")
         .unionByName(branch("cpy_", idn < 30, F.col("text")))
         .unionByName(branch("esx_a_", idn < 20, F.concat_ws(
             " ", F.lit("alpha intro words for doc"), did,
@@ -4719,7 +4694,7 @@ def token_pack_manifest_q(spark, sf_dir):
     downstream offset and breaks the hash."""
     from n8n_tools_api_spark.operators.packing import token_pack
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 500) \
+    docs = _t(spark, sf_dir, "documents", below=500) \
         .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
     planted = spark.range(1).select(
         F.lit("mt_1").alias("doc_id"), F.lit("").alias("text")
@@ -4791,14 +4766,6 @@ def dsir_selection_q(spark, sf_dir):
     """
     from n8n_tools_api_spark.operators.dsir import dsir_importance
 
-    # The sf documents table is a single parquet split, which would pin
-    # the gram-hash pass (the operator's expensive stage) to one task;
-    # spread it across the session's parallelism first. Production
-    # corpora arrive as many splits and skip this. Output is
-    # layout-invariant (pinned by tests/test_dsir.py).
-    # (_t's read helper already rescues parallelism from single-split
-    # parquet layouts — the old query-level round-robin repartition here
-    # paid a second full-text shuffle plus its sort-before-repartition)
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "lang", "text")
     # target_filter (not a separate target frame): the de slice rides
@@ -4928,9 +4895,8 @@ def quality_classifier_q(spark, sf_dir):
     from n8n_tools_api_spark.operators.qualityclf import (
         quality_classifier_scores)
 
-    # _t's read helper spreads single-split parquet layouts already
-    docs = _t(spark, sf_dir, "documents", rescue=False)
-    base = docs.where(F.col("doc_id") < 300).select(
+    docs = _t(spark, sf_dir, "documents", below=300)
+    base = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.lit("base").alias("cls"), "text",
         F.lit(False).alias("is_train"))
@@ -5272,10 +5238,10 @@ def line_dedup_q(spark, sf_dir):
     gate, and the positional rebuild exactly."""
     from n8n_tools_api_spark.operators.dedup import line_dedup
 
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents", below=150)
     did = F.col("doc_id").cast("string")
     g = (F.col("doc_id") % 8).cast("string")
-    base = docs.where(F.col("doc_id") < 150).select(
+    base = docs.select(
         did.alias("doc_id"), "text")
     cpy = docs.where(F.col("doc_id") < 20).select(
         F.concat(F.lit("cpy_"), did).alias("doc_id"), "text")
@@ -5385,7 +5351,7 @@ def shard_manifest_q(spark, sf_dir):
     a statistic of it."""
     from n8n_tools_api_spark.operators.packing import shard_manifest
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 400)
+    docs = _t(spark, sf_dir, "documents", below=400)
     ranked = shard_manifest(docs, 7, seed=13).withColumn(
         "mode", F.lit("ranked"))
     hashed = shard_manifest(docs, 5, seed=13, mode="hashed").withColumn(
@@ -5452,10 +5418,10 @@ def repeated_line_strip_q(spark, sf_dir):
     index + 1 in Spark — the off-by-one is pinned by this oracle)."""
     from n8n_tools_api_spark.operators.dedup import strip_repeated_lines
 
-    docs = _t(spark, sf_dir, "documents", rescue=False)
+    docs = _t(spark, sf_dir, "documents", below=150)
     did = F.col("doc_id").cast("string")
     g = (F.col("doc_id") % 8).cast("string")
-    base = docs.where(F.col("doc_id") < 150).select(
+    base = docs.select(
         did.alias("doc_id"), "text")
     ws_arr = F.filter(
         F.split(F.coalesce(F.col("text"), F.lit("")), " "),
@@ -5594,9 +5560,9 @@ def bpe_merges_q(spark, sf_dir):
     ``F.aggregate``) through all 4 unrolled rounds."""
     from n8n_tools_api_spark.operators.bpe import bpe_learn
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", below=120)
     did = F.col("doc_id").cast("string")
-    base = docs.where(F.col("doc_id") < 120).select(
+    base = docs.select(
         did.alias("doc_id"), "text")
     run = docs.where(F.col("doc_id") < 40).select(
         F.concat(F.lit("run_"), did).alias("doc_id"),
@@ -5676,9 +5642,9 @@ def bpe_encoded_tokens_q(spark, sf_dir):
     document's word occurrences through that vocabulary."""
     from n8n_tools_api_spark.operators.bpe import bpe_encode, bpe_learn
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", below=120)
     did = F.col("doc_id").cast("string")
-    base = docs.where(F.col("doc_id") < 120).select(
+    base = docs.select(
         did.alias("doc_id"), "text")
     run = docs.where(F.col("doc_id") < 40).select(
         F.concat(F.lit("run_"), did).alias("doc_id"),
@@ -5760,9 +5726,9 @@ def bpe_pack_manifest_q(spark, sf_dir):
     from n8n_tools_api_spark.operators.bpe import bpe_encode, bpe_learn
     from n8n_tools_api_spark.operators.packing import token_pack
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", below=120)
     did = F.col("doc_id").cast("string")
-    base = docs.where(F.col("doc_id") < 120).select(
+    base = docs.select(
         did.alias("doc_id"), "text")
     run = docs.where(F.col("doc_id") < 40).select(
         F.concat(F.lit("run_"), did).alias("doc_id"),
@@ -5890,7 +5856,7 @@ def url_canonical_dedup_q(spark, sf_dir):
     and RE2 agree on these patterns, ASCII input pinned)."""
     from n8n_tools_api_spark.operators.curation import url_dedup
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 400)
+    docs = _t(spark, sf_dir, "documents", below=400)
     i = F.col("doc_id").cast("string")
     g = F.expr("doc_id div 10").cast("string")
     shape = (F.col("doc_id") % 10).cast("int")
@@ -6037,7 +6003,7 @@ def host_link_stats_q(spark, sf_dir):
     and both integer PageRank rounds closed-form."""
     from n8n_tools_api_spark.operators.linkgraph import host_link_stats
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 320)
+    docs = _t(spark, sf_dir, "documents", below=320)
     i = F.col("doc_id").cast("string")
     h = (F.col("doc_id") % 16).cast("string")
     h1 = ((F.col("doc_id") + 1) % 16).cast("string")
@@ -6187,7 +6153,7 @@ def web_dedup_keep_list_q(spark, sf_dir):
     all four stages as one chained query."""
     from n8n_tools_api_spark.operators.curation import web_dedup_keep_list
 
-    docs = _t(spark, sf_dir, "documents", rescue=False).where(F.col("doc_id") < 240)
+    docs = _t(spark, sf_dir, "documents", below=240)
     i = F.col("doc_id").cast("string")
     g = F.expr("doc_id div 6").cast("string")
     f8 = F.expr("(doc_id div 6) % 8").cast("string")
@@ -6395,7 +6361,7 @@ def stream_url_agreement(spark, sf_dir):
         url_dedup_stream, url_dedup_stream_batch_twin)
 
     base_ts = F.to_timestamp(F.lit("2024-06-01 12:00:00"))
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 150)
+    docs = _t(spark, sf_dir, "documents", below=150)
     did = F.col("doc_id").cast("string")
     t1 = F.timestamp_add("SECOND", F.col("doc_id").cast("int"), base_ts)
     t2 = F.timestamp_add("SECOND", (F.col("doc_id") + 600).cast("int"),

@@ -72,7 +72,7 @@ def _doc_reqs(spark: SparkSession, sf_dir: str, *cols) -> DataFrame:
     queries can't drift from their SQL twins independently."""
     from .catalog import _t
 
-    return _t(spark, sf_dir, "documents").where(F.col("doc_id") < 40).select(
+    return _t(spark, sf_dir, "documents", below=40).select(
         F.col("doc_id").alias("req_id"), *cols
     )
 

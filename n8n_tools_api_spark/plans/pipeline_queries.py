@@ -241,19 +241,17 @@ def stream_neardup_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from n8n_tools_api_spark.streaming import neardup_prefilter_batch_twin
 
     base_ts = F.to_timestamp(F.lit("2024-06-01 12:00:00"))
-    docs = _rt(spark, sf_dir, "documents") \
-        .where(F.col("doc_id") < 200).select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            (base_ts + F.make_interval(mins=F.col("doc_id").cast("int")))
-            .alias("event_time"),
-            "text")
-    dups = _rt(spark, sf_dir, "documents") \
-        .where(F.col("doc_id") < 50).select(
-            F.concat(F.lit("dup_"), F.col("doc_id").cast("string"))
-            .alias("doc_id"),
-            (base_ts + F.make_interval(mins=(F.col("doc_id") + 500).cast("int")))
-            .alias("event_time"),
-            "text")
+    docs = _rt(spark, sf_dir, "documents", below=200).select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        (base_ts + F.make_interval(mins=F.col("doc_id").cast("int")))
+        .alias("event_time"),
+        "text")
+    dups = _rt(spark, sf_dir, "documents", below=50).select(
+        F.concat(F.lit("dup_"), F.col("doc_id").cast("string"))
+        .alias("doc_id"),
+        (base_ts + F.make_interval(mins=(F.col("doc_id") + 500).cast("int")))
+        .alias("event_time"),
+        "text")
     return (
         neardup_prefilter_batch_twin(docs.unionByName(dups))
         .select("doc_id",
@@ -281,27 +279,24 @@ def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base_ts = F.to_timestamp(F.lit("2024-06-01 12:00:00"))
-    docs = _rt(spark, sf_dir, "documents") \
-        .where(F.col("doc_id") < 200).select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            (base_ts + F.make_interval(mins=F.col("doc_id").cast("int")))
-            .alias("event_time"),
-            "text")
-    dups = _rt(spark, sf_dir, "documents") \
-        .where(F.col("doc_id") < 50).select(
-            F.concat(F.lit("dup_"), F.col("doc_id").cast("string"))
-            .alias("doc_id"),
-            (base_ts + F.make_interval(mins=(F.col("doc_id") + 500).cast("int")))
-            .alias("event_time"),
-            "text")
-    muts = _rt(spark, sf_dir, "documents") \
-        .where(F.col("doc_id") < 25).select(
-            F.concat(F.lit("mut_"), F.col("doc_id").cast("string"))
-            .alias("doc_id"),
-            (base_ts + F.make_interval(mins=(F.col("doc_id") + 600).cast("int")))
-            .alias("event_time"),
-            F.expr("substring(text, 1, cast(length(text) * 0.9 as int))")
-            .alias("text"))
+    docs = _rt(spark, sf_dir, "documents", below=200).select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        (base_ts + F.make_interval(mins=F.col("doc_id").cast("int")))
+        .alias("event_time"),
+        "text")
+    dups = _rt(spark, sf_dir, "documents", below=50).select(
+        F.concat(F.lit("dup_"), F.col("doc_id").cast("string"))
+        .alias("doc_id"),
+        (base_ts + F.make_interval(mins=(F.col("doc_id") + 500).cast("int")))
+        .alias("event_time"),
+        "text")
+    muts = _rt(spark, sf_dir, "documents", below=25).select(
+        F.concat(F.lit("mut_"), F.col("doc_id").cast("string"))
+        .alias("doc_id"),
+        (base_ts + F.make_interval(mins=(F.col("doc_id") + 600).cast("int")))
+        .alias("event_time"),
+        F.expr("substring(text, 1, cast(length(text) * 0.9 as int))")
+        .alias("text"))
     corpus = docs.unionByName(dups).unionByName(muts) \
         .localCheckpoint(eager=True)
     staged = curation_stream_batch_twin(corpus)

@@ -10,7 +10,7 @@ from .synthetic import (
     SPANS_SCHEMA,
     INTERLEAVED_SCHEMA,
 )
-from .tables import load_table, TABLES
+from .tables import TABLES
 
 __all__ = [
     "CANONICAL_PNG_B64",
@@ -23,6 +23,5 @@ __all__ = [
     "interleaved_from_documents_table",
     "SPANS_SCHEMA",
     "INTERLEAVED_SCHEMA",
-    "load_table",
     "TABLES",
 ]

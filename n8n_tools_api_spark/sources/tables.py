@@ -10,12 +10,6 @@ TABLES = (
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLES:
-        raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 # (rows, row_groups) per path — footer metadata is immutable testdata,
 # so one driver-side read per path per process is enough
 _LAYOUT_CACHE: dict[str, tuple[int, int]] = {}
@@ -42,65 +36,45 @@ def _parquet_layout(path: str) -> tuple[int, int]:
 
 
 def read_sf_table(spark: SparkSession, sf_dir: str, name: str,
-                  rescue: bool | str = True) -> DataFrame:
-    """Read an sf table, rescuing scan parallelism from unsplittable
-    input layouts (guide §2.5 "input skew": one huge single-row-group
-    file serializes every downstream narrow operator onto one core —
-    parquet's split granularity is the ROW GROUP, so maxPartitionBytes
-    cannot help).
+                  below: int | None = None) -> DataFrame:
+    """Read an sf table; the table's shape alone decides its layout.
 
-    The driver-generated tables are written as ONE row group per ~1M
-    rows (sf1.0 documents = 50k rows = 1 row group → every per-doc
-    regex/shingle/signature map ran single-threaded, measured 10-18 s
-    per query at sf1.0). When the footer says the file provides fewer
-    splits than the session's cores AND the rows-per-split are large
-    enough that post-scan work dominates, repartition by the table's
-    key column (hash — deterministic, no sort, unlike round-robin).
-    Results are layout-invariant (COVERAGE.md cross-layout sweep);
-    only placement changes. On a production corpus (many ~row-group
-    sized files) the condition never fires and the read stays plain.
+    * ``below=N`` is a fixture slice: ``key < N`` on the table's first
+      column (its key), never repartitioned. A keyed repartition would
+      fan a few hundred rows into cores-sized exchanges whose empty
+      tasks dominate the chain (guide §1.2, scheduling overhead:
+      measured ~30% of the web/C4 curation chains' wall time).
+    * A full read of ``documents`` or ``embeddings`` is repartitioned
+      by its key when the footer shows fewer row groups than cores and
+      at least 1500 rows per group. Parquet splits at the ROW GROUP, so
+      maxPartitionBytes cannot help (guide §2.5, input skew): the sf
+      tables hold one row group per ~1M rows, and at sf1.0 every
+      per-doc regex/shingle/signature map ran on one core (10-18 s per
+      query). The hash repartition is deterministic with no sort,
+      unlike round-robin; results are layout-invariant (COVERAGE.md
+      cross-layout sweep). A many-file production corpus never
+      triggers it.
+    * Relational tables are always a plain read: their scan+aggregate
+      and join consumers shrink the data map-side before any exchange,
+      and an up-front repartition measured a net loss there
+      (events_daily 0.4 s -> 1.4 s, q1 0.5 s -> 0.9 s at sf1.0).
     """
+    if name not in TABLES:
+        raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
-    if not rescue:
-        # bounded-fixture consumers (oracle chains that immediately
-        # slice to a few hundred planted rows) opt out: the keyed
-        # repartition would fan their tiny slice into cores-sized
-        # exchanges whose empty tasks dominate the chain's wall time
-        # (guide §1.2 — scheduling overhead, measured: the web/C4
-        # pipeline oracles ran ~30% faster without the rescue while
-        # full-table per-row-heavy queries ran 2-9x faster WITH it)
-        return df
-    # rescue="force" extends the rescue to relational tables for
-    # callers whose downstream is CPU-dense per input row (rollup
-    # grouping-set decimal sums, fat sort-merge map sides). Plain
-    # scan+aggregate queries measured a net LOSS from it (the exchange
-    # costs more than the parallelism buys), so it is opt-in per query,
-    # never the default.
-    if rescue != "force" and name not in ("documents", "embeddings"):
-        # relational tables feed scan+aggregate/join queries where
-        # map-side partial aggregation already shrinks the data before
-        # any exchange — an up-front repartition measured as a net LOSS
-        # there (events_daily 0.4 s -> 1.4 s, q1 0.5 s -> 0.9 s at
-        # sf1.0). Only the text/vector tables, whose consumers do
-        # heavy per-row work (regex/shingle/gram/cosine), benefit.
+    key = df[df.columns[0]]
+    if below is not None:
+        return df.where(key < below)
+    if name not in ("documents", "embeddings"):
         return df
     try:
         rows, groups = _parquet_layout(path)
     except Exception:
         return df  # exotic layout: fall back to the plain read
-    if rescue == "force" and rows < 1_000_000:
-        # scale gate for the relational force path: the exchange's
-        # fixed cost (~0.2-0.3 s) only amortizes once the serialized
-        # per-row compute exceeds it — measured crossover between 600k
-        # rows (q10 at sf0.1: force LOSES 0.26 s) and 1.5M rows
-        # (rollup at sf1.0: force WINS 1.5 s). Text/vector rescues are
-        # unaffected: their per-row work is heavy at any size.
-        return df
     cores = spark.sparkContext.defaultParallelism
     if groups < cores and rows // groups >= 1500:
-        n = min(cores * 2, max(rows // 1000, cores))
-        df = df.repartition(n, df[df.columns[0]])
+        df = df.repartition(min(cores * 2, max(rows // 1000, cores)), key)
     return df
 
 

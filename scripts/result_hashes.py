@@ -12,6 +12,9 @@ Usage:
     python scripts/result_hashes.py --out /tmp/hashes_before.json \
         [--sf-dir /root/testdata/sf0.01] [--queries a,b,c]
     python scripts/result_hashes.py --compare A.json B.json
+
+``--compare`` exits non-zero on any hash that moved and on any query
+that raised (recorded as ``"ERROR: ..."``) on either side.
 """
 
 from __future__ import annotations
@@ -44,7 +47,8 @@ def main() -> None:
     ap.add_argument("--queries", default="")
     ap.add_argument("--compare", nargs=2, default=None)
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS")
+                                or os.cpu_count()))
     args = ap.parse_args()
 
     if args.compare:
@@ -54,10 +58,13 @@ def main() -> None:
         for k in sorted(set(a) | set(b)):
             va, vb = a.get(k), b.get(k)
             if va != vb:
-                bad.append((k, va, vb))
+                bad.append(("MISMATCH", k, va, vb))
+            elif str(va[0]).startswith("ERROR"):
+                # a query that raises on both sides is broken, not equal
+                bad.append(("ERROR", k, va, vb))
         if bad:
-            for k, va, vb in bad:
-                print(f"MISMATCH {k}: {va} -> {vb}")
+            for tag, k, va, vb in bad:
+                print(f"{tag} {k}: {va} -> {vb}")
             sys.exit(1)
         print(f"OK: {len(a)} hashes identical")
         return
