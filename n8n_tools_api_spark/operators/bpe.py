@@ -49,16 +49,19 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions.text import explode_grams, words
+
 _US = "\x1f"
+
+
+def _encodable(ws: Column) -> Column:
+    """The words of ``ws`` that can be encoded: US is the delimiter."""
+    return F.filter(ws, lambda w: ~w.contains(_US))
 
 
 def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """The corpus-scale stage: (word, freq) over whitespace tokens."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    words = docs.select(
-        F.explode(F.filter(F.split(F.trim(t), r"\s+"),
-                           lambda w: w != "")).alias("word"))
-    return (words.where(~F.col("word").contains(_US))
+    return (explode_grams(docs, F.col(text_col), _encodable, name="word")
             .groupBy("word").agg(F.count("*").cast("bigint").alias("freq")))
 
 
@@ -97,10 +100,8 @@ def _apply_merge(sym_col: Column, left: str, right: str) -> Column:
 
 
 def _pair_counts(words: DataFrame) -> DataFrame:
-    # the split array MUST be bound as a column before the lambda:
-    # referencing F.split(...) inside transform re-evaluates the split
-    # per element (no CSE inside higher-order lambdas — the measured
-    # 354s→20.8s class of regression hoisted everywhere else)
+    # the symbol array is bound before the lambda reads it, like a word
+    # array (functions/text.py)
     bound = words.select("freq", F.split("sym", _US).alias("_syms"))
     s = F.col("_syms")
     # a fully merged word is ONE symbol; sequence(1, 0) would count
@@ -219,21 +220,20 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
             sym = _apply_merge(sym, left, right)
         return sym
 
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(F.trim(t), r"\s+"),
-                     lambda w: (w != "") & ~w.contains(_US))
+    encodable = _encodable(words(F.col(text_col)))
     if not vocab_join:
-        enc = F.transform(words, _enc)
-        return docs.select(
+        ws = F.col("_ws")
+        enc = F.transform(ws, _enc)
+        return docs.select(F.col(id_col), encodable.alias("_ws")).select(
             F.col(id_col),
-            F.size(words).alias("n_words"),
+            F.size(ws).alias("n_words"),
             F.aggregate(enc, F.lit(0).cast("bigint"),
                         lambda acc, x: acc + F.size(F.split(x, _US)))
             .alias("n_tokens"),
             F.concat_ws(" ", enc).alias("encoded"),
         )
     occurrences = docs.select(
-        F.col(id_col), F.posexplode(words).alias("pos", "word"))
+        F.col(id_col), F.posexplode(encodable).alias("pos", "word"))
     vocab = (occurrences.select("word").distinct()
              .select("word", _enc(F.col("word")).alias("sym")))
     per_doc = (occurrences.join(vocab, "word")

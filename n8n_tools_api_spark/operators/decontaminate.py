@@ -38,43 +38,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _words(text_col):
-    """The repo-standard word split as an array<string> column."""
-    return F.filter(
-        F.split(F.lower(F.trim(F.coalesce(text_col, F.lit("")))), r"\s+"),
-        lambda w: w != "",
-    )
+from ..functions.text import explode_grams, word_ngrams, words
 
 
-def _grams_of(words, n: int):
-    """DISTINCT word n-grams from a word array.  ``words`` MUST be a
-    bound column attribute (its own projection), never the inline
-    split expression: Spark does no common-subexpression elimination
-    inside higher-order-function lambdas, so an inline expression
-    would re-split the whole text once per gram — O(words²) per doc
-    (the lm_ppx 17× finding; at n=13 the slice alone re-walks 13
-    re-splits per position)."""
-    nw = F.size(words)
-    grams = (
-        F.when(nw == 0, F.array().cast("array<string>"))
-        .when(nw < n, F.array(F.array_join(words, " ")))
-        .otherwise(
-            F.transform(
-                F.sequence(F.lit(1), nw - (n - 1)),
-                lambda i: F.array_join(F.slice(words, i, n), " "),
-            )
-        )
-    )
-    return F.array_distinct(grams)
+def _grams_of(ws, n: int):
+    """DISTINCT word n-grams of the bound word array ``ws``, with the
+    short-doc whole-sequence gram."""
+    nw = F.size(ws)
+    return F.array_distinct(
+        F.when((nw > 0) & (nw < n), F.array(F.array_join(ws, " ")))
+        .otherwise(word_ngrams(ws, n)))
 
 
 def benchmark_grams(bench: DataFrame, n: int = 13,
                     text_col: str = "text") -> DataFrame:
     """Distinct non-empty word ``n``-grams of an eval set: (gram)."""
     return (
-        bench.select(_words(F.col(text_col)).alias("_ws"))
-        .select(F.explode(_grams_of(F.col("_ws"), n)).alias("gram"))
+        explode_grams(bench, F.col(text_col), lambda ws: _grams_of(ws, n),
+                      lower=True)
         .where(F.col("gram") != "")
         .distinct()
     )
@@ -101,22 +82,19 @@ def ngram_decontaminate(docs: DataFrame, bench: DataFrame, n: int = 13,
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     bgrams = benchmark_grams(bench, n=n, text_col=bench_text_col)
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        _words(F.col(text_col)).alias("_ws"),
-    ).select(
-        "doc_id",
-        _grams_of(F.col("_ws"), n).alias("_grams"),
-    )
+    doc_id = F.col(id_col).alias("doc_id")
     hits = (
-        base.select("doc_id", F.explode("_grams").alias("gram"))
+        explode_grams(docs, F.col(text_col), lambda ws: _grams_of(ws, n),
+                      keep=(doc_id,), lower=True)
         .join(F.broadcast(bgrams), "gram")
         .groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("n_hits"))
     )
     return (
-        base.select("doc_id",
-                    F.size("_grams").cast("bigint").alias("n_grams"))
+        docs.select(doc_id, words(F.col(text_col), lower=True).alias("_ws"))
+        .select("doc_id",
+                F.size(_grams_of(F.col("_ws"), n)).cast("bigint")
+                .alias("n_grams"))
         .join(F.broadcast(hits) if broadcast_hits else hits,
               "doc_id", "left")
         .select(

@@ -17,6 +17,8 @@ from itertools import combinations as _combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import word_ngrams, words
+
 # MinHash universal-hash parameters: h_j(x) = (a_j * x + b_j) mod p.
 # Fixed seeds → deterministic signatures across runs and cluster sizes.
 # p = 2^31-1 keeps a*x+b within a signed 64-bit long under ANSI mode
@@ -37,6 +39,14 @@ def _perm_params(num_hashes: int) -> list[tuple[int, int]]:
     return params
 
 
+def _raw_words(text):
+    """The MinHash/SimHash word split: trimmed ``text`` split on
+    ``\\s+`` with empty tokens KEPT and NULL text left NULL. The
+    near-dup oracles pin these semantics, so this is not
+    :func:`words`."""
+    return F.split(F.trim(text), r"\s+")
+
+
 def word_shingles(df: DataFrame, text_col: str = "text", k: int = 5,
                   id_col: str = "doc_id") -> DataFrame:
     """(id, shingle) rows: distinct k-word shingles, pure column exprs.
@@ -44,23 +54,12 @@ def word_shingles(df: DataFrame, text_col: str = "text", k: int = 5,
     ``sequence``+``transform``+``slice`` build the shingle array without
     leaving the JVM; short documents fall back to the whole text as one
     shingle so no document silently vanishes.
-
-    The word array is HOISTED into its own projection before the
-    per-shingle lambdas: inlined, Catalyst re-evaluates the regex
-    split inside every ``slice`` call — O(words²) per document, a
-    measured 4.7× slowdown of the whole MinHash path at sf0.1.
     """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    with_words = df.select(F.col(id_col).alias("doc_id"), words.alias("_words"))
+    with_words = df.select(F.col(id_col).alias("doc_id"),
+                           _raw_words(F.col(text_col)).alias("_words"))
     w = F.col("_words")
-    n = F.size(w)
-    shingles = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.concat_ws(" ", F.slice(w, i + 1, k)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", w)))
+    shingles = F.when(F.size(w) >= k, word_ngrams(w, k)) \
+        .otherwise(F.array(F.concat_ws(" ", w)))
     return with_words.select(
         "doc_id", F.explode(F.array_distinct(shingles)).alias("shingle")
     )
@@ -72,17 +71,17 @@ def shingle_hash_array(df: DataFrame, text_col: str = "text", k: int = 5,
     """(doc_id, shingle_hashes array<bigint>): one 64-bit hash per
     k-word shingle WITHOUT materializing shingle strings.
 
-    Each word is xxhash64'd once (hoisted projection — inlined, the
-    split re-evaluates per shingle, O(words²); round-2 finding), then
-    every k-window folds with an XOR-rotate combine — bit ops only, so
-    no ANSI overflow and no per-shingle string allocation. Short
+    Each word is xxhash64'd once in a bound projection
+    (functions/text.py), then every k-window folds with an XOR-rotate
+    combine — bit ops only, so no ANSI overflow and no per-shingle
+    string allocation. Short
     documents fall back to the whole text as one shingle so no
     document vanishes.
     """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
     with_wh = df.select(
         F.col(id_col).alias("doc_id"), *keep_cols,
-        F.transform(words, lambda w: F.xxhash64(w)).alias("_wh"),
+        F.transform(_raw_words(F.col(text_col)),
+                    lambda w: F.xxhash64(w)).alias("_wh"),
     )
     wh = F.col("_wh")
     n = F.size(wh)
@@ -395,7 +394,7 @@ def simhash_64(df: DataFrame, text_col: str = "text",
     """
     tokens = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token"),
+        F.explode(_raw_words(F.col(text_col))).alias("token"),
     ).withColumn("h", F.xxhash64("token"))
     votes = [
         F.sum(
@@ -929,21 +928,16 @@ def exact_substr_dedup(docs: DataFrame, window: int = 50,
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     sep = "\x1f"
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(F.split(F.trim(t), r"\s+"), lambda w: w != "").alias("ws"),
-    )
+    toks = docs.select(F.col(id_col).alias("doc_id"),
+                       words(F.col(text_col)).alias("ws"))
     n = F.size("ws")
     idxs = F.when(n >= window, F.sequence(F.lit(1), n - (window - 1))) \
             .otherwise(F.array().cast("array<int>"))
-    with_wins = toks.withColumn(
-        "wins",
-        F.transform(idxs, lambda i: F.xxhash64(
-            F.concat_ws(sep, F.slice("ws", i, window)))),
-    )
-    occ = with_wins.select(
-        "doc_id", F.posexplode("wins").alias("q", "h"))  # q is 0-based
+    wins = F.transform(idxs, lambda i: F.xxhash64(
+        F.concat_ws(sep, F.slice("ws", i, window))))
+    # posexplode the window EXPRESSION over the bound words, never a
+    # bound array attribute (functions/text.py); q is 0-based
+    occ = toks.select("doc_id", F.posexplode(wins).alias("q", "h"))
     win_stats = occ.groupBy("h").agg(
         F.count("*").alias("cnt"),
         F.min(F.struct("doc_id", "q")).alias("first_occ"),
@@ -1069,9 +1063,8 @@ def strip_repeated_lines(docs: DataFrame, id_col: str = "doc_id",
       whitespace-only lines always survive (structure, not content);
     * line i survives iff its key is blank OR the FIRST index of its
       key among the doc's trimmed keys is i (Spark ``array_position``
-      is 1-based over a BOUND key-array column — higher-order lambdas
-      get no common-subexpression elimination, so the key array is
-      projected first, operators/dsir.py has the same note);
+      is 1-based over a BOUND key-array column, projected first for
+      the reason functions/text.py gives for word arrays);
     * rebuild joins the ORIGINAL surviving lines with ``'\\n'``.
 
     Output: (doc_id, clean_text, n_lines, n_removed), the same shape

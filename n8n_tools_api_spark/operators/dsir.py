@@ -64,56 +64,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def split_words(text_col):
-    """The repo-standard word split as an array<string> column."""
-    return F.filter(
-        F.split(F.lower(F.trim(F.coalesce(text_col, F.lit("")))), r"\s+"),
-        lambda w: w != "",
-    )
+from ..functions.text import explode_grams, word_ngrams
 
 
 def hashed_gram_buckets(words, bucket_hexlen: int = 3):
-    """Unigram+bigram md5-prefix bucket keys, with occurrence
-    multiplicity, as an ``array<string>``.  ``words`` MUST be a bound
-    column attribute (project ``split_words`` first): Spark does no
-    common-subexpression elimination inside higher-order-function
-    lambdas, so passing the inline split expression would re-split the
-    whole text once per bigram — O(words²) per document (the lm_ppx
-    17× finding)."""
-    nw = F.size(words)
-    bigrams = (
-        F.when(
-            nw >= 2,
-            F.transform(
-                F.sequence(F.lit(1), nw - 1),
-                lambda i: F.array_join(F.slice(words, i, 2), " "),
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-    )
+    """Unigram+bigram md5-prefix bucket keys of the bound word array
+    ``words``, with occurrence multiplicity, as an ``array<string>``."""
     return F.transform(
-        F.concat(words, bigrams),
+        F.concat(words, word_ngrams(words, 2)),
         lambda g: F.substring(
             F.md5(F.concat(F.lit("dsir:"), g)), 1, bucket_hexlen),
-    )
-
-
-def exploded_buckets(frame: DataFrame, text_col, bucket_hexlen: int = 3) -> DataFrame:
-    """One (bucket) row per gram occurrence of ``text_col``.
-
-    The explode MUST sit directly above the ``_ws`` projection: an
-    intermediate ``select(hashed_gram_buckets(_ws).alias(...))`` makes
-    two ADJACENT projections that CollapseProject merges, inlining the
-    word split into every gram lambda — the O(words²) re-split the
-    hashed_gram_buckets docstring warns about (measured 6.5x on the
-    sf1.0 target slice: 7.1 s -> 1.1 s). A Generate node between the
-    projections blocks the merge, so this shape is load-bearing.
-    """
-    return (
-        frame.select(split_words(F.col(text_col)).alias("_ws"))
-        .select(F.explode(hashed_gram_buckets(
-            F.col("_ws"), bucket_hexlen)).alias("bucket"))
     )
 
 
@@ -161,21 +121,19 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
     mat = RoundMaterializer(checkpoint_dir)
     tgt_cols = [target_filter.alias("_tgt")] if target_filter is not None \
         else []
+
+    def buckets(ws):
+        return hashed_gram_buckets(ws, bucket_hexlen)
+
     exploded = mat(
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            split_words(F.col(text_col)).alias("_ws"),
-            *tgt_cols,
-        ).select(
-            "doc_id",
-            F.explode(hashed_gram_buckets(
-                F.col("_ws"), bucket_hexlen)).alias("bucket"),
-            *(["_tgt"] if target_filter is not None else []),
-        ),
+        explode_grams(docs, F.col(text_col), buckets,
+                      keep=(F.col(id_col).alias("doc_id"), *tgt_cols),
+                      lower=True, name="bucket"),
         "dsir_grams", eager=False,
     )
     tgrams = (exploded.where(F.col("_tgt")) if target_filter is not None
-              else exploded_buckets(target, target_text_col, bucket_hexlen))
+              else explode_grams(target, F.col(target_text_col), buckets,
+                                 lower=True, name="bucket"))
     tcounts = mat(
         tgrams.groupBy("bucket")
         .agg(F.count("*").cast("bigint").alias("cnt")),

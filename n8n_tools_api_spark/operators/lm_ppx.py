@@ -84,16 +84,14 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..functions.text import words
+
 
 def token_buckets(text_col, bucket_hexlen: int = 3):
     """Hashed vocabulary-bucket keys of a text column, one per token
     occurrence in order, as an ``array<string>``."""
-    words = F.filter(
-        F.split(F.lower(F.trim(F.coalesce(text_col, F.lit("")))), r"\s+"),
-        lambda w: w != "",
-    )
     return F.transform(
-        words,
+        words(text_col, lower=True),
         lambda w: F.substring(
             F.md5(F.concat(F.lit("ppx:"), w)), 1, bucket_hexlen),
     )
@@ -132,14 +130,8 @@ def lm_perplexity(docs: DataFrame, train_filter: Column, *,
 
     v = 16 ** bucket_hexlen
     mat = RoundMaterializer(checkpoint_dir)
-    # The bucket array is bound as a COLUMN of its own projection
-    # before any lambda touches it: Spark does not eliminate common
-    # subexpressions inside higher-order-function lambdas, so inlining
-    # the md5-transform expression into element_at would re-hash the
-    # whole document once per bigram — O(tokens²) md5 per doc
-    # (measured 354 s -> a few seconds on the 100k-doc 2-core bench).
-    # CollapseProject keeps the projections apart because the alias is
-    # referenced more than once and is non-cheap.
+    # the bucket array is bound in its own projection before the bigram
+    # lambdas read it, like a word array (functions/text.py)
     with_bks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.coalesce(F.col(group_col).cast("string"), F.lit(""))

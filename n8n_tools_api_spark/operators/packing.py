@@ -46,14 +46,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import words
+
 
 def whitespace_token_count(text_col: Column) -> Column:
-    """Repo-standard token count: non-empty ``\\s+`` splits of the
-    trimmed text; NULL counts as zero tokens."""
-    return F.size(F.filter(
-        F.split(F.trim(F.coalesce(text_col, F.lit(""))), r"\s+"),
-        lambda w: w != "",
-    )).cast("bigint")
+    """Repo-standard token count: the size of :func:`words`; NULL
+    counts as zero tokens."""
+    return F.size(words(text_col)).cast("bigint")
 
 
 def _global_exclusive_prefix(df: DataFrame, order_cols: list[str],

@@ -76,20 +76,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dsir import exploded_buckets, hashed_gram_buckets, split_words
+from ..functions.text import explode_grams
+from .dsir import hashed_gram_buckets
 from .lm_ppx import surprisal_q16
 
 
 def _side_counts(frame: DataFrame, text_col: str, hexlen: int,
                  out: str) -> DataFrame:
-    """(bucket, <out>) training occurrence counts for one class slice.
-
-    Uses the Generate-protected explode shape (dsir.exploded_buckets) —
-    an array-alias projection here would CollapseProject into an
-    O(words²) per-gram re-split of the training text.
-    """
+    """(bucket, <out>) training occurrence counts for one class slice."""
     return (
-        exploded_buckets(frame, text_col, hexlen)
+        explode_grams(frame, F.col(text_col),
+                      lambda ws: hashed_gram_buckets(ws, hexlen),
+                      lower=True, name="bucket")
         .groupBy("bucket")
         .agg(F.count("*").cast("bigint").alias(out))
     )
@@ -181,18 +179,12 @@ def quality_classifier_scores(docs: DataFrame, positive: DataFrame,
         positive, negative, bucket_hexlen=bucket_hexlen,
         positive_text_col=positive_text_col,
         negative_text_col=negative_text_col)
-    exploded = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            split_words(F.col(text_col)).alias("_ws"),
-        ).select(
-            "doc_id",
-            F.explode(hashed_gram_buckets(
-                F.col("_ws"), bucket_hexlen)).alias("bucket"),
-        )
-    )
     per_doc = (
-        exploded.join(F.broadcast(weights), "bucket", "left")
+        explode_grams(docs, F.col(text_col),
+                      lambda ws: hashed_gram_buckets(ws, bucket_hexlen),
+                      keep=(F.col(id_col).alias("doc_id"),),
+                      lower=True, name="bucket")
+        .join(F.broadcast(weights), "bucket", "left")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_grams"),

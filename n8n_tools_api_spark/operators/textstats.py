@@ -12,10 +12,13 @@ Two tiers:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, functions as F
+
+from ..functions.text import explode_grams, word_ngrams, words
 
 LANG_SCHEMA = (
     "doc_id bigint, lang string, detected string, confidence double"
@@ -74,6 +77,12 @@ def clean_text(docs: DataFrame) -> DataFrame:
     )
 
 
+def _lines(t: Column) -> Column:
+    """The trimmed, non-blank lines of the (non-NULL) text ``t``."""
+    return F.filter(F.transform(F.split(t, "\n"), lambda x: F.trim(x)),
+                    lambda x: x != "")
+
+
 def gopher_repetition(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text") -> DataFrame:
     """Repetition metrics + quality gates from the Gopher curation
@@ -105,7 +114,6 @@ def gopher_repetition(docs: DataFrame, id_col: str = "doc_id",
     Exact values are DuckDB-replayed by the ``gopher_repetition``
     oracle (plans/catalog.py).
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     text = F.coalesce(F.col(text_col), F.lit(""))
@@ -113,13 +121,7 @@ def gopher_repetition(docs: DataFrame, id_col: str = "doc_id",
                        text.alias("_t"),
                        F.length(text).alias("total_chars"))
 
-    lines = base.select(
-        "doc_id",
-        F.explode(F.filter(
-            F.transform(F.split(F.col("_t"), "\n"), lambda x: F.trim(x)),
-            lambda x: x != "",
-        )).alias("line"),
-    )
+    lines = base.select("doc_id", F.explode(_lines(F.col("_t"))).alias("line"))
     line_stats = (
         lines.groupBy("doc_id", "line")
         .agg(F.count("*").alias("cnt"), F.length("line").alias("len"))
@@ -136,23 +138,9 @@ def gopher_repetition(docs: DataFrame, id_col: str = "doc_id",
     )
 
     def top_gram(n: int, out: str) -> DataFrame:
-        # words bound as a column BEFORE the gram lambda — inlining the
-        # split into slice() re-splits the text once per gram, O(words²)
-        # per doc (no CSE inside HOF lambdas; the lm_ppx 17× finding)
-        wbase = base.select(
-            "doc_id", "total_chars",
-            F.filter(F.split(F.trim(F.col("_t")), r"\s+"),
-                     lambda x: x != "").alias("_ws"))
-        w = F.col("_ws")
-        grams = F.when(
-            F.size(w) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(w) - n),
-                lambda i: F.concat_ws(" ", F.slice(w, i + 1, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        exploded = wbase.select("doc_id", "total_chars",
-                                F.explode(grams).alias("gram"))
+        exploded = explode_grams(base, F.col("_t"),
+                                 lambda ws: word_ngrams(ws, n),
+                                 keep=("doc_id", "total_chars"))
         counted = exploded.groupBy("doc_id", "total_chars", "gram") \
             .agg(F.count("*").alias("cnt")) \
             .where(F.col("cnt") >= 2)
@@ -220,14 +208,10 @@ def gopher_word_stats(docs: DataFrame, id_col: str = "doc_id",
     \\s+ split. All fractions round to 6dp before gating; DuckDB
     replays everything (oracle ``gopher_word_stats``).
     """
-    from pyspark.sql import functions as F
-
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    ws = F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != "")
-    lines = F.filter(
-        F.transform(F.split(t, "\n"), lambda x: F.trim(x)),
-        lambda x: x != "",
-    )
+    text = F.coalesce(F.col(text_col), F.lit(""))
+    bound = docs.select(F.col(id_col).alias("doc_id"), text.alias("_t"),
+                        words(text).alias("_ws"), _lines(text).alias("_lines"))
+    t, ws, lines = F.col("_t"), F.col("_ws"), F.col("_lines")
     n_words = F.size(ws)
     n_lines = F.size(lines)
     sum_len = F.aggregate(F.transform(ws, lambda w: F.length(w)),
@@ -265,8 +249,8 @@ def gopher_word_stats(docs: DataFrame, id_col: str = "doc_id",
         & (alpha_frac >= 0.8)
         & (n_stop >= 2)
     )
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
+    return bound.select(
+        "doc_id",
         n_words.cast("int").alias("n_words"),
         mean_len.alias("mean_word_len"),
         sym_ratio.alias("symbol_word_ratio"),
@@ -301,28 +285,25 @@ def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
     scan at 100 TB; pairs with gopher_repetition/gopher_word_stats for
     a complete public-rules quality stage.
     """
-    from pyspark.sql import functions as F
-
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    lines = F.filter(
-        F.transform(F.split(t, "\n"), lambda x: F.trim(x)),
-        lambda x: x != "",
-    )
+    text = F.coalesce(F.col(text_col), F.lit(""))
     terminal = lambda x: (x.endswith(".") | x.endswith("!")
                           | x.endswith("?") | x.endswith('"'))
-    five_words = lambda x: F.size(
-        F.filter(F.split(x, r"\s+"), lambda w: w != "")) >= 5
+    five_words = lambda x: F.size(words(x)) >= 5
     no_js = lambda x: ~F.lower(x).rlike(r"\bjavascript\b")
-    kept = F.filter(lines,
-                    lambda x: terminal(x) & five_words(x) & no_js(x))
+    bound = docs.select(
+        F.col(id_col).alias("doc_id"), text.alias("_t"),
+        F.filter(_lines(text),
+                 lambda x: terminal(x) & five_words(x) & no_js(x))
+        .alias("_kept"))
+    t, kept = F.col("_t"), F.col("_kept")
     clean_text = F.concat_ws("\n", kept)
     n_sentences = F.size(
         F.filter(F.split(clean_text, r"[.!?]+"),
                  lambda s: F.trim(s) != ""))
     has_lorem = F.lower(t).contains("lorem ipsum")
     has_brace = t.contains("{")
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
+    return bound.select(
+        "doc_id",
         clean_text.alias("clean_text"),
         F.size(kept).cast("int").alias("n_lines_kept"),
         n_sentences.cast("int").alias("n_sentences"),
@@ -330,6 +311,10 @@ def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
         has_brace.alias("has_brace"),
         (~has_lorem & ~has_brace & (n_sentences >= 3)).alias("c4_keep"),
     )
+
+
+# per-token edge strip of the bad-words match surface
+_EDGE_PUNCT = r"^[^a-z0-9]+|[^a-z0-9]+$"
 
 
 def c4_badwords_filter(docs: DataFrame, badwords: list[str],
@@ -355,6 +340,9 @@ def c4_badwords_filter(docs: DataFrame, badwords: list[str],
     * a MULTI-WORD entry (contains a space) hits when it appears as a
       consecutive token run — matched against the space-joined
       stripped-token stream with sentinel spaces;
+    * an entry that is not its own tokenization (lowercased, split,
+      stripped, joined by one space — e.g. ``badterm!``, ``zoo  zebra``
+      or an empty entry) could never hit, so it raises ``ValueError``;
     * the page is rejected on ANY hit; ``matched`` reports the
       lexicographically smallest matching entry so ties are
       deterministic; NULL/empty text keeps trivially.
@@ -369,30 +357,34 @@ def c4_badwords_filter(docs: DataFrame, badwords: list[str],
     Zero shuffle; the whole gate rides the scan at 100 TB, exactly
     like the other C4/Gopher page rules.
     """
-    from pyspark.sql import functions as F
-
     # the match surface is lowercase (tokens are folded), so fold the
     # list too — an upper-case entry would otherwise silently never
     # match; ``matched`` therefore always reports the lowercase form
     entries = sorted({e.lower() for e in badwords})
     if not entries:
         raise ValueError("badwords must be a non-empty list")
-    words = [e for e in entries if " " not in e]
+    for e in entries:
+        tokenized = " ".join(
+            tok for tok in (re.sub(_EDGE_PUNCT, "", w)
+                            for w in re.split(r"\s+", e, flags=re.ASCII))
+            if tok)
+        if not e or tokenized != e:
+            raise ValueError(
+                f"badwords entry {e!r} can never match: page tokens "
+                f"normalize it to {tokenized!r}")
+    single = [e for e in entries if " " not in e]
     phrases = [e for e in entries if " " in e]
-    toks = F.filter(
-        F.transform(
-            F.split(F.lower(F.trim(F.coalesce(F.col(text_col),
-                                              F.lit("")))), r"\s+"),
-            lambda w: F.regexp_replace(
-                w, r"^[^a-z0-9]+|[^a-z0-9]+$", ""),
-        ),
-        lambda w: w != "",
-    )
+    bound = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.filter(F.transform(words(F.col(text_col), lower=True),
+                             lambda w: F.regexp_replace(w, _EDGE_PUNCT, "")),
+                 lambda w: w != "").alias("_toks"))
+    toks = F.col("_toks")
     stream = F.concat(F.lit(" "), F.array_join(toks, " "), F.lit(" "))
     hit_arrays = []
-    if words:
+    if single:
         hit_arrays.append(F.array_intersect(
-            toks, F.array(*[F.lit(w) for w in words])))
+            toks, F.array(*[F.lit(w) for w in single])))
     if phrases:
         hit_arrays.append(F.filter(
             F.array(*[F.lit(p) for p in phrases]),
@@ -401,8 +393,8 @@ def c4_badwords_filter(docs: DataFrame, badwords: list[str],
         ))
     hits = F.sort_array(F.concat(*hit_arrays) if len(hit_arrays) > 1
                         else hit_arrays[0])
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
+    return bound.select(
+        "doc_id",
         F.when(F.size(hits) > 0, hits[0]).alias("matched"),
         (F.size(hits) == 0).alias("c4_badwords_keep"),
     )
@@ -435,8 +427,6 @@ def dataset_card(docs: DataFrame, short_doc_tokens: int = 32,
     |sources| plus subtotal rows) — the reduce side is tiny regardless
     of corpus size; nothing wide carries text.
     """
-    from pyspark.sql import functions as F
-
     from n8n_tools_api_spark.operators.packing import whitespace_token_count
 
     base = docs.select(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from n8n_tools_api_spark.functions.text import words
 from n8n_tools_api_spark.sources.tables import read_sf_table as _t
 
 
@@ -3660,6 +3661,8 @@ def _stream_agreement_corpus(spark, sf_dir, with_exact_dups):
     2) so a '2 hours' watermark keeps every batch-1 claim alive when
     batch 2 is arbitrated.
     """
+    from n8n_tools_api_spark.operators.dedup import _raw_words
+
     base_ts = F.to_timestamp(F.lit("2024-06-01 12:00:00"))
     docs = _t(spark, sf_dir, "documents", below=150)
     w = Window.partitionBy("text").orderBy("doc_id")
@@ -3679,7 +3682,7 @@ def _stream_agreement_corpus(spark, sf_dir, with_exact_dups):
             F.col("doc_id").cast("bigint").alias("id"),
             F.length("text").alias("orig_len"),
             F.concat_ws(" ", F.transform(
-                F.split(F.trim("text"), r"\s+"),
+                _raw_words(F.col("text")),
                 lambda wd: F.concat(F.lit("d"),
                                     F.col("doc_id").cast("string"),
                                     F.lit("_"), wd))).alias("text"),
@@ -4014,14 +4017,9 @@ def benchmark_decontam_q(spark, sf_dir):
     ))
     corpus = docs.unionByName(planted)
 
-    words = F.filter(
-        F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
-                r"\s+"),
-        lambda w: w != "",
-    )
     spans = (
         raw.where(F.col("doc_id") % 10 == 7)
-        .select(words.alias("_w"))
+        .select(words(F.col("text"), lower=True).alias("_w"))
         .where(F.size("_w") >= 25)
         .select(F.array_join(F.slice("_w", 5, 21), " ").alias("text"))
     )
@@ -4343,11 +4341,10 @@ def _web_pipeline(spark, sf_dir, use_lsh=False):
             F.concat(F.lit("unique tail for doc "), did,
                      F.lit(" with extra words.")))))
     )
-    bwords = F.filter(F.split(F.lower(F.trim(sent4)), r"\s+"),
-                      lambda w: w != "")
     bench = (
         docs.where((idn >= 200) & (idn < 300) & (idn % 10 == 3))
-        .select(bwords.alias("_w")).where(F.size("_w") >= 23)
+        .select(words(sent4, lower=True).alias("_w"))
+        .where(F.size("_w") >= 23)
         .select(F.array_join(F.slice("_w", 3, 21), " ").alias("text"))
     )
     domains = spark.range(1).select(

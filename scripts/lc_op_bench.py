@@ -88,14 +88,14 @@ if OP == "exact_substr":
         .cast("bigint").alias("docs_touched"),
     ).collect()[0].asDict()
 elif OP == "decontam":
+    from n8n_tools_api_spark.functions.text import words
     from n8n_tools_api_spark.operators.decontaminate import (
         ngram_decontaminate,
     )
 
-    words = F.filter(F.split(F.lower(F.trim(F.coalesce(
-        F.col("text"), F.lit("")))), r"\s+"), lambda w: w != "")
     bench = (corpus.where(F.col("doc_id").startswith("r0_"))
-             .select(words.alias("w")).where(F.size("w") >= 25)
+             .select(words(F.col("text"), lower=True).alias("w"))
+             .where(F.size("w") >= 25)
              .select(F.array_join(F.slice("w", 5, 21), " ").alias("text")))
     out = ngram_decontaminate(corpus, bench, n=13, broadcast_hits=False)
     rollup = out.agg(

@@ -2,6 +2,8 @@
 hand-computed fractions + gate behavior. The full DuckDB replay is the
 gopher_repetition oracle (test_queries_oracle.py)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -176,6 +178,19 @@ class TestC4BadwordsFilter:
                                    "doc_id string, text string")
         with pytest.raises(ValueError):
             c4_badwords_filter(df, [])
+
+    @pytest.mark.parametrize("entry", [
+        "badterm!", "zoo  zebra", "zoo\tzebra", " badterm", "", "!!"])
+    def test_entry_that_can_never_match_raises(self, spark, entry):
+        # page tokens are stripped and single-spaced, so an entry that
+        # is not its own tokenization would be silently inert
+        from n8n_tools_api_spark.operators.textstats import (
+            c4_badwords_filter)
+
+        df = spark.createDataFrame([("d", "x")],
+                                   "doc_id string, text string")
+        with pytest.raises(ValueError, match=re.escape(repr(entry))):
+            c4_badwords_filter(df, ["badterm", entry])
 
     def test_plan_is_narrow(self, spark):
         from n8n_tools_api_spark.operators.textstats import (
