@@ -4,12 +4,23 @@ columns, sorted rows, exact values) — the same comparison the driver
 does at sf0.01, so failures show up here first.
 """
 
+import json
+import os
+
 import duckdb
 import pandas as pd
 import pytest
 
 from n8n_tools_api_spark.plans import ORACLE_QUERIES, PIPELINE_QUERIES
 from n8n_tools_api_spark.sources.tables import TABLES
+from scripts.result_hashes import frame_hash
+
+# rows-only queries have no oracle, so their full output is pinned as a
+# frame_hash per query at sf0.001; regenerate with
+#   python scripts/result_hashes.py --sf-dir /root/testdata/sf0.001 \
+#       --cpus 4 --queries <the PIPELINE_QUERIES names> --out <this file>
+_GOLDEN = os.path.join(os.path.dirname(__file__), "golden",
+                       "pipeline_sf0.001.json")
 
 
 @pytest.fixture(scope="module")
@@ -43,13 +54,27 @@ def test_oracle_parity(spark, sf_dir, duck, name):
                                   check_exact=True)
 
 
+@pytest.fixture(scope="module")
+def pipeline_golden():
+    with open(_GOLDEN) as f:
+        return json.load(f)
+
+
+def test_pipeline_golden_covers_registry(pipeline_golden):
+    assert set(pipeline_golden) == set(PIPELINE_QUERIES)
+
+
 @pytest.mark.parametrize("name", sorted(PIPELINE_QUERIES))
-def test_pipeline_queries_run(spark, sf_dir, name):
+def test_pipeline_queries_run(spark, sf_dir, pipeline_golden, name):
     df = PIPELINE_QUERIES[name](spark, sf_dir)
-    rows = df.limit(5000).collect()
+    digest, n_rows = frame_hash(df)
     assert df.schema is not None
     # every rows-only query on this corpus is expected to be non-empty
-    assert len(rows) > 0, f"{name} returned no rows"
+    assert n_rows > 0, f"{name} returned no rows"
+    if os.path.basename(os.path.normpath(sf_dir)) == "sf0.001":
+        # the pins are taken at sf0.001; another test corpus has none
+        assert [digest, n_rows] == pipeline_golden[name], \
+            f"{name} output moved from its pinned hash"
 
 
 # queries whose CONSTRUCTION legitimately runs Spark jobs: everything
