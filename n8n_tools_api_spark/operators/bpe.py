@@ -176,8 +176,7 @@ def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2,
 
 
 def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
-               text_col: str = "text", id_col: str = "doc_id",
-               vocab_join: bool = False) -> DataFrame:
+               text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Apply a learned merge table to every document — the ENCODE half
     of the tokenizer loop (``bpe_learn`` trains it; a packing stage
     like operators/packing.py consumes the resulting token counts).
@@ -199,20 +198,9 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
       on), and ``encoded`` — the document's US-delimited symbol
       strings space-joined in word order ('' for an empty document).
 
-    Two physical shapes, identical results (pytest-pinned equality):
-
-    * ``vocab_join=False`` (default): one narrow per-row projection —
-      the fold runs per word OCCURRENCE. Zero exchanges; rides the
-      scan at 100 TB. Right when the merge table is small (the fold
-      is ``len(merges)`` nested higher-order expressions).
-    * ``vocab_join=True``: fold once per word TYPE (a distinct-word
-      aggregation bounded by vocabulary size), then map occurrences
-      through the vocab with a word-keyed equi-join of slim
-      (id, pos, word) rows and re-assemble in word order. Right when
-      the merge table is deep enough that per-occurrence folding
-      dominates the scan: CPU ∝ types instead of tokens, at the price
-      of two proportional-to-corpus slim shuffles. Nothing wide ever
-      carries full text either way.
+    Shape: one narrow per-row projection — the fold runs per word
+    OCCURRENCE (``len(merges)`` nested higher-order expressions). Zero
+    exchanges; rides the scan at 100 TB.
     """
     def _enc(word: Column) -> Column:
         sym = _initial_symbols(word)
@@ -220,36 +208,15 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
             sym = _apply_merge(sym, left, right)
         return sym
 
-    encodable = _encodable(words(F.col(text_col)))
-    if not vocab_join:
-        ws = F.col("_ws")
-        enc = F.transform(ws, _enc)
-        return docs.select(F.col(id_col), encodable.alias("_ws")).select(
-            F.col(id_col),
-            F.size(ws).alias("n_words"),
-            F.aggregate(enc, F.lit(0).cast("bigint"),
-                        lambda acc, x: acc + F.size(F.split(x, _US)))
-            .alias("n_tokens"),
-            F.concat_ws(" ", enc).alias("encoded"),
-        )
-    occurrences = docs.select(
-        F.col(id_col), F.posexplode(encodable).alias("pos", "word"))
-    vocab = (occurrences.select("word").distinct()
-             .select("word", _enc(F.col("word")).alias("sym")))
-    per_doc = (occurrences.join(vocab, "word")
-               .groupBy(id_col)
-               .agg(F.count("*").cast("int").alias("n_words"),
-                    F.sum(F.size(F.split("sym", _US))).cast("bigint")
-                    .alias("n_tokens"),
-                    F.concat_ws(" ", F.transform(
-                        F.array_sort(F.collect_list(
-                            F.struct("pos", "sym"))),
-                        lambda s: s["sym"])).alias("encoded")))
-    # posexplode drops empty documents — restore them as 0/0/'' so the
-    # operator is total like the narrow shape
-    return (docs.select(id_col).join(per_doc, id_col, "left")
-            .select(F.col(id_col),
-                    F.coalesce("n_words", F.lit(0)).alias("n_words"),
-                    F.coalesce("n_tokens", F.lit(0).cast("bigint"))
-                    .alias("n_tokens"),
-                    F.coalesce("encoded", F.lit("")).alias("encoded")))
+    ws = F.col("_ws")
+    enc = F.transform(ws, _enc)
+    return docs.select(
+        F.col(id_col), _encodable(words(F.col(text_col))).alias("_ws"),
+    ).select(
+        F.col(id_col),
+        F.size(ws).alias("n_words"),
+        F.aggregate(enc, F.lit(0).cast("bigint"),
+                    lambda acc, x: acc + F.size(F.split(x, _US)))
+        .alias("n_tokens"),
+        F.concat_ws(" ", enc).alias("encoded"),
+    )

@@ -71,10 +71,10 @@ def curation_keep_list(docs: DataFrame, use_lsh: bool = False,
     ``checkpoint_dir`` makes every intermediate materialization
     reliable (parquet on shared storage instead of executor-local
     blocks — operators/materialize.py): the ranked frame, the LSH
-    banded frame, and every components round. Default localCheckpoint
-    is right on local[k]; on a 1000-executor cluster a lost executor
-    would otherwise kill the multi-hour run mid-loop (round-3 verdict
-    #2).
+    banded frame, the capped shingle stream, and every components
+    round. Default localCheckpoint is right on local[k]; on a
+    1000-executor cluster a lost executor would otherwise kill the
+    multi-hour run mid-loop (round-3 verdict #2).
     """
     from n8n_tools_api_spark.operators.dedup import (
         minhash_lsh_candidates,
@@ -99,28 +99,15 @@ def curation_keep_list(docs: DataFrame, use_lsh: bool = False,
         "ranked",
     )
     survivors = ranked.where(F.col("rn") == 1).select("doc_id", "clean_text")
-    if use_lsh:
-        cands = (
-            minhash_lsh_candidates(survivors, text_col="clean_text",
-                                   checkpoint_banded=True,
-                                   checkpoint_dir=checkpoint_dir)
-            .where(F.col("n_shared_bands") >= 2)
-            .select("doc_a", "doc_b")
-        )
-        pairs = ngram_jaccard_pairs(survivors, text_col="clean_text", k=k,
-                                    threshold=threshold,
-                                    candidate_pairs=cands,
-                                    checkpoint_shingles=True,
-                                    checkpoint_dir=checkpoint_dir)
-    else:
-        # cut the capped shingle stream (the "cand" mode): without it
-        # the explode over the cleaned survivors executes once per
-        # consumer — df-cap build, per-doc sizes, and BOTH self-join
-        # sides (four concurrent exchanges in the profile)
-        pairs = ngram_jaccard_pairs(survivors, text_col="clean_text", k=k,
-                                    threshold=threshold,
-                                    checkpoint_shingles=True,
-                                    checkpoint_dir=checkpoint_dir)
+    cands = (
+        minhash_lsh_candidates(survivors, text_col="clean_text",
+                               checkpoint_dir=checkpoint_dir)
+        .where(F.col("n_shared_bands") >= 2)
+        .select("doc_a", "doc_b")
+    ) if use_lsh else None
+    pairs = ngram_jaccard_pairs(survivors, text_col="clean_text", k=k,
+                                threshold=threshold, candidate_pairs=cands,
+                                checkpoint_dir=checkpoint_dir)
     comp = near_dup_components(pairs.select("doc_a", "doc_b"),
                                checkpoint_dir=checkpoint_dir)
     surv_out = (
@@ -578,7 +565,7 @@ TRACKING_PARAM_NAMES = ["fbclid", "gclid", "mc_cid", "mc_eid", "msclkid",
                         "ref"]
 
 
-def canonical_url(url, id_when_unparseable: bool = True) -> "F.Column":
+def canonical_url(url) -> "F.Column":
     """Canonical form of a URL column — the normalization behind
     URL-level dedup, the FIRST dedup stage of the public web-curation
     canon (RefinedWeb, Penedo et al. 2023 §3.2 deduplicates fetched

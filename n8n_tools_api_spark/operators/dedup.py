@@ -17,7 +17,8 @@ from itertools import combinations as _combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import word_ngrams, words
+from ..functions.text import words
+from .materialize import RoundMaterializer
 
 # MinHash universal-hash parameters: h_j(x) = (a_j * x + b_j) mod p.
 # Fixed seeds → deterministic signatures across runs and cluster sizes.
@@ -45,24 +46,6 @@ def _raw_words(text):
     near-dup oracles pin these semantics, so this is not
     :func:`words`."""
     return F.split(F.trim(text), r"\s+")
-
-
-def word_shingles(df: DataFrame, text_col: str = "text", k: int = 5,
-                  id_col: str = "doc_id") -> DataFrame:
-    """(id, shingle) rows: distinct k-word shingles, pure column exprs.
-
-    ``sequence``+``transform``+``slice`` build the shingle array without
-    leaving the JVM; short documents fall back to the whole text as one
-    shingle so no document silently vanishes.
-    """
-    with_words = df.select(F.col(id_col).alias("doc_id"),
-                           _raw_words(F.col(text_col)).alias("_words"))
-    w = F.col("_words")
-    shingles = F.when(F.size(w) >= k, word_ngrams(w, k)) \
-        .otherwise(F.array(F.concat_ws(" ", w)))
-    return with_words.select(
-        "doc_id", F.explode(F.array_distinct(shingles)).alias("shingle")
-    )
 
 
 def shingle_hash_array(df: DataFrame, text_col: str = "text", k: int = 5,
@@ -132,10 +115,9 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     the old path hashed shingle STRINGS (xxhash64 of concat_ws), the
     current one hashes a rot-XOR fold of per-word hashes, so any
     persisted pre-change signatures must be regenerated. NULL-text
-    edge: ``word_shingles`` folds NULL text to the '' shingle while
-    ``shingle_hash_array`` yields a ``[NULL]`` hash array (the fold
-    over a NULL word array is NULL) — the two paths diverge on NULL
-    text by design; only same-path comparisons are ever made.
+    edge: ``shingle_hash_array`` yields a ``[NULL]`` hash array (the
+    fold over a NULL word array is NULL); ngram_jaccard_pairs coalesces
+    NULL text to '' before hashing instead.
     """
     P = F.lit(_MERSENNE_P)
     base = shingle_hash_array(df, text_col, k, id_col, keep_cols).select(
@@ -157,10 +139,9 @@ def minhash_banded(df: DataFrame, text_col: str = "text",
     """(doc_id, [keep_cols...,] band, bucket) rows: the LSH banding of
     MinHash signatures.
 
-    Exposed separately so callers can materialize it ONCE
-    (``localCheckpoint(eager=True)``) before the self-join in
-    lsh_candidates_from_banded — otherwise the shingle→signature
-    pipeline (the expensive part) executes twice, once per join side.
+    Exposed separately for callers that own their lineage (the
+    streaming prefilter, streaming/neardup_stream.py);
+    minhash_lsh_candidates cuts it itself before its self-join.
 
     ``keep_cols`` carries extra columns (e.g. the event-time column for
     the streaming prefilter) through the otherwise doc_id-only output;
@@ -190,54 +171,38 @@ def minhash_banded(df: DataFrame, text_col: str = "text",
     ).select("doc_id", *keep_cols, "bb.band", "bb.bucket")
 
 
-def lsh_candidates_from_banded(banded: DataFrame) -> DataFrame:
-    """Candidate pairs from a (doc_id, band, bucket) DF — intra-bucket
-    equi-join (never a cross join), AQE handles residual bucket skew."""
-    left = banded.alias("l")
-    right = banded.alias("r")
+def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
+                           num_hashes: int = 64, bands: int = 16, k: int = 5,
+                           id_col: str = "doc_id",
+                           checkpoint_dir: str | None = None) -> DataFrame:
+    """LSH candidate pairs: (doc_a, doc_b, n_shared_bands).
+
+    Signature → ``bands`` band-hashes (xxhash64 over each signature
+    slice) → explode → intra-bucket equi-join on (band, bucket), never
+    a cross join; AQE handles residual bucket skew. Bucket sizes are
+    near-uniform, so the pair blow-up is bounded.
+
+    The banded frame feeds both sides of the self-join, so it is cut
+    once (eagerly, at construction): uncut, the shingle→signature
+    pipeline (the expensive part) runs once per join side, ~2× the
+    query. ``checkpoint_dir`` only picks where the cut lives — a
+    reliable parquet round-trip (operators/materialize.py) instead of
+    executor-storage blocks, so executor loss can't kill a long run
+    between the signature stage and the bucket join.
+    """
+    banded = RoundMaterializer(checkpoint_dir)(
+        minhash_banded(df, text_col, num_hashes, bands, k, id_col), "banded")
     return (
-        left.join(right, ["band", "bucket"])
+        banded.alias("l").join(banded.alias("r"), ["band", "bucket"])
         .where(F.col("l.doc_id") < F.col("r.doc_id"))
         .groupBy(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("n_shared_bands"))
     )
 
 
-def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
-                           num_hashes: int = 64, bands: int = 16, k: int = 5,
-                           id_col: str = "doc_id",
-                           checkpoint_banded: bool = False,
-                           checkpoint_dir: str | None = None) -> DataFrame:
-    """LSH candidate pairs: (doc_a, doc_b, n_shared_bands).
-
-    Signature → ``bands`` band-hashes (xxhash64 over each signature
-    slice) → explode → groupBy band bucket → intra-bucket pairing.
-    Bucket sizes are near-uniform, so the pair blow-up is bounded.
-
-    ``checkpoint_banded=True`` materializes the banded DF eagerly so
-    the signature pipeline runs once instead of once per join side —
-    the right choice for one-shot queries. Left False by default for
-    composition into longer lineages the caller manages (a library
-    can't unpersist safely; localCheckpoint blocks are reclaimed only
-    with the RDD, so callers who loop should own materialization via
-    minhash_banded). ``checkpoint_dir`` makes that materialization
-    reliable (parquet round-trip instead of executor-storage blocks —
-    see operators/materialize.py) so executor loss can't kill a long
-    run between the signature stage and the bucket join.
-    """
-    from .materialize import RoundMaterializer
-
-    banded = minhash_banded(df, text_col, num_hashes, bands, k, id_col)
-    if checkpoint_banded or checkpoint_dir is not None:
-        banded = RoundMaterializer(checkpoint_dir)(banded, "banded")
-    return lsh_candidates_from_banded(banded)
-
-
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", k: int = 5,
                         threshold: float = 0.5, id_col: str = "doc_id",
                         candidate_pairs: DataFrame | None = None,
-                        hash_shingles: bool = True,
-                        checkpoint_shingles: bool | str = False,
                         checkpoint_dir: str | None = None) -> DataFrame:
     """Exact n-gram Jaccard similarity.
 
@@ -255,61 +220,32 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", k: int = 5,
     before aggregation. This is the 100-TB path — corpus-wide pair
     generation is only sane for small/filtered corpora.
 
-    ``hash_shingles=True`` (default) runs the whole intersection on
-    per-shingle 64-bit hashes (the zero-allocation rot-XOR fold from
-    shingle_hash_array) instead of shingle STRINGS: the self-join
-    shuffles bigints, not ~30-byte strings — measured 2.3× faster and
-    materially better 2→8-core scaling on the suite-3 corpus (the
-    string shuffle was DRAM-bound). Counts are identical up to 64-bit
-    hash collisions (expected collisions ≈ n_distinct²/2⁶⁵ — ~1e-4
-    ACROSS a 77M-shingle corpus, each worth ±1 on one n_shared).
-    NULL/empty-text parity with the string path is preserved: text is
-    coalesced to '' first, so the '' shingle maps to one non-NULL hash
-    on both paths and empty docs can still pair with each other.
-    ``hash_shingles=False`` keeps the exact string formulation.
+    Shingles are per-shingle 64-bit hashes (the zero-allocation
+    rot-XOR fold from shingle_hash_array), not shingle STRINGS: the
+    self-join shuffles bigints, not ~30-byte strings — measured 2.3×
+    faster than the string formulation and materially better 2→8-core
+    scaling on the suite-3 corpus (the string shuffle was DRAM-bound).
+    Counts are exact up to 64-bit hash collisions (expected collisions
+    ≈ n_distinct²/2⁶⁵ — ~1e-4 ACROSS a 77M-shingle corpus, each worth
+    ±1 on one n_shared). Text is coalesced to '' first, so the ''
+    shingle maps to one non-NULL hash and empty docs can still pair
+    with each other.
 
-    ``checkpoint_shingles`` cuts the exploded (doc, shingle) lineage,
-    which otherwise re-evaluates once per consumer (df-cap count,
-    per-doc sizes, intersection self-join). ``True``/``"cand"``
-    materializes the capped + candidate-filtered stream (small — the
-    candidate docs only); ``"both"``/``"raw"`` also materializes the
-    full pre-cap stream, which pays off on corpora that fit executor
-    storage comfortably but at ~10⁸ exploded rows the store's GC /
-    eviction pressure WORSENED 8-core wall in the suite-3 bench — the
-    candidate-only cut is the scale-safe default meaning of True.
-    Construction becomes eager, so it's opt-in — the composed curation
-    flow sets it; one-shot small-corpus oracle queries keep the lazy
-    default. The cut applies on BOTH paths: with ``candidate_pairs``
-    it materializes the capped + candidate-filtered stream, without
-    them the capped stream. ``checkpoint_dir`` upgrades the cut to a
-    reliable parquet round-trip (operators/materialize.py) for cluster
-    runs, and by itself implies the ``"cand"`` cut.
+    The capped stream (candidate-filtered, when candidates are given)
+    feeds the per-doc sizes and both sides of the intersection
+    self-join, so it is cut once, eagerly at construction — uncut,
+    each consumer replays the explode and the anti/semi joins. Only
+    that small stream is cut: cutting the full pre-cap stream as well
+    measured WORSE 8-core wall at 2M docs (the ~133M-row executor
+    store's GC/eviction pressure, BENCH round 5). ``checkpoint_dir``
+    only picks where the cut lives (a reliable parquet round-trip,
+    operators/materialize.py, for cluster runs).
     """
-    from .materialize import RoundMaterializer
-
-    if hash_shingles:
-        safe = df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit("")))
-        sh = shingle_hash_array(safe, text_col, k, id_col).select(
-            "doc_id",
-            F.explode(F.array_distinct("shingle_hashes")).alias("shingle"),
-        )
-    else:
-        sh = word_shingles(df, text_col, k, id_col)
-    # mode: False = no cuts; "cand" = cut only the capped+candidate-
-    # filtered stream (small; the default meaning of True for callers);
-    # "raw" / "both" = also cut the full exploded stream — only worth it
-    # when the corpus fits executor storage comfortably (at 2M docs the
-    # ~133M-row raw store caused GC/eviction pressure that WORSENED
-    # 8-core wall; measured in BENCH round 5)
-    mode = ("cand" if checkpoint_shingles is True else checkpoint_shingles)
-    if checkpoint_dir is not None and not mode:
-        # a reliable dir with no explicit mode means "cut reliably":
-        # allocating a materializer without ever cutting was a silent
-        # no-op (round-5 review finding)
-        mode = "cand"
-    mat = RoundMaterializer(checkpoint_dir) if mode else None
-    if mat is not None and mode in ("raw", "both"):
-        sh = mat(sh, "shingles")
+    safe = df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit("")))
+    sh = shingle_hash_array(safe, text_col, k, id_col).select(
+        "doc_id",
+        F.explode(F.array_distinct("shingle_hashes")).alias("shingle"),
+    )
     n_docs_1row = df.select(F.count("*").alias("n_docs"))
     over_cap = (
         sh.groupBy("shingle").agg(F.count("*").alias("df"))
@@ -319,15 +255,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", k: int = 5,
         .select("shingle")
     )
     sh = sh.join(F.broadcast(over_cap), "shingle", "left_anti")
-    if candidate_pairs is None and mat is not None and mode in ("cand",
-                                                                "both"):
-        # exact (no-LSH) path: the capped stream feeds the sizes
-        # aggregate AND the self-join — cut it here, otherwise
-        # checkpoint_shingles=True was a silent no-op on this path
-        # (the only other cut point sits inside the candidate branch)
-        sh = mat(sh, "capped_shingles")
-        mat.release("shingles")
-
     if candidate_pairs is not None:
         # canonicalize orientation: pair_stream enforces doc_a < doc_b,
         # so a caller-supplied (b, a) pair must still match — least/
@@ -342,13 +269,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", k: int = 5,
             .distinct()
         )
         sh = sh.join(cand_docs, "doc_id", "left_semi")
-        if mat is not None and mode in ("cand", "both"):
-            # the capped + candidate-filtered stream feeds both the
-            # sizes aggregate and the intersection self-join — without
-            # a cut each replays the explode + anti/semi joins over the
-            # full shingle stream
-            sh = mat(sh, "cand_shingles")
-            mat.release("shingles")
+    sh = RoundMaterializer(checkpoint_dir)(sh, "capped_shingles")
 
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     pair_stream = (
@@ -436,7 +357,6 @@ def _hamming_filter(pairs: DataFrame, max_distance: int) -> DataFrame:
 
 def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
                           max_distance: int = 3, id_col: str = "doc_id",
-                          checkpoint_keyed: bool = False,
                           checkpoint_dir: str | None = None) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_distance.
 
@@ -460,6 +380,12 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     stays tiny per row — the right trade at 100 TB. Candidates are
     exact-verified with bit_count XOR, so output = true pairs exactly;
     equivalence with the chunked form is pinned by test.
+
+    The keyed frame feeds both sides of the self-join, so it is cut
+    once, eagerly at construction: uncut, the token explode + 64
+    bit-vote aggregation (the expensive stage) runs once per side,
+    measured ~2× the whole query at sf1.0. ``checkpoint_dir`` only
+    picks where the cut lives (operators/materialize.py).
     """
     n_blocks = max_distance + 3
     combos = list(_combinations(range(n_blocks), 3))
@@ -482,16 +408,7 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
         "doc_id", "simhash",
         F.explode(F.array(*keys)).alias("c"),
     ).select("doc_id", "simhash", "c.combo_idx", "c.key_val")
-    if checkpoint_keyed or checkpoint_dir is not None:
-        # the self-join below evaluates its input subtree once per side:
-        # without a materialization the token explode + 64 bit-vote
-        # aggregation (the expensive stage) runs TWICE (same pattern as
-        # minhash_lsh_candidates' checkpoint_banded; measured ~2x the
-        # whole query at sf1.0). Opt-in for the same reasons documented
-        # there — loops should own their materialization.
-        from .materialize import RoundMaterializer
-
-        keyed = RoundMaterializer(checkpoint_dir)(keyed, "simhash_keyed")
+    keyed = RoundMaterializer(checkpoint_dir)(keyed, "simhash_keyed")
     pairs = (
         keyed.alias("a").join(keyed.alias("b"), ["combo_idx", "key_val"])
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -691,8 +608,6 @@ def near_dup_components(pairs: DataFrame, max_iters: int = 20,
     code-point order), so both paths are value-identical — pinned by
     test.
     """
-    from .materialize import RoundMaterializer
-
     mat = RoundMaterializer(checkpoint_dir)
     edges = mat(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))

@@ -93,14 +93,13 @@ def media_upload_stats(extracted: DataFrame, blobs: DataFrame) -> DataFrame:
     )
 
 
-def apply_media_map(extracted: DataFrame, blobs: DataFrame,
-                    fallback_to_inline: bool = True) -> DataFrame:
+def apply_media_map(extracted: DataFrame, blobs: DataFrame) -> DataFrame:
     """Broadcast-join uploaded refs back onto extracted spans (J2/F16).
 
     ``extracted`` is pipeline output (media_ref already content-derived);
     this stage *re-validates* each ref against the blob table — refs
-    whose blob failed to land are nulled (or kept, mirroring
-    fallback_to_base64) so downstream readers never dangle.
+    whose blob failed to land are blanked to '' (the inline fallback,
+    mirroring fallback_to_base64) so downstream readers never dangle.
     """
     media_map = F.broadcast(
         blobs.select(F.col("media_ref").alias("_known_ref"))
@@ -112,7 +111,7 @@ def apply_media_map(extracted: DataFrame, blobs: DataFrame,
         .join(media_map, F.col("s.media_ref") == F.col("_known_ref"), "left")
     )
     new_ref = F.when(F.col("_known_ref").isNotNull(), F.col("s.media_ref")) \
-        .otherwise(F.lit("") if fallback_to_inline else F.lit(None))
+        .otherwise(F.lit(""))
     rebuilt = spans.select(
         "doc_id", "pos",
         F.when(

@@ -63,11 +63,8 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("substring(text, 1, cast(length(text) * 0.9 as int))").alias("text"))
     )
     corpus = docs.unionByName(mutated)
-    # checkpoint_banded: the shingle→signature pipeline (the expensive
-    # part) must run once, not once per self-join side (round-1 verdict)
     return (
-        minhash_lsh_candidates(corpus, num_hashes=64, bands=16, k=5,
-                               checkpoint_banded=True)
+        minhash_lsh_candidates(corpus, num_hashes=64, bands=16, k=5)
         .where(F.col("n_shared_bands") >= 2)
         .orderBy("doc_a", "doc_b")
     )
@@ -85,9 +82,7 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("substring(text, 1, cast(length(text) * 0.95 as int))").alias("text"))
     )
     corpus = docs.unionByName(mutated)
-    # checkpoint_keyed: one signature pass, not one per self-join side
-    return simhash_hamming_pairs(corpus, max_distance=3,
-                                 checkpoint_keyed=True) \
+    return simhash_hamming_pairs(corpus, max_distance=3) \
         .orderBy("doc_a", "doc_b")
 
 
@@ -107,7 +102,7 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("substring(text, 1, cast(length(text) * 0.9 as int))").alias("text"))
     )
     pairs = (
-        minhash_lsh_candidates(docs.unionByName(mutated), checkpoint_banded=True)
+        minhash_lsh_candidates(docs.unionByName(mutated))
         .where(F.col("n_shared_bands") >= 2)
         .select("doc_a", "doc_b")
     )

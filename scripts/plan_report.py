@@ -196,9 +196,11 @@ def main() -> None:
         "",
         "## iterative loops — materialization & failure mode",
         "",
-        "`near_dup_components`, `kmeans_refine`, `curation_keep_list`,",
-        "and `minhash_lsh_candidates(checkpoint_banded=True)` cut lineage",
-        "every round. Default = `localCheckpoint`: blocks live in",
+        "`near_dup_components`, `kmeans_refine` and `curation_keep_list`",
+        "cut lineage every round, and the near-dup operators",
+        "(`minhash_lsh_candidates`, `simhash_hamming_pairs`,",
+        "`ngram_jaccard_pairs`) cut their self-joined input once.",
+        "Default = `localCheckpoint`: blocks live in",
         "EXECUTOR storage, so on a real cluster one lost executor makes",
         "them unrecoverable and kills the job mid-loop — acceptable on",
         "local[k], not for a multi-hour 100-TB run. Passing",
@@ -226,17 +228,16 @@ def main() -> None:
         ._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in p and "EvalPython" not in p
     lines += [
-        "## bpe_encode (narrow mode — tokenizer apply)",
+        "## bpe_encode (tokenizer apply)",
         "",
         "**Exchange count: 0, UDF-free** (asserted at generation time) —",
         "every learned merge replays as one let-bound higher-order fold",
         "per level, so the whole encode is a single per-row projection",
         "that rides the scan; the let binding keeps stacked-merge",
         "expression growth linear (unbound it copies the subtree",
-        "~4×/level — measured 25 MiB task binaries by merge 8). The",
-        "`vocab_join` mode trades this per-occurrence CPU for a",
-        "per-TYPE fold plus slim word-keyed map-back shuffles. Pinned",
-        "by `tests/test_bpe.py::TestBpeEncode` (plan + mode equality).",
+        "~4×/level — measured 25 MiB task binaries by merge 8). Pinned",
+        "by `tests/test_bpe.py::TestBpeEncode` (plan + pure-Python",
+        "replay equality).",
         "",
     ]
 

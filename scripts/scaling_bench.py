@@ -116,7 +116,7 @@ best = None
 load0 = os.getloadavg()[0]
 for _ in range(int(os.environ.get("BENCH_REPEATS", "3"))):
     t0 = time.perf_counter()
-    pairs = (minhash_lsh_candidates(corpus, checkpoint_banded=True)
+    pairs = (minhash_lsh_candidates(corpus)
              .where(F.col("n_shared_bands") >= 2)
              .select("doc_a", "doc_b"))
     n_clusters = duplicate_clusters(pairs).count()

@@ -150,13 +150,13 @@ def _py_encode(texts, merges):
     return out
 
 
-def _encode(spark, texts, merges, **kw):
+def _encode(spark, texts, merges):
     from n8n_tools_api_spark.operators.bpe import bpe_encode
 
     df = spark.createDataFrame(
         [(str(i), t) for i, t in enumerate(texts)],
         "doc_id string, text string")
-    rows = bpe_encode(df, merges, **kw).collect()
+    rows = bpe_encode(df, merges).collect()
     by_id = {r["doc_id"]: (r["n_words"], r["n_tokens"], r["encoded"])
              for r in rows}
     assert len(by_id) == len(texts)
@@ -184,7 +184,7 @@ class TestBpeEncode:
                         "lo\x1fw\x1fe\x1fr\x1f</w> "
                         "w\x1fi\x1fd\x1fest</w>")]
 
-    def test_matches_pure_python_replay_both_modes(self, spark):
+    def test_matches_pure_python_replay(self, spark):
         texts = [f"alpha beta{i % 7} gamma gamma aaaa aa héllo wörld"
                  for i in range(12)]
         texts += ["zzz zz zzzz banana banana anana",
@@ -192,14 +192,13 @@ class TestBpeEncode:
         merges = [(a, b) for _, a, b, _, _ in _py_bpe(texts, 8)]
         want = _py_encode(texts, merges)
         assert _encode(spark, texts, merges) == want
-        assert _encode(spark, texts, merges, vocab_join=True) == want
 
     def test_empty_merge_table_yields_character_tokens(self, spark):
         got = _encode(spark, ["ab a"], [])
         assert got == [(2, 5, "a\x1fb\x1f</w> a\x1f</w>")]
 
     def test_narrow_mode_plan_has_no_exchange(self, spark):
-        # the default encode shape must ride the scan at 100 TB: one
+        # the encode shape must ride the scan at 100 TB: one
         # per-row projection, zero exchanges (same pin as extraction)
         from n8n_tools_api_spark.operators.bpe import bpe_encode
 

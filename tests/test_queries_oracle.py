@@ -77,12 +77,14 @@ def test_pipeline_queries_run(spark, sf_dir, pipeline_golden, name):
             f"{name} output moved from its pinned hash"
 
 
-# queries whose CONSTRUCTION legitimately runs Spark jobs: everything
-# that reaches the components fixpoint (one convergence .collect() per
-# round) or the k-means/recall loops. Measured with the fixed classic-
-# DataFrame patch by emptying this set and recording the failures —
-# minhash_near_dups and ann_kmeans_refined_counts turned out NOT to be
-# eager and are now guarded.
+# queries whose CONSTRUCTION legitimately runs Python-side DataFrame
+# actions: everything that reaches the components fixpoint (one
+# convergence .collect() per round) or the k-means/recall loops.
+# Measured with the fixed classic-DataFrame patch by emptying this set
+# and recording the failures. Construction of the other queries may
+# still run Spark jobs the guard cannot see: minhash_near_dups and
+# simhash_near_dups each run a localCheckpoint job at build time (the
+# near-dup operators cut their self-joined input eagerly).
 _EAGER_BY_DESIGN = {"near_dup_clusters", "curation_pipeline",
                     "ann_recall_evidence", "stream_curation",
                     "web_pipeline_lsh", "semdedup_status_counts"}
@@ -95,6 +97,10 @@ def test_query_construction_runs_no_driver_action(spark, sf_dir, name,
     """Building a query plan must not trigger driver actions (round-2
     verdict #5: embedding_near_dup_pairs sniffed the vector dim with
     `.first()`, one extra driver job per query).
+
+    The guard catches Python-side DataFrame actions only; JVM-side cuts
+    (``localCheckpoint``, a reliable parquet round-trip) and the jobs
+    Spark runs to infer a parquet schema pass it unseen.
 
     Patches the CLASSIC DataFrame (the concrete runtime class on a
     non-Connect session), not the abstract ``pyspark.sql.DataFrame``
