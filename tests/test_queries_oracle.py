@@ -17,7 +17,7 @@ from scripts.result_hashes import frame_hash
 
 # rows-only queries have no oracle, so their full output is pinned as a
 # frame_hash per query at sf0.001; regenerate with
-#   python scripts/result_hashes.py --sf-dir /root/testdata/sf0.001 \
+#   python scripts/result_hashes.py --sf-dir <the sf0.001 corpus> \
 #       --cpus 4 --queries <the PIPELINE_QUERIES names> --out <this file>
 _GOLDEN = os.path.join(os.path.dirname(__file__), "golden",
                        "pipeline_sf0.001.json")
