@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..functions.pyworker import udf_body
+
 
 def strip_boilerplate_stage(pages: DataFrame,
                             html_col: str = "html") -> DataFrame:
@@ -34,6 +36,7 @@ def strip_boilerplate_stage(pages: DataFrame,
     out_fields = [f for f in pages.schema.fields if f.name != html_col]
     schema = StructType(out_fields + [StructField("main_text", StringType())])
 
+    @udf_body
     def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # imported inside the task so spark-submit --py-files ships one zip
         from n8n_tools_api_spark.refsem import strip_boilerplate

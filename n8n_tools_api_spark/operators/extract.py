@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.pyworker import udf_body
+
 OUTPUT_SCHEMA = (
     "doc_id string, "
     "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
@@ -37,6 +39,7 @@ STATS_SCHEMA = (
 )
 
 
+@udf_body
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # imported inside the task so spark-submit --py-files ships one zip
     from n8n_tools_api_spark.refsem import extract_document

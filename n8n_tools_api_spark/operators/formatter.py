@@ -20,6 +20,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions.pyworker import udf_body
+
 FORMATTED_SCHEMA = (
     "doc_id string, "
     "extracted_text string, "
@@ -33,6 +35,7 @@ FORMATTED_SCHEMA = (
 )
 
 
+@udf_body
 def _format_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from n8n_tools_api_spark.refsem import (
         calculate_confidence_score,

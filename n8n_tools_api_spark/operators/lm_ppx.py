@@ -84,6 +84,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..functions.pyworker import udf_body
 from ..functions.text import words
 
 
@@ -235,6 +236,7 @@ def ccnet_buckets(scored: DataFrame) -> DataFrame:
 _DETECT_SCHEMA = "doc_id string, detected string, text string"
 
 
+@udf_body
 def _detect_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from n8n_tools_api_spark.refsem import detect_primary_language
 

@@ -27,6 +27,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions.pyworker import udf_body
+
 DECODED_SCHEMA = (
     "media_key string, kind string, width int, height int, "
     "n_channels int, feature_hash bigint"
@@ -155,6 +157,7 @@ def _decode_one(payload: bytes) -> tuple[int, int, int]:
         return _fake_decode(payload)
 
 
+@udf_body
 def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         keys, kinds, ws, hs, cs, fh = [], [], [], [], [], []

@@ -20,6 +20,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions.pyworker import udf_body
+
 BRONZE_SCHEMA = (
     "doc_id string, "
     "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
@@ -30,6 +32,7 @@ BRONZE_SCHEMA = (
 )
 
 
+@udf_body
 def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from n8n_tools_api_spark.refsem.pdfparse import (
         PdfParseError, get_pdf_metadata, parse_pdf_pages,

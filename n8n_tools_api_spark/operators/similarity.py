@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.pyworker import udf_body
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -382,6 +384,7 @@ def semdedup_keep_list(emb: DataFrame, threshold: float = 0.95,
     id_type = scored.schema["vec_id"].dataType.simpleString()
     thr = float(threshold)
 
+    @udf_body
     def _cand_fn(pdf):
         import numpy as np
         import pandas as pd

@@ -18,6 +18,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions.pyworker import udf_body
 from ..functions.text import explode_grams, word_ngrams, words
 
 LANG_SCHEMA = (
@@ -27,6 +28,7 @@ LANG_SCHEMA = (
 CLEAN_SCHEMA = "doc_id bigint, clean_text string, clean_chars int"
 
 
+@udf_body
 def _lang_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     import math
 
@@ -58,6 +60,7 @@ def detect_language(docs: DataFrame) -> DataFrame:
     )
 
 
+@udf_body
 def _clean_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from n8n_tools_api_spark.refsem import clean_extracted_text
 

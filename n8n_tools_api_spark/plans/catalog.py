@@ -3347,9 +3347,10 @@ SELECT * FROM (
   UNION ALL SELECT 3, 'uniqueness', 'doc_id',
          CAST(dc_id AS DOUBLE) / CAST(total AS DOUBLE), 1.0,
          CAST(dc_id AS DOUBLE) / CAST(total AS DOUBLE) = 1.0 FROM m
-  UNION ALL SELECT 4, 'min_value', 'n_chars', mn_n, 0.0, mn_n >= 0.0 FROM m
+  UNION ALL SELECT 4, 'min_value', 'n_chars', mn_n, 0.0,
+         COALESCE(mn_n >= 0.0, FALSE) FROM m
   UNION ALL SELECT 5, 'max_value', 'n_chars', mx_n, 100000.0,
-         mx_n <= 100000.0 FROM m
+         COALESCE(mx_n <= 100000.0, FALSE) FROM m
 )
 ORDER BY check_id
 """

@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, StringType, StructField, StructType,
 )
 
+from ..functions.pyworker import udf_body
+
 # The reference's canonical test images:
 # 1x1 PNG — mistral_service.py:924, tests/utils/test_ocr_response_formatter.py:45
 CANONICAL_PNG_B64 = (
@@ -235,6 +237,7 @@ def bench_corpus(spark: SparkSession, n_docs: int, seed: int = 42,
     if not os.path.exists(f"{path}/_SUCCESS"):
         import pandas as pd
 
+        @udf_body
         def gen(batches):
             for pdf in batches:
                 ids, spans = [], []

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.pyworker import udf_body
+
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp_ntz, user_id bigint, "
     "event_type string, value double, props string"
@@ -37,6 +39,7 @@ STATE_SCHEMA = (
 )
 
 
+@udf_body
 def _sessionize(key, batches: Iterator[pd.DataFrame],
                 state: GroupState) -> Iterator[pd.DataFrame]:
     # integer microseconds throughout: fits a double exactly (< 2^53)

@@ -3,9 +3,13 @@
 both verdicts per constraint kind, the empty-corpus fail-loudly rule,
 declaration order, and constraint validation."""
 
+import re
+
+import duckdb
 import pytest
 
 from n8n_tools_api_spark.operators.expectations import corpus_expectations
+from n8n_tools_api_spark.plans.catalog import CORPUS_EXPECTATIONS_SQL
 
 
 def _run(spark, rows, suite):
@@ -53,6 +57,36 @@ class TestEmptyCorpus:
         assert out[0][5] is True          # 0 rows >= 0
         assert [r[5] for r in out[1:]] == [False] * 4
         assert all(r[3] is None for r in out[2:])  # NULL metrics
+
+
+class TestAllNullNumericColumn:
+    def test_min_max_fail_and_match_the_oracle(self, spark):
+        # a non-empty corpus whose numeric column is all NULL: MIN/MAX
+        # are NULL, so an uncoalesced comparison would be NULL, not False
+        rows = [("a", "x", "en", None), ("b", "y", "en", None)]
+        df = spark.createDataFrame(
+            rows, "doc_id string, text string, lang string, n_chars bigint")
+        out = [tuple(r) for r in corpus_expectations(df, [
+            ("min_value", "n_chars", 0),
+            ("max_value", "n_chars", 100000),
+        ]).collect()]
+        # the catalog oracle's own SQL, its corpus CTE swapped for the
+        # same rows
+        corpus = ("WITH corpus AS (SELECT * FROM (VALUES "
+                  "('a', 'x', 'en', NULL::BIGINT), "
+                  "('b', 'y', 'en', NULL::BIGINT)) "
+                  "t(doc_id, text, lang, n_chars)),\nm AS (")
+        sql = re.sub(r"WITH corpus AS \(.*?\n\),\nm AS \(",
+                     lambda _: corpus, CORPUS_EXPECTATIONS_SQL,
+                     count=1, flags=re.S)
+        assert sql != CORPUS_EXPECTATIONS_SQL
+        con = duckdb.connect()
+        oracle = {r[1]: r for r in con.sql(sql).fetchall()}
+        assert [r[3] for r in out] == [None, None]
+        assert [oracle["min_value"][3], oracle["max_value"][3]] == [None, None]
+        assert ([r[5] for r in out]
+                == [oracle["min_value"][5], oracle["max_value"][5]]
+                == [False, False])
 
 
 class TestValidation:

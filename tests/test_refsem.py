@@ -7,8 +7,11 @@ Mirrors the reference's own unit-test matrix:
 """
 
 import base64
+import re
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from n8n_tools_api_spark.refsem import (
     PageRangeError,
@@ -40,6 +43,36 @@ from n8n_tools_api_spark.sources.synthetic import (
     CANONICAL_GIF_B64,
     CANONICAL_JPEG_B64,
     CANONICAL_PNG_B64,
+    generate_bench_doc,
+)
+
+# The reference's six F1 substitutions in their original template form
+# (ocr_response_formatter.py:148-173), kept here as the oracle for the
+# template-free passes in refsem.textclean.
+_REFERENCE_CLEAN_PASSES = tuple(
+    (re.compile(pattern), template) for pattern, template in (
+        (r"\n\s*\n\s*\n", "\n\n"),
+        (r"[ \t]+", " "),
+        (r"([a-z])([A-Z])", r"\1 \2"),
+        (r"(\d+)([A-Za-z])", r"\1 \2"),
+        (r"\s+([.!?,:;])", r"\1"),
+        (r"([.!?])\s*([A-Z])", r"\1 \2"),
+    ))
+
+
+def _reference_clean(text):
+    if not text:
+        return ""
+    for pattern, template in _REFERENCE_CLEAN_PASSES:
+        text = pattern.sub(template, text)
+    return text.strip()
+
+
+# ASCII and Unicode whitespace, ASCII and Arabic-Indic digits, accented
+# letters, every punctuation mark the passes look at, and runs of each.
+_CLEAN_ALPHABET = (
+    list("aZbY09٣éÉ .!?,:;-#\t\n\r\x0b\x0c\x1c\x85　")
+    + ["  ", "\t \t", "\n\n\n", " \n \n ", ". A", "aB", "7q", " ,"]
 )
 
 # The reference formatter test fixture, pages only
@@ -86,6 +119,26 @@ class TestCleanExtractedText:
     def test_order_camel_before_punct(self):
         # camel split runs first, then punctuation normalization sees it
         assert clean_extracted_text("fooBar .Baz") == "foo Bar. Baz"
+
+    @settings(max_examples=3000, deadline=None)
+    @given(text=st.lists(st.sampled_from(_CLEAN_ALPHABET), max_size=40)
+           .map("".join))
+    def test_matches_reference_form(self, text):
+        assert clean_extracted_text(text) == _reference_clean(text)
+
+    def test_matches_reference_form_on_bench_spans(self):
+        n = 0
+        for idx in range(500):
+            for s in generate_bench_doc(idx, 7):
+                if s["kind"] in ("text", "pdf_page"):
+                    text = s["text"]
+                elif s["kind"] == "html":
+                    text = strip_boilerplate(s["text"])
+                else:
+                    continue
+                assert clean_extracted_text(text) == _reference_clean(text)
+                n += 1
+        assert n > 1000
 
 
 class TestRenderDocumentText:
