@@ -30,7 +30,8 @@ from n8n_tools_api_spark.sources.synthetic import generate_bench_doc
 from scripts.result_hashes import frame_hash
 
 N_DOCS, SEED = 300, 5
-spark = get_spark(master="local[2,2]", shuffle_partitions=2)
+spark = get_spark(master="local[2,2]", shuffle_partitions=2,
+                  extra={"spark.driver.memory": "1g"})
 sc = spark.sparkContext
 corpus = bench_corpus(spark, N_DOCS, SEED, partitions=4, cache_dir=sys.argv[2])
 
