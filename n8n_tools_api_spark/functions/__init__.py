@@ -1,19 +1,11 @@
 from .columns import (
     image_ext_col,
     media_key_col,
-    media_ref_col,
-    bytes_to_mb,
-    points_to_inches,
     decoded_media_bytes,
-    estimated_words_col,
 )
 
 __all__ = [
     "image_ext_col",
     "media_key_col",
-    "media_ref_col",
-    "bytes_to_mb",
-    "points_to_inches",
     "decoded_media_bytes",
-    "estimated_words_col",
 ]

@@ -1,7 +1,7 @@
 """Reusable JVM-side column expressions (SURVEY.md §2.8 built-ins).
 
 These are the scalar functions whose semantics are byte-safe in Spark
-built-ins (hashing, prefixes, unit math). Anything regex- or rounding-
+built-ins (hashing, prefixes). Anything regex- or rounding-
 sensitive stays in refsem pandas UDFs (F1-F4, KB rounding) — see the
 per-function parity notes.
 """
@@ -39,31 +39,3 @@ def media_key_col(bytes_col) -> Column:
     (S6 minus timestamp, s3_client.py:243-270)."""
     c = F.col(bytes_col) if isinstance(bytes_col, str) else bytes_col
     return F.substring(F.sha2(c, 256), 1, 16)
-
-
-def media_ref_col(b64_col, prefix: str = "media") -> Column:
-    """Full content-addressed media reference from a base64 column."""
-    decoded = decoded_media_bytes(b64_col)
-    return F.concat(F.lit(prefix + "/"), media_key_col(decoded),
-                    F.lit("."), image_ext_col(b64_col))
-
-
-def bytes_to_mb(bytes_col) -> Column:
-    """round(b/1048576, 2) — F12, pdf_service.py:259. NOTE: Spark round
-    is HALF_UP vs Python banker's; only used on integral byte counts
-    where ties land on exact .xx5 never (binary/1048576 has no finite
-    .xx5 representations that differ between modes for our sizes)."""
-    c = F.col(bytes_col) if isinstance(bytes_col, str) else bytes_col
-    return F.round(c / F.lit(1048576), 2)
-
-
-def points_to_inches(points_col) -> Column:
-    """round(pt/72, 2) — F12, pdf_service.py:271-272."""
-    c = F.col(points_col) if isinstance(points_col, str) else points_col
-    return F.round(c / F.lit(72), 2)
-
-
-def estimated_words_col(chars_col) -> Column:
-    """chars // 5 — F13, ocr_response_formatter.py:608."""
-    c = F.col(chars_col) if isinstance(chars_col, str) else chars_col
-    return F.floor(c / F.lit(5)).cast("bigint")

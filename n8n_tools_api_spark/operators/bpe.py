@@ -134,18 +134,10 @@ def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2,
 
     spark = docs.sparkSession
     mat = RoundMaterializer(checkpoint_dir)
-    # eager=False throughout the loop: each round's cut materializes
-    # inside the NEXT round's argmax job instead of paying its own job
-    # (guide §1.2 — the loop is job-count-bound at vocabulary scale).
-    # The final merge builds no cut: nothing reads its words, and
-    # reliable mode (checkpoint_dir=) would write them eagerly.
-    # Safe ordering: argmax r+1 materializes words_{r+1} while its
-    # parent words_r blocks still exist (release() is a local-mode
-    # no-op), so the lazy chain never recomputes a truncated lineage.
     words = mat(
         word_frequencies(docs, text_col).select(
             "freq", _initial_symbols(F.col("word")).alias("sym")),
-        "bpe_round0", eager=False)
+        "bpe_round0")
     merges: list[tuple[int, str, str, str, int]] = []
     prev_tag = "bpe_round0"
     for r in range(n_merges):
@@ -159,14 +151,14 @@ def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2,
         merges.append((r, row["left"], row["right"],
                        row["left"] + row["right"], row["pair_count"]))
         if r == n_merges - 1:
-            break
+            break  # nothing reads the final merge's words: no cut
         tag = f"bpe_round{r + 1}"
         words = mat(
             words.select(
                 "freq",
                 _apply_merge(F.col("sym"), row["left"], row["right"])
                 .alias("sym")),
-            tag, eager=False)
+            tag)
         mat.release(prev_tag)
         prev_tag = tag
     return spark.createDataFrame(

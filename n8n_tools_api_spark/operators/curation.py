@@ -152,19 +152,14 @@ def curation_with_quality(docs: DataFrame, use_lsh: bool = False,
     from n8n_tools_api_spark.operators.textstats import gopher_repetition
 
     mat = RoundMaterializer(checkpoint_dir)
-    # deferred (eager=False): single consumer — materializes inside the
-    # first downstream job instead of paying its own job (guide §1.2:
-    # the composed chains are job-count-bound at bounded corpus sizes)
     gates = mat(gopher_repetition(docs).select("doc_id", "gopher_keep"),
-                "gates", eager=False)
+                "gates")
     # materialize the joined frame before splitting: passed and rejected
     # both consume it, and without the cut the full upstream lineage of
     # ``docs`` (often an extraction chain) would execute once per branch
     # — the same duplicate-execution pattern the ranked-frame
     # materialization in curation_keep_list prevents (advice finding)
-    # deferred: first materialized by the ranked-frame job via the
-    # passed branch; the rejected branch (final union) reads the cache
-    flagged = mat(docs.join(gates, "doc_id"), "flagged", eager=False)
+    flagged = mat(docs.join(gates, "doc_id"), "flagged")
     mat.release("gates")  # flagged is materialized; gates files are free
     passed = flagged.where(F.col("gopher_keep")).select("doc_id", "text")
     rejected = flagged.where(~F.col("gopher_keep")).select(
@@ -219,7 +214,7 @@ def classifier_curation_keep_list(docs: DataFrame, positive: DataFrame,
     cur = mat(curation_keep_list(docs, use_lsh=use_lsh,
                                  threshold=threshold, k=k,
                                  checkpoint_dir=checkpoint_dir),
-              "classifier_cur", eager=False)
+              "classifier_cur")
     kept = cur.where(F.col("status") == "kept") \
         .select("doc_id", "canonical")
     kept_docs = kept.select("doc_id").join(
@@ -270,12 +265,10 @@ def c4_curation_keep_list(docs: DataFrame, use_lsh: bool = False,
     from n8n_tools_api_spark.operators.textstats import c4_line_filter
 
     mat = RoundMaterializer(checkpoint_dir)
-    # materialized once (deferred): the rated frame feeds both the
-    # rejected branch and the downstream quality/dedup chain; the first
-    # downstream job performs the cut, later consumers read the cache
+    # materialized once: the rated frame feeds both the rejected branch
+    # and the downstream quality/dedup chain
     rated = mat(c4_line_filter(docs).select("doc_id", "clean_text",
-                                            "c4_keep"), "c4_rated",
-                eager=False)
+                                            "c4_keep"), "c4_rated")
     rejected = rated.where(~F.col("c4_keep")).select(
         "doc_id",
         F.lit("rejected_c4").alias("status"),
@@ -503,30 +496,23 @@ def web_curation_keep_list(docs: DataFrame, blocked_domains: DataFrame,
             F.lit(None).cast("string").alias("canonical"))
 
     mat = RoundMaterializer(checkpoint_dir)
-    # deferred cuts (eager=False): each is first materialized inside a
-    # downstream job where it appears exactly once, so the cut still
-    # prevents re-execution across consumers but costs no job of its
-    # own (dec stays eager: the final union consumes it on two
-    # branches within ONE job, which a deferred cut can't dedup)
     urlstat = mat(url_blocklist_filter(
         docs.select("doc_id", "url"), blocked_domains, blocked_terms)
-        .select("doc_id", "host", "status"), "urlstat", eager=False)
+        .select("doc_id", "host", "status"), "urlstat")
     rejected_url = _status(
         urlstat.where(F.col("status") != "kept"), "rejected_url")
 
     survivors = docs.select("doc_id", "text").join(
         urlstat.where(F.col("status") == "kept").select("doc_id"), "doc_id")
     rated = mat(c4_line_filter(survivors)
-                .select("doc_id", "clean_text", "c4_keep"), "c4_rated",
-                eager=False)
+                .select("doc_id", "clean_text", "c4_keep"), "c4_rated")
     rejected_c4 = _status(rated.where(~F.col("c4_keep")), "rejected_c4")
 
     passed = rated.where(F.col("c4_keep")).select(
         "doc_id", F.col("clean_text").alias("text"))
     cur = mat(curation_with_quality(passed, use_lsh=use_lsh,
                                     threshold=threshold, k=k,
-                                    checkpoint_dir=checkpoint_dir), "cur",
-              eager=False)
+                                    checkpoint_dir=checkpoint_dir), "cur")
     dup_or_rejected = cur.where(F.col("status") != "kept")
 
     hostkept = cur.where(F.col("status") == "kept").select("doc_id").join(
@@ -723,7 +709,7 @@ def web_dedup_keep_list(docs: DataFrame, url_col: str = "url",
     mat = RoundMaterializer(checkpoint_dir)
     u = mat(url_dedup(docs.select(F.col(id_col).alias("doc_id"),
                                   F.col(url_col).alias("url"))),
-            "url_dedup", eager=False)
+            "url_dedup")
     url_dups = u.where(F.col("status") == "url_dup").select(
         "doc_id", F.lit("url_dup").alias("status"),
         F.col("first_doc").alias("canonical"),
@@ -733,7 +719,7 @@ def web_dedup_keep_list(docs: DataFrame, url_col: str = "url",
     survivors = docs.select(F.col(id_col).alias("doc_id"),
                             F.col(text_col).alias("text")) \
         .join(u.where(F.col("status") == "kept").select("doc_id"), "doc_id")
-    within = mat(strip_repeated_lines(survivors), "within", eager=False)
+    within = mat(strip_repeated_lines(survivors), "within")
     boiler = line_dedup(
         within.select("doc_id", F.col("clean_text").alias("text")),
         min_doc_freq=min_doc_freq)

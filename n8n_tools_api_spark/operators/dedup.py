@@ -183,12 +183,12 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     near-uniform, so the pair blow-up is bounded.
 
     The banded frame feeds both sides of the self-join, so it is cut
-    once (eagerly, at construction): uncut, the shingle→signature
-    pipeline (the expensive part) runs once per join side, ~2× the
-    query. ``checkpoint_dir`` only picks where the cut lives — a
-    reliable parquet round-trip (operators/materialize.py) instead of
-    executor-storage blocks, so executor loss can't kill a long run
-    between the signature stage and the bucket join.
+    once: uncut, the shingle→signature pipeline (the expensive part)
+    runs once per join side, ~2× the query. ``checkpoint_dir`` only
+    picks where the cut lives — a reliable parquet round-trip
+    (operators/materialize.py) instead of executor-storage blocks, so
+    executor loss can't kill a long run between the signature stage
+    and the bucket join.
     """
     banded = RoundMaterializer(checkpoint_dir)(
         minhash_banded(df, text_col, num_hashes, bands, k, id_col), "banded")
@@ -233,13 +233,13 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", k: int = 5,
 
     The capped stream (candidate-filtered, when candidates are given)
     feeds the per-doc sizes and both sides of the intersection
-    self-join, so it is cut once, eagerly at construction — uncut,
-    each consumer replays the explode and the anti/semi joins. Only
-    that small stream is cut: cutting the full pre-cap stream as well
-    measured WORSE 8-core wall at 2M docs (the ~133M-row executor
-    store's GC/eviction pressure, BENCH round 5). ``checkpoint_dir``
-    only picks where the cut lives (a reliable parquet round-trip,
-    operators/materialize.py, for cluster runs).
+    self-join, so it is cut once — uncut, each consumer replays the
+    explode and the anti/semi joins. Only that small stream is cut:
+    cutting the full pre-cap stream as well measured WORSE 8-core wall
+    at 2M docs (the ~133M-row executor store's GC/eviction pressure,
+    BENCH round 5). ``checkpoint_dir`` only picks where the cut lives
+    (a reliable parquet round-trip, operators/materialize.py, for
+    cluster runs).
     """
     safe = df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit("")))
     sh = shingle_hash_array(safe, text_col, k, id_col).select(
@@ -382,10 +382,10 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     equivalence with the chunked form is pinned by test.
 
     The keyed frame feeds both sides of the self-join, so it is cut
-    once, eagerly at construction: uncut, the token explode + 64
-    bit-vote aggregation (the expensive stage) runs once per side,
-    measured ~2× the whole query at sf1.0. ``checkpoint_dir`` only
-    picks where the cut lives (operators/materialize.py).
+    once: uncut, the token explode + 64 bit-vote aggregation (the
+    expensive stage) runs once per side, measured ~2× the whole query
+    at sf1.0. ``checkpoint_dir`` only picks where the cut lives
+    (operators/materialize.py).
     """
     n_blocks = max_distance + 3
     combos = list(_combinations(range(n_blocks), 3))
@@ -658,9 +658,6 @@ def near_dup_components(pairs: DataFrame, max_iters: int = 20,
                 "_prev",
             ),
             f"labels_{i}",
-            # lazy: the convergence aggregate below is the first action,
-            # so compute + persist + check all happen in one job
-            eager=False,
         )
         changed = updated.agg(
             F.count(F.when(F.col("component") != F.col("_prev"), F.lit(1)))

@@ -93,14 +93,11 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
     The gram-hash pass (one md5 per gram occurrence) is the expensive
     stage and three consumers need its output (raw counts, scoring,
     per-doc gram counts), so the exploded slim (doc_id, bucket) frame
-    is materialized ONCE via RoundMaterializer — a DEFERRED
-    localCheckpoint by default (the checkpoint fuses into the first
-    consumer's job; reliable ``checkpoint_dir=`` mode stays eager by
-    construction), measured 5x on the sf0.1 bench: 30.5 s of repeated
-    lineage replay -> 6 s. Everything downstream reads slim rows: two
-    bounded-key count aggregations, a broadcast weight join folded
-    into ONE doc-keyed aggregation producing n_grams and score
-    together.
+    is materialized ONCE via RoundMaterializer, measured 5x on the
+    sf0.1 bench: 30.5 s of repeated lineage replay -> 6 s. Everything
+    downstream reads slim rows: two bounded-key count aggregations, a
+    broadcast weight join folded into ONE doc-keyed aggregation
+    producing n_grams and score together.
 
     ``target`` is any frame with ``target_text_col``; when the target
     is a SLICE of ``docs`` itself (the common in-domain-sample setup),
@@ -129,7 +126,7 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
         explode_grams(docs, F.col(text_col), buckets,
                       keep=(F.col(id_col).alias("doc_id"), *tgt_cols),
                       lower=True, name="bucket"),
-        "dsir_grams", eager=False,
+        "dsir_grams",
     )
     tgrams = (exploded.where(F.col("_tgt")) if target_filter is not None
               else explode_grams(target, F.col(target_text_col), buckets,
@@ -137,12 +134,12 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
     tcounts = mat(
         tgrams.groupBy("bucket")
         .agg(F.count("*").cast("bigint").alias("cnt")),
-        "dsir_tcounts", eager=False,
+        "dsir_tcounts",
     )
     rcounts = mat(
         exploded.groupBy("bucket")
         .agg(F.count("*").cast("bigint").alias("cnt")),
-        "dsir_rcounts", eager=False,
+        "dsir_rcounts",
     )
     ttot = tcounts.agg(
         F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("ttot"))

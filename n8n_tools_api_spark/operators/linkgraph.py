@@ -118,10 +118,9 @@ def host_link_stats(pages: DataFrame, iterations: int = 2,
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     mat = RoundMaterializer(checkpoint_dir)
-    reliable = checkpoint_dir is not None
     edges = mat(
         extract_host_edges(pages, html_col=html_col, url_col=url_col),
-        "edges", eager=reliable)
+        "edges")
     nodes = (edges.select(F.col("src_host").alias("host"))
              .unionByName(edges.select(F.col("dst_host").alias("host")))
              .distinct())
@@ -162,12 +161,11 @@ def host_link_stats(pages: DataFrame, iterations: int = 2,
         )
         # unique tag per round: the NEXT round's plan references this
         # round's files — never overwrite a live tag. Local mode cuts
-        # too (lazy localCheckpoint): at production depth (~20+
-        # rounds) an un-cut loop nests every prior round's joins into
-        # one ever-deeper plan (round-5 review finding)
-        ranks = mat(ranks, f"ranks_{_round:03d}", eager=reliable)
-        if reliable:
-            mat.release(f"ranks_{_round - 2:03d}")  # ≥2 rounds back only
+        # too: at production depth (~20+ rounds) an un-cut loop nests
+        # every prior round's joins into one ever-deeper plan (round-5
+        # review finding)
+        ranks = mat(ranks, f"ranks_{_round:03d}")
+        mat.release(f"ranks_{_round - 2:03d}")  # ≥2 rounds back only
     return (
         ranks.join(out_deg, "host", "left")
         .join(in_deg, "host", "left")

@@ -61,9 +61,8 @@ oracle in plans/catalog.py):
 Scale shape: the bigram-bucket explode (two md5 per token occurrence)
 is the expensive stage and two consumers need it (training counts,
 scoring), so the exploded slim (doc_id, grp, b1, b2, is_train) frame
-is materialized ONCE via RoundMaterializer — a deferred
-localCheckpoint by default, parquet-reliable with ``checkpoint_dir=``
-(the operators/dsir.py pattern, measured 5× there).  Training counts
+is materialized ONCE via RoundMaterializer (the operators/dsir.py
+pattern, measured 5× there).  Training counts
 aggregate onto a BOUNDED key space (≤ groups · 16^2h pairs, and in
 practice ≤ the reference slice's bigram occurrences — CCNet's
 reference corpus is fixed-size Wikipedia, small by construction), so
@@ -162,13 +161,13 @@ def lm_perplexity(docs: DataFrame, train_filter: Column, *,
             ).alias("bg"),
         ).select("doc_id", "grp", "is_train",
                  F.col("bg.b1").alias("b1"), F.col("bg.b2").alias("b2")),
-        "ppx_bigrams", eager=False,
+        "ppx_bigrams",
     )
     trainbig = mat(
         exploded.where(F.col("is_train") & F.col("b1").isNotNull())
         .groupBy("grp", "b1", "b2")
         .agg(F.count("*").cast("bigint").alias("cb")),
-        "ppx_trainbig", eager=False,
+        "ppx_trainbig",
     )
     trainctx = trainbig.groupBy("grp", "b1").agg(
         F.sum("cb").cast("bigint").alias("cc"))
@@ -292,7 +291,7 @@ def ccnet_keep_list(docs: DataFrame, *,
         docs.select(F.col(id_col).cast("string").alias("doc_id"),
                     F.col(text_col).alias("text"))
         .mapInPandas(_detect_batches, schema=_DETECT_SCHEMA),
-        "ccnet_detected", eager=False,
+        "ccnet_detected",
     )
     known = detected.where(F.col("detected") != "unknown")
     train = sample_key(F.col("doc_id"), train_seed) \

@@ -1,29 +1,40 @@
-"""Round materialization for iterative DataFrame loops.
+"""Lineage cuts for iterative loops and multiply-consumed frames.
 
 Iterative operators (connected components, Lloyd refinement, the
 curation keep-list) must cut lineage every round or downstream actions
-replay the whole chain. Two modes:
+replay the whole chain, and a frame read by two consumers (a self-join,
+two union branches) must be cut or its upstream runs once per consumer.
+Every such cut in the engine goes through ``RoundMaterializer``; callers
+never call ``localCheckpoint``/``checkpoint`` themselves and never pick
+when the cut runs. One rule, two modes:
 
-* **local** (default, ``checkpoint_dir=None``): ``localCheckpoint`` —
-  blocks live in executor storage. Fast, zero I/O to shared storage,
-  and the right default on local[k]. NOT fault-tolerant: localCheckpoint
-  truncates lineage, so on a real cluster a lost executor makes the
-  blocks unrecoverable and kills the job mid-loop (round-3 verdict
-  weakness).
+* **local** (default, ``checkpoint_dir=None``): every cut is a LAZY
+  ``localCheckpoint`` — blocks live in executor storage and are written
+  by the first action that reads the frame. Two facts, measured on
+  ``local[4]`` (Spark 4.1), make lazy enough everywhere:
+
+  - a lazy cut persists its RDD, and Spark's block write lock computes
+    each partition once even when one job reads the cut twice (a
+    ``unionByName`` of two filters, then a self-join, each computed the
+    upstream once per row — ``tests/test_operators.py`` pins this). That
+    is the persisted-RDD contract (Zaharia et al., NSDI 2012);
+  - building a lazy cut runs no result job: over an exchange-free input
+    it starts no job at all, and over a ``groupBy`` AQE runs only the
+    map stage (1 job, where an eager cut ran 2).
+
+  So an eager cut only ever added one result-stage job. NOT
+  fault-tolerant: localCheckpoint truncates lineage, so on a real
+  cluster a lost executor makes the blocks unrecoverable and kills the
+  job mid-loop.
 * **reliable** (``checkpoint_dir="hdfs://…"`` / any Hadoop-visible
-  path): each round is written to ``<dir>/<tag>`` as parquet and read
-  back. A lost executor re-reads from shared storage instead of killing
-  a multi-hour 100-TB run; rounds no longer needed are deleted via the
-  Hadoop FileSystem API (same dispatch as sources/iceberg_ddl.py, so
-  s3a/hdfs/local paths all behave). Chosen over ``df.checkpoint()``
-  because PySpark's reliable RDD checkpoint recomputes the plan a
-  second time when the internal RDD isn't persisted, and parquet files
-  are inspectable/resumable artifacts.
-
-``eager=False`` (local mode only) defers materialization to the FIRST
-action on the returned frame — the components loop exploits this to
-fuse the round's checkpoint and its convergence check into ONE job.
-Reliable mode is inherently eager (the write is the materialization).
+  path): each cut is written to ``<dir>/<app>/<ns>/<tag>`` as parquet
+  and read back. It is eager by nature: the write IS the cut, and a
+  lost executor re-reads from shared storage instead of killing a
+  multi-hour run. Rounds no longer needed are deleted via the Hadoop
+  FileSystem API, so s3a/hdfs/local paths all behave. Chosen over
+  ``df.checkpoint()`` because PySpark's reliable RDD checkpoint
+  recomputes the plan a second time when the internal RDD isn't
+  persisted, and parquet files are inspectable/resumable artifacts.
 """
 
 from __future__ import annotations
@@ -56,9 +67,9 @@ class RoundMaterializer:
         self._app_prefix: str | None = None
         self._paths: dict[str, str] = {}
 
-    def __call__(self, df: DataFrame, tag: str, eager: bool = True) -> DataFrame:
+    def __call__(self, df: DataFrame, tag: str) -> DataFrame:
         if self.checkpoint_dir is None:
-            return df.localCheckpoint(eager=eager)
+            return df.localCheckpoint(eager=False)
         if self._app_prefix is None:
             self._app_prefix = df.sparkSession.sparkContext.applicationId
         path = f"{self.checkpoint_dir}/{self._app_prefix}/{self.namespace}/{tag}"

@@ -9,8 +9,9 @@ upload fails (fallback_to_base64). Spark restatement:
    (``sha2(unbase64(text), 256)`` — byte-identical to Python hashlib);
 2. ``dropDuplicates`` on the hash (A10 — the reference gets dedup
    implicitly from identical object keys);
-3. write each distinct blob once (foreachPartition writer / Iceberg
-   blob table — here a parquet blob table);
+3. write each distinct blob once (the deployment's foreachPartition
+   writer or the Iceberg blob table, sources/iceberg_ddl.py
+   ``MEDIA_BLOBS_DDL``);
 4. broadcast-join the (hash → media_ref) map back onto the spans (J2)
    with ``coalesce`` keeping the inline payload for unmapped spans
    (the fallback_to_base64 path, ocr_s3_processor.py:693-699).
@@ -39,10 +40,11 @@ def distinct_media_blobs(docs: DataFrame, prefix: str = "media") -> DataFrame:
         .select(F.col("s.text").alias("b64"))
         .where(F.col("b64").isNotNull() & (F.col("b64") != ""))
     )
-    from n8n_tools_api_spark.functions import image_ext_col, media_key_col
+    from n8n_tools_api_spark.functions import (
+        decoded_media_bytes, image_ext_col, media_key_col)
 
     decoded = images.select(
-        F.try_to_binary(F.col("b64"), F.lit("base64")).alias("media_bytes"),
+        decoded_media_bytes("b64").alias("media_bytes"),
         F.col("b64"),
     ).where(F.col("media_bytes").isNotNull() & (F.length("media_bytes") > 50))
     ext = image_ext_col("b64")
@@ -56,15 +58,6 @@ def distinct_media_blobs(docs: DataFrame, prefix: str = "media") -> DataFrame:
         )
         .dropDuplicates(["media_key"])
     )
-
-
-def write_blob_table(blobs: DataFrame, path: str) -> None:
-    """Blob sink: one parquet table keyed by media_key.
-
-    On a cluster this is the S3/Iceberg blob table; the content-hash key
-    makes the write idempotent (re-runs overwrite identical bytes).
-    """
-    blobs.write.mode("overwrite").parquet(path)
 
 
 def media_upload_stats(extracted: DataFrame, blobs: DataFrame) -> DataFrame:

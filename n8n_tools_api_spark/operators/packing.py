@@ -47,6 +47,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import words
+from .materialize import RoundMaterializer
 
 
 def whitespace_token_count(text_col: Column) -> Column:
@@ -69,7 +70,7 @@ def _global_exclusive_prefix(df: DataFrame, order_cols: list[str],
     the single-task ``Window.partitionBy()`` plan; every wide stage
     here is parallel and carries slim rows only.
 
-    The range-partitioned frame is cut lazily (localCheckpoint) so the
+    The range-partitioned frame is cut (operators/materialize.py) so the
     window pass and the per-partition totals see ONE materialization
     with a pinned partition-id assignment.
     """
@@ -79,8 +80,8 @@ def _global_exclusive_prefix(df: DataFrame, order_cols: list[str],
     except (TypeError, ValueError):
         n_part = 200
     ranged = df.repartitionByRange(n_part, *[F.col(c) for c in order_cols])
-    part = ranged.withColumn("_pid", F.spark_partition_id()) \
-        .localCheckpoint(eager=False)
+    part = RoundMaterializer()(
+        ranged.withColumn("_pid", F.spark_partition_id()), "ranged")
     wloc = (Window.partitionBy("_pid").orderBy(*order_cols)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     totals = part.groupBy("_pid").agg(F.sum(weight).alias("_ptot"))

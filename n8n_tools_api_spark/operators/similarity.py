@@ -153,14 +153,11 @@ def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2,
     centroids, assigned = ivf_assign(emb, nlist, id_col, vec_col)
     # each Lloyd iteration nests an assignment-over-emb into the
     # lineage; cut per round so downstream actions don't replay the
-    # whole chain (review finding — mirrors near_dup_components). Cuts
-    # are DEFERRED (eager=False): each is consumed exactly once by the
-    # next round's mean aggregation, which materializes it inside that
-    # job instead of paying a scheduling round of its own; and the
+    # whole chain (review finding — mirrors near_dup_components). The
     # final round's reassignment is skipped outright — only the
     # centroids are returned, so computing one more assignment was
     # pure waste (callers reassign themselves when they need it).
-    assigned = mat(assigned, "assign_init", eager=False)
+    assigned = mat(assigned, "assign_init")
     for _i in range(iters):
         dims = (
             assigned.select("cluster_id",
@@ -176,15 +173,11 @@ def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2,
                     F.transform("dv", lambda x: x["mean_v"].cast("float"))
                     .alias("centroid")),
             f"centroids_{_i}",
-            # the RETURNED round must be eager: callers consume the
-            # centroid set on two branches of one job (assignment +
-            # score join), which a deferred cut cannot dedup
-            eager=(_i == iters - 1),
         )
         if _i < iters - 1:
             assigned = mat(
                 assign_to_centroids(emb, centroids, id_col, vec_col),
-                f"assign_{_i}", eager=False,
+                f"assign_{_i}",
             )
             mat.release(f"assign_{_i - 1}" if _i else "assign_init")
         if _i:
@@ -213,38 +206,41 @@ def ann_recall_at_k(emb: DataFrame, n_queries: int = 8, k: int = 10,
     candidate set is the whole corpus, so recall is exactly 1.0 —
     pinned by test.
     """
+    from .materialize import RoundMaterializer
+
+    mat = RoundMaterializer()
     queries = (
         emb.orderBy(id_col).limit(n_queries)
         .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("_q"))
     )
     sim = F.round(cosine_similarity_col(F.col(vec_col), F.col("_q")), 4)
     wq = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    brute = (
+    brute = mat(
         emb.crossJoin(F.broadcast(queries))
         .where(F.col(id_col) != F.col("qid"))
         .withColumn("cosine_sim", sim)
         .withColumn("_rn", F.row_number().over(wq))
         .where(F.col("_rn") <= k)
-        .select("qid", id_col)
-        .localCheckpoint(eager=True)
+        .select("qid", id_col),
+        "brute",
     )
     # recall denominator = the ACTUAL brute-pair count, not n_queries*k:
     # on a corpus with fewer than k+1 vectors each query's brute top-k
     # has <k rows, and dividing by the literal would break the
     # "recall == 1.0 at nprobe == nlist" invariant (review finding).
-    # brute is checkpointed, so this count is a cheap local scan.
+    # brute is cut, so this count is the one pass that computes it.
     n_brute = max(brute.count(), 1)
     centroids, assigned = ivf_assign(emb, nlist, id_col, vec_col)
-    assigned = assigned.localCheckpoint(eager=True)
-    probe_rank = (
+    assigned = mat(assigned, "assigned")
+    probe_rank = mat(
         centroids.crossJoin(F.broadcast(queries))
         .withColumn("_score",
                     cosine_similarity_col(F.col("centroid"), F.col("_q")))
         .withColumn("_pr", F.row_number().over(
             Window.partitionBy("qid")
             .orderBy(F.desc("_score"), F.asc("cluster_id"))))
-        .select("qid", "cluster_id", "_pr")
-        .localCheckpoint(eager=True)
+        .select("qid", "cluster_id", "_pr"),
+        "probe_rank",
     )
     out = None
     for np_ in nprobes:
@@ -355,10 +351,7 @@ def semdedup_keep_list(emb: DataFrame, threshold: float = 0.95,
                 F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_n"),
                 cosine_similarity_col(F.col(vec_col), F.col("centroid"))
                 .alias("centroid_sim")),
-        # deferred: first materialized inside the candidate job (one
-        # consumption there); the exact-verify and ranked joins then
-        # read the cache
-        "semdedup_scored", eager=False)
+        "semdedup_scored")
     # Per-cluster pairwise stage, two passes (guide §1.2/§4.2 — decide
     # with a cheap vectorized proxy, confirm with the exact expression):
     #
@@ -422,7 +415,7 @@ def semdedup_keep_list(emb: DataFrame, threshold: float = 0.95,
         scored.select("cluster_id", "vec_id", "_v", "_n")
         .groupBy("cluster_id")
         .applyInPandas(_cand_fn, f"doc_a {id_type}, doc_b {id_type}"),
-        "semdedup_cands", eager=False)
+        "semdedup_cands")
     va = scored.select(F.col("vec_id").alias("doc_a"),
                        F.col("_v").alias("_va"), F.col("_n").alias("_na"))
     vb = scored.select(F.col("vec_id").alias("doc_b"),

@@ -3609,8 +3609,10 @@ def curation_agreement(spark, sf_dir):
     reshapes a component, the Spark rollup diverges and the row goes
     red. Complements BENCH suite 3, which measures this same twin."""
     from n8n_tools_api_spark.operators.curation import curation_keep_list as flow
+    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
-    corpus = _curation_corpus(spark, sf_dir).localCheckpoint(eager=True)
+    corpus = RoundMaterializer()(_curation_corpus(spark, sf_dir),
+                                 "agreement_corpus")
     exact = flow(corpus, use_lsh=False).select(
         "doc_id", F.col("status").alias("s_exact"),
         F.col("canonical").alias("c_exact"))
@@ -4919,12 +4921,12 @@ def quality_classifier_q(spark, sf_dir):
         "doc_id string, cls string, text string, is_train boolean")
     # five consumers (two training slices, scoring grams, the id
     # rejoin, the cls rejoin) would each re-execute the union/transform
-    # lineage — cut it once (lazy localCheckpoint, repo convention)
+    # lineage — cut it once
     from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
     corpus = RoundMaterializer()(
         base.unionByName(qpos).unionByName(qneg).unionByName(edges),
-        "qclf_corpus", eager=False)
+        "qclf_corpus")
     pos = corpus.where(F.col("is_train") & (F.col("cls") == "qpos"))
     neg = corpus.where(F.col("is_train") & (F.col("cls") == "qneg"))
     rep = quality_classifier_scores(corpus, pos, neg)

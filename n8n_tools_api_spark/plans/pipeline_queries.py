@@ -268,6 +268,7 @@ def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Buckets are xxhash64-based, so rows-only; stream/twin parity is
     pinned by tests/test_curation_stream.py and the batch keep-list
     semantics by the curation_keep_list/curation_agreement oracles."""
+    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
     from n8n_tools_api_spark.streaming import (
         curation_stream_batch_twin,
         periodic_components_keep_list,
@@ -292,8 +293,8 @@ def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("event_time"),
         F.expr("substring(text, 1, cast(length(text) * 0.9 as int))")
         .alias("text"))
-    corpus = docs.unionByName(dups).unionByName(muts) \
-        .localCheckpoint(eager=True)
+    corpus = RoundMaterializer()(
+        docs.unionByName(dups).unionByName(muts), "stream_corpus")
     staged = curation_stream_batch_twin(corpus)
     admitted = staged.where(F.col("stage") == "admitted") \
         .select("doc_id").join(corpus, "doc_id") \

@@ -138,26 +138,10 @@ def _run_data_table(data_path: str) -> str:
     return f"{CATALOG}.db.extracted_spans_{stem}_{digest}"
 
 
-def create_tables(spark: SparkSession) -> None:
-    spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {CATALOG}.db")
-    for ddl in (DOCUMENTS_INTERLEAVED_DDL, EXTRACTED_SPANS_DDL,
-                MEDIA_BLOBS_DDL, LINEAGE_DDL):
-        spark.sql(ddl)
-
-
 LINEAGE_SCHEMA = (
     "run_id string, bucket int, doc_count bigint, span_count bigint, "
     "media_ref_count bigint, wall_ms bigint"
 )
-
-
-def write_extracted(spark: SparkSession, extracted: DataFrame,
-                    parquet_fallback: str) -> None:
-    """Iceberg append when the catalog is up; parquet otherwise."""
-    if iceberg_available(spark):
-        extracted.writeTo(f"{CATALOG}.db.extracted_spans").append()
-    else:
-        extracted.write.mode("overwrite").parquet(parquet_fallback)
 
 
 def overwrite_extracted_buckets(spark: SparkSession, out: DataFrame,

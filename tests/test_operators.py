@@ -489,7 +489,7 @@ class TestDedup:
             RoundMaterializer)
 
         monkeypatch.setattr(RoundMaterializer, "__call__",
-                            lambda self, df, tag, eager=True: df)
+                            lambda self, df, tag: df)
         plan = ngram_jaccard_pairs(corpus, threshold=0.3) \
             ._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in plan
@@ -661,6 +661,73 @@ class TestNearDupComponents:
         m2(df.withColumn("id", F.col("id") + 100), "t")
         assert sorted(r["id"] for r in a.collect()) == list(range(5))
         assert m1.namespace != m2.namespace
+
+    def test_lazy_cut_computes_upstream_once_per_consumer_set(self, spark):
+        """The one cut rule (operators/materialize.py) rests on this: a
+        lazy cut persists its RDD, so two consumers inside ONE job — a
+        union of two filters, a self-join — compute each upstream row
+        once, exactly like an eager cut would."""
+        from n8n_tools_api_spark.operators.materialize import (
+            RoundMaterializer)
+
+        sc = spark.sparkContext
+        n = 2000
+        src = spark.range(0, n, 1, 4).select(
+            "id", (F.col("id") % 7).alias("g"))
+
+        def counted():
+            seen = sc.accumulator(0)
+
+            def body(batches):
+                for b in batches:
+                    seen.add(len(b))
+                    yield b
+
+            return seen, src.mapInPandas(body, schema=src.schema)
+
+        seen, up = counted()
+        cut = RoundMaterializer()(up, "probe_union")
+        both = cut.where(F.col("g") < 3) \
+            .unionByName(cut.where(F.col("g") >= 3))
+        assert both.count() == n
+        assert seen.value == n
+        assert cut.alias("a").join(cut.alias("b"), "id").count() == n
+        assert seen.value == n
+        # a self-join as the FIRST consumer: both sides in one job
+        seen, up = counted()
+        cut = RoundMaterializer()(up, "probe_join")
+        assert cut.alias("a").join(cut.alias("b"), "id").count() == n
+        assert seen.value == n
+
+    def test_lazy_cut_over_exchange_free_input_starts_no_job(self, spark):
+        from n8n_tools_api_spark.operators.materialize import (
+            RoundMaterializer)
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        src = spark.range(0, 100, 1, 2).select((F.col("id") * 3).alias("x"))
+        try:
+            sc.setJobGroup("lazy_cut_build", "lazy_cut_build")
+            cut = RoundMaterializer()(src, "no_job")
+            sc.setJobGroup("eager_cut_build", "eager_cut_build")
+            src.localCheckpoint(eager=True)  # control: the group is seen
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(tracker.getJobIdsForGroup("lazy_cut_build")) == []
+        assert len(tracker.getJobIdsForGroup("eager_cut_build")) >= 1
+        assert cut.count() == 100
+
+    def test_every_lineage_cut_goes_through_round_materializer(self):
+        # one cut rule, one home: no caller checkpoints or picks eager
+        import pathlib
+
+        pkg = pathlib.Path(__file__).resolve().parents[1] \
+            / "n8n_tools_api_spark"
+        touching = sorted(
+            str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+            if any(s in p.read_text()
+                   for s in ("localCheckpoint(", ".checkpoint(", "eager=")))
+        assert touching == ["operators/materialize.py"]
 
     def test_end_to_end_with_minhash(self, spark):
         from n8n_tools_api_spark.operators.dedup import duplicate_clusters

@@ -1,9 +1,15 @@
-"""Determinism under task retry, extraction half: on ``local[2,2]`` every
-task gets one retry. A test-only upstream ``mapInPandas`` fails the
-first attempt of partition 0 inside the same stage as ``extract_spans``;
-the retried pass must hash like a fault-free pass and like refsem run on
-the driver, and later tasks on the reused workers must still extract
-correctly (the worker wrapper's ``finally`` runs on the failed task).
+"""Determinism under task retry: on ``local[2,2]`` every task gets one
+retry, and a test-only upstream ``mapInPandas`` fails the first attempt
+of partition 0.
+
+* Extraction: the fault fires inside the same stage as
+  ``extract_spans``; the retried pass must hash like a fault-free pass
+  and like refsem run on the driver, and later tasks on the reused
+  workers must still extract correctly (the worker wrapper's
+  ``finally`` runs on the failed task).
+* The components loop: the fault fires under the pairs that feed
+  ``near_dup_components`` on its distributed path, whose every round is
+  a lazy lineage cut; the labels must hash like a fault-free loop's.
 
 It runs in a subprocess because the session master is fixed per JVM."""
 
@@ -11,6 +17,8 @@ import json
 import pathlib
 import subprocess
 import sys
+
+import pytest
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
 
@@ -22,6 +30,7 @@ sys.path.insert(0, sys.argv[1])
 
 from pyspark import TaskContext
 
+from n8n_tools_api_spark.operators.dedup import near_dup_components
 from n8n_tools_api_spark.operators.extract import OUTPUT_SCHEMA, extract_spans
 from n8n_tools_api_spark.refsem import extract_document
 from n8n_tools_api_spark.session import get_spark
@@ -43,9 +52,9 @@ def fail_first_attempt(batches):
     yield from batches
 
 
-def run(df, group):
+def run(build, group):
     sc.setJobGroup(group, group)
-    digest, rows = frame_hash(df)
+    digest, rows = frame_hash(build())
     tracker = sc.statusTracker()
     failed = sum(tracker.getStageInfo(sid).numFailedTasks
                  for jid in tracker.getJobIdsForGroup(group)
@@ -54,11 +63,20 @@ def run(df, group):
 
 
 out = {
-    "retried": run(extract_spans(
+    "retried": run(lambda: extract_spans(
         corpus.mapInPandas(fail_first_attempt, schema=corpus.schema)),
         "retried"),
-    "later": run(extract_spans(corpus), "later"),
+    "later": run(lambda: extract_spans(corpus), "later"),
 }
+# a 25-doc drifting chain plus two small components: several rounds
+chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(24)]
+pairs = spark.createDataFrame(chain + [("x", "y"), ("y", "z"), ("p", "q")],
+                              "doc_a string, doc_b string")
+out["loop_retried"] = run(lambda: near_dup_components(
+    pairs.mapInPandas(fail_first_attempt, schema=pairs.schema),
+    small_graph_max_edges=0), "loop_retried")
+out["loop_clean"] = run(lambda: near_dup_components(
+    pairs, small_graph_max_edges=0), "loop_clean")
 driver_rows = [
     (f"bdoc_{i:08d}",
      [(s["kind"], s["text"], s["media_ref"], s["offset"])
@@ -72,7 +90,9 @@ print("RESULT " + json.dumps(out))
 '''
 
 
-def test_retried_extraction_hashes_like_a_clean_pass(tmp_path):
+@pytest.fixture(scope="module")
+def retry_out(tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("retry")
     job = tmp_path / "retry_job.py"
     job.write_text(JOB)
     proc = subprocess.run(
@@ -80,11 +100,22 @@ def test_retried_extraction_hashes_like_a_clean_pass(tmp_path):
         cwd=REPO, capture_output=True, text=True, timeout=900)
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
     assert proc.returncode == 0 and lines, proc.stderr[-3000:]
-    out = json.loads(lines[-1][len("RESULT "):])
+    return json.loads(lines[-1][len("RESULT "):])
 
+
+def test_retried_extraction_hashes_like_a_clean_pass(retry_out):
+    out = retry_out
     assert out["retried"]["failed_tasks"] >= 1  # the fault did fire
     assert out["later"]["failed_tasks"] == 0
     assert out["driver"]["rows"] == 300
     assert out["retried"]["rows"] == out["later"]["rows"] == 300
     assert out["retried"]["digest"] == out["driver"]["digest"]
     assert out["later"]["digest"] == out["driver"]["digest"]
+
+
+def test_retried_components_loop_hashes_like_a_clean_loop(retry_out):
+    out = retry_out
+    assert out["loop_retried"]["failed_tasks"] >= 1  # the fault did fire
+    assert out["loop_clean"]["failed_tasks"] == 0
+    assert out["loop_retried"]["rows"] == out["loop_clean"]["rows"] == 30
+    assert out["loop_retried"]["digest"] == out["loop_clean"]["digest"]

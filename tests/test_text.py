@@ -103,7 +103,7 @@ _CONSUMERS = {
 def test_word_split_appears_once_per_plan_node(spark, monkeypatch, name):
     # materialization cuts would hide the gram pass behind a LogicalRDD
     monkeypatch.setattr(RoundMaterializer, "__call__",
-                        lambda self, df, tag, eager=True: df)
+                        lambda self, df, tag: df)
     docs = spark.createDataFrame([
         ("a", "The cat sat on the mat. The cat sat again.", "en"),
         ("b", "zoo zebra badterm and some other words here", "de"),
