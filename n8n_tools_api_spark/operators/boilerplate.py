@@ -25,15 +25,14 @@ from pyspark.sql.types import StringType, StructField, StructType
 from ..functions.pyworker import udf_body
 
 
-def strip_boilerplate_stage(pages: DataFrame,
-                            html_col: str = "html") -> DataFrame:
+def strip_boilerplate_stage(pages: DataFrame) -> DataFrame:
     """Apply the DOM-heuristic stripper to every page.
 
-    Input: any DataFrame with a string ``html_col``. Output: the other
+    Input: any DataFrame with a string ``html`` column. Output: the other
     columns unchanged plus ``main_text`` (kept-block text joined with
     blank lines; '' for fully-boilerplate or NULL pages).
     """
-    out_fields = [f for f in pages.schema.fields if f.name != html_col]
+    out_fields = [f for f in pages.schema.fields if f.name != "html"]
     schema = StructType(out_fields + [StructField("main_text", StringType())])
 
     @udf_body
@@ -42,8 +41,8 @@ def strip_boilerplate_stage(pages: DataFrame,
         from n8n_tools_api_spark.refsem import strip_boilerplate
 
         for pdf in batches:
-            html = pdf[html_col].fillna("")
-            out = pdf.drop(columns=[html_col])
+            html = pdf["html"].fillna("")
+            out = pdf.drop(columns=["html"])
             out["main_text"] = [strip_boilerplate(h) for h in html]
             yield out
 

@@ -59,9 +59,9 @@ def _encodable(ws: Column) -> Column:
     return F.filter(ws, lambda w: ~w.contains(_US))
 
 
-def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_frequencies(docs: DataFrame) -> DataFrame:
     """The corpus-scale stage: (word, freq) over whitespace tokens."""
-    return (explode_grams(docs, F.col(text_col), _encodable, name="word")
+    return (explode_grams(docs, F.col("text"), _encodable, name="word")
             .groupBy("word").agg(F.count("*").cast("bigint").alias("freq")))
 
 
@@ -120,7 +120,6 @@ def _pair_counts(words: DataFrame) -> DataFrame:
 
 
 def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2,
-              text_col: str = "text",
               checkpoint_dir: str | None = None) -> DataFrame:
     """Learn ``n_merges`` BPE merges over the corpus (module docstring
     pins the semantics). Returns the merge table as a DataFrame:
@@ -135,7 +134,7 @@ def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2,
     spark = docs.sparkSession
     mat = RoundMaterializer(checkpoint_dir)
     words = mat(
-        word_frequencies(docs, text_col).select(
+        word_frequencies(docs).select(
             "freq", _initial_symbols(F.col("word")).alias("sym")),
         "bpe_round0")
     merges: list[tuple[int, str, str, str, int]] = []
@@ -167,8 +166,7 @@ def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2,
         "pair_count bigint")
 
 
-def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
-               text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply a learned merge table to every document — the ENCODE half
     of the tokenizer loop (``bpe_learn`` trains it; a packing stage
     like operators/packing.py consumes the resulting token counts).
@@ -203,9 +201,9 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
     ws = F.col("_ws")
     enc = F.transform(ws, _enc)
     return docs.select(
-        F.col(id_col), _encodable(words(F.col(text_col))).alias("_ws"),
+        "doc_id", _encodable(words(F.col("text"))).alias("_ws"),
     ).select(
-        F.col(id_col),
+        "doc_id",
         F.size(ws).alias("n_words"),
         F.aggregate(enc, F.lit(0).cast("bigint"),
                     lambda acc, x: acc + F.size(F.split(x, _US)))

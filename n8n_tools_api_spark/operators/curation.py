@@ -98,15 +98,15 @@ def curation_keep_list(docs: DataFrame, use_lsh: bool = False,
         .withColumn("canon_exact", F.first("doc_id").over(w)),
         "ranked",
     )
-    survivors = ranked.where(F.col("rn") == 1).select("doc_id", "clean_text")
+    survivors = ranked.where(F.col("rn") == 1).select(
+        "doc_id", F.col("clean_text").alias("text"))
     cands = (
-        minhash_lsh_candidates(survivors, text_col="clean_text",
-                               checkpoint_dir=checkpoint_dir)
+        minhash_lsh_candidates(survivors, checkpoint_dir=checkpoint_dir)
         .where(F.col("n_shared_bands") >= 2)
         .select("doc_a", "doc_b")
     ) if use_lsh else None
-    pairs = ngram_jaccard_pairs(survivors, text_col="clean_text", k=k,
-                                threshold=threshold, candidate_pairs=cands,
+    pairs = ngram_jaccard_pairs(survivors, k=k, threshold=threshold,
+                                candidate_pairs=cands,
                                 checkpoint_dir=checkpoint_dir)
     comp = near_dup_components(pairs.select("doc_a", "doc_b"),
                                checkpoint_dir=checkpoint_dir)
@@ -297,8 +297,7 @@ def canonical_host(url) -> "F.Column":
     return F.regexp_replace(host, r":\d+$", "")
 
 
-def per_host_cap(docs: DataFrame, cap: int, url_col: str = "url",
-                 quality_col: str | None = None, id_col: str = "doc_id",
+def per_host_cap(docs: DataFrame, cap: int, quality_col: str | None = None,
                  salt_buckets: int = 16,
                  host_col: str | None = None) -> DataFrame:
     """Cap the corpus at ``cap`` documents per canonical host, keeping
@@ -307,8 +306,8 @@ def per_host_cap(docs: DataFrame, cap: int, url_col: str = "url",
     handful of giant hosts can't dominate the training mix).
 
     Ranking within a host is a pinned total order: ``quality_col``
-    DESCENDING (NULLs last) when given, then ``id_col`` ASCENDING as
-    the tiebreak; with no quality column, plain ``id_col`` order.
+    DESCENDING (NULLs last) when given, then ``doc_id`` ASCENDING as
+    the tiebreak; with no quality column, plain ``doc_id`` order.
     Output: the kept rows only — all input columns plus ``host`` and
     ``host_rank`` (1-based within the host's kept set).
 
@@ -325,8 +324,8 @@ def per_host_cap(docs: DataFrame, cap: int, url_col: str = "url",
     """
     if cap < 1:
         raise ValueError(f"cap must be >= 1, got {cap}")
-    order = [F.col("_hq").desc_nulls_last(), F.col(id_col).asc()] \
-        if quality_col is not None else [F.col(id_col).asc()]
+    order = [F.col("_hq").desc_nulls_last(), F.col("doc_id").asc()] \
+        if quality_col is not None else [F.col("doc_id").asc()]
     if host_col is not None:
         # caller already holds a canonical host (e.g. from
         # url_blocklist_filter) — grouping by it verbatim avoids the
@@ -334,13 +333,13 @@ def per_host_cap(docs: DataFrame, cap: int, url_col: str = "url",
         # second 'www.' / ':port' and merge distinct hosts)
         with_host = docs.withColumn("host", F.col(host_col))
     else:
-        with_host = docs.withColumn("host", canonical_host(F.col(url_col)))
+        with_host = docs.withColumn("host", canonical_host(F.col("url")))
     if quality_col is not None:
         with_host = with_host.withColumn("_hq", F.col(quality_col))
     else:
         with_host = with_host.withColumn("_hq", F.lit(None))
     with_host = with_host.withColumn(
-        "_salt", F.crc32(F.col(id_col).cast("string")) % salt_buckets)
+        "_salt", F.crc32(F.col("doc_id").cast("string")) % salt_buckets)
     local_w = Window.partitionBy("host", "_salt").orderBy(*order)
     pre = with_host.withColumn("_lr", F.row_number().over(local_w)) \
         .where(F.col("_lr") <= cap)
@@ -353,9 +352,7 @@ def per_host_cap(docs: DataFrame, cap: int, url_col: str = "url",
 
 
 def url_blocklist_filter(docs: DataFrame, blocked_domains: DataFrame,
-                         blocked_terms: list[str],
-                         url_col: str = "url",
-                         id_col: str = "doc_id") -> DataFrame:
+                         blocked_terms: list[str]) -> DataFrame:
     """URL-level corpus filtering — the first gate of the public
     web-curation canon (C4, Raffel et al. 2020 §2.2 drops pages whose
     URL hits a word blocklist; RefinedWeb, Penedo et al. 2023 §3.1
@@ -385,7 +382,7 @@ def url_blocklist_filter(docs: DataFrame, blocked_domains: DataFrame,
     slim (id, url, host, suffix-match) rows — no fat column ever moves,
     and the output itself is a slim disposition frame.
     """
-    u = F.lower(F.coalesce(F.col(url_col), F.lit("")))
+    u = F.lower(F.coalesce(F.col("url"), F.lit("")))
     terms = sorted(set(blocked_terms))
     if terms:
         term_hits = F.sort_array(F.filter(
@@ -396,9 +393,8 @@ def url_blocklist_filter(docs: DataFrame, blocked_domains: DataFrame,
     else:
         matched_term = F.lit(None).cast("string")
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(url_col).alias("url"),
-        canonical_host(F.col(url_col)).alias("host"),
+        "doc_id", "url",
+        canonical_host(F.col("url")).alias("host"),
         matched_term.alias("_term"),
     )
     parts = F.split(F.col("host"), r"\.")
@@ -613,15 +609,14 @@ def canonical_url(url) -> "F.Column":
     return F.when(auth != "", canon).otherwise(u)
 
 
-def url_dedup(docs: DataFrame, url_col: str = "url",
-              id_col: str = "doc_id") -> DataFrame:
+def url_dedup(docs: DataFrame) -> DataFrame:
     """URL-level exact dedup over :func:`canonical_url` keys — emits a
     full disposition frame (one row per input doc)::
 
         (doc_id, url, canonical_url,
          status 'kept' | 'url_dup', first_doc, group_size)
 
-    ``first_doc`` is the ascending-``id_col`` minimum of the canonical
+    ``first_doc`` is the ascending-``doc_id`` minimum of the canonical
     group (the kept representative — a crawler's "first fetch wins"),
     ``group_size`` the group's total count.  All-NULL / unparseable
     URLs keep their raw string as the key, so only byte-equal junk
@@ -640,9 +635,8 @@ def url_dedup(docs: DataFrame, url_col: str = "url",
     # unordered-frame window: min/count need no in-partition sort
     w = Window.partitionBy("canonical_url")
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(url_col).alias("url"),
-        canonical_url(F.col(url_col)).alias("canonical_url"),
+        "doc_id", "url",
+        canonical_url(F.col("url")).alias("canonical_url"),
     )
     return base.select(
         "doc_id", "url", "canonical_url",
@@ -656,9 +650,7 @@ def url_dedup(docs: DataFrame, url_col: str = "url",
              "group_size")
 
 
-def web_dedup_keep_list(docs: DataFrame, url_col: str = "url",
-                        text_col: str = "text", id_col: str = "doc_id",
-                        min_doc_freq: int = 2,
+def web_dedup_keep_list(docs: DataFrame, min_doc_freq: int = 2,
                         checkpoint_dir: str | None = None) -> DataFrame:
     """The dedup LADDER of the public web-curation canon composed in
     its published stage order — cheapest gate first, each stage seeing
@@ -707,17 +699,14 @@ def web_dedup_keep_list(docs: DataFrame, url_col: str = "url",
     from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
     mat = RoundMaterializer(checkpoint_dir)
-    u = mat(url_dedup(docs.select(F.col(id_col).alias("doc_id"),
-                                  F.col(url_col).alias("url"))),
-            "url_dedup")
+    u = mat(url_dedup(docs.select("doc_id", "url")), "url_dedup")
     url_dups = u.where(F.col("status") == "url_dup").select(
         "doc_id", F.lit("url_dup").alias("status"),
         F.col("first_doc").alias("canonical"),
         F.lit(None).cast("int").alias("lines_dropped_within"),
         F.lit(None).cast("int").alias("lines_dropped_boiler"),
     )
-    survivors = docs.select(F.col(id_col).alias("doc_id"),
-                            F.col(text_col).alias("text")) \
+    survivors = docs.select("doc_id", "text") \
         .join(u.where(F.col("status") == "kept").select("doc_id"), "doc_id")
     within = mat(strip_repeated_lines(survivors), "within")
     boiler = line_dedup(

@@ -50,11 +50,10 @@ def _grams_of(ws, n: int):
         .otherwise(word_ngrams(ws, n)))
 
 
-def benchmark_grams(bench: DataFrame, n: int = 13,
-                    text_col: str = "text") -> DataFrame:
+def benchmark_grams(bench: DataFrame, n: int = 13) -> DataFrame:
     """Distinct non-empty word ``n``-grams of an eval set: (gram)."""
     return (
-        explode_grams(bench, F.col(text_col), lambda ws: _grams_of(ws, n),
+        explode_grams(bench, F.col("text"), lambda ws: _grams_of(ws, n),
                       lower=True)
         .where(F.col("gram") != "")
         .distinct()
@@ -62,15 +61,15 @@ def benchmark_grams(bench: DataFrame, n: int = 13,
 
 
 def ngram_decontaminate(docs: DataFrame, bench: DataFrame, n: int = 13,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        bench_text_col: str = "text",
                         broadcast_hits: bool = True) -> DataFrame:
     """Per-document benchmark-overlap report.
 
-    Output: (doc_id, n_grams, n_hits, contaminated) — one row per
-    input document; ``n_grams`` is the size of the doc's distinct gram
-    set, ``n_hits`` how many of those grams appear in the benchmark,
-    ``contaminated`` the hard-drop flag. Keep-list = NOT contaminated.
+    Input: ``docs`` (doc_id, text) and ``bench`` (text), both read by
+    the document schema's names. Output: (doc_id, n_grams, n_hits,
+    contaminated) — one row per input document; ``n_grams`` is the
+    size of the doc's distinct gram set, ``n_hits`` how many of those
+    grams appear in the benchmark, ``contaminated`` the hard-drop flag.
+    Keep-list = NOT contaminated.
 
     ``broadcast_hits`` hints the hit-count join-back as broadcast —
     right when contamination is the expected sliver of the corpus.
@@ -81,17 +80,16 @@ def ngram_decontaminate(docs: DataFrame, bench: DataFrame, n: int = 13,
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    bgrams = benchmark_grams(bench, n=n, text_col=bench_text_col)
-    doc_id = F.col(id_col).alias("doc_id")
+    bgrams = benchmark_grams(bench, n=n)
     hits = (
-        explode_grams(docs, F.col(text_col), lambda ws: _grams_of(ws, n),
-                      keep=(doc_id,), lower=True)
+        explode_grams(docs, F.col("text"), lambda ws: _grams_of(ws, n),
+                      keep=("doc_id",), lower=True)
         .join(F.broadcast(bgrams), "gram")
         .groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("n_hits"))
     )
     return (
-        docs.select(doc_id, words(F.col(text_col), lower=True).alias("_ws"))
+        docs.select("doc_id", words(F.col("text"), lower=True).alias("_ws"))
         .select("doc_id",
                 F.size(_grams_of(F.col("_ws"), n)).cast("bigint")
                 .alias("n_grams"))

@@ -48,8 +48,7 @@ def _raw_words(text):
     return F.split(F.trim(text), r"\s+")
 
 
-def shingle_hash_array(df: DataFrame, text_col: str = "text", k: int = 5,
-                       id_col: str = "doc_id",
+def shingle_hash_array(df: DataFrame, k: int = 5,
                        keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, shingle_hashes array<bigint>): one 64-bit hash per
     k-word shingle WITHOUT materializing shingle strings.
@@ -62,8 +61,8 @@ def shingle_hash_array(df: DataFrame, text_col: str = "text", k: int = 5,
     document vanishes.
     """
     with_wh = df.select(
-        F.col(id_col).alias("doc_id"), *keep_cols,
-        F.transform(_raw_words(F.col(text_col)),
+        "doc_id", *keep_cols,
+        F.transform(_raw_words(F.col("text")),
                     lambda w: F.xxhash64(w)).alias("_wh"),
     )
     wh = F.col("_wh")
@@ -88,9 +87,7 @@ def shingle_hash_array(df: DataFrame, text_col: str = "text", k: int = 5,
                           hashes.alias("shingle_hashes"))
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       num_hashes: int = 64, k: int = 5,
-                       id_col: str = "doc_id",
+def minhash_signatures(df: DataFrame, num_hashes: int = 64, k: int = 5,
                        keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """Per-document MinHash signature: (doc_id, sig array<bigint>) —
     a NARROW map, zero shuffle.
@@ -120,7 +117,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     NULL text to '' before hashing instead.
     """
     P = F.lit(_MERSENNE_P)
-    base = shingle_hash_array(df, text_col, k, id_col, keep_cols).select(
+    base = shingle_hash_array(df, k, keep_cols).select(
         "doc_id", *keep_cols,
         F.transform("shingle_hashes", lambda v: F.pmod(v, P)).alias("_hs"),
     )
@@ -132,10 +129,8 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     return base.select("doc_id", *keep_cols, sig.alias("sig"))
 
 
-def minhash_banded(df: DataFrame, text_col: str = "text",
-                   num_hashes: int = 64, bands: int = 16, k: int = 5,
-                   id_col: str = "doc_id",
-                   keep_cols: tuple[str, ...] = ()) -> DataFrame:
+def minhash_banded(df: DataFrame, num_hashes: int = 64, bands: int = 16,
+                   k: int = 5, keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, [keep_cols...,] band, bucket) rows: the LSH banding of
     MinHash signatures.
 
@@ -148,7 +143,7 @@ def minhash_banded(df: DataFrame, text_col: str = "text",
     the whole stage stays a narrow per-row map either way.
     """
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, num_hashes, k, id_col, keep_cols)
+    sig = minhash_signatures(df, num_hashes, k, keep_cols)
     return sig.select(
         "doc_id", *keep_cols,
         F.explode(
@@ -171,9 +166,8 @@ def minhash_banded(df: DataFrame, text_col: str = "text",
     ).select("doc_id", *keep_cols, "bb.band", "bb.bucket")
 
 
-def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
-                           num_hashes: int = 64, bands: int = 16, k: int = 5,
-                           id_col: str = "doc_id",
+def minhash_lsh_candidates(df: DataFrame, num_hashes: int = 64,
+                           bands: int = 16, k: int = 5,
                            checkpoint_dir: str | None = None) -> DataFrame:
     """LSH candidate pairs: (doc_a, doc_b, n_shared_bands).
 
@@ -191,7 +185,7 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     and the bucket join.
     """
     banded = RoundMaterializer(checkpoint_dir)(
-        minhash_banded(df, text_col, num_hashes, bands, k, id_col), "banded")
+        minhash_banded(df, num_hashes, bands, k), "banded")
     return (
         banded.alias("l").join(banded.alias("r"), ["band", "bucket"])
         .where(F.col("l.doc_id") < F.col("r.doc_id"))
@@ -200,8 +194,7 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     )
 
 
-def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", k: int = 5,
-                        threshold: float = 0.5, id_col: str = "doc_id",
+def ngram_jaccard_pairs(df: DataFrame, k: int = 5, threshold: float = 0.5,
                         candidate_pairs: DataFrame | None = None,
                         checkpoint_dir: str | None = None) -> DataFrame:
     """Exact n-gram Jaccard similarity.
@@ -241,8 +234,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", k: int = 5,
     (a reliable parquet round-trip, operators/materialize.py, for
     cluster runs).
     """
-    safe = df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit("")))
-    sh = shingle_hash_array(safe, text_col, k, id_col).select(
+    safe = df.withColumn("text", F.coalesce(F.col("text"), F.lit("")))
+    sh = shingle_hash_array(safe, k).select(
         "doc_id",
         F.explode(F.array_distinct("shingle_hashes")).alias("shingle"),
     )
@@ -296,8 +289,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", k: int = 5,
     )
 
 
-def simhash_64(df: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def simhash_64(df: DataFrame) -> DataFrame:
     """64-bit SimHash per document: (doc_id, simhash bigint).
 
     Token-hash bit votes, all JVM-side: explode tokens → xxhash64 →
@@ -314,8 +306,8 @@ def simhash_64(df: DataFrame, text_col: str = "text",
     anyway.
     """
     tokens = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_raw_words(F.col(text_col))).alias("token"),
+        "doc_id",
+        F.explode(_raw_words(F.col("text"))).alias("token"),
     ).withColumn("h", F.xxhash64("token"))
     votes = [
         F.sum(
@@ -355,8 +347,7 @@ def _hamming_filter(pairs: DataFrame, max_distance: int) -> DataFrame:
     )
 
 
-def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
-                          max_distance: int = 3, id_col: str = "doc_id",
+def simhash_hamming_pairs(df: DataFrame, max_distance: int = 3,
                           checkpoint_dir: str | None = None) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_distance.
 
@@ -390,7 +381,7 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     n_blocks = max_distance + 3
     combos = list(_combinations(range(n_blocks), 3))
     blocks = _simhash_blocks(n_blocks)
-    sig = simhash_64(df, text_col, id_col)
+    sig = simhash_64(df)
 
     def block_val(i: int):
         off, size = blocks[i]
@@ -423,15 +414,14 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str = "text",
     return _hamming_filter(pairs, max_distance)
 
 
-def _simhash_hamming_pairs_chunked(df: DataFrame, text_col: str = "text",
-                                   max_distance: int = 3,
-                                   id_col: str = "doc_id") -> DataFrame:
+def _simhash_hamming_pairs_chunked(df: DataFrame,
+                                   max_distance: int = 3) -> DataFrame:
     """Round-2 4×16-bit chunk blocking, kept ONLY as the equivalence
     twin for the Manku-key form above (both blockings are recall-exact
     for d≤3, so outputs must be identical). Not for production: bucket
     occupancy N/65,536 goes quadratic at ≥10⁹ docs."""
     assert max_distance <= 3, "4-chunk pigeonhole only guarantees d<=3"
-    sig = simhash_64(df, text_col, id_col)
+    sig = simhash_64(df)
     chunks = sig.select(
         "doc_id", "simhash",
         F.explode(F.array(*[
@@ -466,8 +456,7 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
 
 
 def embedding_lsh_signatures(emb: DataFrame, dim: int, n_planes: int = 12,
-                             seed: int = 7, id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> DataFrame:
+                             seed: int = 7) -> DataFrame:
     """Random-hyperplane (SimHash-for-vectors) bucket per embedding.
 
     All planes live in ONE flattened literal array (a single Literal
@@ -485,7 +474,7 @@ def embedding_lsh_signatures(emb: DataFrame, dim: int, n_planes: int = 12,
     dots = F.transform(
         F.sequence(F.lit(0), F.lit(n_planes - 1)),
         lambda i: F.aggregate(
-            F.zip_with(F.col(vec_col), F.slice(flat, i * dim + 1, dim),
+            F.zip_with(F.col("embedding"), F.slice(flat, i * dim + 1, dim),
                        lambda x, p: x.cast("double") * p),
             F.lit(0.0), lambda acc, v: acc + v,
         ),
@@ -496,13 +485,11 @@ def embedding_lsh_signatures(emb: DataFrame, dim: int, n_planes: int = 12,
                    .otherwise(F.lit(0).cast("bigint"))),
         F.lit(0).cast("bigint"), lambda acc, v: acc + v,
     )
-    return emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"),
-                      sig.alias("lsh_bucket"))
+    return emb.select("vec_id", "embedding", sig.alias("lsh_bucket"))
 
 
 def embedding_near_dups(emb: DataFrame, dim: int, threshold: float = 0.95,
-                        n_planes: int = 12, id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
+                        n_planes: int = 12) -> DataFrame:
     """Embedding-cosine near-duplicates: LSH bucket join + exact verify.
 
     The candidate join is an equi-join on the bucket id (never a cross
@@ -511,8 +498,7 @@ def embedding_near_dups(emb: DataFrame, dim: int, threshold: float = 0.95,
     """
     from .similarity import cosine_similarity_col
 
-    sig = embedding_lsh_signatures(emb, dim, n_planes, id_col=id_col,
-                                   vec_col=vec_col)
+    sig = embedding_lsh_signatures(emb, dim, n_planes)
     a, b = sig.alias("a"), sig.alias("b")
     cos = cosine_similarity_col(F.col("a.embedding"), F.col("b.embedding"))
     return (
@@ -685,12 +671,11 @@ def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     )
 
 
-def exact_duplicate_groups(df: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
     """Exact dedup groups by content hash (A10, s3_client.py:243-270)."""
     return (
-        df.select(F.col(id_col).alias("doc_id"),
-                  F.sha2(F.col(text_col).cast("binary"), 256).alias("content_hash"))
+        df.select("doc_id",
+                  F.sha2(F.col("text").cast("binary"), 256).alias("content_hash"))
         .groupBy("content_hash")
         .agg(F.count("*").alias("group_size"),
              F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
@@ -698,8 +683,7 @@ def exact_duplicate_groups(df: DataFrame, text_col: str = "text",
     )
 
 
-def c4_span_dedup(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def c4_span_dedup(docs: DataFrame) -> DataFrame:
     """C4's corpus-level three-sentence-span dedup (Raffel et al. 2020
     §2.2: "we discarded all but one of any three-sentence span
     occurring more than once in the data set") — the dedup rule that
@@ -738,9 +722,9 @@ def c4_span_dedup(docs: DataFrame, id_col: str = "doc_id",
     session.get_spark); removal lists ride doc-keyed joins. No UDFs.
     """
     sep = "\x1f"
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     sent = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.filter(
             F.transform(
                 F.regexp_extract_all(t, F.lit(r"[^.!?]+[.!?]+"), F.lit(0)),
@@ -790,9 +774,7 @@ def c4_span_dedup(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def exact_substr_dedup(docs: DataFrame, window: int = 50,
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def exact_substr_dedup(docs: DataFrame, window: int = 50) -> DataFrame:
     """ExactSubstr-style corpus dedup (Lee et al. 2021, "Deduplicating
     Training Data Makes Language Models Better"): any ``window``-token
     substring occurring more than once in the corpus keeps only its
@@ -840,8 +822,7 @@ def exact_substr_dedup(docs: DataFrame, window: int = 50,
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     sep = "\x1f"
-    toks = docs.select(F.col(id_col).alias("doc_id"),
-                       words(F.col(text_col)).alias("ws"))
+    toks = docs.select("doc_id", words(F.col("text")).alias("ws"))
     n = F.size("ws")
     idxs = F.when(n >= window, F.sequence(F.lit(1), n - (window - 1))) \
             .otherwise(F.array().cast("array<int>"))
@@ -880,9 +861,7 @@ def exact_substr_dedup(docs: DataFrame, window: int = 50,
     )
 
 
-def line_dedup(docs: DataFrame, min_doc_freq: int = 2,
-               id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def line_dedup(docs: DataFrame, min_doc_freq: int = 2) -> DataFrame:
     """RefinedWeb-style exact LINE dedup (Penedo et al. 2023 §3.2/G:
     "remove duplicated lines" — the line-granularity boilerplate rule
     that nav bars, cookie banners, and footers fall to): any line whose
@@ -921,9 +900,9 @@ def line_dedup(docs: DataFrame, min_doc_freq: int = 2,
     """
     if min_doc_freq < 2:
         raise ValueError(f"min_doc_freq must be >= 2, got {min_doc_freq}")
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     lined = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.split(t, "\n", -1).alias("ls"),
     )
     occ = (
@@ -952,8 +931,7 @@ def line_dedup(docs: DataFrame, min_doc_freq: int = 2,
     )
 
 
-def strip_repeated_lines(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def strip_repeated_lines(docs: DataFrame) -> DataFrame:
     """WITHIN-document repeated-line removal — the intra-doc
     line-wise correction of the public curation canon (RefinedWeb
     §3.2/G removes duplicated lines; MassiveText/Gopher measure the
@@ -989,9 +967,9 @@ def strip_repeated_lines(docs: DataFrame, id_col: str = "doc_id",
     cheap JVM string compares on ONE row of ONE task — no wide stage
     ever sees it.
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     lined = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.split(t, "\n", -1).alias("ls"),
     ).withColumn("ks", F.transform("ls", lambda x: F.trim(x)))
     kept = F.filter(

@@ -80,8 +80,6 @@ def hashed_gram_buckets(words, bucket_hexlen: int = 3):
 def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
                     target_filter=None,
                     bucket_hexlen: int = 3, scale: int = 1_000_000,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    target_text_col: str = "text",
                     checkpoint_dir: str | None = None) -> DataFrame:
     """Per-document target-domain importance score.
 
@@ -99,7 +97,7 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
     broadcast weight join folded into ONE doc-keyed aggregation
     producing n_grams and score together.
 
-    ``target`` is any frame with ``target_text_col``; when the target
+    ``target`` is any frame with a ``text`` column; when the target
     is a SLICE of ``docs`` itself (the common in-domain-sample setup),
     pass ``target_filter`` — a boolean Column over ``docs`` — instead:
     the target grams then ride the SAME materialized gram pass as a
@@ -123,13 +121,13 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
         return hashed_gram_buckets(ws, bucket_hexlen)
 
     exploded = mat(
-        explode_grams(docs, F.col(text_col), buckets,
-                      keep=(F.col(id_col).alias("doc_id"), *tgt_cols),
+        explode_grams(docs, F.col("text"), buckets,
+                      keep=("doc_id", *tgt_cols),
                       lower=True, name="bucket"),
         "dsir_grams",
     )
     tgrams = (exploded.where(F.col("_tgt")) if target_filter is not None
-              else explode_grams(target, F.col(target_text_col), buckets,
+              else explode_grams(target, F.col("text"), buckets,
                                  lower=True, name="bucket"))
     tcounts = mat(
         tgrams.groupBy("bucket")
@@ -180,7 +178,7 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
         )
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",

@@ -49,9 +49,8 @@ _AUTH_CODE = "API_AUTHENTICATION_FAILED"
 _TOO_LARGE_CODE = "FILE_TOO_LARGE"
 
 
-def health_rollup(metrics: DataFrame,
-                  group_cols: tuple[str, ...] = ("svc_group",)) -> DataFrame:
-    """Weighted health score per group of an operations log.
+def health_rollup(metrics: DataFrame) -> DataFrame:
+    """Weighted health score per ``svc_group`` of an operations log.
 
     Input rows: one per operation, with ``error_code`` (NULL for a
     success — mirrors record_success vs ErrorMetric entries,
@@ -67,7 +66,7 @@ def health_rollup(metrics: DataFrame,
     Pure column math over one map-side-combined groupBy — no UDF, no
     extra shuffle beyond the aggregate; scales linearly in log size.
     """
-    agg = metrics.groupBy(*group_cols).agg(
+    agg = metrics.groupBy("svc_group").agg(
         F.count("*").alias("total_requests"),
         F.count("error_code").alias("total_errors"),
         F.sum("processing_time_ms").alias("_sum_ms"),
@@ -77,7 +76,7 @@ def health_rollup(metrics: DataFrame,
         .alias("_n_too_large"),
     )
     rated = agg.select(
-        *group_cols, "total_requests", "total_errors", "_n_auth",
+        "svc_group", "total_requests", "total_errors", "_n_auth",
         "_n_too_large",
         (F.col("total_errors").cast("double") / F.col("total_requests"))
         .alias("_error_rate"),
@@ -94,7 +93,7 @@ def health_rollup(metrics: DataFrame,
                 (F.col("total_requests") * 2).cast("double")),
     ).otherwise(F.lit(0.0))
     scored = rated.select(
-        *group_cols, "total_requests", "total_errors", "_n_auth",
+        "svc_group", "total_requests", "total_errors", "_n_auth",
         "_n_too_large", "_error_rate", "_avg_ms",
         ers.alias("_ers"), ls.alias("_ls"), vs.alias("_vs"),
         (ers * F.lit(0.5) + ls * F.lit(0.3) + vs * F.lit(0.2))
@@ -120,7 +119,7 @@ def health_rollup(metrics: DataFrame,
         .otherwise("critical")
     )
     return scored.select(
-        *group_cols,
+        "svc_group",
         "total_requests",
         "total_errors",
         F.round("_error_rate", 4).alias("error_rate"),
@@ -151,5 +150,5 @@ def health_from_lineage(lineage: DataFrame) -> DataFrame:
         .otherwise(F.lit(None).cast("string")).alias("error_code"),
         F.col("wall_ms").cast("double").alias("processing_time_ms"),
     )
-    return health_rollup(ops, ("svc_group",)) \
+    return health_rollup(ops) \
         .withColumnRenamed("svc_group", "run_id")

@@ -49,8 +49,7 @@ def _hex_prefix(payload: Column, n: int) -> Column:
     return F.upper(F.hex(F.substring(payload, 1, n)))
 
 
-def url_landing_plan(requests: DataFrame,
-                     url_col: str = "url") -> DataFrame:
+def url_landing_plan(requests: DataFrame) -> DataFrame:
     """(url, filename, file_type, action, reason) per landed fetch.
 
     Input columns: ``url string, http_status int, content_type string,
@@ -66,12 +65,12 @@ def url_landing_plan(requests: DataFrame,
     tree costing ~4 s of driver-side analysis per call for 240 rows
     (bench finding); this shape is ~30× smaller and analysis-cheap.
     """
-    url = F.col(url_col)
+    url = F.col("url")
     pay = F.coalesce(F.col("payload"), F.lit(b""))
     # urlparse path: strip scheme://authority, stop at query/fragment
     path = F.regexp_extract(url, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]*([^?#]*)", 1)
     s1 = requests.select(
-        url.alias("url"), "http_status", "content_type",
+        "url", "http_status", "content_type",
         "content_length_header",
         F.length(pay).alias("_n_bytes"),
         F.element_at(F.split(path, "/"), -1).alias("_base"),

@@ -74,18 +74,16 @@ from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 HREF_PATTERN = r'href="([^"]*)"'
 
 
-def extract_host_edges(pages: DataFrame, html_col: str = "html",
-                       url_col: str = "url",
-                       id_col: str = "doc_id") -> DataFrame:
+def extract_host_edges(pages: DataFrame) -> DataFrame:
     """Distinct (src_host, dst_host) edges from page HTML.
 
     Per-row: regexp-extract all double-quoted hrefs, canonicalize each
     to a host, keep absolute cross-host targets, explode, distinct.
     The HTML column never survives past the per-row projection.
     """
-    src = canonical_host(F.col(url_col))
+    src = canonical_host(F.col("url"))
     hrefs = F.regexp_extract_all(
-        F.coalesce(F.col(html_col), F.lit("")), F.lit(HREF_PATTERN), 1)
+        F.coalesce(F.col("html"), F.lit("")), F.lit(HREF_PATTERN), 1)
     return (
         pages.select(src.alias("src_host"),
                      F.explode_outer(hrefs).alias("href"))
@@ -97,8 +95,7 @@ def extract_host_edges(pages: DataFrame, html_col: str = "html",
 
 
 def host_link_stats(pages: DataFrame, iterations: int = 2,
-                    scale: int = 10 ** 12, html_col: str = "html",
-                    url_col: str = "url",
+                    scale: int = 10 ** 12,
                     checkpoint_dir: str | None = None) -> DataFrame:
     """Per-host degrees + integer PageRank after ``iterations`` rounds.
 
@@ -118,9 +115,7 @@ def host_link_stats(pages: DataFrame, iterations: int = 2,
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     mat = RoundMaterializer(checkpoint_dir)
-    edges = mat(
-        extract_host_edges(pages, html_col=html_col, url_col=url_col),
-        "edges")
+    edges = mat(extract_host_edges(pages), "edges")
     nodes = (edges.select(F.col("src_host").alias("host"))
              .unionByName(edges.select(F.col("dst_host").alias("host")))
              .distinct())

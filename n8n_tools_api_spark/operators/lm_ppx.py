@@ -113,7 +113,6 @@ def surprisal_q16(num: str, den: str) -> Column:
 
 def lm_perplexity(docs: DataFrame, train_filter: Column, *,
                   bucket_hexlen: int = 3, group_col: str = "lang",
-                  id_col: str = "doc_id", text_col: str = "text",
                   checkpoint_dir: str | None = None) -> DataFrame:
     """Per-document mean bigram surprisal against a per-group hashed
     LM trained on the rows where ``train_filter`` holds.
@@ -133,11 +132,11 @@ def lm_perplexity(docs: DataFrame, train_filter: Column, *,
     # the bucket array is bound in its own projection before the bigram
     # lambdas read it, like a word array (functions/text.py)
     with_bks = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.coalesce(F.col(group_col).cast("string"), F.lit(""))
         .alias("grp"),
         train_filter.alias("is_train"),
-        token_buckets(F.col(text_col), bucket_hexlen).alias("bks"),
+        token_buckets(F.col("text"), bucket_hexlen).alias("bks"),
     )
     bks = F.col("bks")
     # explode_OUTER keeps bigram-less documents as one (NULL, NULL)
@@ -251,7 +250,6 @@ def _detect_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def ccnet_keep_list(docs: DataFrame, *,
                     train_seed: int = 271828, train_rate: float = 0.3,
                     tail_seed: int = 314159, tail_rate: float = 0.1,
-                    id_col: str = "doc_id", text_col: str = "text",
                     checkpoint_dir: str | None = None) -> DataFrame:
     """The composed CCNet pipeline in the paper's stage order (Wenzek
     et al. 2020 §3): language ID → per-detected-language LM perplexity
@@ -288,8 +286,7 @@ def ccnet_keep_list(docs: DataFrame, *,
 
     mat = RoundMaterializer(checkpoint_dir)
     detected = mat(
-        docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                    F.col(text_col).alias("text"))
+        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
         .mapInPandas(_detect_batches, schema=_DETECT_SCHEMA),
         "ccnet_detected",
     )

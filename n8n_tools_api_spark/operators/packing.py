@@ -100,7 +100,6 @@ def _global_exclusive_prefix(df: DataFrame, order_cols: list[str],
 
 
 def token_pack(docs: DataFrame, block_size: int,
-               id_col: str = "doc_id", text_col: str = "text",
                count_col: str | None = None,
                shard_col: str | None = None) -> DataFrame:
     """Concat-and-chunk placement manifest (see module docstring).
@@ -113,8 +112,8 @@ def token_pack(docs: DataFrame, block_size: int,
     if block_size < 1:
         raise ValueError(f"block_size must be >= 1, got {block_size}")
     n_tok = (F.col(count_col).cast("bigint") if count_col
-             else whitespace_token_count(F.col(text_col)))
-    slim_cols = [F.col(id_col).alias("doc_id"), n_tok.alias("n_tokens")]
+             else whitespace_token_count(F.col("text")))
+    slim_cols = ["doc_id", n_tok.alias("n_tokens")]
     if shard_col:
         slim_cols.insert(1, F.col(shard_col).alias("shard"))
     slim = docs.select(*slim_cols)
@@ -147,7 +146,6 @@ def token_pack(docs: DataFrame, block_size: int,
 
 
 def shard_manifest(docs: DataFrame, n_shards: int, seed: int = 7,
-                   id_col: str = "doc_id",
                    mode: str = "ranked") -> DataFrame:
     """Deterministic pre-training shard layout — the global shuffle +
     shard assignment every public pipeline runs between curation and
@@ -184,8 +182,8 @@ def shard_manifest(docs: DataFrame, n_shards: int, seed: int = 7,
         raise ValueError(f"mode must be 'ranked' or 'hashed', got {mode!r}")
     key = F.md5(F.concat(
         F.lit(f"{seed}:"),
-        F.coalesce(F.col(id_col).cast("string"), F.lit(""))))
-    slim = docs.select(F.col(id_col).cast("string").alias("doc_id"),
+        F.coalesce(F.col("doc_id").cast("string"), F.lit(""))))
+    slim = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
                        key.alias("skey"))
     if mode == "ranked":
         ranked = _global_exclusive_prefix(
@@ -206,7 +204,6 @@ def shard_manifest(docs: DataFrame, n_shards: int, seed: int = 7,
 
 def write_training_shards(docs: DataFrame, path: str, n_shards: int,
                           seed: int = 7, mode: str = "hashed",
-                          id_col: str = "doc_id",
                           fmt: str = "json") -> DataFrame:
     """Materialize the corpus as deterministic training-shard FILES —
     the sink that closes the curation → :func:`shard_manifest` →
@@ -235,11 +232,10 @@ def write_training_shards(docs: DataFrame, path: str, n_shards: int,
     """
     if fmt not in ("json", "parquet"):
         raise ValueError(f"fmt must be 'json' or 'parquet', got {fmt!r}")
-    man = shard_manifest(docs, n_shards, seed=seed, id_col=id_col,
-                         mode=mode)
+    man = shard_manifest(docs, n_shards, seed=seed, mode=mode)
     rows = (
         docs.drop("shard", "pos_in_shard")
-        .withColumn("__sid", F.col(id_col).cast("string"))
+        .withColumn("__sid", F.col("doc_id").cast("string"))
         .join(man.withColumnRenamed("doc_id", "__sid"), "__sid")
         .drop("__sid")
     )

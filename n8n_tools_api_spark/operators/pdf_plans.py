@@ -183,7 +183,7 @@ def merge_info_plan(requests: DataFrame) -> DataFrame:
     )
 
 
-def merge_plan(requests: DataFrame, strategy_col: str = "strategy") -> DataFrame:
+def merge_plan(requests: DataFrame) -> DataFrame:
     """Output page order for merge requests.
 
     Input: (req_id, strategy 'append'|'interleave', files array<struct<
@@ -192,17 +192,17 @@ def merge_plan(requests: DataFrame, strategy_col: str = "strategy") -> DataFrame
     _merge_interleave (:433-473).
     """
     pages = (
-        requests.select("req_id", strategy_col, F.explode("files").alias("f"))
-        .select("req_id", strategy_col,
+        requests.select("req_id", "strategy", F.explode("files").alias("f"))
+        .select("req_id", "strategy",
                 F.col("f.file_idx").alias("file_idx"),
                 F.col("f.n_pages").alias("n_pages"))
-        .select("req_id", strategy_col, "file_idx",
+        .select("req_id", "strategy", "file_idx",
                 F.explode(F.sequence(F.lit(0), F.col("n_pages") - 1)).alias("page_idx"))
     )
     order_append = Window.partitionBy("req_id").orderBy("file_idx", "page_idx")
     order_inter = Window.partitionBy("req_id").orderBy("page_idx", "file_idx")
     out_pos = F.when(
-        F.col(strategy_col) == "interleave",
+        F.col("strategy") == "interleave",
         F.row_number().over(order_inter),
     ).otherwise(F.row_number().over(order_append))
     return pages.select(

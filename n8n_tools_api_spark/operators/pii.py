@@ -49,15 +49,14 @@ def _count(col: Column, pattern: str) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(pattern), F.lit(0)))
 
 
-def redact_pii(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
-    """Mask emails, phone numbers, and IPv4 addresses in ``text_col``.
+def redact_pii(docs: DataFrame) -> DataFrame:
+    """Mask emails, phone numbers, and IPv4 addresses in ``text``.
 
     Output: (doc_id, redacted_text, n_emails, n_phones, n_ips,
     pii_total, has_pii) — one row per input row, all counts from the
     sequential stage order documented in the module docstring.
     """
-    out = docs.withColumn("_pii_t", F.coalesce(F.col(text_col), F.lit("")))
+    out = docs.withColumn("_pii_t", F.coalesce(F.col("text"), F.lit("")))
     counts = []
     for count_col, pattern, token in PII_STAGES:
         out = out.withColumn(count_col, _count(F.col("_pii_t"), pattern))
@@ -66,7 +65,7 @@ def redact_pii(docs: DataFrame, id_col: str = "doc_id",
         counts.append(count_col)
     total = sum((F.col(c) for c in counts), F.lit(0)).cast("int")
     return out.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.col("_pii_t").alias("redacted_text"),
         *[F.col(c).cast("int").alias(c) for c in counts],
         total.alias("pii_total"),

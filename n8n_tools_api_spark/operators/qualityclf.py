@@ -81,11 +81,10 @@ from .dsir import hashed_gram_buckets
 from .lm_ppx import surprisal_q16
 
 
-def _side_counts(frame: DataFrame, text_col: str, hexlen: int,
-                 out: str) -> DataFrame:
+def _side_counts(frame: DataFrame, hexlen: int, out: str) -> DataFrame:
     """(bucket, <out>) training occurrence counts for one class slice."""
     return (
-        explode_grams(frame, F.col(text_col),
+        explode_grams(frame, F.col("text"),
                       lambda ws: hashed_gram_buckets(ws, hexlen),
                       lower=True, name="bucket")
         .groupBy("bucket")
@@ -95,8 +94,6 @@ def _side_counts(frame: DataFrame, text_col: str, hexlen: int,
 
 def nb_quality_weights(positive: DataFrame, negative: DataFrame, *,
                        bucket_hexlen: int = 3,
-                       positive_text_col: str = "text",
-                       negative_text_col: str = "text",
                        ) -> tuple[DataFrame, DataFrame]:
     """Train the NB log-odds model (see module docstring).
 
@@ -110,8 +107,8 @@ def nb_quality_weights(positive: DataFrame, negative: DataFrame, *,
         raise ValueError(
             f"bucket_hexlen must be in 1..8, got {bucket_hexlen}")
     B = 16 ** bucket_hexlen
-    pc = _side_counts(positive, positive_text_col, bucket_hexlen, "cp")
-    nc = _side_counts(negative, negative_text_col, bucket_hexlen, "cn")
+    pc = _side_counts(positive, bucket_hexlen, "cp")
+    nc = _side_counts(negative, bucket_hexlen, "cn")
     ptot = pc.agg(
         F.coalesce(F.sum("cp"), F.lit(0)).cast("bigint").alias("ptot"))
     ntot = nc.agg(
@@ -162,10 +159,6 @@ def quality_classifier_scores(docs: DataFrame, positive: DataFrame,
                               negative: DataFrame, *,
                               threshold_q16: int = 0,
                               bucket_hexlen: int = 3,
-                              id_col: str = "doc_id",
-                              text_col: str = "text",
-                              positive_text_col: str = "text",
-                              negative_text_col: str = "text",
                               ) -> DataFrame:
     """Train on the labeled slices and score every document.
 
@@ -176,13 +169,11 @@ def quality_classifier_scores(docs: DataFrame, positive: DataFrame,
     the pinned arithmetic and the 100-TB shape.
     """
     weights, baseline = nb_quality_weights(
-        positive, negative, bucket_hexlen=bucket_hexlen,
-        positive_text_col=positive_text_col,
-        negative_text_col=negative_text_col)
+        positive, negative, bucket_hexlen=bucket_hexlen)
     per_doc = (
-        explode_grams(docs, F.col(text_col),
+        explode_grams(docs, F.col("text"),
                       lambda ws: hashed_gram_buckets(ws, bucket_hexlen),
-                      keep=(F.col(id_col).alias("doc_id"),),
+                      keep=("doc_id",),
                       lower=True, name="bucket")
         .join(F.broadcast(weights), "bucket", "left")
         .groupBy("doc_id")
@@ -193,7 +184,7 @@ def quality_classifier_scores(docs: DataFrame, positive: DataFrame,
         )
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .crossJoin(F.broadcast(baseline))
         .select(

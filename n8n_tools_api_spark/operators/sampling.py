@@ -64,25 +64,24 @@ def _threshold_col(strata: Column, rates: dict[str, float],
 
 
 def stratified_sample(docs: DataFrame, rates: dict[str, float],
-                      strata_col: str = "lang", id_col: str = "doc_id",
                       seed: int = 42,
                       default_rate: float = 1.0) -> DataFrame:
-    """Keep each row of ``docs`` with its stratum's rate — all input
-    columns pass through unchanged; rows are never duplicated."""
-    keep = sample_key(F.col(id_col), seed) < \
-        _threshold_col(F.col(strata_col), rates, default_rate)
+    """Keep each row of ``docs`` with the rate of its ``lang`` stratum,
+    keyed on ``doc_id`` — all input columns pass through unchanged;
+    rows are never duplicated."""
+    keep = sample_key(F.col("doc_id"), seed) < \
+        _threshold_col(F.col("lang"), rates, default_rate)
     return docs.where(keep)
 
 
 def mixture_report(docs: DataFrame, rates: dict[str, float],
-                   strata_col: str = "lang", id_col: str = "doc_id",
                    seed: int = 42,
                    default_rate: float = 1.0) -> DataFrame:
     """Per-stratum audit of the sample the same parameters would keep:
     (stratum, threshold, n_docs, n_kept, realized_rate) — the mixture
     sheet a training run records next to its data config."""
-    strata = F.col(strata_col)
-    kept = (sample_key(F.col(id_col), seed) <
+    strata = F.col("lang")
+    kept = (sample_key(F.col("doc_id"), seed) <
             _threshold_col(strata, rates, default_rate)).cast("int")
     return (
         docs.select(strata.alias("stratum"), kept.alias("_kept"))

@@ -32,24 +32,22 @@ def cosine_similarity_col(a, b):
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
-def brute_force_topk(emb: DataFrame, query_vec_id: int, k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def brute_force_topk(emb: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
     """Exact cosine top-k against one stored vector (broadcast)."""
-    q = (emb.where(F.col(id_col) == query_vec_id)
-         .select(F.col(vec_col).alias("_q")))
+    q = (emb.where(F.col("vec_id") == query_vec_id)
+         .select(F.col("embedding").alias("_q")))
     return (
-        emb.where(F.col(id_col) != query_vec_id)
+        emb.where(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(q))
-        .select(id_col,
-                F.round(cosine_similarity_col(F.col(vec_col), F.col("_q")), 4)
+        .select("vec_id",
+                F.round(cosine_similarity_col(F.col("embedding"), F.col("_q")), 4)
                 .alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), id_col)
+        .orderBy(F.desc("cosine_sim"), "vec_id")
         .limit(k)
     )
 
 
-def ivf_assign(emb: DataFrame, nlist: int = 16,
-               id_col: str = "vec_id", vec_col: str = "embedding") -> tuple[DataFrame, DataFrame]:
+def ivf_assign(emb: DataFrame, nlist: int = 16) -> tuple[DataFrame, DataFrame]:
     """Coarse quantizer: deterministic centroid pick + nearest-centroid
     assignment.
 
@@ -64,17 +62,15 @@ def ivf_assign(emb: DataFrame, nlist: int = 16,
     # partition key would funnel every embedding through one task
     # (review finding) — orderBy().limit() runs as a distributed top-k
     centroids = F.broadcast(
-        emb.select(id_col, vec_col)
-        .orderBy(id_col)
+        emb.select("vec_id", "embedding")
+        .orderBy("vec_id")
         .limit(nlist)
-        .select(F.col(id_col).alias("cluster_id"), F.col(vec_col).alias("centroid"))
+        .select(F.col("vec_id").alias("cluster_id"), F.col("embedding").alias("centroid"))
     )
-    return centroids, assign_to_centroids(emb, centroids, id_col, vec_col)
+    return centroids, assign_to_centroids(emb, centroids)
 
 
-def assign_to_centroids(emb: DataFrame, centroids: DataFrame,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
+def assign_to_centroids(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the (tiny) centroid set
     PACKED into one array row, score every vector against all centroids
     inside a single projection, and pick the argmax with an array sort
@@ -114,7 +110,7 @@ def assign_to_centroids(emb: DataFrame, centroids: DataFrame,
             F.transform(
                 F.col("_cents"),
                 lambda c: F.struct(
-                    cosine_similarity_col(F.col(vec_col), c["centroid"])
+                    cosine_similarity_col(F.col("embedding"), c["centroid"])
                     .alias("s"),
                     c["cluster_id"].alias("cluster_id"),
                 ),
@@ -130,7 +126,6 @@ def assign_to_centroids(emb: DataFrame, centroids: DataFrame,
 
 
 def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
                   checkpoint_dir: str | None = None) -> DataFrame:
     """Lloyd refinement of the IVF coarse quantizer.
 
@@ -150,7 +145,7 @@ def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2,
     from .materialize import RoundMaterializer
 
     mat = RoundMaterializer(checkpoint_dir)
-    centroids, assigned = ivf_assign(emb, nlist, id_col, vec_col)
+    centroids, assigned = ivf_assign(emb, nlist)
     # each Lloyd iteration nests an assignment-over-emb into the
     # lineage; cut per round so downstream actions don't replay the
     # whole chain (review finding — mirrors near_dup_components). The
@@ -161,7 +156,7 @@ def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2,
     for _i in range(iters):
         dims = (
             assigned.select("cluster_id",
-                            F.posexplode(F.col(vec_col).cast("array<double>"))
+                            F.posexplode(F.col("embedding").cast("array<double>"))
                             .alias("dim", "v"))
             .groupBy("cluster_id", "dim")
             .agg(F.avg("v").alias("mean_v"))
@@ -176,7 +171,7 @@ def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2,
         )
         if _i < iters - 1:
             assigned = mat(
-                assign_to_centroids(emb, centroids, id_col, vec_col),
+                assign_to_centroids(emb, centroids),
                 f"assign_{_i}",
             )
             mat.release(f"assign_{_i - 1}" if _i else "assign_init")
@@ -186,9 +181,8 @@ def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2,
 
 
 def ann_recall_at_k(emb: DataFrame, n_queries: int = 8, k: int = 10,
-                    nlist: int = 16, nprobes: tuple[int, ...] = (1, 4, 16),
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+                    nlist: int = 16,
+                    nprobes: tuple[int, ...] = (1, 4, 16)) -> DataFrame:
     """Recall@k evidence for the IVF index vs the exact brute-force
     baseline (round-2 verdict #6): one row per nprobe with the mean
     recall over the ``n_queries`` smallest-id query vectors.
@@ -210,18 +204,18 @@ def ann_recall_at_k(emb: DataFrame, n_queries: int = 8, k: int = 10,
 
     mat = RoundMaterializer()
     queries = (
-        emb.orderBy(id_col).limit(n_queries)
-        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("_q"))
+        emb.orderBy("vec_id").limit(n_queries)
+        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("_q"))
     )
-    sim = F.round(cosine_similarity_col(F.col(vec_col), F.col("_q")), 4)
-    wq = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc(id_col))
+    sim = F.round(cosine_similarity_col(F.col("embedding"), F.col("_q")), 4)
+    wq = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
     brute = mat(
         emb.crossJoin(F.broadcast(queries))
-        .where(F.col(id_col) != F.col("qid"))
+        .where(F.col("vec_id") != F.col("qid"))
         .withColumn("cosine_sim", sim)
         .withColumn("_rn", F.row_number().over(wq))
         .where(F.col("_rn") <= k)
-        .select("qid", id_col),
+        .select("qid", "vec_id"),
         "brute",
     )
     # recall denominator = the ACTUAL brute-pair count, not n_queries*k:
@@ -230,7 +224,7 @@ def ann_recall_at_k(emb: DataFrame, n_queries: int = 8, k: int = 10,
     # "recall == 1.0 at nprobe == nlist" invariant (review finding).
     # brute is cut, so this count is the one pass that computes it.
     n_brute = max(brute.count(), 1)
-    centroids, assigned = ivf_assign(emb, nlist, id_col, vec_col)
+    centroids, assigned = ivf_assign(emb, nlist)
     assigned = mat(assigned, "assigned")
     probe_rank = mat(
         centroids.crossJoin(F.broadcast(queries))
@@ -248,14 +242,14 @@ def ann_recall_at_k(emb: DataFrame, n_queries: int = 8, k: int = 10,
         ivf = (
             assigned.join(F.broadcast(probes), "cluster_id")
             .join(F.broadcast(queries), "qid")
-            .where(F.col(id_col) != F.col("qid"))
+            .where(F.col("vec_id") != F.col("qid"))
             .withColumn("cosine_sim", sim)
             .withColumn("_rn", F.row_number().over(wq))
             .where(F.col("_rn") <= k)
-            .select("qid", id_col)
+            .select("qid", "vec_id")
         )
         row = (
-            ivf.join(brute, ["qid", id_col], "left_semi")
+            ivf.join(brute, ["qid", "vec_id"], "left_semi")
             .agg((F.count("*") / F.lit(n_brute)).alias("recall_at_k"))
             .select(F.lit(np_).alias("nprobe"),
                     F.lit(n_queries).alias("n_queries"),
@@ -267,11 +261,10 @@ def ann_recall_at_k(emb: DataFrame, n_queries: int = 8, k: int = 10,
 
 
 def ivf_topk(emb: DataFrame, query_vec_id: int, k: int = 10, nlist: int = 16,
-             nprobe: int = 4, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+             nprobe: int = 4) -> DataFrame:
     """ANN top-k: probe the query's ``nprobe`` nearest clusters only."""
-    centroids, assigned = ivf_assign(emb, nlist, id_col, vec_col)
-    q = emb.where(F.col(id_col) == query_vec_id).select(F.col(vec_col).alias("_q"))
+    centroids, assigned = ivf_assign(emb, nlist)
+    q = emb.where(F.col("vec_id") == query_vec_id).select(F.col("embedding").alias("_q"))
     probe_clusters = (
         centroids.crossJoin(F.broadcast(q))
         .withColumn("_score", cosine_similarity_col(F.col("centroid"), F.col("_q")))
@@ -281,19 +274,18 @@ def ivf_topk(emb: DataFrame, query_vec_id: int, k: int = 10, nlist: int = 16,
     )
     return (
         assigned.join(F.broadcast(probe_clusters), "cluster_id")
-        .where(F.col(id_col) != query_vec_id)
+        .where(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(q))
-        .select(id_col, "cluster_id",
-                F.round(cosine_similarity_col(F.col(vec_col), F.col("_q")), 4)
+        .select("vec_id", "cluster_id",
+                F.round(cosine_similarity_col(F.col("embedding"), F.col("_q")), 4)
                 .alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), id_col)
+        .orderBy(F.desc("cosine_sim"), "vec_id")
         .limit(k)
     )
 
 
 def semdedup_keep_list(emb: DataFrame, threshold: float = 0.95,
                        nlist: int = 16, iters: int = 1,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
                        checkpoint_dir: str | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): cluster the
@@ -335,9 +327,8 @@ def semdedup_keep_list(emb: DataFrame, threshold: float = 0.95,
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     mat = RoundMaterializer(checkpoint_dir)
-    centroids = kmeans_refine(emb, nlist, iters, id_col, vec_col,
-                              checkpoint_dir)
-    assigned = assign_to_centroids(emb, centroids, id_col, vec_col)
+    centroids = kmeans_refine(emb, nlist, iters, checkpoint_dir)
+    assigned = assign_to_centroids(emb, centroids)
     # per-vector norm computed ONCE here: the quadratic stage below then
     # pays one dot product per pair instead of three (cosine(a,b) =
     # dot/(sqrt(dot(a,a))*sqrt(dot(b,b))) — the two self-dots depend
@@ -346,10 +337,10 @@ def semdedup_keep_list(emb: DataFrame, threshold: float = 0.95,
     # is bit-identical to the inline form.
     scored = mat(
         assigned.join(F.broadcast(centroids), "cluster_id")
-        .select(F.col(id_col).alias("vec_id"), "cluster_id",
-                F.col(vec_col).alias("_v"),
-                F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_n"),
-                cosine_similarity_col(F.col(vec_col), F.col("centroid"))
+        .select("vec_id", "cluster_id",
+                F.col("embedding").alias("_v"),
+                F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("_n"),
+                cosine_similarity_col(F.col("embedding"), F.col("centroid"))
                 .alias("centroid_sim")),
         "semdedup_scored")
     # Per-cluster pairwise stage, two passes (guide §1.2/§4.2 — decide

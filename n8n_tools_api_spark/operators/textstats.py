@@ -86,8 +86,7 @@ def _lines(t: Column) -> Column:
                     lambda x: x != "")
 
 
-def gopher_repetition(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def gopher_repetition(docs: DataFrame) -> DataFrame:
     """Repetition metrics + quality gates from the Gopher curation
     rules (Rae et al., "Scaling Language Models: Methods, Analysis &
     Insights from Training Gopher", 2021, Appendix A1.1 — public
@@ -119,8 +118,8 @@ def gopher_repetition(docs: DataFrame, id_col: str = "doc_id",
     """
     from pyspark.sql.window import Window
 
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    base = docs.select(F.col(id_col).alias("doc_id"),
+    text = F.coalesce(F.col("text"), F.lit(""))
+    base = docs.select("doc_id",
                        text.alias("_t"),
                        F.length(text).alias("total_chars"))
 
@@ -189,8 +188,7 @@ def gopher_repetition(docs: DataFrame, id_col: str = "doc_id",
 GOPHER_STOP_WORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_word_stats(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def gopher_word_stats(docs: DataFrame) -> DataFrame:
     """The word/line-level Gopher quality rules (Rae et al. 2021,
     Appendix A1.1) — the companion to :func:`gopher_repetition`, so the
     engine carries the COMPLETE published filter set:
@@ -211,8 +209,8 @@ def gopher_word_stats(docs: DataFrame, id_col: str = "doc_id",
     \\s+ split. All fractions round to 6dp before gating; DuckDB
     replays everything (oracle ``gopher_word_stats``).
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    bound = docs.select(F.col(id_col).alias("doc_id"), text.alias("_t"),
+    text = F.coalesce(F.col("text"), F.lit(""))
+    bound = docs.select("doc_id", text.alias("_t"),
                         words(text).alias("_ws"), _lines(text).alias("_lines"))
     t, ws, lines = F.col("_t"), F.col("_ws"), F.col("_lines")
     n_words = F.size(ws)
@@ -265,8 +263,7 @@ def gopher_word_stats(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def c4_line_filter(docs: DataFrame) -> DataFrame:
     """The C4 cleaning rules (Raffel et al., "Exploring the Limits of
     Transfer Learning with a Unified Text-to-Text Transformer", 2020,
     §2.2 — the other canonical public filter set beside Gopher):
@@ -288,13 +285,13 @@ def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
     scan at 100 TB; pairs with gopher_repetition/gopher_word_stats for
     a complete public-rules quality stage.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     terminal = lambda x: (x.endswith(".") | x.endswith("!")
                           | x.endswith("?") | x.endswith('"'))
     five_words = lambda x: F.size(words(x)) >= 5
     no_js = lambda x: ~F.lower(x).rlike(r"\bjavascript\b")
     bound = docs.select(
-        F.col(id_col).alias("doc_id"), text.alias("_t"),
+        "doc_id", text.alias("_t"),
         F.filter(_lines(text),
                  lambda x: terminal(x) & five_words(x) & no_js(x))
         .alias("_kept"))
@@ -320,9 +317,7 @@ def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
 _EDGE_PUNCT = r"^[^a-z0-9]+|[^a-z0-9]+$"
 
 
-def c4_badwords_filter(docs: DataFrame, badwords: list[str],
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def c4_badwords_filter(docs: DataFrame, badwords: list[str]) -> DataFrame:
     """C4's bad-words page filter (Raffel et al. 2020 §2.2: "removed
     any page that contained any word on the 'List of Dirty, Naughty,
     Obscene or Otherwise Bad Words'") — the one §2.2 rule
@@ -378,8 +373,8 @@ def c4_badwords_filter(docs: DataFrame, badwords: list[str],
     single = [e for e in entries if " " not in e]
     phrases = [e for e in entries if " " in e]
     bound = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(F.transform(words(F.col(text_col), lower=True),
+        "doc_id",
+        F.filter(F.transform(words(F.col("text"), lower=True),
                              lambda w: F.regexp_replace(w, _EDGE_PUNCT, "")),
                  lambda w: w != "").alias("_toks"))
     toks = F.col("_toks")
@@ -403,13 +398,11 @@ def c4_badwords_filter(docs: DataFrame, badwords: list[str],
     )
 
 
-def dataset_card(docs: DataFrame, short_doc_tokens: int = 32,
-                 text_col: str = "text",
-                 dims: tuple[str, ...] = ("lang", "source")) -> DataFrame:
+def dataset_card(docs: DataFrame, short_doc_tokens: int = 32) -> DataFrame:
     """Dataset-card rollup — the PUBLISHING stage of a training-data
     pipeline (the statistics table a released corpus ships with, the
-    Dolma / FineWeb dataset-card convention): per dimension combination
-    plus rollup subtotals and a grand total, exact integer corpus
+    Dolma / FineWeb dataset-card convention): per (lang, source)
+    combination plus rollup subtotals and a grand total, exact integer corpus
     statistics.
 
     Pinned semantics (replayed exactly by the ``dataset_card`` oracle
@@ -432,10 +425,11 @@ def dataset_card(docs: DataFrame, short_doc_tokens: int = 32,
     """
     from n8n_tools_api_spark.operators.packing import whitespace_token_count
 
+    dims = ("lang", "source")
     base = docs.select(
         *dims,
-        whitespace_token_count(F.col(text_col)).alias("n_tok"),
-        F.length(F.coalesce(F.col(text_col), F.lit(""))).cast("bigint")
+        whitespace_token_count(F.col("text")).alias("n_tok"),
+        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("bigint")
         .alias("n_ch"))
     agged = base.rollup(*dims).agg(
         *[F.grouping(d).alias(f"_g_{d}") for d in dims],

@@ -3045,8 +3045,7 @@ def host_cap_keep_list(spark, sf_dir):
         F.lit(None).cast("string").alias("url"),
         F.col("n_chars").cast("bigint").alias("quality"))
     corpus = base.unionByName(www).unionByName(bad).unionByName(nul)
-    kept = per_host_cap(corpus, cap=7, url_col="url",
-                        quality_col="quality", salt_buckets=4)
+    kept = per_host_cap(corpus, cap=7, quality_col="quality", salt_buckets=4)
     return kept.select("doc_id", "host", "host_rank", "quality")         .orderBy("host", "host_rank")
 
 
@@ -4233,7 +4232,7 @@ def mixture_sample_report_q(spark, sf_dir):
             F.lit(None).cast("string").alias("lang"))
     )
     rates = {"en": 1.0, "de": 0.5, "fr": 0.25, "es": 0.1, "zh": 0.0}
-    return mixture_report(corpus, rates, strata_col="lang", seed=42,
+    return mixture_report(corpus, rates, seed=42,
                           default_rate=0.75) \
         .orderBy(F.col("stratum").asc_nulls_first())
 

@@ -39,10 +39,9 @@ from .dedup_stream import _dedup_key, dedup_stream, with_content_hash
 from .neardup_stream import neardup_prefilter_batch_twin, neardup_prefilter_stream
 
 
-def curation_stream(docs: DataFrame, event_time_col: str = "event_time",
-                    watermark: str = "10 minutes", text_col: str = "text",
-                    id_col: str = "doc_id", num_hashes: int = 64,
-                    bands: int = 16, k: int = 5) -> DataFrame:
+def curation_stream(docs: DataFrame, watermark: str = "10 minutes",
+                    num_hashes: int = 64, bands: int = 16,
+                    k: int = 5) -> DataFrame:
     """(doc_id, event_time) of every document admitted by BOTH
     prefilter stages, emitted as soon as its micro-batch processes.
 
@@ -50,53 +49,45 @@ def curation_stream(docs: DataFrame, event_time_col: str = "event_time",
     dropped by the cheap hash claim and never burns near-dup bucket
     state; the LSH stage then only arbitrates genuinely novel content.
     """
-    deduped = dedup_stream(docs, event_time_col, watermark, text_col, id_col)
+    deduped = dedup_stream(docs, watermark)
     # the watermark was defined by dedup_stream; Spark forbids
     # redefining it mid-pipeline, so the second stage inherits it
     return neardup_prefilter_stream(
-        deduped.select(F.col(id_col).alias("doc_id"), event_time_col,
-                       text_col),
-        event_time_col=event_time_col, watermark=watermark,
-        text_col=text_col, num_hashes=num_hashes, bands=bands, k=k,
+        deduped.select("doc_id", "event_time", "text"),
+        watermark=watermark, num_hashes=num_hashes, bands=bands, k=k,
         assume_watermarked=True,
     )
 
 
-def curation_stream_batch_twin(docs: DataFrame,
-                               order_col: str = "event_time",
-                               text_col: str = "text",
-                               id_col: str = "doc_id",
-                               num_hashes: int = 64, bands: int = 16,
-                               k: int = 5) -> DataFrame:
+def curation_stream_batch_twin(docs: DataFrame, num_hashes: int = 64,
+                               bands: int = 16, k: int = 5) -> DataFrame:
     """Deterministic disposition of EVERY input document:
     (doc_id, event_time, stage) with stage ∈ {'admitted', 'exact_dup',
     'band_collision'}.
 
     Same contract as the per-stage twins: first-claim in strict
-    (order_col, doc_id) order, so it agrees with the stream exactly
+    (event_time, doc_id) order, so it agrees with the stream exactly
     when arrival order matches event time. The stream's output equals
     the ``stage = 'admitted'`` rows; suppressed rows record WHICH stage
     dropped them (the stream just never emits them).
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(_dedup_key(id_col)).orderBy(order_col, id_col)
+    w = Window.partitionBy(_dedup_key()).orderBy("event_time", "doc_id")
     hashed = (
-        with_content_hash(
-            docs.select(F.col(id_col).alias("doc_id"), order_col, text_col),
-            text_col)
+        with_content_hash(docs.select("doc_id", "event_time", "text"))
         .withColumn("_rn", F.row_number().over(w))
     )
     exact_survivors = hashed.where(F.col("_rn") == 1) \
-        .select("doc_id", order_col, text_col)
+        .select("doc_id", "event_time", "text")
     band_admitted = neardup_prefilter_batch_twin(
-        exact_survivors, order_col=order_col, text_col=text_col,
-        num_hashes=num_hashes, bands=bands, k=k).select("doc_id")
+        exact_survivors, num_hashes=num_hashes, bands=bands,
+        k=k).select("doc_id")
     return (
         hashed.join(band_admitted.withColumn("_adm", F.lit(1)),
                     "doc_id", "left")
         .select(
-            "doc_id", order_col,
+            "doc_id", "event_time",
             F.when(F.col("_rn") > 1, F.lit("exact_dup"))
             .when(F.col("_adm").isNull(), F.lit("band_collision"))
             .otherwise(F.lit("admitted")).alias("stage"),

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_content_hash(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_content_hash(docs: DataFrame) -> DataFrame:
     """Append the batch-parity content hash (sha256 hex of the text).
 
     ``content_hash`` is NULL for NULL text — the dedup stages below must
@@ -33,11 +33,11 @@ def with_content_hash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     by falling back to the per-document id.
     """
     return docs.withColumn(
-        "content_hash", F.sha2(F.col(text_col).cast("binary"), 256)
+        "content_hash", F.sha2(F.col("text").cast("binary"), 256)
     )
 
 
-def _dedup_key(id_col: str = "doc_id"):
+def _dedup_key():
     """Dedup key: content hash, or a doc-unique sentinel for NULL text.
 
     Media-only documents (NULL text) carry no content to dedup on; each
@@ -46,18 +46,15 @@ def _dedup_key(id_col: str = "doc_id"):
     """
     return F.coalesce(
         F.col("content_hash"),
-        F.concat(F.lit("__nulltext__:"), F.col(id_col).cast("string")),
+        F.concat(F.lit("__nulltext__:"), F.col("doc_id").cast("string")),
     )
 
 
-def dedup_stream(docs: DataFrame, event_time_col: str = "event_time",
-                 watermark: str = "10 minutes",
-                 text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def dedup_stream(docs: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """First-seen-wins exact dedup over a stream of documents.
 
-    Input: a streaming DataFrame with an event-time column. Output:
-    the stream with duplicate content (by sha256 of ``text_col``)
+    Input: a streaming DataFrame with an ``event_time`` column. Output:
+    the stream with duplicate content (by sha256 of ``text``)
     dropped; a duplicate arriving within ``watermark`` of the original
     is suppressed, one arriving later than the horizon may pass (state
     for its key has been reclaimed) — the documented bounded-state
@@ -67,23 +64,21 @@ def dedup_stream(docs: DataFrame, event_time_col: str = "event_time",
     :func:`_dedup_key`), so media-only rows all pass through.
     """
     return (
-        with_content_hash(docs, text_col)
-        .withColumn("_dedup_key", _dedup_key(id_col))
-        .withWatermark(event_time_col, watermark)
+        with_content_hash(docs)
+        .withColumn("_dedup_key", _dedup_key())
+        .withWatermark("event_time", watermark)
         .dropDuplicatesWithinWatermark(["_dedup_key"])
         .drop("_dedup_key")
     )
 
 
-def dedup_batch_twin(docs: DataFrame, order_col: str = "event_time",
-                     id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def dedup_batch_twin(docs: DataFrame) -> DataFrame:
     """Deterministic batch companion: keep the EVENT-TIME-earliest row
-    (tiebroken on ``id_col``) of each content hash.
+    (tiebroken on ``doc_id``) of each content hash.
 
     Not bit-equal to dedup_stream under out-of-order arrival: the
     streaming stage keeps the first row in ARRIVAL order (whatever the
-    micro-batches deliver), this twin keeps the earliest ``order_col``
+    micro-batches deliver), this twin keeps the earliest ``event_time``
     — they agree exactly when arrival order matches event time, which
     is what the tests feed and what a landing-zone ingest normally
     sees. The set of distinct surviving content hashes is identical
@@ -92,16 +87,16 @@ def dedup_batch_twin(docs: DataFrame, order_col: str = "event_time",
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(_dedup_key(id_col)).orderBy(order_col, id_col)
+    w = Window.partitionBy(_dedup_key()).orderBy("event_time", "doc_id")
     return (
-        with_content_hash(docs, text_col)
+        with_content_hash(docs)
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
 
 
-def _url_key(url_col: str = "url", id_col: str = "doc_id"):
+def _url_key():
     """Dedup key: canonical URL, or a doc-unique sentinel for docs
     whose URL canonicalizes to ``''`` (NULL/empty — no fetch identity).
 
@@ -121,16 +116,14 @@ def _url_key(url_col: str = "url", id_col: str = "doc_id"):
     """
     from n8n_tools_api_spark.operators.curation import canonical_url
 
-    canon = canonical_url(F.col(url_col))
+    canon = canonical_url(F.col("url"))
     return F.when(
         canon != "", F.concat(F.lit("u:"), canon)
-    ).otherwise(F.concat(F.lit("n:"), F.col(id_col).cast("string")))
+    ).otherwise(F.concat(F.lit("n:"), F.col("doc_id").cast("string")))
 
 
-def url_dedup_stream(docs: DataFrame, event_time_col: str = "event_time",
-                     watermark: str = "10 minutes",
-                     url_col: str = "url",
-                     id_col: str = "doc_id") -> DataFrame:
+def url_dedup_stream(docs: DataFrame,
+                     watermark: str = "10 minutes") -> DataFrame:
     """First-FETCH-wins canonical-URL dedup over a document stream —
     the ingest twin of ``curation.url_dedup`` (RefinedWeb's stage-1 URL
     dedup run continuously): a recrawl or tracking-decorated respelling
@@ -140,27 +133,23 @@ def url_dedup_stream(docs: DataFrame, event_time_col: str = "event_time",
     batch operator owns corpus-lifetime URL dedup).
     """
     return (
-        docs.withColumn("canonical_url", _url_key(url_col, id_col))
-        .withWatermark(event_time_col, watermark)
+        docs.withColumn("canonical_url", _url_key())
+        .withWatermark("event_time", watermark)
         .dropDuplicatesWithinWatermark(["canonical_url"])
         .drop("canonical_url")
     )
 
 
-def url_dedup_stream_batch_twin(docs: DataFrame,
-                                order_col: str = "event_time",
-                                url_col: str = "url",
-                                id_col: str = "doc_id") -> DataFrame:
+def url_dedup_stream_batch_twin(docs: DataFrame) -> DataFrame:
     """Deterministic batch companion of :func:`url_dedup_stream`: keep
-    the event-time-earliest row (tiebroken on ``id_col``) per canonical
+    the event-time-earliest row (tiebroken on ``doc_id``) per canonical
     URL, with the same ``''``-exemption key. Agrees exactly with the
     stream when arrival order matches event time (what ingest sees);
     the surviving canonical-key SET is identical either way.
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(_url_key(url_col, id_col)) \
-        .orderBy(order_col, id_col)
+    w = Window.partitionBy(_url_key()).orderBy("event_time", "doc_id")
     return (
         docs.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)

@@ -38,8 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _banded(docs: DataFrame, event_time_col: str, text_col: str,
-            num_hashes: int, bands: int, k: int) -> DataFrame:
+def _banded(docs: DataFrame, num_hashes: int, bands: int,
+            k: int) -> DataFrame:
     """Band buckets with the NULL-text exemption applied.
 
     Media-only documents (NULL text) all fold to the identical all-NULL
@@ -54,10 +54,9 @@ def _banded(docs: DataFrame, event_time_col: str, text_col: str,
     """
     from n8n_tools_api_spark.operators.dedup import minhash_banded
 
-    flagged = docs.withColumn("_nulltext", F.col(text_col).isNull())
-    banded = minhash_banded(flagged, text_col=text_col, num_hashes=num_hashes,
-                            bands=bands, k=k,
-                            keep_cols=(event_time_col, "_nulltext"))
+    flagged = docs.withColumn("_nulltext", F.col("text").isNull())
+    banded = minhash_banded(flagged, num_hashes=num_hashes, bands=bands, k=k,
+                            keep_cols=("event_time", "_nulltext"))
     salted = F.when(
         F.col("_nulltext"),
         F.xxhash64(F.concat(F.lit("__nulltext__:"), F.col("doc_id"))),
@@ -66,9 +65,7 @@ def _banded(docs: DataFrame, event_time_col: str, text_col: str,
 
 
 def neardup_prefilter_stream(docs: DataFrame,
-                             event_time_col: str = "event_time",
                              watermark: str = "10 minutes",
-                             text_col: str = "text",
                              num_hashes: int = 64, bands: int = 16,
                              k: int = 5,
                              assume_watermarked: bool = False) -> DataFrame:
@@ -86,24 +83,20 @@ def neardup_prefilter_stream(docs: DataFrame,
     this stage downstream of another stateful stage (curation_stream)
     must set the watermark once upstream and pass True here.
     """
-    banded = _banded(docs, event_time_col, text_col, num_hashes, bands, k)
+    banded = _banded(docs, num_hashes, bands, k)
     if not assume_watermarked:
-        banded = banded.withWatermark(event_time_col, watermark)
+        banded = banded.withWatermark("event_time", watermark)
     novel = banded.dropDuplicatesWithinWatermark(["band", "bucket"])
     return (
         novel.dropDuplicatesWithinWatermark(["doc_id"])
-        .select("doc_id", event_time_col)
+        .select("doc_id", "event_time")
     )
 
 
-def neardup_prefilter_batch_twin(docs: DataFrame,
-                                 order_col: str = "event_time",
-                                 text_col: str = "text",
-                                 num_hashes: int = 64, bands: int = 16,
-                                 k: int = 5,
-                                 id_col: str = "doc_id") -> DataFrame:
+def neardup_prefilter_batch_twin(docs: DataFrame, num_hashes: int = 64,
+                                 bands: int = 16, k: int = 5) -> DataFrame:
     """Deterministic batch companion: bucket first-claim in strict
-    (order_col, doc_id) order; a doc passes iff it claims ≥1 bucket.
+    (event_time, doc_id) order; a doc passes iff it claims ≥1 bucket.
     Agrees with the stream exactly when arrival order matches event
     time (same contract as dedup_batch_twin). Suppressed documents are
     absent from the output on both paths. ``novel_bands`` (how many
@@ -112,13 +105,12 @@ def neardup_prefilter_batch_twin(docs: DataFrame,
     """
     from pyspark.sql.window import Window
 
-    banded = _banded(
-        docs.select(F.col(id_col).alias("doc_id"), order_col, text_col),
-        order_col, text_col, num_hashes, bands, k)
-    w = Window.partitionBy("band", "bucket").orderBy(order_col, "doc_id")
+    banded = _banded(docs.select("doc_id", "event_time", "text"),
+                     num_hashes, bands, k)
+    w = Window.partitionBy("band", "bucket").orderBy("event_time", "doc_id")
     return (
         banded.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .groupBy("doc_id", order_col)
+        .groupBy("doc_id", "event_time")
         .agg(F.count("*").cast("int").alias("novel_bands"))
     )

@@ -729,6 +729,44 @@ class TestNearDupComponents:
                    for s in ("localCheckpoint(", ".checkpoint(", "eager=")))
         assert touching == ["operators/materialize.py"]
 
+    def test_column_names_are_a_contract(self):
+        # operators read the fixed schema by name; a defaulted column
+        # parameter stays only where callers pass different names
+        import ast
+        import inspect
+        import pathlib
+
+        from n8n_tools_api_spark.operators.textstats import dataset_card
+
+        pkg = pathlib.Path(__file__).resolve().parents[1] \
+            / "n8n_tools_api_spark"
+        found = set()
+        for p in pkg.rglob("*.py"):
+            for fn in ast.walk(ast.parse(p.read_text())):
+                if not isinstance(fn, (ast.FunctionDef,
+                                       ast.AsyncFunctionDef)):
+                    continue
+                a = fn.args
+                pos = a.posonlyargs + a.args
+                defaulted = pos[len(pos) - len(a.defaults):] + [
+                    k for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None]
+                found |= {(str(p.relative_to(pkg)), fn.name, k.arg)
+                          for k in defaulted
+                          if k.arg.endswith(("_col", "_cols"))}
+        assert found == {
+            ("operators/lm_ppx.py", "lm_perplexity", "group_col"),
+            ("operators/curation.py", "per_host_cap", "quality_col"),
+            ("operators/curation.py", "per_host_cap", "host_col"),
+            ("operators/packing.py", "token_pack", "count_col"),
+            ("operators/packing.py", "token_pack", "shard_col"),
+            ("operators/dedup.py", "shingle_hash_array", "keep_cols"),
+            ("operators/dedup.py", "minhash_signatures", "keep_cols"),
+            ("operators/dedup.py", "minhash_banded", "keep_cols"),
+            ("operators/extract.py", "salted_repartition", "partition_cols"),
+        }
+        assert "dims" not in inspect.signature(dataset_card).parameters
+
     def test_end_to_end_with_minhash(self, spark):
         from n8n_tools_api_spark.operators.dedup import duplicate_clusters
 

@@ -10,6 +10,8 @@ of partition 0.
 * The components loop: the fault fires under the pairs that feed
   ``near_dup_components`` on its distributed path, whose every round is
   a lazy lineage cut; the labels must hash like a fault-free loop's.
+  The same loop runs again in reliable mode (``checkpoint_dir``), where
+  every round is a parquet write-and-read cut, and must hash the same.
 
 It runs in a subprocess because the session master is fixed per JVM."""
 
@@ -77,6 +79,9 @@ out["loop_retried"] = run(lambda: near_dup_components(
     small_graph_max_edges=0), "loop_retried")
 out["loop_clean"] = run(lambda: near_dup_components(
     pairs, small_graph_max_edges=0), "loop_clean")
+out["loop_reliable"] = run(lambda: near_dup_components(
+    pairs.mapInPandas(fail_first_attempt, schema=pairs.schema),
+    checkpoint_dir=sys.argv[3], small_graph_max_edges=0), "loop_reliable")
 driver_rows = [
     (f"bdoc_{i:08d}",
      [(s["kind"], s["text"], s["media_ref"], s["offset"])
@@ -96,7 +101,8 @@ def retry_out(tmp_path_factory):
     job = tmp_path / "retry_job.py"
     job.write_text(JOB)
     proc = subprocess.run(
-        [sys.executable, str(job), str(REPO), str(tmp_path / "corpus")],
+        [sys.executable, str(job), str(REPO), str(tmp_path / "corpus"),
+         str(tmp_path / "rounds")],
         cwd=REPO, capture_output=True, text=True, timeout=900)
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
     assert proc.returncode == 0 and lines, proc.stderr[-3000:]
@@ -119,3 +125,10 @@ def test_retried_components_loop_hashes_like_a_clean_loop(retry_out):
     assert out["loop_clean"]["failed_tasks"] == 0
     assert out["loop_retried"]["rows"] == out["loop_clean"]["rows"] == 30
     assert out["loop_retried"]["digest"] == out["loop_clean"]["digest"]
+
+
+def test_retried_reliable_components_loop_hashes_like_a_clean_loop(retry_out):
+    out = retry_out
+    assert out["loop_reliable"]["failed_tasks"] >= 1  # the fault did fire
+    assert out["loop_reliable"]["rows"] == out["loop_clean"]["rows"] == 30
+    assert out["loop_reliable"]["digest"] == out["loop_clean"]["digest"]
