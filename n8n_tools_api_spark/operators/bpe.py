@@ -119,8 +119,7 @@ def _pair_counts(words: DataFrame) -> DataFrame:
             .agg(F.sum("freq").cast("bigint").alias("pair_count")))
 
 
-def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2,
-              checkpoint_dir: str | None = None) -> DataFrame:
+def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2) -> DataFrame:
     """Learn ``n_merges`` BPE merges over the corpus (module docstring
     pins the semantics). Returns the merge table as a DataFrame:
     (rank, left, right, merged, pair_count), rank 0-based in learning
@@ -132,7 +131,7 @@ def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2,
     from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
     spark = docs.sparkSession
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     words = mat(
         word_frequencies(docs).select(
             "freq", _initial_symbols(F.col("word")).alias("sym")),

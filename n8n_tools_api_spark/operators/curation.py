@@ -32,6 +32,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# The chains' fixed settings — the values their DuckDB replays
+# (plans/catalog.py) hard-code: 5-word shingles at Jaccard >= 0.5, the
+# web chain's 13-gram decontamination (the paper constant) and md5
+# sampling seed, and the classifier's decision at score_q16 >= 0. The
+# operators they feed keep their own parameters.
+NEAR_DUP_K = 5
+NEAR_DUP_THRESHOLD = 0.5
+DECONTAM_N = 13
+SAMPLE_SEED = 42
+CLASSIFIER_THRESHOLD_Q16 = 0
+
 
 def cleaned_documents(docs: DataFrame) -> DataFrame:
     """(doc_id, clean_text): run the real extraction stage over text
@@ -60,21 +71,11 @@ def cleaned_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def curation_keep_list(docs: DataFrame, use_lsh: bool = False,
-                       threshold: float = 0.5, k: int = 5,
-                       checkpoint_dir: str | None = None) -> DataFrame:
+def curation_keep_list(docs: DataFrame, use_lsh: bool = False) -> DataFrame:
     """Full curation flow over (doc_id string, text string) documents.
 
     Returns (doc_id, status, canonical) for EVERY input document,
     ordered by the caller. See module docstring for the two strategies.
-
-    ``checkpoint_dir`` makes every intermediate materialization
-    reliable (parquet on shared storage instead of executor-local
-    blocks — operators/materialize.py): the ranked frame, the LSH
-    banded frame, the capped shingle stream, and every components
-    round. Default localCheckpoint is right on local[k]; on a
-    1000-executor cluster a lost executor would otherwise kill the
-    multi-hour run mid-loop (round-3 verdict #2).
     """
     from n8n_tools_api_spark.operators.dedup import (
         minhash_lsh_candidates,
@@ -83,7 +84,7 @@ def curation_keep_list(docs: DataFrame, use_lsh: bool = False,
     )
     from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     cleaned = cleaned_documents(docs)
     w = Window.partitionBy("h").orderBy("doc_id")
     # materialize the ranked frame ONCE: the survivor branch feeds the
@@ -101,15 +102,14 @@ def curation_keep_list(docs: DataFrame, use_lsh: bool = False,
     survivors = ranked.where(F.col("rn") == 1).select(
         "doc_id", F.col("clean_text").alias("text"))
     cands = (
-        minhash_lsh_candidates(survivors, checkpoint_dir=checkpoint_dir)
+        minhash_lsh_candidates(survivors)
         .where(F.col("n_shared_bands") >= 2)
         .select("doc_a", "doc_b")
     ) if use_lsh else None
-    pairs = ngram_jaccard_pairs(survivors, k=k, threshold=threshold,
-                                candidate_pairs=cands,
-                                checkpoint_dir=checkpoint_dir)
-    comp = near_dup_components(pairs.select("doc_a", "doc_b"),
-                               checkpoint_dir=checkpoint_dir)
+    pairs = ngram_jaccard_pairs(survivors, k=NEAR_DUP_K,
+                                threshold=NEAR_DUP_THRESHOLD,
+                                candidate_pairs=cands)
+    comp = near_dup_components(pairs.select("doc_a", "doc_b"))
     surv_out = (
         survivors.join(comp, "doc_id", "left")
         .select(
@@ -130,9 +130,7 @@ def curation_keep_list(docs: DataFrame, use_lsh: bool = False,
     return surv_out.unionByName(exact_out)
 
 
-def curation_with_quality(docs: DataFrame, use_lsh: bool = False,
-                          threshold: float = 0.5, k: int = 5,
-                          checkpoint_dir: str | None = None) -> DataFrame:
+def curation_with_quality(docs: DataFrame, use_lsh: bool = False) -> DataFrame:
     """Quality-first curation: the Gopher repetition gates
     (operators/textstats.py::gopher_repetition, Rae et al. 2021 A1.1)
     run on the RAW text BEFORE the expensive extraction/dedup stages —
@@ -151,7 +149,7 @@ def curation_with_quality(docs: DataFrame, use_lsh: bool = False,
     from n8n_tools_api_spark.operators.materialize import RoundMaterializer
     from n8n_tools_api_spark.operators.textstats import gopher_repetition
 
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     gates = mat(gopher_repetition(docs).select("doc_id", "gopher_keep"),
                 "gates")
     # materialize the joined frame before splitting: passed and rejected
@@ -167,18 +165,12 @@ def curation_with_quality(docs: DataFrame, use_lsh: bool = False,
         F.lit("rejected_quality").alias("status"),
         F.lit(None).cast("string").alias("canonical"),
     )
-    return curation_keep_list(passed, use_lsh=use_lsh, threshold=threshold,
-                              k=k, checkpoint_dir=checkpoint_dir) \
-        .unionByName(rejected)
+    return curation_keep_list(passed, use_lsh=use_lsh).unionByName(rejected)
 
 
 def classifier_curation_keep_list(docs: DataFrame, positive: DataFrame,
                                   negative: DataFrame, *,
-                                  use_lsh: bool = False,
-                                  threshold: float = 0.5, k: int = 5,
-                                  threshold_q16: int = 0,
-                                  checkpoint_dir: str | None = None,
-                                  ) -> DataFrame:
+                                  use_lsh: bool = False) -> DataFrame:
     """Dedup-then-classify curation — the DCLM / FineWeb-Edu stage
     order: the full curation chain (extract-clean → exact dedup →
     near-dup components) runs FIRST, and the trained quality
@@ -207,20 +199,18 @@ def classifier_curation_keep_list(docs: DataFrame, positive: DataFrame,
     from n8n_tools_api_spark.operators.qualityclf import (
         quality_classifier_scores)
 
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     # the curation disposition feeds the kept-branch split AND the
     # pass-through union — cut it once or the whole dedup chain
     # (components loop included) executes per consumer
-    cur = mat(curation_keep_list(docs, use_lsh=use_lsh,
-                                 threshold=threshold, k=k,
-                                 checkpoint_dir=checkpoint_dir),
-              "classifier_cur")
+    cur = mat(curation_keep_list(docs, use_lsh=use_lsh), "classifier_cur")
     kept = cur.where(F.col("status") == "kept") \
         .select("doc_id", "canonical")
     kept_docs = kept.select("doc_id").join(
         docs.select("doc_id", "text"), "doc_id")
     scored = quality_classifier_scores(
-        kept_docs, positive, negative, threshold_q16=threshold_q16)
+        kept_docs, positive, negative,
+        threshold_q16=CLASSIFIER_THRESHOLD_Q16)
     kept_out = (
         kept.join(scored.select("doc_id", "score_q16", "decision"),
                   "doc_id")
@@ -239,9 +229,7 @@ def classifier_curation_keep_list(docs: DataFrame, positive: DataFrame,
     return kept_out.unionByName(others)
 
 
-def c4_curation_keep_list(docs: DataFrame, use_lsh: bool = False,
-                          threshold: float = 0.5, k: int = 5,
-                          checkpoint_dir: str | None = None) -> DataFrame:
+def c4_curation_keep_list(docs: DataFrame, use_lsh: bool = False) -> DataFrame:
     """C4-first curation — the full public-pipeline stage order
     (C4 / RefinedWeb: clean lines → quality-filter → dedup):
 
@@ -264,7 +252,7 @@ def c4_curation_keep_list(docs: DataFrame, use_lsh: bool = False,
     from n8n_tools_api_spark.operators.materialize import RoundMaterializer
     from n8n_tools_api_spark.operators.textstats import c4_line_filter
 
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     # materialized once: the rated frame feeds both the rejected branch
     # and the downstream quality/dedup chain
     rated = mat(c4_line_filter(docs).select("doc_id", "clean_text",
@@ -276,9 +264,7 @@ def c4_curation_keep_list(docs: DataFrame, use_lsh: bool = False,
     )
     passed = rated.where(F.col("c4_keep")).select(
         "doc_id", F.col("clean_text").alias("text"))
-    return curation_with_quality(passed, use_lsh=use_lsh,
-                                 threshold=threshold, k=k,
-                                 checkpoint_dir=checkpoint_dir) \
+    return curation_with_quality(passed, use_lsh=use_lsh) \
         .unionByName(rejected)
 
 
@@ -435,10 +421,7 @@ def url_blocklist_filter(docs: DataFrame, blocked_domains: DataFrame,
 def web_curation_keep_list(docs: DataFrame, blocked_domains: DataFrame,
                            blocked_terms: list[str], bench: DataFrame,
                            host_cap: int = 1000, sample_rate: float = 1.0,
-                           sample_seed: int = 42, use_lsh: bool = False,
-                           threshold: float = 0.5, k: int = 5,
-                           n_gram: int = 13,
-                           checkpoint_dir: str | None = None) -> DataFrame:
+                           use_lsh: bool = False) -> DataFrame:
     """The COMPLETE public web-curation pipeline in canon stage order —
     what C4/RefinedWeb/FineWeb actually run end-to-end, one disposition
     per input page::
@@ -474,8 +457,7 @@ def web_curation_keep_list(docs: DataFrame, blocked_domains: DataFrame,
     decontam input), always keyed by doc_id with a slim other side —
     broadcast when it fits, AQE otherwise. Every multiply-consumed
     frame is cut via RoundMaterializer so no upstream stage executes
-    twice; ``checkpoint_dir`` upgrades all of them to cluster-reliable
-    parquet rounds.
+    twice.
     """
     from n8n_tools_api_spark.operators.decontaminate import (
         ngram_decontaminate,
@@ -491,7 +473,7 @@ def web_curation_keep_list(docs: DataFrame, blocked_domains: DataFrame,
             "doc_id", F.lit(status).alias("status"),
             F.lit(None).cast("string").alias("canonical"))
 
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     urlstat = mat(url_blocklist_filter(
         docs.select("doc_id", "url"), blocked_domains, blocked_terms)
         .select("doc_id", "host", "status"), "urlstat")
@@ -506,9 +488,7 @@ def web_curation_keep_list(docs: DataFrame, blocked_domains: DataFrame,
 
     passed = rated.where(F.col("c4_keep")).select(
         "doc_id", F.col("clean_text").alias("text"))
-    cur = mat(curation_with_quality(passed, use_lsh=use_lsh,
-                                    threshold=threshold, k=k,
-                                    checkpoint_dir=checkpoint_dir), "cur")
+    cur = mat(curation_with_quality(passed, use_lsh=use_lsh), "cur")
     dup_or_rejected = cur.where(F.col("status") != "kept")
 
     hostkept = cur.where(F.col("status") == "kept").select("doc_id").join(
@@ -523,11 +503,12 @@ def web_curation_keep_list(docs: DataFrame, blocked_domains: DataFrame,
 
     capped_text = capped.select("doc_id").join(
         rated.select("doc_id", F.col("clean_text").alias("text")), "doc_id")
-    dec = mat(ngram_decontaminate(capped_text, bench, n=n_gram), "decontam")
+    dec = mat(ngram_decontaminate(capped_text, bench, n=DECONTAM_N),
+              "decontam")
     contaminated = _status(dec.where(F.col("contaminated")), "contaminated")
 
     survivors_final = dec.where(~F.col("contaminated")).select("doc_id")
-    keep = sample_key(F.col("doc_id"), sample_seed) < \
+    keep = sample_key(F.col("doc_id"), SAMPLE_SEED) < \
         F.lit(sample_threshold_hex(sample_rate))
     kept = survivors_final.where(keep).select(
         "doc_id", F.lit("kept").alias("status"),
@@ -650,8 +631,7 @@ def url_dedup(docs: DataFrame) -> DataFrame:
              "group_size")
 
 
-def web_dedup_keep_list(docs: DataFrame, min_doc_freq: int = 2,
-                        checkpoint_dir: str | None = None) -> DataFrame:
+def web_dedup_keep_list(docs: DataFrame, min_doc_freq: int = 2) -> DataFrame:
     """The dedup LADDER of the public web-curation canon composed in
     its published stage order — cheapest gate first, each stage seeing
     only the previous stage's survivors (RefinedWeb §3.2 runs exactly
@@ -688,17 +668,16 @@ def web_dedup_keep_list(docs: DataFrame, min_doc_freq: int = 2,
     (doc_id, md5) pairs.  Full text never rides a key-keyed shuffle
     in any stage.
 
-    Both multiply-consumed frames are cut (lazily in local mode;
-    parquet rounds under ``checkpoint_dir`` on a cluster): the
-    url_dedup window feeds the url_dup branch AND the survivors join,
-    and strip_repeated_lines feeds line_dedup AND the counters join —
-    without the cut each consumer re-executes the upstream stage.
+    Both multiply-consumed frames are cut: the url_dedup window feeds
+    the url_dup branch AND the survivors join, and strip_repeated_lines
+    feeds line_dedup AND the counters join — without the cut each
+    consumer re-executes the upstream stage.
     """
     from n8n_tools_api_spark.operators.dedup import (
         line_dedup, strip_repeated_lines)
     from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     u = mat(url_dedup(docs.select("doc_id", "url")), "url_dedup")
     url_dups = u.where(F.col("status") == "url_dup").select(
         "doc_id", F.lit("url_dup").alias("status"),

@@ -167,8 +167,7 @@ def minhash_banded(df: DataFrame, num_hashes: int = 64, bands: int = 16,
 
 
 def minhash_lsh_candidates(df: DataFrame, num_hashes: int = 64,
-                           bands: int = 16, k: int = 5,
-                           checkpoint_dir: str | None = None) -> DataFrame:
+                           bands: int = 16, k: int = 5) -> DataFrame:
     """LSH candidate pairs: (doc_a, doc_b, n_shared_bands).
 
     Signature → ``bands`` band-hashes (xxhash64 over each signature
@@ -178,13 +177,9 @@ def minhash_lsh_candidates(df: DataFrame, num_hashes: int = 64,
 
     The banded frame feeds both sides of the self-join, so it is cut
     once: uncut, the shingle→signature pipeline (the expensive part)
-    runs once per join side, ~2× the query. ``checkpoint_dir`` only
-    picks where the cut lives — a reliable parquet round-trip
-    (operators/materialize.py) instead of executor-storage blocks, so
-    executor loss can't kill a long run between the signature stage
-    and the bucket join.
+    runs once per join side, ~2× the query.
     """
-    banded = RoundMaterializer(checkpoint_dir)(
+    banded = RoundMaterializer()(
         minhash_banded(df, num_hashes, bands, k), "banded")
     return (
         banded.alias("l").join(banded.alias("r"), ["band", "bucket"])
@@ -195,8 +190,7 @@ def minhash_lsh_candidates(df: DataFrame, num_hashes: int = 64,
 
 
 def ngram_jaccard_pairs(df: DataFrame, k: int = 5, threshold: float = 0.5,
-                        candidate_pairs: DataFrame | None = None,
-                        checkpoint_dir: str | None = None) -> DataFrame:
+                        candidate_pairs: DataFrame | None = None) -> DataFrame:
     """Exact n-gram Jaccard similarity.
 
     Distinct-shingle self-join: |A∩B| from the shingle equi-join,
@@ -230,9 +224,7 @@ def ngram_jaccard_pairs(df: DataFrame, k: int = 5, threshold: float = 0.5,
     explode and the anti/semi joins. Only that small stream is cut:
     cutting the full pre-cap stream as well measured WORSE 8-core wall
     at 2M docs (the ~133M-row executor store's GC/eviction pressure,
-    BENCH round 5). ``checkpoint_dir`` only picks where the cut lives
-    (a reliable parquet round-trip, operators/materialize.py, for
-    cluster runs).
+    BENCH round 5).
     """
     safe = df.withColumn("text", F.coalesce(F.col("text"), F.lit("")))
     sh = shingle_hash_array(safe, k).select(
@@ -262,7 +254,7 @@ def ngram_jaccard_pairs(df: DataFrame, k: int = 5, threshold: float = 0.5,
             .distinct()
         )
         sh = sh.join(cand_docs, "doc_id", "left_semi")
-    sh = RoundMaterializer(checkpoint_dir)(sh, "capped_shingles")
+    sh = RoundMaterializer()(sh, "capped_shingles")
 
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     pair_stream = (
@@ -347,8 +339,7 @@ def _hamming_filter(pairs: DataFrame, max_distance: int) -> DataFrame:
     )
 
 
-def simhash_hamming_pairs(df: DataFrame, max_distance: int = 3,
-                          checkpoint_dir: str | None = None) -> DataFrame:
+def simhash_hamming_pairs(df: DataFrame, max_distance: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_distance.
 
     Blocking is the Manku/Jain/Das Sarma construction (WWW'07, the
@@ -375,8 +366,7 @@ def simhash_hamming_pairs(df: DataFrame, max_distance: int = 3,
     The keyed frame feeds both sides of the self-join, so it is cut
     once: uncut, the token explode + 64 bit-vote aggregation (the
     expensive stage) runs once per side, measured ~2× the whole query
-    at sf1.0. ``checkpoint_dir`` only picks where the cut lives
-    (operators/materialize.py).
+    at sf1.0.
     """
     n_blocks = max_distance + 3
     combos = list(_combinations(range(n_blocks), 3))
@@ -399,7 +389,7 @@ def simhash_hamming_pairs(df: DataFrame, max_distance: int = 3,
         "doc_id", "simhash",
         F.explode(F.array(*keys)).alias("c"),
     ).select("doc_id", "simhash", "c.combo_idx", "c.key_val")
-    keyed = RoundMaterializer(checkpoint_dir)(keyed, "simhash_keyed")
+    keyed = RoundMaterializer()(keyed, "simhash_keyed")
     pairs = (
         keyed.alias("a").join(keyed.alias("b"), ["combo_idx", "key_val"])
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -549,7 +539,6 @@ def _components_driver_side(edges: DataFrame, pairs: DataFrame) -> DataFrame:
 
 
 def near_dup_components(pairs: DataFrame, max_iters: int = 20,
-                        checkpoint_dir: str | None = None,
                         small_graph_max_edges: int = 200_000) -> DataFrame:
     """Connected components over near-dup pairs → duplicate clusters.
 
@@ -570,12 +559,8 @@ def near_dup_components(pairs: DataFrame, max_iters: int = 20,
     old shape paid an eager-checkpoint job PLUS a join-based
     ``limit(1).count()`` job per round).
 
-    ``checkpoint_dir`` selects reliable materialization (parquet
-    round-trip per round via RoundMaterializer): localCheckpoint blocks
-    die with their executor, which would kill a multi-hour 100-TB
-    curation run mid-loop; with a shared-storage dir a lost executor
-    just re-reads (round-3 verdict #2). Superseded rounds are deleted
-    as the loop advances.
+    In reliable mode (operators/materialize.py) superseded rounds are
+    deleted as the loop advances.
 
     Input: (doc_a, doc_b) pairs. Output: (doc_id, component) where
     component is the lexicographically-smallest member — the canonical
@@ -594,7 +579,7 @@ def near_dup_components(pairs: DataFrame, max_iters: int = 20,
     code-point order), so both paths are value-identical — pinned by
     test.
     """
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     edges = mat(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"),

@@ -79,8 +79,8 @@ def hashed_gram_buckets(words, bucket_hexlen: int = 3):
 
 def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
                     target_filter=None,
-                    bucket_hexlen: int = 3, scale: int = 1_000_000,
-                    checkpoint_dir: str | None = None) -> DataFrame:
+                    bucket_hexlen: int = 3, scale: int = 1_000_000
+                    ) -> DataFrame:
     """Per-document target-domain importance score.
 
     Output: (doc_id, n_grams, score) — one row per input document;
@@ -113,7 +113,7 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
         raise ValueError("pass exactly one of target / target_filter")
     from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     tgt_cols = [target_filter.alias("_tgt")] if target_filter is not None \
         else []
 

@@ -95,8 +95,7 @@ def extract_host_edges(pages: DataFrame) -> DataFrame:
 
 
 def host_link_stats(pages: DataFrame, iterations: int = 2,
-                    scale: int = 10 ** 12,
-                    checkpoint_dir: str | None = None) -> DataFrame:
+                    scale: int = 10 ** 12) -> DataFrame:
     """Per-host degrees + integer PageRank after ``iterations`` rounds.
 
     Output: (host, out_deg, in_deg, pr) — ``pr`` on the ``scale``
@@ -106,15 +105,13 @@ def host_link_stats(pages: DataFrame, iterations: int = 2,
 
     The edge set and each round's ranks are cut from the lineage via
     RoundMaterializer, the same convention as the components loop:
-    default = LAZY ``localCheckpoint`` (first action materializes the
-    distinct edges ONCE; nodes, both degree frames, and every rank
-    round then share the blocks instead of re-running the page scan
-    per reference), ``checkpoint_dir`` = reliable parquet rounds that
-    survive executor loss on a multi-hour web-graph run.
+    the first action materializes the distinct edges ONCE; nodes, both
+    degree frames, and every rank round then share the cut instead of
+    re-running the page scan per reference.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     edges = mat(extract_host_edges(pages), "edges")
     nodes = (edges.select(F.col("src_host").alias("host"))
              .unionByName(edges.select(F.col("dst_host").alias("host")))

@@ -112,8 +112,8 @@ def surprisal_q16(num: str, den: str) -> Column:
 
 
 def lm_perplexity(docs: DataFrame, train_filter: Column, *,
-                  bucket_hexlen: int = 3, group_col: str = "lang",
-                  checkpoint_dir: str | None = None) -> DataFrame:
+                  bucket_hexlen: int = 3, group_col: str = "lang"
+                  ) -> DataFrame:
     """Per-document mean bigram surprisal against a per-group hashed
     LM trained on the rows where ``train_filter`` holds.
 
@@ -128,7 +128,7 @@ def lm_perplexity(docs: DataFrame, train_filter: Column, *,
     from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
     v = 16 ** bucket_hexlen
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     # the bucket array is bound in its own projection before the bigram
     # lambdas read it, like a word array (functions/text.py)
     with_bks = docs.select(
@@ -249,8 +249,8 @@ def _detect_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def ccnet_keep_list(docs: DataFrame, *,
                     train_seed: int = 271828, train_rate: float = 0.3,
-                    tail_seed: int = 314159, tail_rate: float = 0.1,
-                    checkpoint_dir: str | None = None) -> DataFrame:
+                    tail_seed: int = 314159, tail_rate: float = 0.1
+                    ) -> DataFrame:
     """The composed CCNet pipeline in the paper's stage order (Wenzek
     et al. 2020 §3): language ID → per-detected-language LM perplexity
     → head/middle/tail split → disposition.  The reference's A6
@@ -284,7 +284,7 @@ def ccnet_keep_list(docs: DataFrame, *,
     from n8n_tools_api_spark.operators.sampling import (
         sample_key, sample_threshold_hex)
 
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     detected = mat(
         docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
         .mapInPandas(_detect_batches, schema=_DETECT_SCHEMA),
@@ -293,9 +293,7 @@ def ccnet_keep_list(docs: DataFrame, *,
     known = detected.where(F.col("detected") != "unknown")
     train = sample_key(F.col("doc_id"), train_seed) \
         < F.lit(sample_threshold_hex(train_rate))
-    scored = ccnet_buckets(lm_perplexity(
-        known, train, group_col="detected",
-        checkpoint_dir=checkpoint_dir))
+    scored = ccnet_buckets(lm_perplexity(known, train, group_col="detected"))
     kept = scored.select(
         "doc_id",
         F.col("grp").alias("detected"),

@@ -6,9 +6,12 @@ replay the whole chain, and a frame read by two consumers (a self-join,
 two union branches) must be cut or its upstream runs once per consumer.
 Every such cut in the engine goes through ``RoundMaterializer``; callers
 never call ``localCheckpoint``/``checkpoint`` themselves and never pick
-when the cut runs. One rule, two modes:
+when or where the cut runs. Where is a deployment setting, read here and
+nowhere else: Spark's own reliable-checkpoint dir, ``spark.checkpoint.dir``
+(``--conf`` at submit time) or ``SparkContext.setCheckpointDir``. One
+rule, two modes:
 
-* **local** (default, ``checkpoint_dir=None``): every cut is a LAZY
+* **local** (no checkpoint dir, the default): every cut is a LAZY
   ``localCheckpoint`` — blocks live in executor storage and are written
   by the first action that reads the frame. Two facts, measured on
   ``local[4]`` (Spark 4.1), make lazy enough everywhere:
@@ -26,15 +29,24 @@ when the cut runs. One rule, two modes:
   fault-tolerant: localCheckpoint truncates lineage, so on a real
   cluster a lost executor makes the blocks unrecoverable and kills the
   job mid-loop.
-* **reliable** (``checkpoint_dir="hdfs://…"`` / any Hadoop-visible
-  path): each cut is written to ``<dir>/<app>/<ns>/<tag>`` as parquet
-  and read back. It is eager by nature: the write IS the cut, and a
-  lost executor re-reads from shared storage instead of killing a
-  multi-hour run. Rounds no longer needed are deleted via the Hadoop
-  FileSystem API, so s3a/hdfs/local paths all behave. Chosen over
-  ``df.checkpoint()`` because PySpark's reliable RDD checkpoint
-  recomputes the plan a second time when the internal RDD isn't
-  persisted, and parquet files are inspectable/resumable artifacts.
+* **reliable** (checkpoint dir set, e.g. ``hdfs://…`` or any
+  Hadoop-visible path): each cut is written to
+  ``<getCheckpointDir()>/<namespace>/<tag>`` as parquet and read back.
+  It is eager by nature: the write IS the cut, and a lost executor
+  re-reads from shared storage instead of killing a multi-hour run.
+  Rounds no longer needed are deleted via the Hadoop FileSystem API,
+  so s3a/hdfs/local paths all behave. Chosen over ``df.checkpoint()``
+  because PySpark's reliable RDD checkpoint recomputes the plan a
+  second time when the internal RDD isn't persisted, and parquet files
+  are inspectable/resumable artifacts.
+
+Path levels: ``setCheckpointDir(d)`` itself creates a fresh
+``<d>/<uuid>`` per SparkContext, so two driver processes sharing one
+root already land in disjoint subtrees and the path needs no
+applicationId level of its own. Within one process each
+``RoundMaterializer`` takes its own namespace from a process-wide
+counter, so a run that reuses a tag never overwrites files that a frame
+returned by an earlier run still reads.
 """
 
 from __future__ import annotations
@@ -45,34 +57,18 @@ from pyspark.sql import DataFrame
 class RoundMaterializer:
     """Materialize per-round DataFrames; see module docstring."""
 
-    # process-wide monotonic namespace counter: two materializers
-    # sharing one checkpoint_dir (e.g. periodic reruns of the same
-    # pipeline) must never clobber each other's files — a lazily
-    # returned frame from run k still references them when run k+1
-    # starts (review finding). The counter alone only protects within
-    # one driver process (it resets to m0001 in a fresh process), so the
-    # Spark applicationId — unique per driver application, assigned by
-    # Spark itself — is folded into the path at first write (advice
-    # finding): overlapping periodic runs from separate processes land
-    # in disjoint subtrees of the same checkpoint_dir.
-    _seq = 0
+    _seq = 0  # the process-wide namespace counter (module docstring)
 
-    def __init__(self, checkpoint_dir: str | None = None,
-                 namespace: str | None = None):
-        self.checkpoint_dir = checkpoint_dir
-        if checkpoint_dir is not None and namespace is None:
-            RoundMaterializer._seq += 1
-            namespace = f"m{RoundMaterializer._seq:04d}"
-        self.namespace = namespace
-        self._app_prefix: str | None = None
+    def __init__(self):
+        RoundMaterializer._seq += 1
+        self.namespace = f"m{RoundMaterializer._seq:04d}"
         self._paths: dict[str, str] = {}
 
     def __call__(self, df: DataFrame, tag: str) -> DataFrame:
-        if self.checkpoint_dir is None:
+        root = df.sparkSession.sparkContext.getCheckpointDir()
+        if root is None:
             return df.localCheckpoint(eager=False)
-        if self._app_prefix is None:
-            self._app_prefix = df.sparkSession.sparkContext.applicationId
-        path = f"{self.checkpoint_dir}/{self._app_prefix}/{self.namespace}/{tag}"
+        path = f"{root}/{self.namespace}/{tag}"
         df.write.mode("overwrite").parquet(path)
         self._paths[tag] = path
         return df.sparkSession.read.parquet(path)

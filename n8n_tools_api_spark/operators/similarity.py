@@ -125,8 +125,8 @@ def assign_to_centroids(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2,
-                  checkpoint_dir: str | None = None) -> DataFrame:
+def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2
+                  ) -> DataFrame:
     """Lloyd refinement of the IVF coarse quantizer.
 
     Starting from the deterministic seed centroids (ivf_assign), each
@@ -135,16 +135,10 @@ def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2,
     posexplode(dim, value) → groupBy(cluster, dim) → avg → re-assemble
     sorted by dim — no UDF, shuffles bounded by nlist x dim rows.
     Returns the refined (cluster_id, centroid) set.
-
-    ``checkpoint_dir`` switches the per-round lineage cut from
-    localCheckpoint (executor storage — fast, dies with a lost
-    executor) to a parquet round-trip on shared storage, so a 10^9-
-    vector refinement survives executor loss (round-3 verdict #2; see
-    operators/materialize.py).
     """
     from .materialize import RoundMaterializer
 
-    mat = RoundMaterializer(checkpoint_dir)
+    mat = RoundMaterializer()
     centroids, assigned = ivf_assign(emb, nlist)
     # each Lloyd iteration nests an assignment-over-emb into the
     # lineage; cut per round so downstream actions don't replay the
@@ -285,8 +279,7 @@ def ivf_topk(emb: DataFrame, query_vec_id: int, k: int = 10, nlist: int = 16,
 
 
 def semdedup_keep_list(emb: DataFrame, threshold: float = 0.95,
-                       nlist: int = 16, iters: int = 1,
-                       checkpoint_dir: str | None = None) -> DataFrame:
+                       nlist: int = 16, iters: int = 1) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): cluster the
     embedding space with k-means, then deduplicate ONLY within each
@@ -326,8 +319,8 @@ def semdedup_keep_list(emb: DataFrame, threshold: float = 0.95,
 
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    mat = RoundMaterializer(checkpoint_dir)
-    centroids = kmeans_refine(emb, nlist, iters, checkpoint_dir)
+    mat = RoundMaterializer()
+    centroids = kmeans_refine(emb, nlist, iters)
     assigned = assign_to_centroids(emb, centroids)
     # per-vector norm computed ONCE here: the quadratic stage below then
     # pays one dot product per pair instead of three (cosine(a,b) =
@@ -421,8 +414,7 @@ def semdedup_keep_list(emb: DataFrame, threshold: float = 0.95,
                 / (F.col("_na") * F.col("_nb"))) >= threshold)
         .select("doc_a", "doc_b"),
         "semdedup_pairs")
-    comp = near_dup_components(pairs, checkpoint_dir=checkpoint_dir) \
-        .withColumnRenamed("doc_id", "vec_id")
+    comp = near_dup_components(pairs).withColumnRenamed("doc_id", "vec_id")
     ranked = (scored.drop("_v", "_n").join(comp, "vec_id", "left"))
     pick = Window.partitionBy("component").orderBy(
         F.asc("centroid_sim"), F.asc("vec_id"))

@@ -4354,8 +4354,7 @@ def _web_pipeline(spark, sf_dir, use_lsh=False):
         .alias("domain"))
     return web_curation_keep_list(
         corpus, domains, ["casino"], bench,
-        host_cap=5, sample_rate=0.5, sample_seed=42,
-        use_lsh=use_lsh).orderBy("doc_id")
+        host_cap=5, sample_rate=0.5, use_lsh=use_lsh).orderBy("doc_id")
 
 
 def web_curation_keep_list_q(spark, sf_dir):

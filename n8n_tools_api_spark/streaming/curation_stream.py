@@ -95,16 +95,13 @@ def curation_stream_batch_twin(docs: DataFrame, num_hashes: int = 64,
     )
 
 
-def periodic_components_keep_list(admitted_docs: DataFrame,
-                                  checkpoint_dir: str | None = None) -> DataFrame:
+def periodic_components_keep_list(admitted_docs: DataFrame) -> DataFrame:
     """The periodic batch stage over the admitted bronze table:
     the oracle-checked composed curation flow (LSH candidates → exact
     Jaccard → connected components) yielding (doc_id, status,
     canonical). Run it on whatever cadence the lateness/compaction
-    policy dictates; ``checkpoint_dir`` selects the fault-tolerant
-    materialization mode for long runs (operators/materialize.py).
+    policy dictates.
     """
     from n8n_tools_api_spark.operators.curation import curation_keep_list
 
-    return curation_keep_list(admitted_docs, use_lsh=True,
-                              checkpoint_dir=checkpoint_dir)
+    return curation_keep_list(admitted_docs, use_lsh=True)

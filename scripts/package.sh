@@ -9,7 +9,12 @@
 #     --conf spark.sql.adaptive.enabled=true \
 #     --conf spark.sql.adaptive.skewJoin.enabled=true \
 #     --conf spark.sql.execution.arrow.maxRecordsPerBatch=512 \
+#     --conf spark.checkpoint.dir=hdfs://namenode/checkpoints \
 #     your_job.py
+#
+# spark.checkpoint.dir makes every lineage cut a reliable parquet cut on
+# shared storage (operators/materialize.py), so a lost executor cannot
+# kill a long iterative run; without it cuts stay executor-local.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 OUT="${1:-dist/n8n_tools_api_spark.zip}"

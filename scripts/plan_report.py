@@ -203,10 +203,12 @@ def main() -> None:
         "Default = `localCheckpoint`: blocks live in",
         "EXECUTOR storage, so on a real cluster one lost executor makes",
         "them unrecoverable and kills the job mid-loop — acceptable on",
-        "local[k], not for a multi-hour 100-TB run. Passing",
-        "`checkpoint_dir=` (any Hadoop-visible shared path) switches",
-        "every round to a parquet round-trip via",
-        "`operators/materialize.py::RoundMaterializer`; a lost executor",
+        "local[k], not for a multi-hour 100-TB run. Setting Spark's",
+        "own checkpoint dir (`--conf spark.checkpoint.dir=<shared path>`",
+        "or `SparkContext.setCheckpointDir`, any Hadoop-visible path)",
+        "switches every cut to a parquet round-trip via",
+        "`operators/materialize.py::RoundMaterializer`, the one place",
+        "that reads it; a lost executor",
         "re-reads from shared storage, and superseded rounds are deleted",
         "as the loop advances (Hadoop FileSystem API, so s3a/hdfs behave",
         "like local). Chosen over `df.checkpoint()` because PySpark's",
@@ -259,7 +261,7 @@ def main() -> None:
             "`tests/test_sampling.py::TestDistributedPrefixSum`)."),
         "host_link_stats": (
             "Rank rounds are cut (lazy localCheckpoint / reliable "
-            "parquet via checkpoint_dir) so the reported plan is the "
+            "parquet under spark.checkpoint.dir) so the reported plan is the "
             "FINAL round only — earlier rounds no longer nest "
             "(25 exchanges before the cut, 5 after)."),
         "web_dedup_keep_list": (

@@ -9,13 +9,19 @@ image-count-bucket salt to the partition key.
 
 This script builds a corpus where ALL heavy docs share one source key,
 then times extraction under (a) the adversarial source layout and
-(b) the salted layout, appending the measured A/B to PLANS.md.
+(b) the salted layout — interleaved pairs, alternating which layout
+runs first, each side best of three — and regenerates BENCH/SKEW.md.
+
+    python scripts/skew_report.py   # from the repo root; local[<all cores>],
+                                    # ~30 min on 4 cores
 """
 
 from __future__ import annotations
 
 import os
+import statistics
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -27,13 +33,16 @@ from n8n_tools_api_spark.operators import extract_spans, salted_repartition  # n
 from n8n_tools_api_spark.session import get_spark  # noqa: E402
 from n8n_tools_api_spark.sources import bench_corpus  # noqa: E402
 
+WORK = os.path.join(tempfile.gettempdir(), "spark_graft_bench")
 N_DOCS = 60_000
 PARTS = 32
 REPEATS = 3
+PAIRS = 5
 
 
 def main() -> None:
-    spark = get_spark(master="local[32]", shuffle_partitions=PARTS)
+    cpus = os.cpu_count()
+    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=PARTS)
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 << 20))
 
@@ -69,7 +78,7 @@ def main() -> None:
 
     schema = ("doc_id string, spans array<struct<kind:string,text:string,"
               "media_ref:string,offset:int>>")
-    inflated_path = "/tmp/spark_graft_bench/skew_corpus"
+    inflated_path = f"{WORK}/skew_corpus"
     if not os.path.exists(f"{inflated_path}/_SUCCESS"):
         corpus.mapInPandas(inflate, schema=schema).write.mode("overwrite") \
             .parquet(inflated_path)
@@ -89,41 +98,56 @@ def main() -> None:
         for _ in range(REPEATS):
             t0 = time.perf_counter()
             extract_spans(df.select("doc_id", "spans")).write.mode("overwrite") \
-                .parquet("/tmp/spark_graft_bench/skew_out")
+                .parquet(f"{WORK}/skew_out")
             sec = time.perf_counter() - t0
             best = sec if best is None else min(best, sec)
         return best
 
     clustered = tagged.repartition(PARTS, "source")
-    t_clustered = timed(clustered)
-
     # same coarse key kept in the partitioning — salt breaks the cluster
     salted = salted_repartition(tagged, PARTS, partition_cols=("source",))
-    t_salted = timed(salted)
+    clu, sal = [], []
+    for i in range(PAIRS):
+        order = [("clustered", clustered), ("salted", salted)]
+        if i % 2:
+            order.reverse()
+        t = {name: timed(df) for name, df in order}
+        clu.append(t["clustered"])
+        sal.append(t["salted"])
+        print(f"pair {i + 1}: clustered={clu[-1]:.2f}s salted={sal[-1]:.2f}s",
+              flush=True)
+    spark.stop()
 
-    speedup = t_clustered / t_salted
-    block = f"""
-## Skew handling A/B (generated by scripts/skew_report.py)
+    q1, _, q3 = statistics.quantiles(clu, n=4)
+    med_c, med_s = statistics.median(clu), statistics.median(sal)
+    wins = sum(c - s > q3 - q1 for c, s in zip(clu, sal))
+    rows = "\n".join(
+        f"| {i + 1} | {'clustered' if i % 2 == 0 else 'salted'} "
+        f"| {c:.2f} | {s:.2f} | {c / s:.2f}x |"
+        for i, (c, s) in enumerate(zip(clu, sal)))
+    with open(f"{REPO}/BENCH/SKEW.md", "w") as f:
+        f.write(f"""# Skew handling A/B (generated by scripts/skew_report.py)
 
 Corpus: {N_DOCS} docs, 5% media-heavy (30-50 image spans inflated to
-~8KB payloads — production-shaped decode+hash cost, roughly an order
-of magnitude over a text doc), ALL heavy docs sharing one upstream
-source key. {PARTS} partitions, local[32], best of {REPEATS}.
+~8KB base64 payloads — production-shaped decode+hash cost, roughly an
+order of magnitude over a text doc), ALL heavy docs sharing one
+upstream source key. Extraction to parquet over {PARTS} partitions,
+local[{cpus}], {PAIRS} interleaved pairs (the side named first ran
+first), each side best of {REPEATS}.
 
-| layout | wall (s) | docs/sec |
-|---|---|---|
-| partitioned by upstream source (heavy docs clustered) | {t_clustered:.2f} | {N_DOCS / t_clustered:.0f} |
-| `salted_repartition` (image-count-bucket salt) | {t_salted:.2f} | {N_DOCS / t_salted:.0f} |
+| pair | first | clustered by source (s) | `salted_repartition` (s) | speedup |
+|---|---|---|---|---|
+{rows}
 
-**Speedup from salting: {speedup:.2f}x** — the clustered layout runs at
-the speed of the tail task holding the heavy source; salting spreads
-the heavy docs across {PARTS} tasks. At 10^12 docs the same mechanism
-applies to ingest-batch and host-prefix clustering.
-"""
-    with open(f"{REPO}/PLANS.md", "a") as f:
-        f.write(block)
-    print(f"clustered={t_clustered:.2f}s salted={t_salted:.2f}s speedup={speedup:.2f}x")
-    spark.stop()
+Median clustered {med_c:.2f} s (IQR {q1:.2f}–{q3:.2f}), median salted
+{med_s:.2f} s: **{med_c / med_s:.2f}x**. Salted beat clustered by more
+than the clustered IQR in {wins} of {PAIRS} pairs. The clustered layout
+runs at the speed of the tail task holding the heavy source; salting
+spreads the heavy docs across up to {PARTS} tasks. At 10^12 docs the
+same mechanism applies to ingest-batch and host-prefix clustering.
+""")
+    print(f"clustered={med_c:.2f}s salted={med_s:.2f}s "
+          f"speedup={med_c / med_s:.2f}x wins={wins}/{PAIRS}")
 
 
 if __name__ == "__main__":

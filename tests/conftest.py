@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -24,3 +25,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def reliable_cuts(spark, tmp_path):
+    """``with reliable_cuts() as ck:`` runs its body with Spark's
+    checkpoint dir set under ``tmp_path``, so every lineage cut is a
+    reliable parquet cut (operators/materialize.py); ``ck`` is the
+    local path of ``getCheckpointDir()``. The dir is cleared on exit."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def reliable():
+        sc.setCheckpointDir(str(tmp_path))
+        try:
+            yield sc.getCheckpointDir().removeprefix("file:")
+        finally:
+            sc.setCheckpointDir(None)
+
+    return reliable

@@ -104,15 +104,17 @@ class TestBpeLearn:
         b = bpe_learn(df.repartition(13), 6).orderBy("rank").collect()
         assert list(map(tuple, a)) == list(map(tuple, b))
 
-    def test_reliable_mode_skips_final_round_write(self, spark, tmp_path):
+    def test_reliable_mode_skips_final_round_write(self, spark,
+                                                   reliable_cuts):
         # reliable mode writes each consumed round as parquet; the final
         # merge's words are never read, so that round is never written
         texts = [f"alpha beta{i % 7} gamma gamma aaaa aa" for i in range(30)]
         n = 5
-        got = _learn(spark, texts, n, checkpoint_dir=str(tmp_path))
+        with reliable_cuts() as ck:
+            got = _learn(spark, texts, n)
         assert len(got) == n
         assert got == _learn(spark, texts, n) == _py_bpe(texts, n)
-        written = {d for _, dirs, _ in os.walk(tmp_path) for d in dirs}
+        written = {d for _, dirs, _ in os.walk(ck) for d in dirs}
         assert f"bpe_round{n - 1}" in written  # the last consumed round
         assert f"bpe_round{n}" not in written
 

@@ -154,30 +154,29 @@ class TestCurationKeepList:
         assert out["d_rep"] == ("rejected_quality", None)
         assert len(out) == 4
 
-    def test_reliable_checkpoint_path_matches_local(self, spark, corpus,
-                                                    exact_rows, tmp_path):
-        """round-3 verdict #2: with checkpoint_dir set, every
+    def test_reliable_checkpoint_path_matches_local(self, corpus,
+                                                    reliable_cuts):
+        """With Spark's checkpoint dir set, every
         intermediate (ranked frame, banded LSH, components rounds)
         round-trips through parquet — output must be identical."""
-        got = {r["doc_id"]: (r["status"], r["canonical"])
-               for r in curation_keep_list(
-                   corpus, use_lsh=True,
-                   checkpoint_dir=str(tmp_path / "ck")).collect()}
+        import os
+        import re
+
+        with reliable_cuts() as ck:
+            got = {r["doc_id"]: (r["status"], r["canonical"])
+                   for r in curation_keep_list(
+                       corpus, use_lsh=True).collect()}
         want = {r["doc_id"]: (r["status"], r["canonical"])
                 for r in curation_keep_list(corpus, use_lsh=True).collect()}
         assert got == want
-        import os
-
-        # layout: <dir>/<applicationId>/<namespace>/<tag> — the appId
-        # level isolates concurrent driver processes sharing one dir,
-        # and each RoundMaterializer instance gets its own namespace
-        # (the curation flow spawns three: ranked / banded / components)
-        ck = str(tmp_path / "ck")
-        apps = os.listdir(ck)
-        assert apps == [spark.sparkContext.applicationId]
-        app_dir = os.path.join(ck, apps[0])
-        entries = {e for ns in os.listdir(app_dir)
-                   for e in os.listdir(os.path.join(app_dir, ns))}
+        # layout: <getCheckpointDir()>/<namespace>/<tag> — each
+        # RoundMaterializer instance gets its own namespace (the
+        # curation flow spawns three: ranked / banded / components)
+        namespaces = os.listdir(ck)
+        assert namespaces and all(re.fullmatch(r"m\d{4}", ns)
+                                  for ns in namespaces), namespaces
+        entries = {e for ns in namespaces
+                   for e in os.listdir(os.path.join(ck, ns))}
         assert {"ranked", "banded", "edges"} <= entries
 
 

@@ -84,11 +84,12 @@ class TestPageRank:
                 assert "html" not in line
 
 
-def test_reliable_checkpoint_mode_matches_local(spark, tmp_path):
-    """checkpoint_dir mode (parquet rounds, executor-loss survivable)
-    must produce byte-identical ranks to the default lazy mode."""
+def test_reliable_checkpoint_mode_matches_local(spark, reliable_cuts):
+    """Reliable mode (parquet rounds, executor-loss survivable) must
+    produce byte-identical ranks to the default lazy mode."""
     pages = _pages(spark, TRIANGLE)
     a = sorted(map(tuple, host_link_stats(pages, iterations=3).collect()))
-    b = sorted(map(tuple, host_link_stats(
-        pages, iterations=3, checkpoint_dir=str(tmp_path)).collect()))
+    with reliable_cuts():
+        b = sorted(map(tuple, host_link_stats(
+            pages, iterations=3).collect()))
     assert a == b

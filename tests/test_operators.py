@@ -602,7 +602,8 @@ class TestNearDupComponents:
         assert fast_i == loop_i
         assert fast_i[10] == fast_i[7] == fast_i[5] == 3
 
-    def test_reliable_checkpoint_path_matches_local(self, spark, tmp_path):
+    def test_reliable_checkpoint_path_matches_local(self, spark,
+                                                    reliable_cuts):
         """round-3 verdict #2: the parquet-round-trip mode must give
         byte-identical components, clean up superseded rounds, and
         leave the returned frame readable after the loop."""
@@ -617,35 +618,32 @@ class TestNearDupComponents:
             chain + [("x", "y")], "doc_a string, doc_b string")
         local = {r["doc_id"]: r["component"]
                  for r in near_dup_components(pairs).collect()}
-        ck = str(tmp_path / "ck")
         # small_graph_max_edges=0 forces the distributed loop — this
         # test exercises the reliable round-file rotation, which the
         # size-gated driver fast path would skip entirely
-        reliable_df = near_dup_components(pairs, checkpoint_dir=ck,
-                                          small_graph_max_edges=0)
-        reliable = {r["doc_id"]: r["component"]
-                    for r in reliable_df.collect()}
+        with reliable_cuts() as ck:
+            reliable_df = near_dup_components(pairs,
+                                              small_graph_max_edges=0)
+            reliable = {r["doc_id"]: r["component"]
+                        for r in reliable_df.collect()}
         assert reliable == local
         assert all(v == "c00" for k, v in reliable.items()
                    if k.startswith("c"))
         # superseded label rounds are deleted as the loop advances;
-        # edges + the final round's labels are what survives (inside
-        # <dir>/<applicationId>/<namespace>/ — the appId level isolates
-        # concurrent driver processes sharing one dir)
-        app_dirs = os.listdir(ck)
-        assert app_dirs == [spark.sparkContext.applicationId]
-        ns_dirs = os.listdir(os.path.join(ck, app_dirs[0]))
+        # edges + the final round's labels are what survives, inside
+        # <getCheckpointDir()>/<namespace>/
+        ns_dirs = os.listdir(ck)
         assert len(ns_dirs) == 1, ns_dirs
-        entries = set(os.listdir(os.path.join(ck, app_dirs[0], ns_dirs[0])))
+        entries = set(os.listdir(os.path.join(ck, ns_dirs[0])))
         assert "edges" in entries
         label_rounds = {e for e in entries if e.startswith("labels_")}
         assert 1 <= len(label_rounds) <= 2, entries
         # the returned frame stays readable (its files were not released)
         assert reliable_df.count() == len(local)
 
-    def test_materializer_runs_sharing_a_dir_do_not_clobber(self, spark,
-                                                            tmp_path):
-        """review finding: two invocations sharing one checkpoint_dir
+    def test_materializer_runs_sharing_a_dir_do_not_clobber(
+            self, spark, reliable_cuts):
+        """Two invocations sharing one checkpoint dir
         (periodic reruns) used the same fixed tags with overwrite —
         run k+1's eager write deleted files run k's lazily-returned
         frame still referenced. Namespaced runs must coexist."""
@@ -655,11 +653,12 @@ class TestNearDupComponents:
             RoundMaterializer)
 
         df = spark.range(5).toDF("id")
-        m1 = RoundMaterializer(str(tmp_path))
-        a = m1(df, "t")  # lazy consumer: collect AFTER the second run
-        m2 = RoundMaterializer(str(tmp_path))
-        m2(df.withColumn("id", F.col("id") + 100), "t")
-        assert sorted(r["id"] for r in a.collect()) == list(range(5))
+        with reliable_cuts():
+            m1 = RoundMaterializer()
+            a = m1(df, "t")  # lazy consumer: collect AFTER the second run
+            m2 = RoundMaterializer()
+            m2(df.withColumn("id", F.col("id") + 100), "t")
+            assert sorted(r["id"] for r in a.collect()) == list(range(5))
         assert m1.namespace != m2.namespace
 
     def test_lazy_cut_computes_upstream_once_per_consumer_set(self, spark):
@@ -717,6 +716,36 @@ class TestNearDupComponents:
         assert len(tracker.getJobIdsForGroup("eager_cut_build")) >= 1
         assert cut.count() == 100
 
+    def test_cleared_checkpoint_dir_makes_cuts_local_again(
+            self, spark, reliable_cuts, tmp_path):
+        # the cut location is read per cut, not remembered: once Spark's
+        # checkpoint dir is cleared, a cut is a lazy local cut again
+        import os
+
+        from n8n_tools_api_spark.operators.materialize import (
+            RoundMaterializer)
+
+        def files():
+            return sorted(os.path.join(d, f)
+                          for d, _, fs in os.walk(tmp_path) for f in fs)
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        src = spark.range(0, 100, 1, 2).select((F.col("id") * 3).alias("x"))
+        mat = RoundMaterializer()
+        with reliable_cuts():
+            assert mat(src, "reliable").count() == 100
+        written = files()
+        assert written  # the reliable leg wrote its parquet round
+        try:
+            sc.setJobGroup("cleared_cut_build", "cleared_cut_build")
+            cut = mat(src, "local")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(tracker.getJobIdsForGroup("cleared_cut_build")) == []
+        assert cut.count() == 100
+        assert files() == written
+
     def test_every_lineage_cut_goes_through_round_materializer(self):
         # one cut rule, one home: no caller checkpoints or picks eager
         import pathlib
@@ -728,6 +757,47 @@ class TestNearDupComponents:
             if any(s in p.read_text()
                    for s in ("localCheckpoint(", ".checkpoint(", "eager=")))
         assert touching == ["operators/materialize.py"]
+
+    def test_cut_location_is_one_spark_setting(self):
+        # where a cut lives is Spark's checkpoint dir, read by
+        # operators/materialize.py alone; only the Structured Streaming
+        # sinks take checkpoint_dir, their checkpointLocation
+        import ast
+        import inspect
+        import pathlib
+
+        from n8n_tools_api_spark.operators import curation
+        from n8n_tools_api_spark.operators.materialize import (
+            RoundMaterializer)
+
+        pkg = pathlib.Path(__file__).resolve().parents[1] \
+            / "n8n_tools_api_spark"
+        takes, reads = set(), set()
+        for p in pkg.rglob("*.py"):
+            for node in ast.walk(ast.parse(p.read_text())):
+                if isinstance(node, (ast.FunctionDef,
+                                     ast.AsyncFunctionDef)):
+                    a = node.args
+                    if "checkpoint_dir" in {
+                            x.arg for x in a.posonlyargs + a.args
+                            + a.kwonlyargs}:
+                        takes.add(node.name)
+                elif isinstance(node, ast.Attribute) and node.attr in (
+                        "getCheckpointDir", "setCheckpointDir"):
+                    reads.add(str(p.relative_to(pkg)))
+        assert takes == {"windowed_event_counts_stream", "sessionize_stream",
+                         "incremental_extract"}
+        assert reads == {"operators/materialize.py"}
+        assert not inspect.signature(RoundMaterializer).parameters
+        # the chains' oracle-replayed settings are module constants
+        for chain in (curation.curation_keep_list,
+                      curation.curation_with_quality,
+                      curation.c4_curation_keep_list,
+                      curation.classifier_curation_keep_list,
+                      curation.web_curation_keep_list):
+            assert not {"threshold", "k", "n_gram", "sample_seed",
+                        "threshold_q16"} & set(
+                inspect.signature(chain).parameters), chain.__name__
 
     def test_column_names_are_a_contract(self):
         # operators read the fixed schema by name; a defaulted column
@@ -806,16 +876,16 @@ class TestKMeansRefine:
 
 
     def test_kmeans_reliable_checkpoint_matches_local(self, spark, sf_dir,
-                                                      tmp_path):
+                                                      reliable_cuts):
         from n8n_tools_api_spark.operators.similarity import kmeans_refine
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(64)
         local = {r["cluster_id"]: r["centroid"]
                  for r in kmeans_refine(emb, nlist=4, iters=2).collect()}
-        reliable = {r["cluster_id"]: r["centroid"]
-                    for r in kmeans_refine(
-                        emb, nlist=4, iters=2,
-                        checkpoint_dir=str(tmp_path / "ck")).collect()}
+        with reliable_cuts():
+            reliable = {r["cluster_id"]: r["centroid"]
+                        for r in kmeans_refine(
+                            emb, nlist=4, iters=2).collect()}
         assert reliable == local
 
 

@@ -10,8 +10,9 @@ of partition 0.
 * The components loop: the fault fires under the pairs that feed
   ``near_dup_components`` on its distributed path, whose every round is
   a lazy lineage cut; the labels must hash like a fault-free loop's.
-  The same loop runs again in reliable mode (``checkpoint_dir``), where
-  every round is a parquet write-and-read cut, and must hash the same.
+  The same loop runs again in reliable mode (Spark's checkpoint dir
+  set), where every round is a parquet write-and-read cut, and must
+  hash the same.
 
 It runs in a subprocess because the session master is fixed per JVM."""
 
@@ -26,6 +27,7 @@ REPO = pathlib.Path(__file__).resolve().parents[1]
 
 JOB = r'''
 import json
+import os
 import sys
 
 sys.path.insert(0, sys.argv[1])
@@ -79,9 +81,12 @@ out["loop_retried"] = run(lambda: near_dup_components(
     small_graph_max_edges=0), "loop_retried")
 out["loop_clean"] = run(lambda: near_dup_components(
     pairs, small_graph_max_edges=0), "loop_clean")
+sc.setCheckpointDir(sys.argv[3])
 out["loop_reliable"] = run(lambda: near_dup_components(
     pairs.mapInPandas(fail_first_attempt, schema=pairs.schema),
-    checkpoint_dir=sys.argv[3], small_graph_max_edges=0), "loop_reliable")
+    small_graph_max_edges=0), "loop_reliable")
+out["loop_reliable"]["cut_files"] = sum(
+    len(fs) for _, _, fs in os.walk(sys.argv[3]))
 driver_rows = [
     (f"bdoc_{i:08d}",
      [(s["kind"], s["text"], s["media_ref"], s["offset"])
@@ -130,5 +135,6 @@ def test_retried_components_loop_hashes_like_a_clean_loop(retry_out):
 def test_retried_reliable_components_loop_hashes_like_a_clean_loop(retry_out):
     out = retry_out
     assert out["loop_reliable"]["failed_tasks"] >= 1  # the fault did fire
+    assert out["loop_reliable"]["cut_files"] > 0  # its rounds are parquet
     assert out["loop_reliable"]["rows"] == out["loop_clean"]["rows"] == 30
     assert out["loop_reliable"]["digest"] == out["loop_clean"]["digest"]
