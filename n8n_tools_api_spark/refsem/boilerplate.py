@@ -3,10 +3,11 @@
 The reference service has *no* HTML boilerplate stripper (SURVEY.md
 §2.10) — its closest behaviors are text cleaning (F1) and content
 density (A5). This module supplies the north_rule-required operator from
-scratch: a stdlib ``html.parser`` tree walk scoring each block element by
-link-char ratio and tag density, dropping navigation/boilerplate blocks
-and returning the main-content text. Deterministic, pure-Python, and the
-single source of truth for both goldens and the pandas UDF.
+scratch: one regex tokenizer loop that builds the element tree and folds
+each element's ``(chars, link_chars, tags)`` into its parent when the
+element closes, scoring every block as it closes. Deterministic,
+pure-Python, and the single source of truth for both goldens and the
+pandas UDF.
 
 Heuristic (documented spec, our own golden fixtures pin it):
 
@@ -14,18 +15,36 @@ Heuristic (documented spec, our own golden fixtures pin it):
   aside, script, style, form, button, iframe, noscript;
 * the tree is segmented into blocks at block-level tags (div, p,
   section, article, main, table, ul, ol, blockquote, pre, h1-h6, li);
+  a block with block-level children contributes its own inline content
+  (its text and non-block children) as a block of its own, placed
+  before those children;
 * per block: ``link_ratio = chars inside <a> / total chars`` and
   ``tag_density = descendant tag count / max(total chars, 1)``;
 * a block is boilerplate when ``link_ratio > 0.5`` or
   ``tag_density > 0.10`` or it has no text at all;
 * kept block texts are whitespace-normalized and joined with
   ``"\\n\\n"``.
+
+Tree rules. Comments, CDATA, doctypes and processing instructions are
+skipped; entities are decoded in text. An end tag closes the closest
+open element of that name (browsers' recovery for mis-nested markup)
+and is ignored when none is open; elements left open close at the end
+of input. As in HTML5, ``/>`` does not close a non-void element:
+``<nav/>`` opens a drop region that ends at the next end tag (its
+parent's, which the region consumes), and ``<br/>`` is a void tag like
+``<br>``. A block's text lists the block's own text parts before those
+of its descendants.
+
+Nothing here recurses, so nesting depth is bounded only by memory: each
+element is popped once, and a kept block's text is gathered with an
+explicit stack.
 """
 
 from __future__ import annotations
 
 import re
 from html import unescape
+from itertools import chain
 
 DROP_TAGS = frozenset(
     {"nav", "footer", "header", "aside", "script", "style", "form",
@@ -44,144 +63,61 @@ VOID_TAGS = frozenset(
 LINK_RATIO_MAX = 0.5
 TAG_DENSITY_MAX = 0.10
 
-_RE_WS = re.compile(r"\s+")
-
-
-class _Node:
-    __slots__ = ("tag", "children", "text_parts")
-
-    def __init__(self, tag: str):
-        self.tag = tag
-        self.children: list[_Node] = []
-        self.text_parts: list[str] = []
-
-
-# Fast tag tokenizer. stdlib html.parser was profiled at ~70% of the
-# whole extraction pipeline (char-at-a-time regex scanning); a single
-# finditer pass over tags is ~8x faster and behaves identically on
-# well-formed markup (comments/doctype skipped, quoted attrs tolerated).
+# One token per markup construct: comment, CDATA, doctype/declaration,
+# processing instruction, or a start/end tag with quoted attributes
+# (a quoted ">" does not end the tag). Groups: the end-tag slash and
+# the tag name; both are None for the skipped constructs.
 _RE_TAG = re.compile(
-    r"<!--.*?-->"
-    r"|<!\[CDATA\[.*?\]\]>"
-    r"|<![^>]*>"
-    r"|<\?[^>]*>"
-    r"|<(/?)([a-zA-Z][a-zA-Z0-9-]*)((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)(/?)>",
+    r"<(?:!--.*?-->|!\[CDATA\[.*?\]\]>|![^>]*>|\?[^>]*>"
+    r"|(/?)([a-zA-Z][a-zA-Z0-9-]*+)(?:[^>\"']++|\"[^\"]*+\"|'[^']*+')*+>)",
     re.DOTALL,
 )
 
 
-class _TreeBuilder:
-    """Minimal, error-tolerant DOM builder over a regex tag stream."""
+class _Node:
+    """An open element. ``chars``/``link``/``tags`` measure its own text
+    plus the subtrees in ``kids``; ``slot`` is its index in the output
+    when it is a block, -1 otherwise."""
 
-    def __init__(self):
-        self.root = _Node("#root")
-        self.stack = [self.root]
-        self._drop_depth = 0
+    __slots__ = ("tag", "parts", "kids", "chars", "link", "tags", "slot")
 
-    def feed(self, html: str) -> None:
-        pos = 0
-        for m in _RE_TAG.finditer(html):
-            if m.start() > pos:
-                self.handle_data(html[pos:m.start()])
-            pos = m.end()
-            name = m.group(2)
-            if name is None:  # comment / doctype / CDATA / PI
-                continue
-            tag = name.lower()
-            if m.group(1):  # closing tag
-                self.handle_endtag(tag)
-            elif m.group(4):  # self-closing
-                if tag in DROP_TAGS and not self._drop_depth:
-                    continue
-            else:
-                self.handle_starttag(tag)
-        if pos < len(html):
-            self.handle_data(html[pos:])
-
-    def close(self) -> None:
-        pass
-
-    def handle_starttag(self, tag):
-        if self._drop_depth:
-            if tag not in VOID_TAGS:
-                self._drop_depth += 1
-            return
-        if tag in DROP_TAGS:
-            self._drop_depth = 1
-            return
-        if tag in VOID_TAGS:
-            return
-        node = _Node(tag)
-        self.stack[-1].children.append(node)
-        self.stack.append(node)
-
-    def handle_endtag(self, tag):
-        if self._drop_depth:
-            if tag not in VOID_TAGS:
-                self._drop_depth -= 1
-            return
-        if tag in VOID_TAGS:
-            return
-        # pop back to the matching open tag if present (tolerates
-        # mis-nested markup the way browsers do — closest-ancestor match)
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                del self.stack[i:]
-                break
-
-    def handle_data(self, data):
-        if self._drop_depth:
-            return
-        if data:
-            if "&" in data:
-                data = unescape(data)
-            self.stack[-1].text_parts.append(data)
+    def __init__(self, tag: str, slot: int):
+        self.tag = tag
+        self.parts: list[str] = []
+        self.kids: list[_Node] = []
+        self.chars = 0
+        self.link = 0
+        self.tags = 0
+        self.slot = slot
 
 
-def _measure(node: _Node) -> tuple[int, int, int]:
-    """(total_chars, link_chars, tag_count) over the subtree."""
-    text_chars = sum(len(_RE_WS.sub(" ", t).strip()) for t in node.text_parts)
-    link_chars = 0
-    tag_count = 0
-    for child in node.children:
-        c_total, c_link, c_tags = _measure(child)
-        tag_count += 1 + c_tags
-        text_chars += c_total
-        link_chars += c_total if child.tag == "a" else c_link
-    return text_chars, link_chars, tag_count
-
-
-def _collect_text(node: _Node, out: list[str]) -> None:
-    for part in node.text_parts:
-        out.append(part)
-    for child in node.children:
-        _collect_text(child, out)
-
-
-def _walk_blocks(node: _Node, blocks: list[_Node]) -> None:
-    """Split the tree into candidate blocks at block-level boundaries.
-
-    A node becomes a block when it is block-level and has no block-level
-    descendants that would subdivide it further (we recurse into
-    containers, score leaves-of-the-block-tree).
-    """
-    block_children = [c for c in node.children if c.tag in BLOCK_TAGS]
-    if node.tag in BLOCK_TAGS and not block_children:
-        blocks.append(node)
+def _score(node: _Node, slots: list) -> None:
+    """Fill a block's output slot with its text if it is content."""
+    total = node.chars
+    if (not total or node.link / total > LINK_RATIO_MAX
+            or node.tags / total > TAG_DENSITY_MAX):
         return
-    # inline content directly under a container still counts as a block
-    if node.tag in BLOCK_TAGS or node.tag == "#root":
-        inline = _Node(node.tag)
-        inline.text_parts = list(node.text_parts)
-        inline.children = [c for c in node.children if c.tag not in BLOCK_TAGS]
-        total, _, _ = _measure(inline)
-        if total:
-            blocks.append(inline)
-        for child in block_children:
-            _walk_blocks(child, blocks)
-    else:
-        for child in node.children:
-            _walk_blocks(child, blocks)
+    parts: list[str] = []
+    todo = [node]
+    while todo:
+        n = todo.pop()
+        parts += n.parts
+        todo += reversed(n.kids)
+    slots[node.slot] = " ".join(parts)
+
+
+def _pop_to(stack: list[_Node], depth: int, slots: list) -> None:
+    """Close the open elements above ``depth``: a block is scored, any
+    other element folds its measures into its parent."""
+    while len(stack) > depth:
+        node = stack.pop()
+        if node.slot >= 0:
+            _score(node, slots)
+        else:
+            parent = stack[-1]
+            parent.chars += node.chars
+            parent.link += node.chars if node.tag == "a" else node.link
+            parent.tags += 1 + node.tags
 
 
 def strip_boilerplate(html: str) -> str:
@@ -193,27 +129,46 @@ def strip_boilerplate(html: str) -> str:
     """
     if not html:
         return ""
-    builder = _TreeBuilder()
-    try:
-        builder.feed(html)
-        builder.close()
-    except Exception:
-        # malformed beyond tolerance: fall back to tag-stripped text
-        return _RE_WS.sub(" ", re.sub(r"<[^>]+>", " ", html)).strip()
-    blocks: list[_Node] = []
-    _walk_blocks(builder.root, blocks)
-    kept: list[str] = []
-    for block in blocks:
-        total, link, tags = _measure(block)
-        if total == 0:
-            continue
-        link_ratio = link / total
-        tag_density = tags / max(total, 1)
-        if link_ratio > LINK_RATIO_MAX or tag_density > TAG_DENSITY_MAX:
-            continue
-        parts: list[str] = []
-        _collect_text(block, parts)
-        text = _RE_WS.sub(" ", " ".join(parts)).strip()
-        if text:
-            kept.append(text)
-    return "\n\n".join(kept)
+    root = _Node("", 0)
+    stack = [root]
+    top = root
+    slots: list = [None]
+    drop = 0
+    # split gives the text before the first token, then (slash, name,
+    # text after it) per token; a leading (None, None) makes it triples
+    tokens = chain((None, None), _RE_TAG.split(html))
+    for close, name, data in zip(tokens, tokens, tokens):
+        if name is not None:
+            tag = name.lower()
+            if drop:
+                if tag not in VOID_TAGS:
+                    drop += -1 if close else 1
+            elif tag in VOID_TAGS:
+                pass
+            elif close:
+                for i in range(len(stack) - 1, 0, -1):
+                    if stack[i].tag == tag:
+                        _pop_to(stack, i, slots)
+                        top = stack[-1]
+                        break
+            elif tag in DROP_TAGS:
+                drop = 1
+            else:
+                if tag in BLOCK_TAGS and top.slot >= 0:
+                    node = _Node(tag, len(slots))
+                    slots.append(None)
+                else:
+                    node = _Node(tag, -1)
+                    top.kids.append(node)
+                stack.append(node)
+                top = node
+        if data and not drop:
+            if "&" in data:
+                data = unescape(data)
+            text = " ".join(data.split())
+            if text:
+                top.parts.append(text)
+                top.chars += len(text)
+    _pop_to(stack, 1, slots)
+    _score(root, slots)
+    return "\n\n".join(s for s in slots if s)

@@ -119,7 +119,11 @@ def validate_base64_image(base64_data: str, min_bytes: int = 50) -> bool:
     notion of "decodes" (review finding: the lenient/strict split could
     classify a span as a valid image yet give it an empty media_ref).
     """
-    decoded = decode_base64_payload(base64_data)
+    return _is_image(decode_base64_payload(base64_data), min_bytes)
+
+
+def _is_image(decoded: bytes | None, min_bytes: int = 50) -> bool:
+    """``validate_base64_image`` given the payload's decoded bytes."""
     return decoded is not None and len(decoded) > min_bytes
 
 
@@ -333,7 +337,11 @@ def media_ref_for(base64_data: str, prefix: str = "media") -> str:
     S6): ``{prefix}/{sha256(decoded)[:16]}.{ext}``. Extension comes from
     the full-variant format detector; 'unknown' maps to 'bin'.
     """
-    decoded = decode_base64_payload(base64_data)
+    return _media_ref(base64_data, decode_base64_payload(base64_data), prefix)
+
+
+def _media_ref(base64_data: str, decoded: bytes | None, prefix: str) -> str:
+    """``media_ref_for`` given the payload's decoded bytes."""
     if not decoded:
         return ""
     digest = hashlib.sha256(decoded).hexdigest()[:16]
@@ -353,9 +361,15 @@ def classify_image_span(base64_data: str, annotation: str = "") -> str:
     base 0.9 with base64 present, 0.7 without — mistral_service.py:787-789),
     plus the annotation when the source provided one.
     """
+    return _ocr_label(base64_data, decode_base64_payload(base64_data),
+                      annotation)
+
+
+def _ocr_label(base64_data: str, decoded: bytes | None,
+               annotation: str = "") -> str:
+    """``classify_image_span`` given the payload's decoded bytes."""
     fmt = detect_image_format_full(base64_data)
-    size = image_size_info(base64_data)
-    n_bytes = size.get("data_size_bytes", 0)
+    n_bytes = len(decoded) if decoded is not None else 0
     confidence = 0.9 if base64_data else 0.7
     label = f"ocr:{fmt}:{n_bytes}B:conf={confidence:.2f}"
     if annotation:

@@ -40,7 +40,13 @@ Spec (input kinds per FIXTURES.md §1):
 from __future__ import annotations
 
 from .boilerplate import strip_boilerplate
-from .images import classify_image_span, media_ref_for, validate_base64_image
+from .images import (
+    _is_image,
+    _media_ref,
+    _ocr_label,
+    classify_image_span,
+    decode_base64_payload,
+)
 from .textclean import (
     clean_extracted_text,
     extract_markdown_image_refs,
@@ -98,11 +104,14 @@ def extract_document(spans: list[dict], media_prefix: str = "media",
                 out.append(_PDF_PAGE_PLACEHOLDER)
                 pdf_slot_used = True
         elif kind == "image":
-            if validate_base64_image(text):
+            # validate_base64_image, classify_image_span and media_ref_for
+            # over one decode of the payload
+            decoded = decode_base64_payload(text)
+            if _is_image(decoded):
                 out.append({
                     "kind": "image",
-                    "text": classify_image_span(text),
-                    "media_ref": media_ref_for(text, media_prefix),
+                    "text": _ocr_label(text, decoded),
+                    "media_ref": _media_ref(text, decoded, media_prefix),
                 })
             else:
                 annotation = text.strip()

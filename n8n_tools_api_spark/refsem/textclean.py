@@ -33,12 +33,20 @@ LANGUAGE_PATTERNS = (
 # written so that no match expands a group template (see its docstring).
 _RE_TRIPLE_BLANK = re.compile(r"\n\s*\n\s*\n")
 _RE_HORIZ_WS = re.compile(r"\t[ \t]*| [ \t]+")
-_RE_CAMEL = re.compile(r"(?<=[a-z])(?=[A-Z])")
-_RE_NUM_ALPHA = re.compile(r"(?<=\d)(?=[A-Za-z])")
+_RE_CAMEL = re.compile(r"[a-z](?=[A-Z])")
+_RE_NUM_ALPHA = re.compile(r"\d(?=[A-Za-z])")
 _RE_WS_PUNCT = re.compile(r"\s+(?=[.!?,:;])")
-_RE_SENT_END = re.compile(r"(?<=[.!?])\s*(?=[A-Z])")
+_RE_SENT_END = re.compile(r"[.!?]\s*(?=[A-Z])")
 _RE_MD_HEADER = re.compile(r"^#+\s+(.+)$", re.MULTILINE)
 _RE_MD_IMAGE = re.compile(r"!\[([^\]]*)\]\(([^)]+)\)")
+
+
+def _space_after(m: re.Match) -> str:
+    return m.group() + " "
+
+
+def _space_after_first(m: re.Match) -> str:
+    return m.group()[0] + " "
 
 
 def clean_extracted_text(text: str) -> str:
@@ -52,25 +60,33 @@ def clean_extracted_text(text: str) -> str:
     The reference's six patterns are ``\n\s*\n\s*\n`` -> ``\n\n``,
     ``[ \t]+`` -> `` ``, ``([a-z])([A-Z])`` -> ``\1 \2``,
     ``(\d+)([A-Za-z])`` -> ``\1 \2``, ``\s+([.!?,:;])`` -> ``\1`` and
-    ``([.!?])\s*([A-Z])`` -> ``\1 \2``. Passes 3-6 here match only what
-    they change and keep the context in lookarounds, so no match expands
-    a group template (pure-Python ``re._parser.expand_template``). That is
-    the same output because the character a reference pattern consumes
-    after its rewritten part can never start that pattern's next match.
-    Pass 2 leaves a lone space alone instead of rewriting it to itself,
-    and pass 1 needs a newline to match at all. Together: 49.0 -> 33.8 us
-    per span over the bench corpus on a 4-core Xeon VM, single thread.
-    tests/test_refsem.py keeps the reference form as its oracle.
+    ``([.!?])\s*([A-Z])`` -> ``\1 \2``. No pass here expands a group
+    template (pure-Python ``re._parser.expand_template``): passes 3, 4 and
+    6 consume only their anchor character (the lower-case letter, the
+    last digit, the punctuation mark plus its spaces), keep the next
+    character in a lookahead and rebuild the match with a module-level
+    function; pass 5 matches only what it deletes. That is the same
+    output because the character a reference pattern consumes after its
+    rewritten part can never start that pattern's next match, and a
+    digit run splits only before its last digit. Starting each pattern
+    with a character class instead of a zero-width lookbehind lets the
+    regex engine skip to candidate positions instead of trying every
+    one. Pass 2 leaves a lone space alone instead of rewriting it to
+    itself, and pass 1 needs a newline to match at all. Against the
+    lookbehind form: 205 -> 147 us per document (41.5 -> 29.8 us per
+    span) over the 14,835 cleaning inputs of 3000 bench documents on a
+    4-core Xeon VM, single thread, best of 7. tests/test_refsem.py keeps
+    the reference form as its oracle.
     """
     if not text:
         return ""
     if "\n" in text:
         text = _RE_TRIPLE_BLANK.sub("\n\n", text)
     text = _RE_HORIZ_WS.sub(" ", text)
-    text = _RE_CAMEL.sub(" ", text)
-    text = _RE_NUM_ALPHA.sub(" ", text)
+    text = _RE_CAMEL.sub(_space_after, text)
+    text = _RE_NUM_ALPHA.sub(_space_after, text)
     text = _RE_WS_PUNCT.sub("", text)
-    text = _RE_SENT_END.sub(" ", text)
+    text = _RE_SENT_END.sub(_space_after_first, text)
     return text.strip()
 
 

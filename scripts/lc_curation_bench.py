@@ -26,10 +26,9 @@ import os
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from _repo import REPO  # first: the package on every import path
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import SparkSession, functions as F
 
 n_exec = int(sys.argv[1]) if len(sys.argv) > 1 else 1
 cores = int(sys.argv[2]) if len(sys.argv) > 2 else 2

@@ -9,17 +9,14 @@ extraction stage. Rerun after plan-affecting changes:
 
 from __future__ import annotations
 
-import os
 import re
-import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from _repo import REPO  # first: the package on every import path
 
-from n8n_tools_api_spark.operators import extract_spans  # noqa: E402
-from n8n_tools_api_spark.plans import ORACLE_QUERIES  # noqa: E402
-from n8n_tools_api_spark.session import get_spark  # noqa: E402
-from n8n_tools_api_spark.sources import interleaved_df  # noqa: E402
+from n8n_tools_api_spark.operators import extract_spans
+from n8n_tools_api_spark.plans import ORACLE_QUERIES
+from n8n_tools_api_spark.session import get_spark
+from n8n_tools_api_spark.sources import interleaved_df
 
 SF = "/root/testdata/sf0.01"
 HEADLINE = [

@@ -25,8 +25,6 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 
 def frame_hash(df) -> tuple[str, int]:
     cols = sorted(df.columns)
@@ -69,6 +67,7 @@ def main() -> None:
         print(f"OK: {len(a)} hashes identical")
         return
 
+    import _repo  # noqa: F401  first: the package on every import path
     from n8n_tools_api_spark.plans import all_queries
     from n8n_tools_api_spark.session import get_spark
 

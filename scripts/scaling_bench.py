@@ -38,7 +38,8 @@ import os
 import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from _repo import REPO  # first: the package on every import path
+
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 120_000
 REPEATS = int(sys.argv[2]) if len(sys.argv) > 2 else 2  # per round; 3 rounds interleaved
 SUITE = sys.argv[3] if len(sys.argv) > 3 else "all"
@@ -48,8 +49,7 @@ DEDUP_REPLICAS = int(os.environ.get("BENCH_DEDUP_REPLICAS", "48"))
 ROUNDS = int(os.environ.get("BENCH_ROUNDS", "3"))
 
 EXTRACT_JOB = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["SPARK_GRAFT_REPO"])
+import json, os, time
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 from n8n_tools_api_spark.session import get_spark
 from n8n_tools_api_spark.sources import bench_corpus
@@ -91,8 +91,7 @@ spark.stop()
 """
 
 DEDUP_JOB = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["SPARK_GRAFT_REPO"])
+import json, os, time
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 from pyspark.sql import functions as F
 from n8n_tools_api_spark.session import get_spark
@@ -133,8 +132,7 @@ spark.stop()
 """
 
 CURATION_JOB = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["SPARK_GRAFT_REPO"])
+import json, os, time
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 from pyspark.sql import functions as F
 from n8n_tools_api_spark.session import get_spark
@@ -178,8 +176,7 @@ spark.stop()
 # curation corpus: the dedup corpus plus verbatim copies of every 25th
 # base document (so the exact-dedup stage has real work) — built once.
 BUILD_CURATION_CORPUS = r"""
-import os, sys
-sys.path.insert(0, os.environ["SPARK_GRAFT_REPO"])
+import os
 from pyspark.sql import functions as F
 from n8n_tools_api_spark.session import get_spark
 spark = get_spark(master="local[32]", shuffle_partitions=32)
@@ -230,8 +227,7 @@ if __name__ == "__main__":
 # volume stays realistic), plus a truncated near-dup planted for every
 # 20th doc so the components stage has real clusters to find.
 BUILD_DEDUP_CORPUS = r"""
-import os, sys
-sys.path.insert(0, os.environ["SPARK_GRAFT_REPO"])
+import os
 from pyspark.sql import functions as F
 from n8n_tools_api_spark.session import get_spark
 spark = get_spark(master="local[32]", shuffle_partitions=32)
@@ -261,7 +257,7 @@ spark.stop()
 
 
 def run_level(job: str, cpus: int, extra_env: dict | None = None) -> dict:
-    env = dict(os.environ, SPARK_GRAFT_REPO=REPO, BENCH_CPUS=str(cpus),
+    env = dict(os.environ, BENCH_CPUS=str(cpus),
                BENCH_DOCS=str(N_DOCS), BENCH_REPEATS=str(REPEATS),
                **(extra_env or {}))
     job_path = "/tmp/spark_graft_bench/scaling_job.py"
@@ -311,14 +307,13 @@ def effs(best: dict[int, dict]) -> tuple[float, float]:
 
 
 def main() -> None:
-    env = dict(os.environ, SPARK_GRAFT_REPO=REPO)
+    env = dict(os.environ)
     results: dict = {}
     sections: list[str] = []
 
     if SUITE in ("all", "extract"):
         # pre-build the shared corpus once (at high parallelism)
         subprocess.run([sys.executable, "-c",
-                        "import os,sys; sys.path.insert(0, os.environ['SPARK_GRAFT_REPO']);"
                         "from n8n_tools_api_spark.session import get_spark;"
                         "from n8n_tools_api_spark.sources import bench_corpus;"
                         "s=get_spark(master='local[32]');"

@@ -12,7 +12,7 @@ then times extraction under (a) the adversarial source layout and
 (b) the salted layout — interleaved pairs, alternating which layout
 runs first, each side best of three — and regenerates BENCH/SKEW.md.
 
-    python scripts/skew_report.py   # from the repo root; local[<all cores>],
+    python scripts/skew_report.py   # from any directory; local[<all cores>],
                                     # ~30 min on 4 cores
 """
 
@@ -20,18 +20,16 @@ from __future__ import annotations
 
 import os
 import statistics
-import sys
 import tempfile
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from _repo import REPO  # first: the package on every import path
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import functions as F
 
-from n8n_tools_api_spark.operators import extract_spans, salted_repartition  # noqa: E402
-from n8n_tools_api_spark.session import get_spark  # noqa: E402
-from n8n_tools_api_spark.sources import bench_corpus  # noqa: E402
+from n8n_tools_api_spark.operators import extract_spans, salted_repartition
+from n8n_tools_api_spark.session import get_spark
+from n8n_tools_api_spark.sources import bench_corpus
 
 WORK = os.path.join(tempfile.gettempdir(), "spark_graft_bench")
 N_DOCS = 60_000

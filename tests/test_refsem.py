@@ -6,8 +6,12 @@ Mirrors the reference's own unit-test matrix:
 * formatter goldens (2-page fixture) — tests/utils/test_ocr_response_formatter.py:22-223
 """
 
+import ast
 import base64
+import contextlib
+import inspect
 import re
+import sys
 
 import pytest
 from hypothesis import given, settings
@@ -39,12 +43,15 @@ from n8n_tools_api_spark.refsem import (
     strip_boilerplate,
     validate_base64_image,
 )
+from n8n_tools_api_spark.refsem import boilerplate
 from n8n_tools_api_spark.sources.synthetic import (
     CANONICAL_GIF_B64,
     CANONICAL_JPEG_B64,
     CANONICAL_PNG_B64,
     generate_bench_doc,
 )
+
+from boilerplate_oracle import strip_boilerplate as _oracle_strip
 
 # The reference's six F1 substitutions in their original template form
 # (ocr_response_formatter.py:148-173), kept here as the oracle for the
@@ -74,6 +81,50 @@ _CLEAN_ALPHABET = (
     list("aZbY09٣éÉ .!?,:;-#\t\n\r\x0b\x0c\x1c\x85　")
     + ["  ", "\t \t", "\n\n\n", " \n \n ", ". A", "aB", "7q", " ,"]
 )
+
+# HTML for the boilerplate oracle: well-formed element trees mixed with
+# loose tokens. Block, inline, every drop and some void tags in open,
+# close and "/>" forms, upper-case names, quoted ">" in attributes,
+# entities, Unicode whitespace, comments, CDATA, doctype, processing
+# instructions and broken markup.
+_HTML_TAGS = sorted(boilerplate.DROP_TAGS) + [
+    "div", "p", "li", "ul", "h1", "body", "html", "table", "a", "span",
+    "b", "em", "br", "hr", "img", "input", "DIV", "P", "A", "Nav", "BR",
+    "x-custom"]
+_HTML_ATTRS = st.sampled_from([
+    "", " class='c'", ' href="/a>b"', " title='x > y'", " data-q=\"it's\"",
+    " a=b", ' "', " '", " /"])
+_HTML_TEXT = st.sampled_from([
+    "A longer run of plain words that keeps its block",
+    "Second sentence of prose, long enough to outweigh a tag or two.",
+    "word", " ", " \n\t ", "\xa0", "\u3000", "\x1c", "x" * 40,
+    "&amp;", "&nbsp;", "&#10;", "&lt;p&gt;", "&bogus;",
+    "<!-- note -->", "<!-- <p>commented out</p> -->", "<!--", "-->",
+    "<![CDATA[ raw > data ]]>", "<!DOCTYPE html>", "<?xml version?>",
+    "<!-->", "</>", "< p>", "<1>", "<", ">", "/>"])
+_HTML_TAG = st.sampled_from(_HTML_TAGS)
+_HTML_TREE = st.recursive(
+    _HTML_TEXT,
+    lambda kids: st.builds("<{0}{1}>{2}</{0}>".format, _HTML_TAG, _HTML_ATTRS,
+                           st.lists(kids, max_size=4).map("".join)),
+    max_leaves=24)
+_HTML = st.lists(st.one_of(
+    _HTML_TREE,
+    st.builds("<{}{}>".format, _HTML_TAG, _HTML_ATTRS),
+    st.builds("</{}>".format, _HTML_TAG),
+    st.builds("<{}{}/>".format, _HTML_TAG, _HTML_ATTRS),
+), max_size=12).map("".join)
+
+
+@contextlib.contextmanager
+def _recursion_limit(limit):
+    old = sys.getrecursionlimit()
+    sys.setrecursionlimit(limit)
+    try:
+        yield
+    finally:
+        sys.setrecursionlimit(old)
+
 
 # The reference formatter test fixture, pages only
 # (tests/utils/test_ocr_response_formatter.py:30-84)
@@ -461,6 +512,70 @@ class TestBoilerplate:
     def test_plain_text_passthrough(self):
         assert "just words" in strip_boilerplate("<body><p>just words and more padding text here</p></body>")
 
+    def test_block_text_lists_own_parts_first(self):
+        html = ("<p>Lead words <b>first</b> middle words <i>second</i>"
+                " and the tail words of this paragraph</p>")
+        assert strip_boilerplate(html) == (
+            "Lead words middle words and the tail words of this paragraph"
+            " first second")
+
+    def test_self_closing_follows_html5(self):
+        # "/>" does not close a non-void tag: <nav/> opens a drop region
+        # that its parent's end tag closes (and consumes, so the first <p>
+        # stays open around the second), and <br/> is a plain void tag
+        html = ("<body><p>Visible paragraph text that is long enough."
+                "<nav/>hidden link words</p>"
+                "<p>Second paragraph<br/>stays visible here.</p></body>")
+        assert strip_boilerplate(html) == (
+            "Visible paragraph text that is long enough."
+            "\n\nSecond paragraph stays visible here.")
+
+    @settings(max_examples=2000, deadline=None)
+    @given(html=_HTML)
+    def test_matches_oracle(self, html):
+        assert strip_boilerplate(html) == _oracle_strip(html)
+
+    def test_matches_oracle_on_bench_spans(self):
+        n = 0
+        for idx in range(500):
+            for s in generate_bench_doc(idx, 7):
+                if s["kind"] == "html":
+                    assert strip_boilerplate(s["text"]) == _oracle_strip(s["text"])
+                    n += 1
+        assert n > 500
+
+    @pytest.mark.parametrize("html", [
+        "<div>" * 10_000 + "deep content words" + "</div>" * 10_000,
+        "<p>" + "<b>some words of inline text " * 3_000,
+    ], ids=["nested_div_10000", "unclosed_b_3000"])
+    def test_deep_markup_returns_text(self, html):
+        # the recursive oracle needs a raised limit; the scorer must not
+        with _recursion_limit(100_000):
+            expected = _oracle_strip(html)
+        assert expected
+        assert strip_boilerplate(html) == expected
+
+    def test_no_function_recurses(self):
+        # the call graph among the module's own functions is acyclic
+        tree = ast.parse(inspect.getsource(boilerplate))
+        funcs = {n.name: n for n in ast.walk(tree)
+                 if isinstance(n, ast.FunctionDef)}
+        reach = {name: {c.func.id for c in ast.walk(fn)
+                        if isinstance(c, ast.Call)
+                        and isinstance(c.func, ast.Name)
+                        and c.func.id in funcs}
+                 for name, fn in funcs.items()}
+        grown = True
+        while grown:
+            grown = False
+            for callees in reach.values():
+                more = set().union(*(reach[c] for c in callees)) - callees
+                if more:
+                    callees |= more
+                    grown = True
+        assert "strip_boilerplate" in funcs
+        assert not [name for name, callees in reach.items() if name in callees]
+
 
 class TestExtractDocument:
     def test_offset_resort(self):
@@ -517,3 +632,36 @@ class TestExtractDocument:
 
     def test_empty_doc(self):
         assert extract_document([]) == []
+
+    def test_image_spans_match_public_functions(self):
+        # extract_document decodes each payload once; its image spans
+        # must equal validate_base64_image + classify_image_span +
+        # media_ref_for on every bench payload and on the edge payloads
+        payloads = [s["text"] for idx in range(500)
+                    for s in generate_bench_doc(idx, 7)
+                    if s["kind"] == "image"]
+        unpadded = base64.b64encode(bytes(range(61))).decode()
+        assert unpadded.endswith("=")
+        payloads += [
+            "\n".join(CANONICAL_JPEG_B64[i:i + 76]
+                      for i in range(0, len(CANONICAL_JPEG_B64), 76)),
+            "  " + CANONICAL_PNG_B64 + "\n",
+            unpadded.rstrip("="),
+            unpadded + "==",
+            base64.b64encode(bytes(50)).decode(),
+            base64.b64encode(bytes(51)).decode(),
+            CANONICAL_GIF_B64,
+            "", "   ", "a bare annotation", "!!!notbase64!!!", "QUJD====",
+        ]
+        for payload in payloads:
+            if validate_base64_image(payload):
+                expected = (classify_image_span(payload),
+                            media_ref_for(payload, "m"))
+            else:
+                expected = (classify_image_span("", annotation=payload.strip()), "")
+            out = extract_document(
+                [{"kind": "image", "text": payload, "offset": 0}],
+                media_prefix="m")
+            assert [(s["kind"], s["text"], s["media_ref"]) for s in out] == [
+                ("image", *expected)]
+        assert len(payloads) > 500
