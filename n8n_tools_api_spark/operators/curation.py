@@ -33,11 +33,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 # The chains' fixed settings — the values their DuckDB replays
-# (plans/catalog.py) hard-code: 5-word shingles at Jaccard >= 0.5, the
-# web chain's 13-gram decontamination (the paper constant) and md5
-# sampling seed, and the classifier's decision at score_q16 >= 0. The
-# operators they feed keep their own parameters.
-NEAR_DUP_K = 5
+# (plans/catalog.py) hard-code: Jaccard >= 0.5 over dedup.SHINGLE_K-word
+# shingles, the web chain's 13-gram decontamination (the paper
+# constant) and md5 sampling seed, and the classifier's decision at
+# score_q16 >= 0. The operators they feed keep their own parameters.
 NEAR_DUP_THRESHOLD = 0.5
 DECONTAM_N = 13
 SAMPLE_SEED = 42
@@ -106,8 +105,7 @@ def curation_keep_list(docs: DataFrame, use_lsh: bool = False) -> DataFrame:
         .where(F.col("n_shared_bands") >= 2)
         .select("doc_a", "doc_b")
     ) if use_lsh else None
-    pairs = ngram_jaccard_pairs(survivors, k=NEAR_DUP_K,
-                                threshold=NEAR_DUP_THRESHOLD,
+    pairs = ngram_jaccard_pairs(survivors, threshold=NEAR_DUP_THRESHOLD,
                                 candidate_pairs=cands)
     comp = near_dup_components(pairs.select("doc_a", "doc_b"))
     surv_out = (
@@ -169,8 +167,7 @@ def curation_with_quality(docs: DataFrame, use_lsh: bool = False) -> DataFrame:
 
 
 def classifier_curation_keep_list(docs: DataFrame, positive: DataFrame,
-                                  negative: DataFrame, *,
-                                  use_lsh: bool = False) -> DataFrame:
+                                  negative: DataFrame) -> DataFrame:
     """Dedup-then-classify curation — the DCLM / FineWeb-Edu stage
     order: the full curation chain (extract-clean → exact dedup →
     near-dup components) runs FIRST, and the trained quality
@@ -203,7 +200,7 @@ def classifier_curation_keep_list(docs: DataFrame, positive: DataFrame,
     # the curation disposition feeds the kept-branch split AND the
     # pass-through union — cut it once or the whole dedup chain
     # (components loop included) executes per consumer
-    cur = mat(curation_keep_list(docs, use_lsh=use_lsh), "classifier_cur")
+    cur = mat(curation_keep_list(docs), "classifier_cur")
     kept = cur.where(F.col("status") == "kept") \
         .select("doc_id", "canonical")
     kept_docs = kept.select("doc_id").join(
@@ -229,7 +226,7 @@ def classifier_curation_keep_list(docs: DataFrame, positive: DataFrame,
     return kept_out.unionByName(others)
 
 
-def c4_curation_keep_list(docs: DataFrame, use_lsh: bool = False) -> DataFrame:
+def c4_curation_keep_list(docs: DataFrame) -> DataFrame:
     """C4-first curation — the full public-pipeline stage order
     (C4 / RefinedWeb: clean lines → quality-filter → dedup):
 
@@ -264,8 +261,7 @@ def c4_curation_keep_list(docs: DataFrame, use_lsh: bool = False) -> DataFrame:
     )
     passed = rated.where(F.col("c4_keep")).select(
         "doc_id", F.col("clean_text").alias("text"))
-    return curation_with_quality(passed, use_lsh=use_lsh) \
-        .unionByName(rejected)
+    return curation_with_quality(passed).unionByName(rejected)
 
 
 HOST_PATTERN = r"^[a-z][a-z0-9+.-]*://([^/?#]+)"

@@ -26,12 +26,24 @@ from .materialize import RoundMaterializer
 # (a, x < 2^31 → a*x < 2^62).
 _MERSENNE_P = (1 << 31) - 1
 
+# The one near-dup configuration: 5-word shingles, and MinHash
+# signatures of 64 permutations banded 16 × 4 rows for LSH. The
+# curation chains' DuckDB replays (plans/catalog.py) hard-code the
+# same 5-word shingles.
+SHINGLE_K = 5
+MINHASH_NUM_HASHES = 64
+MINHASH_BANDS = 16
 
-def _perm_params(num_hashes: int) -> list[tuple[int, int]]:
+# near_dup_components' round budget; pointer jumping converges in
+# O(log diameter) rounds (a 25-doc chain takes ~5).
+COMPONENT_MAX_ROUNDS = 20
+
+
+def _perm_params() -> list[tuple[int, int]]:
     # deterministic LCG-derived (a, b) pairs; a must be non-zero
     params = []
     state = 0x5DEECE66D
-    for _ in range(num_hashes):
+    for _ in range(MINHASH_NUM_HASHES):
         state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
         a = (state % (_MERSENNE_P - 1)) + 1
         state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
@@ -48,15 +60,15 @@ def _raw_words(text):
     return F.split(F.trim(text), r"\s+")
 
 
-def shingle_hash_array(df: DataFrame, k: int = 5,
+def shingle_hash_array(df: DataFrame,
                        keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, shingle_hashes array<bigint>): one 64-bit hash per
-    k-word shingle WITHOUT materializing shingle strings.
+    ``SHINGLE_K``-word shingle WITHOUT materializing shingle strings.
 
     Each word is xxhash64'd once in a bound projection
-    (functions/text.py), then every k-window folds with an XOR-rotate
-    combine — bit ops only, so no ANSI overflow and no per-shingle
-    string allocation. Short
+    (functions/text.py), then every SHINGLE_K-window folds with an
+    XOR-rotate combine — bit ops only, so no ANSI overflow and no
+    per-shingle string allocation. Short
     documents fall back to the whole text as one shingle so no
     document vanishes.
     """
@@ -77,17 +89,18 @@ def shingle_hash_array(df: DataFrame, k: int = 5,
 
     zero = F.lit(0).cast("bigint")
     hashes = F.when(
-        n >= k,
+        n >= SHINGLE_K,
         F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.aggregate(F.slice(wh, i + 1, k), zero, rot_fold),
+            F.sequence(F.lit(0), n - SHINGLE_K),
+            lambda i: F.aggregate(F.slice(wh, i + 1, SHINGLE_K), zero,
+                                  rot_fold),
         ),
     ).otherwise(F.array(F.aggregate(wh, zero, rot_fold)))
     return with_wh.select("doc_id", *keep_cols,
                           hashes.alias("shingle_hashes"))
 
 
-def minhash_signatures(df: DataFrame, num_hashes: int = 64, k: int = 5,
+def minhash_signatures(df: DataFrame,
                        keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """Per-document MinHash signature: (doc_id, sig array<bigint>) —
     a NARROW map, zero shuffle.
@@ -117,20 +130,20 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 64, k: int = 5,
     NULL text to '' before hashing instead.
     """
     P = F.lit(_MERSENNE_P)
-    base = shingle_hash_array(df, k, keep_cols).select(
+    base = shingle_hash_array(df, keep_cols).select(
         "doc_id", *keep_cols,
         F.transform("shingle_hashes", lambda v: F.pmod(v, P)).alias("_hs"),
     )
     sig = F.array(*[
         F.array_min(F.transform(F.col("_hs"),
                                 lambda h: (F.lit(a) * h + F.lit(b)) % P))
-        for a, b in _perm_params(num_hashes)
+        for a, b in _perm_params()
     ])
     return base.select("doc_id", *keep_cols, sig.alias("sig"))
 
 
-def minhash_banded(df: DataFrame, num_hashes: int = 64, bands: int = 16,
-                   k: int = 5, keep_cols: tuple[str, ...] = ()) -> DataFrame:
+def minhash_banded(df: DataFrame,
+                   keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, [keep_cols...,] band, bucket) rows: the LSH banding of
     MinHash signatures.
 
@@ -142,13 +155,13 @@ def minhash_banded(df: DataFrame, num_hashes: int = 64, bands: int = 16,
     the streaming prefilter) through the otherwise doc_id-only output;
     the whole stage stays a narrow per-row map either way.
     """
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, num_hashes, k, keep_cols)
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
+    sig = minhash_signatures(df, keep_cols)
     return sig.select(
         "doc_id", *keep_cols,
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1)),
                 lambda b: F.struct(
                     b.alias("band"),
                     F.xxhash64(
@@ -166,11 +179,10 @@ def minhash_banded(df: DataFrame, num_hashes: int = 64, bands: int = 16,
     ).select("doc_id", *keep_cols, "bb.band", "bb.bucket")
 
 
-def minhash_lsh_candidates(df: DataFrame, num_hashes: int = 64,
-                           bands: int = 16, k: int = 5) -> DataFrame:
+def minhash_lsh_candidates(df: DataFrame) -> DataFrame:
     """LSH candidate pairs: (doc_a, doc_b, n_shared_bands).
 
-    Signature → ``bands`` band-hashes (xxhash64 over each signature
+    Signature → ``MINHASH_BANDS`` band-hashes (xxhash64 over each signature
     slice) → explode → intra-bucket equi-join on (band, bucket), never
     a cross join; AQE handles residual bucket skew. Bucket sizes are
     near-uniform, so the pair blow-up is bounded.
@@ -179,8 +191,7 @@ def minhash_lsh_candidates(df: DataFrame, num_hashes: int = 64,
     once: uncut, the shingle→signature pipeline (the expensive part)
     runs once per join side, ~2× the query.
     """
-    banded = RoundMaterializer()(
-        minhash_banded(df, num_hashes, bands, k), "banded")
+    banded = RoundMaterializer()(minhash_banded(df), "banded")
     return (
         banded.alias("l").join(banded.alias("r"), ["band", "bucket"])
         .where(F.col("l.doc_id") < F.col("r.doc_id"))
@@ -189,9 +200,9 @@ def minhash_lsh_candidates(df: DataFrame, num_hashes: int = 64,
     )
 
 
-def ngram_jaccard_pairs(df: DataFrame, k: int = 5, threshold: float = 0.5,
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
                         candidate_pairs: DataFrame | None = None) -> DataFrame:
-    """Exact n-gram Jaccard similarity.
+    """Exact ``SHINGLE_K``-gram Jaccard similarity.
 
     Distinct-shingle self-join: |A∩B| from the shingle equi-join,
     |A∪B| = |A|+|B|-|A∩B|. Stop-shingle skew is killed by dropping
@@ -227,7 +238,7 @@ def ngram_jaccard_pairs(df: DataFrame, k: int = 5, threshold: float = 0.5,
     BENCH round 5).
     """
     safe = df.withColumn("text", F.coalesce(F.col("text"), F.lit("")))
-    sh = shingle_hash_array(safe, k).select(
+    sh = shingle_hash_array(safe).select(
         "doc_id",
         F.explode(F.array_distinct("shingle_hashes")).alias("shingle"),
     )
@@ -361,7 +372,8 @@ def simhash_hamming_pairs(df: DataFrame, max_distance: int = 3) -> DataFrame:
     (bigint, int, bigint), so the shuffle grows 5× in row count but
     stays tiny per row — the right trade at 100 TB. Candidates are
     exact-verified with bit_count XOR, so output = true pairs exactly;
-    equivalence with the chunked form is pinned by test.
+    equivalence with the chunked form is pinned by test
+    (tests/test_operators.py keeps that twin).
 
     The keyed frame feeds both sides of the self-join, so it is cut
     once: uncut, the token explode + 64 bit-vote aggregation (the
@@ -404,49 +416,16 @@ def simhash_hamming_pairs(df: DataFrame, max_distance: int = 3) -> DataFrame:
     return _hamming_filter(pairs, max_distance)
 
 
-def _simhash_hamming_pairs_chunked(df: DataFrame,
-                                   max_distance: int = 3) -> DataFrame:
-    """Round-2 4×16-bit chunk blocking, kept ONLY as the equivalence
-    twin for the Manku-key form above (both blockings are recall-exact
-    for d≤3, so outputs must be identical). Not for production: bucket
-    occupancy N/65,536 goes quadratic at ≥10⁹ docs."""
-    assert max_distance <= 3, "4-chunk pigeonhole only guarantees d<=3"
-    sig = simhash_64(df)
-    chunks = sig.select(
-        "doc_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(i).alias("chunk_idx"),
-                F.shiftrightunsigned("simhash", 16 * i)
-                .bitwiseAND(F.lit(0xFFFF)).alias("chunk_val"),
-            )
-            for i in range(4)
-        ])).alias("c"),
-    ).select("doc_id", "simhash", "c.chunk_idx", "c.chunk_val")
-    pairs = (
-        chunks.alias("a").join(chunks.alias("b"), ["chunk_idx", "chunk_val"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    return _hamming_filter(pairs, max_distance)
-
-
-def _hyperplanes(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
+def _hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     """Deterministic gaussian hyperplanes (seeded, no wall clock)."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(7)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def embedding_lsh_signatures(emb: DataFrame, dim: int, n_planes: int = 12,
-                             seed: int = 7) -> DataFrame:
+def embedding_lsh_signatures(emb: DataFrame, dim: int,
+                             n_planes: int = 12) -> DataFrame:
     """Random-hyperplane (SimHash-for-vectors) bucket per embedding.
 
     All planes live in ONE flattened literal array (a single Literal
@@ -458,7 +437,7 @@ def embedding_lsh_signatures(emb: DataFrame, dim: int, n_planes: int = 12,
     two ≡ bitwise OR). Cosine-similar vectors collide with probability
     (1 - θ/π)^n_planes.
     """
-    planes = _hyperplanes(n_planes, dim, seed)
+    planes = _hyperplanes(n_planes, dim)
     flat = F.lit([float(v) for plane in planes for v in plane])
     pows = F.lit([1 << i for i in range(n_planes)])
     dots = F.transform(
@@ -478,17 +457,17 @@ def embedding_lsh_signatures(emb: DataFrame, dim: int, n_planes: int = 12,
     return emb.select("vec_id", "embedding", sig.alias("lsh_bucket"))
 
 
-def embedding_near_dups(emb: DataFrame, dim: int, threshold: float = 0.95,
-                        n_planes: int = 12) -> DataFrame:
-    """Embedding-cosine near-duplicates: LSH bucket join + exact verify.
+def embedding_near_dups(emb: DataFrame, dim: int) -> DataFrame:
+    """Embedding-cosine near-duplicates (cosine >= 0.95): LSH bucket
+    join + exact verify.
 
-    The candidate join is an equi-join on the bucket id (never a cross
-    join); survivors are re-scored with the exact cosine so the output
-    is threshold-exact, merely recall-approximate.
+    The candidate join is an equi-join on the 12-plane bucket id (never
+    a cross join); survivors are re-scored with the exact cosine so the
+    output is threshold-exact, merely recall-approximate.
     """
     from .similarity import cosine_similarity_col
 
-    sig = embedding_lsh_signatures(emb, dim, n_planes)
+    sig = embedding_lsh_signatures(emb, dim)
     a, b = sig.alias("a"), sig.alias("b")
     cos = cosine_similarity_col(F.col("a.embedding"), F.col("b.embedding"))
     return (
@@ -497,7 +476,7 @@ def embedding_near_dups(emb: DataFrame, dim: int, threshold: float = 0.95,
         .select(F.col("a.vec_id").alias("vec_a"),
                 F.col("b.vec_id").alias("vec_b"),
                 F.round(cos, 4).alias("cosine_sim"))
-        .where(F.col("cosine_sim") >= threshold)
+        .where(F.col("cosine_sim") >= 0.95)
     )
 
 
@@ -538,7 +517,7 @@ def _components_driver_side(edges: DataFrame, pairs: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(out, schema)
 
 
-def near_dup_components(pairs: DataFrame, max_iters: int = 20,
+def near_dup_components(pairs: DataFrame,
                         small_graph_max_edges: int = 200_000) -> DataFrame:
     """Connected components over near-dup pairs → duplicate clusters.
 
@@ -549,7 +528,8 @@ def near_dup_components(pairs: DataFrame, max_iters: int = 20,
     current label's label — so convergence is O(log diameter), not
     O(diameter) (a 25-doc drifting-edit chain converges in ~5 rounds,
     not 24). Rounds are joins + aggregates, all JVM-side. If the loop
-    exhausts ``max_iters`` without reaching the fixpoint it RAISES —
+    exhausts ``COMPONENT_MAX_ROUNDS`` without reaching the fixpoint it
+    RAISES —
     silently wrong components would split real duplicate clusters.
 
     Per-round cost is ONE job (round-3 verdict #6): the previous label
@@ -600,7 +580,7 @@ def near_dup_components(pairs: DataFrame, max_iters: int = 20,
         "labels_init",
     )
     prev_tag = "labels_init"
-    for i in range(max_iters):
+    for i in range(COMPONENT_MAX_ROUNDS):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy(F.col("src").alias("doc_id"))
@@ -640,8 +620,9 @@ def near_dup_components(pairs: DataFrame, max_iters: int = 20,
         if changed == 0:
             return labels
     raise RuntimeError(
-        f"near_dup_components did not converge in {max_iters} rounds — "
-        "component diameter exceeds the iteration budget; raise max_iters"
+        f"near_dup_components did not converge in {COMPONENT_MAX_ROUNDS} "
+        "rounds — component diameter exceeds the iteration budget; raise "
+        "dedup.COMPONENT_MAX_ROUNDS"
     )
 
 

@@ -43,11 +43,11 @@ plans/catalog.py):
   arithmetic, immune to aggregation order. (Measured on the sf0.001
   corpus with the de slice as target: 63 of the 71 German documents
   land in the top-100, vs a 14% base rate.)
-* score headroom: w[b] tops out near ``scale * rtot`` for a
-  target-exclusive bucket; at the default ppm scale a corpus needs
+* score headroom: w[b] tops out near ``1e6 * rtot`` for a
+  target-exclusive bucket; at the ppm scale a corpus needs
   ~2^63 / (1e6 · grams_per_doc) raw grams before a per-doc BIGINT sum
   could overflow (ANSI mode raises rather than wraps) — raise
-  ``bucket_hexlen`` or lower ``scale`` long before that regime.
+  ``bucket_hexlen`` long before that regime.
 
 Scale shape: both count aggregations land on a BOUNDED key space
 (≤ 16^hexlen buckets — map-side combined, the reduce side is at most
@@ -79,8 +79,7 @@ def hashed_gram_buckets(words, bucket_hexlen: int = 3):
 
 def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
                     target_filter=None,
-                    bucket_hexlen: int = 3, scale: int = 1_000_000
-                    ) -> DataFrame:
+                    bucket_hexlen: int = 3) -> DataFrame:
     """Per-document target-domain importance score.
 
     Output: (doc_id, n_grams, score) — one row per input document;
@@ -161,7 +160,7 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None = None, *,
                  / ((F.col("cr").cast("double") + F.lit(1.0))
                     * F.greatest(F.col("ttot"), F.lit(1)).cast("double"))
                  - F.lit(1.0))
-                * F.lit(float(scale))
+                * F.lit(1e6)
             ).cast("bigint").alias("w_q"),
         )
         .where(F.col("w_q") != 0)

@@ -72,9 +72,8 @@ def extract_spans(docs: DataFrame) -> DataFrame:
 
 
 def salted_repartition(docs: DataFrame, num_partitions: int,
-                       partition_cols: tuple[str, ...] = ("doc_id",),
-                       heavy_threshold: int = 20,
-                       salt_buckets: int = 32) -> DataFrame:
+                       partition_cols: tuple[str, ...] = ("doc_id",)
+                       ) -> DataFrame:
     """Skew-aware repartition for media-heavy documents (SURVEY.md §4).
 
     Media-heavy docs (30-50 image spans) cost ~50x a text doc in the
@@ -83,14 +82,14 @@ def salted_repartition(docs: DataFrame, num_partitions: int,
     (source, batch, host prefix) runs the stage at the speed of the
     tail task. This keeps ``partition_cols`` in the key (preserving
     whatever co-location the caller wanted) but salts heavy documents
-    by a per-doc hash so each heavy cluster spreads across up to
-    ``salt_buckets`` tasks. Pure column expressions — one exchange.
+    (20+ image spans) by a per-doc hash so each heavy cluster spreads
+    across up to 32 tasks. Pure column expressions — one exchange.
     See scripts/skew_report.py for the measured A/B.
     """
     img_count = F.size(F.filter("spans", lambda s: s["kind"] == F.lit("image")))
     salt = F.when(
-        img_count >= heavy_threshold,
-        F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)),
+        img_count >= 20,
+        F.pmod(F.xxhash64("doc_id"), F.lit(32)),
     ).otherwise(F.lit(0))
     return (
         docs.withColumn("_salt", salt)

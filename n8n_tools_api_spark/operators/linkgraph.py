@@ -35,7 +35,7 @@ plans/catalog.py):
   the Common Crawl host graph applies);
 * nodes are every host appearing on either side of an edge;
 * PageRank is the textbook damped iteration with ALL-INTEGER
-  arithmetic: with ``N`` nodes and rank scale ``S`` (default 10^12),
+  arithmetic: with ``N`` nodes and rank scale ``S`` (10^12),
 
       r_0[h]   = S div N
       r_k+1[h] = (15 * (S div N) + 85 * Σ_{e: src→h} (r_k[src] div
@@ -94,12 +94,11 @@ def extract_host_edges(pages: DataFrame) -> DataFrame:
     )
 
 
-def host_link_stats(pages: DataFrame, iterations: int = 2,
-                    scale: int = 10 ** 12) -> DataFrame:
+def host_link_stats(pages: DataFrame, iterations: int = 2) -> DataFrame:
     """Per-host degrees + integer PageRank after ``iterations`` rounds.
 
-    Output: (host, out_deg, in_deg, pr) — ``pr`` on the ``scale``
-    integer grid.  Construction is fully declarative (the node count
+    Output: (host, out_deg, in_deg, pr) — ``pr`` on the 10^12 integer
+    grid.  Construction is fully declarative (the node count
     is a broadcast 1-row aggregate, never a driver ``collect``), so
     the whole computation is one lazy plan.
 
@@ -124,7 +123,7 @@ def host_link_stats(pages: DataFrame, iterations: int = 2,
 
     base = (
         nodes.crossJoin(F.broadcast(n_frame))
-        .withColumn("_r0", F.expr(f"cast({scale} as bigint) div _n"))
+        .withColumn("_r0", F.expr("cast(1000000000000 as bigint) div _n"))
     )
     ranks = base.select("host", F.col("_r0").alias("pr"), "_r0")
     # degree/rank frames are #hosts-sized (≪ #pages but potentially

@@ -247,10 +247,7 @@ def _detect_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         })
 
 
-def ccnet_keep_list(docs: DataFrame, *,
-                    train_seed: int = 271828, train_rate: float = 0.3,
-                    tail_seed: int = 314159, tail_rate: float = 0.1
-                    ) -> DataFrame:
+def ccnet_keep_list(docs: DataFrame) -> DataFrame:
     """The composed CCNet pipeline in the paper's stage order (Wenzek
     et al. 2020 §3): language ID → per-detected-language LM perplexity
     → head/middle/tail split → disposition.  The reference's A6
@@ -259,7 +256,9 @@ def ccnet_keep_list(docs: DataFrame, *,
     stands in for fastText, grouping the LM by DETECTED language, not
     any metadata column; pages the detector can't identify
     (``unknown``: blank or best coverage ≤ 0.5) are gated out BEFORE
-    the LM, exactly like CCNet's lang-ID threshold.
+    the LM, exactly like CCNet's lang-ID threshold. The LM trains on
+    the md5-prefix sample (operators/sampling.py) of rate 0.3 at seed
+    271828.
 
     Disposition ladder (one status per input document):
 
@@ -269,9 +268,9 @@ def ccnet_keep_list(docs: DataFrame, *,
       words): bucket ``none``;
     * ``kept_head`` / ``kept_middle`` — CCNet keeps these outright;
     * ``kept_tail_sampled`` / ``rejected_tail`` — the tail third is
-      downsampled at ``tail_rate`` with the engine-portable md5-prefix
-      key (operators/sampling.py), CCNet's "discard or subsample the
-      tail" convention made deterministic.
+      downsampled at rate 0.1 (seed 314159) with the engine-portable
+      md5-prefix key (operators/sampling.py), CCNet's "discard or
+      subsample the tail" convention made deterministic.
 
     Output: (doc_id, detected, n_bigrams, ppx_q16, tile, bucket,
     status).  Scale shape: the detector is one narrow Arrow stage
@@ -291,8 +290,8 @@ def ccnet_keep_list(docs: DataFrame, *,
         "ccnet_detected",
     )
     known = detected.where(F.col("detected") != "unknown")
-    train = sample_key(F.col("doc_id"), train_seed) \
-        < F.lit(sample_threshold_hex(train_rate))
+    train = sample_key(F.col("doc_id"), 271828) \
+        < F.lit(sample_threshold_hex(0.3))
     scored = ccnet_buckets(lm_perplexity(known, train, group_col="detected"))
     kept = scored.select(
         "doc_id",
@@ -301,8 +300,8 @@ def ccnet_keep_list(docs: DataFrame, *,
         F.when(F.col("bucket") == "none", F.lit("rejected_empty"))
         .when(F.col("bucket") == "head", F.lit("kept_head"))
         .when(F.col("bucket") == "middle", F.lit("kept_middle"))
-        .when(sample_key(F.col("doc_id"), tail_seed)
-              < F.lit(sample_threshold_hex(tail_rate)),
+        .when(sample_key(F.col("doc_id"), 314159)
+              < F.lit(sample_threshold_hex(0.1)),
               F.lit("kept_tail_sampled"))
         .otherwise(F.lit("rejected_tail")).alias("status"),
     )

@@ -27,8 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def distinct_media_blobs(docs: DataFrame, prefix: str = "media") -> DataFrame:
-    """Distinct decoded media blobs with content-addressed refs.
+def distinct_media_blobs(docs: DataFrame) -> DataFrame:
+    """Distinct decoded media blobs with content-addressed refs
+    (``media/<key>.<ext>``, the refsem.media_ref_for layout).
 
     Input: interleaved documents (pre-extraction — image span text holds
     base64). Output: (media_key, media_ref, ext, media_bytes) — one row
@@ -52,7 +53,7 @@ def distinct_media_blobs(docs: DataFrame, prefix: str = "media") -> DataFrame:
     return (
         decoded.select(
             key.alias("media_key"),
-            F.concat(F.lit(prefix + "/"), key, F.lit("."), ext).alias("media_ref"),
+            F.concat(F.lit("media/"), key, F.lit("."), ext).alias("media_ref"),
             ext.alias("ext"),
             F.col("media_bytes"),
         )

@@ -191,27 +191,25 @@ def decode_media(assets: DataFrame) -> DataFrame:
     )
 
 
-def resize_plan(decoded: DataFrame, max_width: int = 512,
-                max_height: int = 512) -> DataFrame:
+def resize_plan(decoded: DataFrame) -> DataFrame:
     """Fit-in-box resize plan over decode_media output — pure column
     math, no UDF.
 
     Training pipelines normalize image sizes before feature extraction;
     the PLAN (target dims, scale) is closed-form from the decoded
-    header dims: ``scale = min(1, max_w/w, max_h/h)`` (never upscale),
-    output dims floored with a 1px floor-guard, aspect preserved. The
-    pixel resample itself would be a Pandas-UDF stage shaped exactly
-    like decode_media (no image library in this container — a real
-    deployment drops PIL/cv2 into the same mapInPandas signature);
-    everything up to the pixels is real, typed, and DuckDB-replayable
-    (oracle: ``media_resize_plan``).
+    header dims: ``scale = min(1, 512/w, 512/h)`` (a 512×512 box,
+    never upscale), output dims floored with a 1px floor-guard, aspect
+    preserved. The pixel resample itself would be a Pandas-UDF stage
+    shaped exactly like decode_media (no image library in this
+    container — a real deployment drops PIL/cv2 into the same
+    mapInPandas signature); everything up to the pixels is real,
+    typed, and DuckDB-replayable (oracle: ``media_resize_plan``).
     """
     from pyspark.sql import functions as F
 
     w = F.col("width").cast("double")
     h = F.col("height").cast("double")
-    scale = F.least(F.lit(1.0), F.lit(float(max_width)) / w,
-                    F.lit(float(max_height)) / h)
+    scale = F.least(F.lit(1.0), F.lit(512.0) / w, F.lit(512.0) / h)
     return decoded.select(
         "media_key", "kind", "width", "height", "n_channels",
         F.greatest(F.lit(1), F.floor(w * scale)).cast("int")
@@ -223,17 +221,19 @@ def resize_plan(decoded: DataFrame, max_width: int = 512,
     )
 
 
-def sample_frames(assets: DataFrame, fps: float = 2.0,
-                  max_frames: int = 16,
-                  bytes_per_second: int = 1024) -> DataFrame:
+# sample_frames' grid: frames at 1/FRAME_FPS-second intervals
+FRAME_FPS = 2.0
+
+
+def sample_frames(assets: DataFrame) -> DataFrame:
     """Frame-sampling plan for audio/video payloads — one row per
     sampled frame: (media_key, kind, frame_idx, ts_ms).
 
     No ffmpeg in this container, so duration comes from the documented
-    deterministic fake (``n_bytes / bytes_per_second`` — a fixed fake
+    deterministic fake (``n_bytes / 1024`` seconds — a fixed fake
     bitrate); the sampling grid itself is the real logic a decoder
-    would drive: frames at 1/fps intervals from t=0, capped at
-    ``max_frames`` (cap logged per-asset as ``frames_dropped``). The
+    would drive: frames at 1/FRAME_FPS intervals from t=0, capped at
+    16 (cap logged per-asset as ``frames_dropped``). The
     fan-out is a JVM-side ``explode(sequence(...))`` — the fat payload
     column is dropped before the explode so bytes never multiply.
     A real deployment swaps the duration fake for an ffprobe
@@ -242,9 +242,6 @@ def sample_frames(assets: DataFrame, fps: float = 2.0,
     """
     from pyspark.sql import functions as F
 
-    if max_frames < 1:
-        raise ValueError(f"max_frames must be >= 1, got {max_frames} "
-                         "(0 would build a descending frame sequence)")
     # NULL media_bytes would propagate through n_total/n_kept into
     # sequence() and explode() would then drop the row with no frames
     # and no frames_dropped accounting (advice finding) — coalesce to
@@ -253,10 +250,10 @@ def sample_frames(assets: DataFrame, fps: float = 2.0,
     # decode_media's fallback row.
     payload = F.coalesce(F.col("media_bytes"), F.lit(b""))
     duration_ms = (F.length(payload).cast("double")
-                   / F.lit(float(bytes_per_second)) * 1000)
-    n_total = (F.floor(duration_ms / 1000 * F.lit(float(fps)))
+                   / F.lit(1024.0) * 1000)
+    n_total = (F.floor(duration_ms / 1000 * F.lit(FRAME_FPS))
                .cast("int") + 1)
-    n_kept = F.least(F.lit(max_frames), n_total)
+    n_kept = F.least(F.lit(16), n_total)
     base = assets.where(F.col("kind").isin("audio", "video")).select(
         "media_key", "kind",
         n_total.alias("_n_total"), n_kept.alias("_n_kept"),
@@ -268,7 +265,7 @@ def sample_frames(assets: DataFrame, fps: float = 2.0,
         (F.col("_n_total") - F.col("_n_kept")).alias("frames_dropped"),
     ).select(
         "media_key", "kind", "frame_idx",
-        F.round(F.col("frame_idx") / F.lit(float(fps)) * 1000, 4)
+        F.round(F.col("frame_idx") / F.lit(FRAME_FPS) * 1000, 4)
         .alias("ts_ms"),
         "frames_dropped",
     )

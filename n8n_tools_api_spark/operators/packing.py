@@ -203,13 +203,13 @@ def shard_manifest(docs: DataFrame, n_shards: int, seed: int = 7,
 
 
 def write_training_shards(docs: DataFrame, path: str, n_shards: int,
-                          seed: int = 7, mode: str = "hashed",
                           fmt: str = "json") -> DataFrame:
     """Materialize the corpus as deterministic training-shard FILES —
     the sink that closes the curation → :func:`shard_manifest` →
     on-disk loop every public pipeline ends with (The Pile, FineWeb,
     and Dolma all ship shuffled shard files; training loaders consume
-    shards, not a table).
+    shards, not a table). The manifest is shard_manifest's scale path
+    (``mode="hashed"``) at its default seed.
 
     Layout: ``path/shard=K/part-*`` (``json`` lines or ``parquet``),
     each shard directory holding its documents in ``pos_in_shard``
@@ -232,7 +232,7 @@ def write_training_shards(docs: DataFrame, path: str, n_shards: int,
     """
     if fmt not in ("json", "parquet"):
         raise ValueError(f"fmt must be 'json' or 'parquet', got {fmt!r}")
-    man = shard_manifest(docs, n_shards, seed=seed, mode=mode)
+    man = shard_manifest(docs, n_shards, mode="hashed")
     rows = (
         docs.drop("shard", "pos_in_shard")
         .withColumn("__sid", F.col("doc_id").cast("string"))

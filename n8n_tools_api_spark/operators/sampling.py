@@ -75,13 +75,13 @@ def stratified_sample(docs: DataFrame, rates: dict[str, float],
 
 
 def mixture_report(docs: DataFrame, rates: dict[str, float],
-                   seed: int = 42,
                    default_rate: float = 1.0) -> DataFrame:
-    """Per-stratum audit of the sample the same parameters would keep:
-    (stratum, threshold, n_docs, n_kept, realized_rate) — the mixture
-    sheet a training run records next to its data config."""
+    """Per-stratum audit of the sample :func:`stratified_sample` keeps
+    with the same rates at its default seed 42: (stratum, threshold,
+    n_docs, n_kept, realized_rate) — the mixture sheet a training run
+    records next to its data config."""
     strata = F.col("lang")
-    kept = (sample_key(F.col("doc_id"), seed) <
+    kept = (sample_key(F.col("doc_id"), 42) <
             _threshold_col(strata, rates, default_rate)).cast("int")
     return (
         docs.select(strata.alias("stratum"), kept.alias("_kept"))

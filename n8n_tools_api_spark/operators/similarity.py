@@ -20,6 +20,9 @@ from pyspark.sql.window import Window
 
 from ..functions.pyworker import udf_body
 
+# Every top-k here (brute, IVF, and the recall evidence) ranks 10 hits.
+TOP_K = 10
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -32,8 +35,8 @@ def cosine_similarity_col(a, b):
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
-def brute_force_topk(emb: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
-    """Exact cosine top-k against one stored vector (broadcast)."""
+def brute_force_topk(emb: DataFrame, query_vec_id: int) -> DataFrame:
+    """Exact cosine top-``TOP_K`` against one stored vector (broadcast)."""
     q = (emb.where(F.col("vec_id") == query_vec_id)
          .select(F.col("embedding").alias("_q")))
     return (
@@ -43,7 +46,7 @@ def brute_force_topk(emb: DataFrame, query_vec_id: int, k: int = 10) -> DataFram
                 F.round(cosine_similarity_col(F.col("embedding"), F.col("_q")), 4)
                 .alias("cosine_sim"))
         .orderBy(F.desc("cosine_sim"), "vec_id")
-        .limit(k)
+        .limit(TOP_K)
     )
 
 
@@ -174,12 +177,12 @@ def kmeans_refine(emb: DataFrame, nlist: int = 16, iters: int = 2
     return centroids
 
 
-def ann_recall_at_k(emb: DataFrame, n_queries: int = 8, k: int = 10,
+def ann_recall_at_k(emb: DataFrame, n_queries: int = 8,
                     nlist: int = 16,
                     nprobes: tuple[int, ...] = (1, 4, 16)) -> DataFrame:
-    """Recall@k evidence for the IVF index vs the exact brute-force
-    baseline (round-2 verdict #6): one row per nprobe with the mean
-    recall over the ``n_queries`` smallest-id query vectors.
+    """Recall@``TOP_K`` evidence for the IVF index vs the exact
+    brute-force baseline (round-2 verdict #6): one row per nprobe with
+    the mean recall over the ``n_queries`` smallest-id query vectors.
 
     Everything is ONE DataFrame program per nprobe — the brute top-k
     for all queries is a single window over the corpus×queries
@@ -208,14 +211,15 @@ def ann_recall_at_k(emb: DataFrame, n_queries: int = 8, k: int = 10,
         .where(F.col("vec_id") != F.col("qid"))
         .withColumn("cosine_sim", sim)
         .withColumn("_rn", F.row_number().over(wq))
-        .where(F.col("_rn") <= k)
+        .where(F.col("_rn") <= TOP_K)
         .select("qid", "vec_id"),
         "brute",
     )
-    # recall denominator = the ACTUAL brute-pair count, not n_queries*k:
-    # on a corpus with fewer than k+1 vectors each query's brute top-k
-    # has <k rows, and dividing by the literal would break the
-    # "recall == 1.0 at nprobe == nlist" invariant (review finding).
+    # recall denominator = the ACTUAL brute-pair count, not
+    # n_queries*TOP_K: on a corpus with fewer than TOP_K+1 vectors each
+    # query's brute top-k has <TOP_K rows, and dividing by the literal
+    # would break the "recall == 1.0 at nprobe == nlist" invariant
+    # (review finding).
     # brute is cut, so this count is the one pass that computes it.
     n_brute = max(brute.count(), 1)
     centroids, assigned = ivf_assign(emb, nlist)
@@ -239,7 +243,7 @@ def ann_recall_at_k(emb: DataFrame, n_queries: int = 8, k: int = 10,
             .where(F.col("vec_id") != F.col("qid"))
             .withColumn("cosine_sim", sim)
             .withColumn("_rn", F.row_number().over(wq))
-            .where(F.col("_rn") <= k)
+            .where(F.col("_rn") <= TOP_K)
             .select("qid", "vec_id")
         )
         row = (
@@ -247,23 +251,23 @@ def ann_recall_at_k(emb: DataFrame, n_queries: int = 8, k: int = 10,
             .agg((F.count("*") / F.lit(n_brute)).alias("recall_at_k"))
             .select(F.lit(np_).alias("nprobe"),
                     F.lit(n_queries).alias("n_queries"),
-                    F.lit(k).alias("k"),
+                    F.lit(TOP_K).alias("k"),
                     F.round("recall_at_k", 4).alias("recall_at_k"))
         )
         out = row if out is None else out.unionByName(row)
     return out.orderBy("nprobe")
 
 
-def ivf_topk(emb: DataFrame, query_vec_id: int, k: int = 10, nlist: int = 16,
-             nprobe: int = 4) -> DataFrame:
-    """ANN top-k: probe the query's ``nprobe`` nearest clusters only."""
-    centroids, assigned = ivf_assign(emb, nlist)
+def ivf_topk(emb: DataFrame, query_vec_id: int) -> DataFrame:
+    """ANN top-``TOP_K``: probe the query's 4 nearest of the 16 IVF
+    clusters only."""
+    centroids, assigned = ivf_assign(emb)
     q = emb.where(F.col("vec_id") == query_vec_id).select(F.col("embedding").alias("_q"))
     probe_clusters = (
         centroids.crossJoin(F.broadcast(q))
         .withColumn("_score", cosine_similarity_col(F.col("centroid"), F.col("_q")))
         .orderBy(F.desc("_score"), "cluster_id")
-        .limit(nprobe)
+        .limit(4)
         .select("cluster_id")
     )
     return (
@@ -274,7 +278,7 @@ def ivf_topk(emb: DataFrame, query_vec_id: int, k: int = 10, nlist: int = 16,
                 F.round(cosine_similarity_col(F.col("embedding"), F.col("_q")), 4)
                 .alias("cosine_sim"))
         .orderBy(F.desc("cosine_sim"), "vec_id")
-        .limit(k)
+        .limit(TOP_K)
     )
 
 

@@ -398,7 +398,7 @@ def c4_badwords_filter(docs: DataFrame, badwords: list[str]) -> DataFrame:
     )
 
 
-def dataset_card(docs: DataFrame, short_doc_tokens: int = 32) -> DataFrame:
+def dataset_card(docs: DataFrame) -> DataFrame:
     """Dataset-card rollup — the PUBLISHING stage of a training-data
     pipeline (the statistics table a released corpus ships with, the
     Dolma / FineWeb dataset-card convention): per (lang, source)
@@ -411,7 +411,7 @@ def dataset_card(docs: DataFrame, short_doc_tokens: int = 32) -> DataFrame:
     * token counts are the repo-standard whitespace split (NULL text →
       zero tokens); char counts are ``length(coalesce(text, ''))``;
     * ``n_empty`` counts zero-token documents; ``short_docs`` counts
-      documents under ``short_doc_tokens`` tokens (empty included);
+      documents under 32 tokens (empty included);
     * rollup levels are labelled with the literal ``'ALL'`` via
       ``grouping()`` — NOT by coalescing nulls, so a genuine NULL
       dimension value can never masquerade as a subtotal;
@@ -438,7 +438,7 @@ def dataset_card(docs: DataFrame, short_doc_tokens: int = 32) -> DataFrame:
         .alias("n_empty"),
         F.sum("n_tok").cast("bigint").alias("total_tokens"),
         F.sum("n_ch").cast("bigint").alias("total_chars"),
-        F.sum((F.col("n_tok") < short_doc_tokens).cast("int"))
+        F.sum((F.col("n_tok") < 32).cast("int"))
         .cast("bigint").alias("short_docs"),
         F.max("n_tok").cast("bigint").alias("max_tokens"))
     labels = [F.when(F.col(f"_g_{d}") == 1, F.lit("ALL"))

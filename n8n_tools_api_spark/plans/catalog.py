@@ -800,7 +800,7 @@ def event_sessions_full(spark, sf_dir):
     from n8n_tools_api_spark.streaming.stateful import sessionize_batch
 
     ev = _t(spark, sf_dir, "events")
-    s = sessionize_batch(ev, gap_minutes=30)
+    s = sessionize_batch(ev)
     return s.select(
         "user_id",
         F.unix_micros(F.col("session_start").cast("timestamp_ltz")).alias("start_us"),
@@ -1304,7 +1304,7 @@ def ngram_jaccard_dups(spark, sf_dir):
                 .alias("text"))
     )
     corpus = docs.unionByName(mutated)
-    return ngram_jaccard_pairs(corpus, k=5, threshold=0.5).orderBy("doc_a", "doc_b")
+    return ngram_jaccard_pairs(corpus, threshold=0.5).orderBy("doc_a", "doc_b")
 
 
 # DuckDB twin: regexp_split + list-comprehension 5-gram shingles,
@@ -1801,8 +1801,7 @@ def media_resize_plan(spark, sf_dir):
         F.lit("image").alias("kind"),
         F.unhex(payload_hex).alias("media_bytes"),
     )
-    return resize_plan(decode_media(assets), max_width=512,
-                       max_height=512).orderBy("media_key")
+    return resize_plan(decode_media(assets)).orderBy("media_key")
 
 
 # Closed-form replay: dims/channels from the doc_id arithmetic the
@@ -1834,8 +1833,8 @@ ORDER BY media_key
 def media_frame_samples(spark, sf_dir):
     """MULTIMODAL FRAME-SAMPLE ORACLE: the frame-sampling plan
     (operators/multimodal.py::sample_frames — documented deterministic
-    duration fake at 1024 B/s, real 1/fps sampling grid with a
-    max_frames cap) over audio/video payloads built in-query; DuckDB
+    duration fake at 1024 B/s, real 2-fps sampling grid with a
+    16-frame cap) over audio/video payloads built in-query; DuckDB
     replays duration → frame count → timestamps closed-form, including
     the cap's frames_dropped accounting."""
     from n8n_tools_api_spark.operators.multimodal import sample_frames
@@ -1850,9 +1849,7 @@ def media_frame_samples(spark, sf_dir):
         .alias("kind"),
         F.unhex(F.repeat(F.lit("AB"), n_bytes)).alias("media_bytes"),
     )
-    return sample_frames(assets, fps=2.0, max_frames=16,
-                         bytes_per_second=1024) \
-        .orderBy("media_key", "frame_idx")
+    return sample_frames(assets).orderBy("media_key", "frame_idx")
 
 
 MEDIA_FRAMES_SQL = """
@@ -3397,8 +3394,7 @@ def classifier_curation_keep_list_q(spark, sf_dir):
               .unionByName(marked(330, 360, "qbad_", _QCLF_NEG_MARK)))
     pos = marked(0, 60, "t_", _QCLF_POS_MARK, even_only=True)
     neg = marked(60, 120, "t_", _QCLF_NEG_MARK, even_only=True)
-    return classifier_curation_keep_list(corpus, pos, neg,
-                                         use_lsh=False).orderBy("doc_id")
+    return classifier_curation_keep_list(corpus, pos, neg).orderBy("doc_id")
 
 
 _CLF_CUR_CORPUS_CTE = _CURATION_CORPUS_CTE.replace(
@@ -3504,7 +3500,7 @@ def c4_curation_keep_list_q(spark, sf_dir):
                              F.lit(" with extra words."))).alias("text"))
     corpus = (base.unionByName(copies).unionByName(muts).unionByName(js)
               .unionByName(brc).unionByName(rep))
-    return c4_curation_keep_list(corpus, use_lsh=False).orderBy("doc_id")
+    return c4_curation_keep_list(corpus).orderBy("doc_id")
 
 
 _C4_FIXTURE_CTES = r"""san AS (
@@ -4232,8 +4228,7 @@ def mixture_sample_report_q(spark, sf_dir):
             F.lit(None).cast("string").alias("lang"))
     )
     rates = {"en": 1.0, "de": 0.5, "fr": 0.25, "es": 0.1, "zh": 0.0}
-    return mixture_report(corpus, rates, seed=42,
-                          default_rate=0.75) \
+    return mixture_report(corpus, rates, default_rate=0.75) \
         .orderBy(F.col("stratum").asc_nulls_first())
 
 

@@ -64,7 +64,7 @@ def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = docs.unionByName(mutated)
     return (
-        minhash_lsh_candidates(corpus, num_hashes=64, bands=16, k=5)
+        minhash_lsh_candidates(corpus)
         .where(F.col("n_shared_bands") >= 2)
         .orderBy("doc_a", "doc_b")
     )
@@ -119,7 +119,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from n8n_tools_api_spark.operators.similarity import ivf_topk
 
     emb = _rt(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, query_vec_id=0, k=10, nlist=16, nprobe=4)
+    return ivf_topk(emb, query_vec_id=0)
 
 
 def ann_recall_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,8 +130,7 @@ def ann_recall_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from n8n_tools_api_spark.operators.similarity import ann_recall_at_k
 
     emb = _rt(spark, sf_dir, "embeddings")
-    return ann_recall_at_k(emb, n_queries=8, k=10, nlist=16,
-                           nprobes=(1, 4, 16))
+    return ann_recall_at_k(emb, n_queries=8, nlist=16, nprobes=(1, 4, 16))
 
 
 def ann_kmeans_refined_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,7 +220,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = emb.unionByName(jittered)
     return (
-        embedding_near_dups(corpus, dim=dim, threshold=0.95)
+        embedding_near_dups(corpus, dim=dim)
         .orderBy("vec_a", "vec_b")
     )
 

@@ -37,7 +37,9 @@ of its descendants.
 
 Nothing here recurses, so nesting depth is bounded only by memory: each
 element is popped once, and a kept block's text is gathered with an
-explicit stack.
+explicit stack. A per-tag count of open elements answers "is one of
+this name open?" in O(1), so an end tag that matches nothing costs no
+stack scan however deep the nesting.
 """
 
 from __future__ import annotations
@@ -106,11 +108,13 @@ def _score(node: _Node, slots: list) -> None:
     slots[node.slot] = " ".join(parts)
 
 
-def _pop_to(stack: list[_Node], depth: int, slots: list) -> None:
+def _pop_to(stack: list[_Node], depth: int, slots: list,
+            n_open: dict[str, int]) -> None:
     """Close the open elements above ``depth``: a block is scored, any
     other element folds its measures into its parent."""
     while len(stack) > depth:
         node = stack.pop()
+        n_open[node.tag] -= 1
         if node.slot >= 0:
             _score(node, slots)
         else:
@@ -133,6 +137,7 @@ def strip_boilerplate(html: str) -> str:
     stack = [root]
     top = root
     slots: list = [None]
+    n_open: dict[str, int] = {}  # open elements per tag name
     drop = 0
     # split gives the text before the first token, then (slash, name,
     # text after it) per token; a leading (None, None) makes it triples
@@ -146,11 +151,12 @@ def strip_boilerplate(html: str) -> str:
             elif tag in VOID_TAGS:
                 pass
             elif close:
-                for i in range(len(stack) - 1, 0, -1):
-                    if stack[i].tag == tag:
-                        _pop_to(stack, i, slots)
-                        top = stack[-1]
-                        break
+                if n_open.get(tag):
+                    i = len(stack) - 1
+                    while stack[i].tag != tag:
+                        i -= 1
+                    _pop_to(stack, i, slots, n_open)
+                    top = stack[-1]
             elif tag in DROP_TAGS:
                 drop = 1
             else:
@@ -161,6 +167,7 @@ def strip_boilerplate(html: str) -> str:
                     node = _Node(tag, -1)
                     top.kids.append(node)
                 stack.append(node)
+                n_open[tag] = n_open.get(tag, 0) + 1
                 top = node
         if data and not drop:
             if "&" in data:
@@ -169,6 +176,6 @@ def strip_boilerplate(html: str) -> str:
             if text:
                 top.parts.append(text)
                 top.chars += len(text)
-    _pop_to(stack, 1, slots)
+    _pop_to(stack, 1, slots, n_open)
     _score(root, slots)
     return "\n\n".join(s for s in slots if s)

@@ -104,13 +104,19 @@ def detect_image_format_full(base64_data: str) -> str:
     return "unknown"
 
 
-def validate_base64_image(base64_data: str, min_bytes: int = 50) -> bool:
+# The image gate: a payload must decode to MORE than this many bytes
+# (ocr_response_formatter.py:454-475, _validate_base64_image).
+MIN_IMAGE_BYTES = 50
+
+
+def validate_base64_image(base64_data: str) -> bool:
     """Is this plausibly a real image payload?
 
     Parity (pinned canonical path): ocr_response_formatter.py:454-475
-    (_validate_base64_image) — decodes and requires > 50 bytes. The
-    reference also has ≥100-byte variants with signature checks
-    (mistral_service.py:729-766, ocr_s3_processor.py:310-347); the
+    (_validate_base64_image) — decodes and requires more than
+    ``MIN_IMAGE_BYTES`` (50) bytes. The reference also has ≥100-byte
+    variants with signature checks (mistral_service.py:729-766,
+    ocr_s3_processor.py:310-347); the
     pipeline routes all image spans through the formatter variant so a
     span has exactly one inclusion rule. One deliberate divergence:
     decoding goes through :func:`decode_base64_payload` (strict +
@@ -119,12 +125,12 @@ def validate_base64_image(base64_data: str, min_bytes: int = 50) -> bool:
     notion of "decodes" (review finding: the lenient/strict split could
     classify a span as a valid image yet give it an empty media_ref).
     """
-    return _is_image(decode_base64_payload(base64_data), min_bytes)
+    return _is_image(decode_base64_payload(base64_data))
 
 
-def _is_image(decoded: bytes | None, min_bytes: int = 50) -> bool:
+def _is_image(decoded: bytes | None) -> bool:
     """``validate_base64_image`` given the payload's decoded bytes."""
-    return decoded is not None and len(decoded) > min_bytes
+    return decoded is not None and len(decoded) > MIN_IMAGE_BYTES
 
 
 def image_size_info(base64_data: str) -> dict:

@@ -63,7 +63,6 @@ def get_spark(
     app_name: str = "n8n-tools-api-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 512,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults."""
@@ -92,7 +91,7 @@ def get_spark(
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))

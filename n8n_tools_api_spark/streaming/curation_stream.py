@@ -39,9 +39,8 @@ from .dedup_stream import _dedup_key, dedup_stream, with_content_hash
 from .neardup_stream import neardup_prefilter_batch_twin, neardup_prefilter_stream
 
 
-def curation_stream(docs: DataFrame, watermark: str = "10 minutes",
-                    num_hashes: int = 64, bands: int = 16,
-                    k: int = 5) -> DataFrame:
+def curation_stream(docs: DataFrame,
+                    watermark: str = "10 minutes") -> DataFrame:
     """(doc_id, event_time) of every document admitted by BOTH
     prefilter stages, emitted as soon as its micro-batch processes.
 
@@ -54,13 +53,11 @@ def curation_stream(docs: DataFrame, watermark: str = "10 minutes",
     # redefining it mid-pipeline, so the second stage inherits it
     return neardup_prefilter_stream(
         deduped.select("doc_id", "event_time", "text"),
-        watermark=watermark, num_hashes=num_hashes, bands=bands, k=k,
-        assume_watermarked=True,
+        watermark=watermark, assume_watermarked=True,
     )
 
 
-def curation_stream_batch_twin(docs: DataFrame, num_hashes: int = 64,
-                               bands: int = 16, k: int = 5) -> DataFrame:
+def curation_stream_batch_twin(docs: DataFrame) -> DataFrame:
     """Deterministic disposition of EVERY input document:
     (doc_id, event_time, stage) with stage ∈ {'admitted', 'exact_dup',
     'band_collision'}.
@@ -81,8 +78,7 @@ def curation_stream_batch_twin(docs: DataFrame, num_hashes: int = 64,
     exact_survivors = hashed.where(F.col("_rn") == 1) \
         .select("doc_id", "event_time", "text")
     band_admitted = neardup_prefilter_batch_twin(
-        exact_survivors, num_hashes=num_hashes, bands=bands,
-        k=k).select("doc_id")
+        exact_survivors).select("doc_id")
     return (
         hashed.join(band_admitted.withColumn("_adm", F.lit(1)),
                     "doc_id", "left")

@@ -24,7 +24,6 @@ def incremental_extract(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
 ) -> None:
     """Extract all not-yet-processed parquet files under ``input_dir``.
 
@@ -32,10 +31,7 @@ def incremental_extract(
     transform is the same ``extract_spans`` mapInPandas stage as batch —
     one code path, two execution modes.
     """
-    reader = spark.readStream.schema(INTERLEAVED_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
+    stream = spark.readStream.schema(INTERLEAVED_SCHEMA).parquet(input_dir)
     query = (
         extract_spans(stream)
         .writeStream.format("parquet")

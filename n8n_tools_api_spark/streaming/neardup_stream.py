@@ -38,8 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _banded(docs: DataFrame, num_hashes: int, bands: int,
-            k: int) -> DataFrame:
+def _banded(docs: DataFrame) -> DataFrame:
     """Band buckets with the NULL-text exemption applied.
 
     Media-only documents (NULL text) all fold to the identical all-NULL
@@ -55,8 +54,7 @@ def _banded(docs: DataFrame, num_hashes: int, bands: int,
     from n8n_tools_api_spark.operators.dedup import minhash_banded
 
     flagged = docs.withColumn("_nulltext", F.col("text").isNull())
-    banded = minhash_banded(flagged, num_hashes=num_hashes, bands=bands, k=k,
-                            keep_cols=("event_time", "_nulltext"))
+    banded = minhash_banded(flagged, keep_cols=("event_time", "_nulltext"))
     salted = F.when(
         F.col("_nulltext"),
         F.xxhash64(F.concat(F.lit("__nulltext__:"), F.col("doc_id"))),
@@ -66,8 +64,6 @@ def _banded(docs: DataFrame, num_hashes: int, bands: int,
 
 def neardup_prefilter_stream(docs: DataFrame,
                              watermark: str = "10 minutes",
-                             num_hashes: int = 64, bands: int = 16,
-                             k: int = 5,
                              assume_watermarked: bool = False) -> DataFrame:
     """(doc_id, event_time) for every PASSING document, emitted as soon
     as its micro-batch processes.
@@ -83,7 +79,7 @@ def neardup_prefilter_stream(docs: DataFrame,
     this stage downstream of another stateful stage (curation_stream)
     must set the watermark once upstream and pass True here.
     """
-    banded = _banded(docs, num_hashes, bands, k)
+    banded = _banded(docs)
     if not assume_watermarked:
         banded = banded.withWatermark("event_time", watermark)
     novel = banded.dropDuplicatesWithinWatermark(["band", "bucket"])
@@ -93,8 +89,7 @@ def neardup_prefilter_stream(docs: DataFrame,
     )
 
 
-def neardup_prefilter_batch_twin(docs: DataFrame, num_hashes: int = 64,
-                                 bands: int = 16, k: int = 5) -> DataFrame:
+def neardup_prefilter_batch_twin(docs: DataFrame) -> DataFrame:
     """Deterministic batch companion: bucket first-claim in strict
     (event_time, doc_id) order; a doc passes iff it claims ≥1 bucket.
     Agrees with the stream exactly when arrival order matches event
@@ -105,8 +100,7 @@ def neardup_prefilter_batch_twin(docs: DataFrame, num_hashes: int = 64,
     """
     from pyspark.sql.window import Window
 
-    banded = _banded(docs.select("doc_id", "event_time", "text"),
-                     num_hashes, bands, k)
+    banded = _banded(docs.select("doc_id", "event_time", "text"))
     w = Window.partitionBy("band", "bucket").orderBy("event_time", "doc_id")
     return (
         banded.withColumn("_rn", F.row_number().over(w))

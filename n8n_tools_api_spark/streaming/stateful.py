@@ -2,12 +2,12 @@
 ``applyInPandasWithState`` (the build brief's escape hatch for stateful
 semantics Spark's built-in windows can't express).
 
-Per user: events sorted by time; a gap > ``gap_minutes`` closes the
-current session. Closed sessions are EMITTED; the trailing open session
-is CARRIED IN STATE across micro-batches, so a later landing that
-continues the session extends it instead of double-counting — exactly
-the semantics event-time windows can't give you without a fixed window
-length.
+Per user: events sorted by time; a gap > ``SESSION_GAP_S`` (30
+minutes) closes the current session. Closed sessions are EMITTED; the
+trailing open session is CARRIED IN STATE across micro-batches, so a
+later landing that continues the session extends it instead of
+double-counting — exactly the semantics event-time windows can't give
+you without a fixed window length.
 
 State per user: (session_start_epoch, last_ts_epoch, n_events,
 total_value). Arrow-batched both directions; no per-row Python.
@@ -37,6 +37,9 @@ SESSION_SCHEMA = (
 STATE_SCHEMA = (
     "session_start double, last_ts double, n_events int, total_value double"
 )
+# a quiet gap longer than this (seconds) closes a session, in the
+# stream and its batch twin alike
+SESSION_GAP_S = 1800
 
 
 @udf_body
@@ -63,7 +66,7 @@ def _sessionize(key, batches: Iterator[pd.DataFrame],
              .quantize(decimal.Decimal("0.01"), rounding=decimal.ROUND_HALF_UP))
         return float(q)
 
-    gap_us = 1800 * 1_000_000
+    gap_us = SESSION_GAP_S * 1_000_000
     (user_id,) = key
     events = pd.concat(list(batches), ignore_index=True)
     events = events.sort_values("ts")
@@ -131,7 +134,7 @@ def sessionize_stream(
     q.awaitTermination()
 
 
-def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize_batch(events: DataFrame) -> DataFrame:
     """Batch twin: lag-gap sessionization, ALL sessions (incl. trailing
     open ones) — the streaming version emits only closed sessions and
     keeps the last one per user in state."""
@@ -141,7 +144,7 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     epoch = F.col("ts").cast("timestamp_ltz").cast("double")
     gap = epoch - F.lag(epoch).over(w)
     session_id = F.sum(
-        F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+        F.when(gap.isNull() | (gap > SESSION_GAP_S), 1).otherwise(0)
     ).over(w)
     return (
         events.withColumn("session_id", session_id)

@@ -18,14 +18,15 @@ EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp_ntz, user_id bigint, "
     "event_type string, value double, props string"
 )
+# the tumbling window both the batch twin and the stream aggregate over
+WINDOW = "60 minutes"
 
 
-def windowed_event_counts_batch(events: DataFrame,
-                                window_minutes: int = 60) -> DataFrame:
+def windowed_event_counts_batch(events: DataFrame) -> DataFrame:
     """The batch twin of the streaming aggregation (same expressions)."""
     return (
         events.groupBy(
-            F.window(F.col("ts").cast("timestamp"), f"{window_minutes} minutes"),
+            F.window(F.col("ts").cast("timestamp"), WINDOW),
             "event_type",
         )
         .agg(F.count("*").alias("n_events"),
@@ -41,7 +42,6 @@ def windowed_event_counts_stream(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    window_minutes: int = 60,
     watermark: str = "2 hours",
 ) -> None:
     """Watermarked streaming version; drains available input and stops.
@@ -57,7 +57,7 @@ def windowed_event_counts_stream(
         .withWatermark("ts", watermark)
     )
     agg = (
-        events.groupBy(F.window("ts", f"{window_minutes} minutes"), "event_type")
+        events.groupBy(F.window("ts", WINDOW), "event_type")
         .agg(F.count("*").alias("n_events"),
              F.round(F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 2)
              .alias("total_value"))

@@ -86,8 +86,8 @@ class TestEmbeddingNearDups:
             F.transform("embedding", lambda x: x * F.lit(1.01)).alias("embedding"),
             "label",
         )
-        pairs = embedding_near_dups(emb.unionByName(jittered), dim=dim,
-                                    threshold=0.95).collect()
+        pairs = embedding_near_dups(emb.unionByName(jittered),
+                                    dim=dim).collect()
         found = {(r["vec_a"], r["vec_b"]) for r in pairs}
         # scaling a vector preserves cosine exactly → sim 1.0, must be found
         for i in range(10):

@@ -134,7 +134,7 @@ class TestResizeAndFrames:
             "n_channels int, feature_hash bigint",
         )
         out = {r["media_key"]: r
-               for r in resize_plan(decoded, 512, 512).collect()}
+               for r in resize_plan(decoded).collect()}
         assert (out["big"]["out_width"], out["big"]["out_height"]) == (512, 256)
         assert out["big"]["resized"] is True
         # never upscale: small stays at native size, scale 100%
@@ -154,8 +154,7 @@ class TestResizeAndFrames:
              ("img", "image", bytearray(b"x" * 4096))],      # filtered out
             "media_key string, kind string, media_bytes binary",
         )
-        rows = sample_frames(assets, fps=2.0, max_frames=16,
-                             bytes_per_second=1024).collect()
+        rows = sample_frames(assets).collect()
         by_key: dict[str, list] = {}
         for r in rows:
             by_key.setdefault(r["media_key"], []).append(r)

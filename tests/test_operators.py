@@ -378,6 +378,42 @@ class TestBase64JvmParity:
             assert decode_base64_payload(case) == jvm[case], repr(case)
 
 
+def _simhash_hamming_pairs_chunked(df, max_distance):
+    """Round-2 4×16-bit chunk blocking, kept ONLY as the equivalence
+    twin for dedup.simhash_hamming_pairs' Manku-key form (both
+    blockings are recall-exact for d≤3, so outputs must be identical).
+    Not for production: bucket occupancy N/65,536 goes quadratic at
+    ≥10⁹ docs."""
+    from n8n_tools_api_spark.operators.dedup import (
+        _hamming_filter, simhash_64)
+
+    assert max_distance <= 3, "4-chunk pigeonhole only guarantees d<=3"
+    sig = simhash_64(df)
+    chunks = sig.select(
+        "doc_id", "simhash",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(i).alias("chunk_idx"),
+                F.shiftrightunsigned("simhash", 16 * i)
+                .bitwiseAND(F.lit(0xFFFF)).alias("chunk_val"),
+            )
+            for i in range(4)
+        ])).alias("c"),
+    ).select("doc_id", "simhash", "c.chunk_idx", "c.chunk_val")
+    pairs = (
+        chunks.alias("a").join(chunks.alias("b"), ["chunk_idx", "chunk_val"])
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.simhash").alias("sim_a"),
+            F.col("b.simhash").alias("sim_b"),
+        )
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+    return _hamming_filter(pairs, max_distance)
+
+
 class TestDedup:
     @pytest.fixture(scope="class")
     def corpus(self, spark):
@@ -416,9 +452,6 @@ class TestDedup:
         # any corpus the verified outputs must be identical — this pins
         # the Manku 3-of-6-block keys (round-2 verdict #2) against the
         # old 4x16-bit chunk form on real sf text.
-        from n8n_tools_api_spark.operators.dedup import (
-            _simhash_hamming_pairs_chunked)
-
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             F.col("doc_id").cast("string").alias("doc_id"), "text"
         ).limit(400)
@@ -524,7 +557,7 @@ class TestEmbeddingLsh:
         got = {r["vec_id"]: r["lsh_bucket"]
                for r in embedding_lsh_signatures(emb, dim=dim,
                                                  n_planes=n_planes).collect()}
-        planes = _hyperplanes(n_planes, dim, seed=7)
+        planes = _hyperplanes(n_planes, dim)
         for vid, v in vecs:
             expected = 0
             for i, plane in enumerate(planes):
@@ -800,31 +833,232 @@ class TestNearDupComponents:
                 inspect.signature(chain).parameters), chain.__name__
 
     def test_column_names_are_a_contract(self):
-        # operators read the fixed schema by name; a defaulted column
-        # parameter stays only where callers pass different names
+        # every settable value is pinned: a defaulted parameter on a
+        # public module-level function stays only where some caller
+        # sets a different value, and a defaulted column parameter only
+        # where callers pass different names (the schema is read by
+        # name); a new default shows up as a diff here
         import ast
+        import importlib
         import inspect
         import pathlib
 
+        from n8n_tools_api_spark.operators import curation, dedup
         from n8n_tools_api_spark.operators.textstats import dataset_card
+
+        pinned = {
+            "functions/text.py": {
+                "words": {"lower"},
+                "explode_grams": {"keep", "lower", "name"},
+            },
+            "operators/bpe.py": {
+                "bpe_learn": {"min_count"},
+            },
+            "operators/curation.py": {
+                "curation_keep_list": {"use_lsh"},
+                "curation_with_quality": {"use_lsh"},
+                "per_host_cap": {"quality_col", "salt_buckets", "host_col"},
+                "web_curation_keep_list": {
+                    "host_cap", "sample_rate", "use_lsh"},
+                "web_dedup_keep_list": {"min_doc_freq"},
+            },
+            "operators/decontaminate.py": {
+                "benchmark_grams": {"n"},
+                "ngram_decontaminate": {"n", "broadcast_hits"},
+            },
+            "operators/dedup.py": {
+                "shingle_hash_array": {"keep_cols"},
+                "minhash_signatures": {"keep_cols"},
+                "minhash_banded": {"keep_cols"},
+                "ngram_jaccard_pairs": {"threshold", "candidate_pairs"},
+                "simhash_hamming_pairs": {"max_distance"},
+                "embedding_lsh_signatures": {"n_planes"},
+                "near_dup_components": {"small_graph_max_edges"},
+                "exact_substr_dedup": {"window"},
+                "line_dedup": {"min_doc_freq"},
+            },
+            "operators/dsir.py": {
+                "hashed_gram_buckets": {"bucket_hexlen"},
+                "dsir_importance": {
+                    "target", "target_filter", "bucket_hexlen"},
+            },
+            "operators/extract.py": {
+                "salted_repartition": {"partition_cols"},
+            },
+            "operators/lineage.py": {
+                "resumable_extract": {
+                    "n_buckets", "group_size", "fail_after_groups"},
+            },
+            "operators/linkgraph.py": {
+                "host_link_stats": {"iterations"},
+            },
+            "operators/lm_ppx.py": {
+                "token_buckets": {"bucket_hexlen"},
+                "lm_perplexity": {"bucket_hexlen", "group_col"},
+            },
+            "operators/packing.py": {
+                "token_pack": {"count_col", "shard_col"},
+                "shard_manifest": {"seed", "mode"},
+                "write_training_shards": {"fmt"},
+            },
+            "operators/qualityclf.py": {
+                "nb_quality_weights": {"bucket_hexlen"},
+                "quality_classifier_scores": {
+                    "threshold_q16", "bucket_hexlen"},
+            },
+            "operators/sampling.py": {
+                "stratified_sample": {"seed", "default_rate"},
+                "mixture_report": {"default_rate"},
+            },
+            "operators/similarity.py": {
+                "ivf_assign": {"nlist"},
+                "kmeans_refine": {"nlist", "iters"},
+                "ann_recall_at_k": {"n_queries", "nlist", "nprobes"},
+                "semdedup_keep_list": {"threshold", "nlist", "iters"},
+            },
+            "refsem/images.py": {
+                "media_ref_for": {"prefix"},
+                "classify_image_span": {"annotation"},
+            },
+            "refsem/pdfops.py": {
+                "batch_windows": {"original_filename"},
+                "sanitize_filename": {"fallback"},
+            },
+            "refsem/pdfparse.py": {
+                "build_pdf": {"title", "author", "compress"},
+            },
+            "refsem/pipeline.py": {
+                "extract_document": {"media_prefix", "image_limit"},
+            },
+            "session.py": {
+                "get_spark": {
+                    "app_name", "master", "shuffle_partitions", "extra"},
+            },
+            "sources/synthetic.py": {
+                "generate_documents_interleaved": {"seed"},
+                "generate_bench_doc": {"seed"},
+                "interleaved_df": {"seed", "partitions"},
+                "bench_corpus": {"seed", "partitions", "cache_dir"},
+            },
+            "sources/tables.py": {
+                "read_sf_table": {"below"},
+                "write_bucketed": {"n_buckets"},
+            },
+            "streaming/curation_stream.py": {
+                "curation_stream": {"watermark"},
+            },
+            "streaming/dedup_stream.py": {
+                "dedup_stream": {"watermark"},
+                "url_dedup_stream": {"watermark"},
+            },
+            "streaming/neardup_stream.py": {
+                "neardup_prefilter_stream": {
+                    "watermark", "assume_watermarked"},
+            },
+            "streaming/windowed.py": {
+                "windowed_event_counts_stream": {"watermark"},
+            },
+        }
+        # values no caller set to anything but their default: module
+        # constants or inlined literals now
+        removed = {
+            "operators/curation.py": {
+                "classifier_curation_keep_list": {"use_lsh"},
+                "c4_curation_keep_list": {"use_lsh"},
+            },
+            "operators/dedup.py": {
+                "shingle_hash_array": {"k"},
+                "minhash_signatures": {"num_hashes", "k"},
+                "minhash_banded": {"num_hashes", "bands", "k"},
+                "minhash_lsh_candidates": {"num_hashes", "bands", "k"},
+                "ngram_jaccard_pairs": {"k"},
+                "embedding_lsh_signatures": {"seed"},
+                "embedding_near_dups": {"threshold", "n_planes"},
+                "near_dup_components": {"max_iters"},
+            },
+            "operators/dsir.py": {"dsir_importance": {"scale"}},
+            "operators/extract.py": {
+                "salted_repartition": {"heavy_threshold", "salt_buckets"},
+            },
+            "operators/linkgraph.py": {"host_link_stats": {"scale"}},
+            "operators/lm_ppx.py": {
+                "ccnet_keep_list": {
+                    "train_seed", "train_rate", "tail_seed", "tail_rate"},
+            },
+            "operators/media.py": {"distinct_media_blobs": {"prefix"}},
+            "operators/multimodal.py": {
+                "resize_plan": {"max_width", "max_height"},
+                "sample_frames": {"fps", "max_frames", "bytes_per_second"},
+            },
+            "operators/packing.py": {
+                "write_training_shards": {"seed", "mode"},
+            },
+            "operators/sampling.py": {"mixture_report": {"seed"}},
+            "operators/similarity.py": {
+                "brute_force_topk": {"k"},
+                "ann_recall_at_k": {"k"},
+                "ivf_topk": {"k", "nlist", "nprobe"},
+            },
+            "operators/textstats.py": {
+                "dataset_card": {"short_doc_tokens"},
+            },
+            "refsem/images.py": {"validate_base64_image": {"min_bytes"}},
+            "session.py": {"get_spark": {"arrow_batch_rows"}},
+            "streaming/curation_stream.py": {
+                "curation_stream": {"num_hashes", "bands", "k"},
+                "curation_stream_batch_twin": {"num_hashes", "bands", "k"},
+            },
+            "streaming/incremental.py": {
+                "incremental_extract": {"max_files_per_trigger"},
+            },
+            "streaming/neardup_stream.py": {
+                "neardup_prefilter_stream": {"num_hashes", "bands", "k"},
+                "neardup_prefilter_batch_twin": {
+                    "num_hashes", "bands", "k"},
+            },
+            "streaming/stateful.py": {"sessionize_batch": {"gap_minutes"}},
+            "streaming/windowed.py": {
+                "windowed_event_counts_batch": {"window_minutes"},
+                "windowed_event_counts_stream": {"window_minutes"},
+            },
+        }
+
+        def triples(spec):
+            return {(m, f, a) for m, fns in spec.items()
+                    for f, args in fns.items() for a in args}
+
+        def defaulted(fn):
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            return pos[len(pos) - len(a.defaults):] + [
+                k for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None]
 
         pkg = pathlib.Path(__file__).resolve().parents[1] \
             / "n8n_tools_api_spark"
-        found = set()
+        public, columns, shape_consts = set(), set(), set()
         for p in pkg.rglob("*.py"):
-            for fn in ast.walk(ast.parse(p.read_text())):
-                if not isinstance(fn, (ast.FunctionDef,
-                                       ast.AsyncFunctionDef)):
-                    continue
-                a = fn.args
-                pos = a.posonlyargs + a.args
-                defaulted = pos[len(pos) - len(a.defaults):] + [
-                    k for k, d in zip(a.kwonlyargs, a.kw_defaults)
-                    if d is not None]
-                found |= {(str(p.relative_to(pkg)), fn.name, k.arg)
-                          for k in defaulted
-                          if k.arg.endswith(("_col", "_cols"))}
-        assert found == {
+            mod = str(p.relative_to(pkg))
+            tree = ast.parse(p.read_text())
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) \
+                        and not node.name.startswith("_"):
+                    public |= {(mod, node.name, k.arg)
+                               for k in defaulted(node)}
+                elif isinstance(node, ast.Assign):
+                    shape_consts |= {
+                        (mod, t.id) for t in node.targets
+                        if isinstance(t, ast.Name)
+                        and ("SHINGLE" in t.id or "MINHASH" in t.id
+                             or t.id.startswith("NEAR_DUP_K"))}
+            for fn in ast.walk(tree):
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    columns |= {(mod, fn.name, k.arg)
+                                for k in defaulted(fn)
+                                if k.arg.endswith(("_col", "_cols"))}
+        assert public == triples(pinned)
+        assert len(public) == 87
+        assert columns == {
             ("operators/lm_ppx.py", "lm_perplexity", "group_col"),
             ("operators/curation.py", "per_host_cap", "quality_col"),
             ("operators/curation.py", "per_host_cap", "host_col"),
@@ -835,7 +1069,24 @@ class TestNearDupComponents:
             ("operators/dedup.py", "minhash_banded", "keep_cols"),
             ("operators/extract.py", "salted_repartition", "partition_cols"),
         }
+        assert columns <= public
         assert "dims" not in inspect.signature(dataset_card).parameters
+        assert len(triples(removed)) == 57
+        for mod, fn, arg in triples(removed):
+            m = importlib.import_module(
+                "n8n_tools_api_spark." + mod[:-3].replace("/", "."))
+            assert arg not in inspect.signature(
+                getattr(m, fn)).parameters, (mod, fn, arg)
+        # one near-dup configuration: the shingle size and MinHash
+        # shape live in dedup alone
+        assert shape_consts == {
+            ("operators/dedup.py", "SHINGLE_K"),
+            ("operators/dedup.py", "MINHASH_NUM_HASHES"),
+            ("operators/dedup.py", "MINHASH_BANDS"),
+        }
+        assert (dedup.SHINGLE_K, dedup.MINHASH_NUM_HASHES,
+                dedup.MINHASH_BANDS) == (5, 64, 16)
+        assert not hasattr(curation, "NEAR_DUP_K")
 
     def test_end_to_end_with_minhash(self, spark):
         from n8n_tools_api_spark.operators.dedup import duplicate_clusters
@@ -892,14 +1143,14 @@ class TestKMeansRefine:
 class TestSimilarity:
     def test_ivf_recall_vs_brute_force(self, spark, sf_dir):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        exact = [r["vec_id"] for r in brute_force_topk(emb, 0, k=10).collect()]
-        approx = [r["vec_id"] for r in ivf_topk(emb, 0, k=10, nlist=16, nprobe=4).collect()]
+        exact = [r["vec_id"] for r in brute_force_topk(emb, 0).collect()]
+        approx = [r["vec_id"] for r in ivf_topk(emb, 0).collect()]
         recall = len(set(exact) & set(approx)) / 10
         assert recall >= 0.5, f"IVF recall {recall} too low (exact={exact}, approx={approx})"
 
     def test_brute_force_is_sorted_and_bounded(self, spark, sf_dir):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        rows = brute_force_topk(emb, 0, k=10).collect()
+        rows = brute_force_topk(emb, 0).collect()
         sims = [r["cosine_sim"] for r in rows]
         assert sims == sorted(sims, reverse=True)
         assert all(-1.0 <= s <= 1.0 for s in sims)
@@ -913,7 +1164,7 @@ class TestSimilarity:
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         rows = {r["nprobe"]: r["recall_at_k"]
-                for r in ann_recall_at_k(emb, n_queries=8, k=10, nlist=16,
+                for r in ann_recall_at_k(emb, n_queries=8, nlist=16,
                                          nprobes=(1, 4, 16)).collect()}
         assert rows[4] >= 0.9, rows
         assert rows[16] == 1.0, rows
@@ -930,7 +1181,7 @@ class TestSimilarity:
         emb = spark.createDataFrame(
             rows, "vec_id bigint, embedding array<float>")
         got = {r["nprobe"]: r["recall_at_k"]
-               for r in ann_recall_at_k(emb, n_queries=2, k=10, nlist=4,
+               for r in ann_recall_at_k(emb, n_queries=2, nlist=4,
                                         nprobes=(4,)).collect()}
         assert got[4] == 1.0, got
 

@@ -12,6 +12,7 @@ import contextlib
 import inspect
 import re
 import sys
+import time
 
 import pytest
 from hypothesis import given, settings
@@ -547,13 +548,25 @@ class TestBoilerplate:
     @pytest.mark.parametrize("html", [
         "<div>" * 10_000 + "deep content words" + "</div>" * 10_000,
         "<p>" + "<b>some words of inline text " * 3_000,
-    ], ids=["nested_div_10000", "unclosed_b_3000"])
+        "<div>" * 10_000 + "deep content words" + "</span>" * 10_000,
+        "<div><p>some words of block text " * 2_000
+        + "</span></p></b><i>x</a>" * 2_000 + "</div>" * 2_000,
+    ], ids=["nested_div_10000", "unclosed_b_3000", "stray_span_10000",
+            "mixed_closes_2000"])
     def test_deep_markup_returns_text(self, html):
         # the recursive oracle needs a raised limit; the scorer must not
         with _recursion_limit(100_000):
             expected = _oracle_strip(html)
         assert expected
         assert strip_boilerplate(html) == expected
+
+    def test_stray_end_tags_cost_no_stack_scan(self):
+        # an end tag naming no open element must not scan the open
+        # stack: 10,000 of them under 10,000 open <div> stay linear
+        html = "<div>" * 10_000 + "deep content words" + "</span>" * 10_000
+        t0 = time.perf_counter()
+        strip_boilerplate(html)
+        assert time.perf_counter() - t0 < 1.0
 
     def test_no_function_recurses(self):
         # the call graph among the module's own functions is acyclic

@@ -92,9 +92,8 @@ _CONSUMERS = {
     "bpe_encode": lambda d, o: bpe.bpe_encode(d, [("a", "t")]),
     "word_frequencies": lambda d, o: bpe.word_frequencies(d),
     "exact_substr_dedup": lambda d, o: dedup.exact_substr_dedup(d, window=3),
-    "ngram_jaccard_pairs": lambda d, o: dedup.ngram_jaccard_pairs(d, k=3),
-    "minhash_lsh_candidates":
-        lambda d, o: dedup.minhash_lsh_candidates(d, k=3),
+    "ngram_jaccard_pairs": lambda d, o: dedup.ngram_jaccard_pairs(d),
+    "minhash_lsh_candidates": lambda d, o: dedup.minhash_lsh_candidates(d),
     "simhash_hamming_pairs": lambda d, o: dedup.simhash_hamming_pairs(d),
 }
 
