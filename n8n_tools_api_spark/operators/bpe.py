@@ -31,8 +31,8 @@ merge count):
   accumulator IS the merge — no surgery), expressed as
   ``F.aggregate`` in Spark and ``list_reduce`` in DuckDB, verified to
   agree symbol-for-symbol;
-* learning stops early when no pair reaches ``min_count`` (merging
-  hapax pairs teaches nothing — the classic cutoff).
+* learning stops early when no pair reaches ``MIN_PAIR_COUNT`` = 2
+  (merging hapax pairs teaches nothing — the classic cutoff).
 
 Scale shape: the corpus touches exactly one wide stage (the word
 count). Every learning round is one map-side-combined pair-count
@@ -52,6 +52,9 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..functions.text import explode_grams, words
 
 _US = "\x1f"
+
+# a pair must occur this often (frequency-weighted) to be merged
+MIN_PAIR_COUNT = 2
 
 
 def _encodable(ws: Column) -> Column:
@@ -119,15 +122,13 @@ def _pair_counts(words: DataFrame) -> DataFrame:
             .agg(F.sum("freq").cast("bigint").alias("pair_count")))
 
 
-def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2) -> DataFrame:
+def bpe_learn(docs: DataFrame, n_merges: int) -> DataFrame:
     """Learn ``n_merges`` BPE merges over the corpus (module docstring
     pins the semantics). Returns the merge table as a DataFrame:
     (rank, left, right, merged, pair_count), rank 0-based in learning
     order — the artifact a downstream tokenizer consumes."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if min_count < 1:
-        raise ValueError(f"min_count must be >= 1, got {min_count}")
     from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
     spark = docs.sparkSession
@@ -140,11 +141,11 @@ def bpe_learn(docs: DataFrame, n_merges: int, min_count: int = 2) -> DataFrame:
     prev_tag = "bpe_round0"
     for r in range(n_merges):
         best = (_pair_counts(words)
-                .where(F.col("pair_count") >= min_count)
+                .where(F.col("pair_count") >= MIN_PAIR_COUNT)
                 .orderBy(F.desc("pair_count"), "left", "right")
                 .limit(1).collect())  # ONE bounded row per round
         if not best:
-            break  # no pair reaches min_count — classic early stop
+            break  # no pair reaches MIN_PAIR_COUNT — classic early stop
         row = best[0]
         merges.append((r, row["left"], row["right"],
                        row["left"] + row["right"], row["pair_count"]))

@@ -34,6 +34,9 @@ SHINGLE_K = 5
 MINHASH_NUM_HASHES = 64
 MINHASH_BANDS = 16
 
+# embedding_lsh_signatures' hyperplane count: a 12-bit bucket id.
+EMBEDDING_LSH_PLANES = 12
+
 # near_dup_components' round budget; pointer jumping converges in
 # O(log diameter) rounds (a 25-doc chain takes ~5).
 COMPONENT_MAX_ROUNDS = 20
@@ -424,8 +427,7 @@ def _hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def embedding_lsh_signatures(emb: DataFrame, dim: int,
-                             n_planes: int = 12) -> DataFrame:
+def embedding_lsh_signatures(emb: DataFrame, dim: int) -> DataFrame:
     """Random-hyperplane (SimHash-for-vectors) bucket per embedding.
 
     All planes live in ONE flattened literal array (a single Literal
@@ -435,13 +437,13 @@ def embedding_lsh_signatures(emb: DataFrame, dim: int,
     products fold with zip_with/aggregate — pure JVM expressions, no
     UDF. The bucket id packs the sign bits (sum of distinct powers of
     two ≡ bitwise OR). Cosine-similar vectors collide with probability
-    (1 - θ/π)^n_planes.
+    (1 - θ/π)^EMBEDDING_LSH_PLANES.
     """
-    planes = _hyperplanes(n_planes, dim)
+    planes = _hyperplanes(EMBEDDING_LSH_PLANES, dim)
     flat = F.lit([float(v) for plane in planes for v in plane])
-    pows = F.lit([1 << i for i in range(n_planes)])
+    pows = F.lit([1 << i for i in range(EMBEDDING_LSH_PLANES)])
     dots = F.transform(
-        F.sequence(F.lit(0), F.lit(n_planes - 1)),
+        F.sequence(F.lit(0), F.lit(EMBEDDING_LSH_PLANES - 1)),
         lambda i: F.aggregate(
             F.zip_with(F.col("embedding"), F.slice(flat, i * dim + 1, dim),
                        lambda x, p: x.cast("double") * p),

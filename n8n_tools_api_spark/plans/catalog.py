@@ -33,6 +33,51 @@ def _money(expr):
     return F.round(F.sum(expr.cast("decimal(18,6)")).cast("double"), 2)
 
 
+# Planted fixtures: a documents slice plus branches of rows derived from
+# its low ids, built the same way on both engines.
+def _branch(docs, prefix, n, text):
+    """The ``docs`` rows with doc_id < n as (prefix || doc_id, text);
+    ``text`` is a column name or a Column."""
+    did = F.col("doc_id").cast("string")
+    return docs.where(F.col("doc_id") < n).select(
+        F.concat(F.lit(prefix), did).alias("doc_id"),
+        text if isinstance(text, str) else text.alias("text"))
+
+
+def _planted(docs, *branches):
+    """``docs`` as (doc_id string, text), then each branch frame."""
+    corpus = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
+                         "text")
+    for b in branches:
+        corpus = corpus.unionByName(b)
+    return corpus
+
+
+def _planted_sql(below: int, text: str, branches) -> str:
+    """DuckDB twin of ``_planted``: the union body of documents<below
+    as (doc_id, ``text``) and one (prefix, n, text SQL) branch each."""
+    out = ("  SELECT CAST(doc_id AS VARCHAR) AS doc_id, "
+           f"{text} AS text\n  FROM documents WHERE doc_id < {below}")
+    for prefix, n, expr in branches:
+        out += (f"\n  UNION ALL\n  SELECT '{prefix}' || CAST(doc_id AS VARCHAR),"
+                f"\n         {expr}\n  FROM documents WHERE doc_id < {n}")
+    return out
+
+
+# Python's str.strip() charset: DuckDB's bare trim() strips only spaces
+_WS_CHARSET = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
+
+
+def _host_sql(url: str) -> str:
+    """Canonical host of a URL expression (operators/curation.py):
+    lower-cased authority of a scheme://… URL, one leading 'www.' and
+    a trailing :port stripped; '' when the URL has no authority."""
+    return (r"regexp_replace(regexp_replace(regexp_extract("
+            f"lower(COALESCE({url}, '')), "
+            r"'^[a-z][a-z0-9+.-]*://([^/?#]+)', 1), '^www\.', ''), "
+            r"':\d+$', '')")
+
+
 # ---------------------------------------------------------------------------
 # TPC-H-ish relational queries (SURVEY.md §2.3 J4, §2.4)
 # ---------------------------------------------------------------------------
@@ -1184,44 +1229,42 @@ _LANG_PATTERNS_SQL = [
     ("russian", r"[а-яёА-ЯЁ\s]+"),
 ]
 
-_LANG_SCORE_COLS = ",\n".join(
-    f"         (length(text) - length(regexp_replace(text, '{pat}', '', 'g')))"
-    f" / CAST(length(text) AS DOUBLE) AS s_{lang}"
-    for lang, pat in _LANG_PATTERNS_SQL
-)
-_LANG_BEST = "greatest(" + ", ".join(f"s_{l}" for l, _ in _LANG_PATTERNS_SQL) + ")"
-_LANG_PICK = "\n".join(
-    f"            WHEN s_{lang} = best THEN '{lang}'"
-    for lang, _ in _LANG_PATTERNS_SQL
-)
 
-DOC_LANGUAGE_SQL = f"""
-WITH scored AS (
-  SELECT doc_id,
-{_LANG_SCORE_COLS},
-         -- Python str.strip() strips all ASCII whitespace, DuckDB's
-         -- bare trim() only spaces — pass the charset explicitly.
+def _lang_detect_ctes(src: str, keys: str) -> str:
+    """The A6 detector replay over the ``text`` of ``src``:
+    ``langdet(<keys>, detected, confidence)``. Confidence is
+    floor-truncated to 6dp, reproducible on both engines."""
+    scores = ",\n".join(
+        f"         (length(text) - length(regexp_replace(text, '{pat}', '', 'g')))"
+        f" / CAST(length(text) AS DOUBLE) AS s_{lang}"
+        for lang, pat in _LANG_PATTERNS_SQL)
+    best = "greatest(" + ", ".join(f"s_{l}" for l, _ in _LANG_PATTERNS_SQL) + ")"
+    pick = "\n".join(f"              WHEN s_{lang} = best THEN '{lang}'"
+                     for lang, _ in _LANG_PATTERNS_SQL)
+    return f"""langscored AS (
+  SELECT {keys},
+{scores},
          -- (Unicode-whitespace-only texts would still diverge: RE2 \\s
          -- is ASCII; documented oracle limit, absent from the corpus.)
-         text IS NULL
-           OR trim(text, ' ' || chr(9) || chr(10) || chr(13)
-                   || chr(11) || chr(12)) = '' AS is_blank
-  FROM documents WHERE doc_id < 300
+         text IS NULL OR trim(text, {_WS_CHARSET}) = '' AS is_blank
+  FROM {src}
 ),
-best AS (
-  SELECT doc_id, is_blank, {_LANG_BEST} AS best,
-         s_english, s_spanish, s_french, s_german,
-         s_chinese, s_arabic, s_russian
-  FROM scored
-)
-SELECT doc_id,
-       CASE WHEN is_blank OR best <= 0.5 THEN 'unknown'
-{_LANG_PICK}
-       END AS detected,
-       CASE WHEN is_blank THEN 0.0
-            ELSE floor(least(best, 1.0) * 1000000) / 1000000
-       END AS confidence
-FROM best
+langdet AS (
+  SELECT {keys},
+         CASE WHEN is_blank OR best <= 0.5 THEN 'unknown'
+{pick}
+         END AS detected,
+         CASE WHEN is_blank THEN 0.0
+              ELSE floor(least(best, 1.0) * 1000000) / 1000000
+         END AS confidence
+  FROM (SELECT *, {best} AS best FROM langscored)
+)"""
+
+
+DOC_LANGUAGE_SQL = f"""
+WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 300),
+{_lang_detect_ctes("docs", "doc_id")}
+SELECT doc_id, detected, confidence FROM langdet
 ORDER BY doc_id
 """
 
@@ -1246,42 +1289,13 @@ def language_id_agreement(spark, sf_dir):
     )
 
 
-_LANG_SCORE_COLS_ALL = ",\n".join(
-    f"         (length(text) - length(regexp_replace(text, '{pat}', '', 'g')))"
-    f" / CAST(length(text) AS DOUBLE) AS s_{lang}"
-    for lang, pat in _LANG_PATTERNS_SQL
-)
-
 LANGUAGE_ID_SQL = f"""
-WITH scored AS (
-  SELECT lang,
-{_LANG_SCORE_COLS_ALL},
-         text IS NULL
-           OR trim(text, ' ' || chr(9) || chr(10) || chr(13)
-                   || chr(11) || chr(12)) = '' AS is_blank
-  FROM documents
-),
-best AS (
-  SELECT lang, is_blank, {_LANG_BEST} AS best,
-         s_english, s_spanish, s_french, s_german,
-         s_chinese, s_arabic, s_russian
-  FROM scored
-),
-per_doc AS (
-  SELECT lang,
-         CASE WHEN is_blank OR best <= 0.5 THEN 'unknown'
-{_LANG_PICK}
-         END AS detected,
-         CASE WHEN is_blank THEN 0.0
-              ELSE floor(least(best, 1.0) * 1000000) / 1000000
-         END AS confidence
-  FROM best
-)
+WITH {_lang_detect_ctes("documents", "lang")}
 SELECT lang, detected,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        round(CAST(SUM(CAST(confidence AS DECIMAL(18,6))) AS DOUBLE), 6)
          AS sum_confidence
-FROM per_doc
+FROM langdet
 GROUP BY lang, detected
 ORDER BY lang, detected
 """
@@ -1307,23 +1321,17 @@ def ngram_jaccard_dups(spark, sf_dir):
     return ngram_jaccard_pairs(corpus, threshold=0.5).orderBy("doc_a", "doc_b")
 
 
-# DuckDB twin: regexp_split + list-comprehension 5-gram shingles,
-# >1%-of-docs (min 100) document-frequency cap, distinct-shingle
-# self-join; floor() mirrors Spark's truncating int cast on the
-# mutation length (CLAUDE.md determinism rules).
-NGRAM_JACCARD_SQL = r"""
-WITH corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
-  UNION ALL
-  SELECT 'mut_' || CAST(doc_id AS VARCHAR),
-         substring(text, 1, CAST(floor(length(text) * 0.9) AS INT))
-  FROM documents WHERE doc_id < 25
-),
-words AS (
+def _jaccard_pairs_ctes(src: str) -> str:
+    """Exact 5-gram-shingle Jaccard replay (operators/dedup.py::
+    ngram_jaccard_pairs) over the (doc_id, text) rows of ``src``:
+    regexp_split + list-comprehension shingles, >1%-of-docs (min 100)
+    document-frequency cap, distinct-shingle self-join →
+    ``pairs(doc_a, doc_b, n_shared, jaccard)`` at jaccard >= 0.5."""
+    return rf"""words AS (
   -- COALESCE mirrors Spark's concat_ws, which maps a NULL word array
   -- to the '' shingle instead of dropping the doc (review finding)
   SELECT doc_id, regexp_split_to_array(trim(COALESCE(text, '')), '\s+') AS w
-  FROM corpus
+  FROM {src}
 ),
 sh_all AS (
   SELECT doc_id, unnest(CASE WHEN len(w) >= 5
@@ -1332,7 +1340,7 @@ sh_all AS (
   FROM words
 ),
 sh_distinct AS (SELECT DISTINCT doc_id, shingle FROM sh_all),
-n_docs AS (SELECT COUNT(*) AS n FROM corpus),
+n_docs AS (SELECT COUNT(*) AS n FROM {src}),
 over_cap AS (
   SELECT shingle FROM sh_distinct, n_docs
   GROUP BY shingle, n
@@ -1346,13 +1354,31 @@ inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b, CAST(n_shared AS BIGINT) AS n_shared,
-       round(n_shared / (sa.n_sh + sb.n_sh - n_shared), 4) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE round(n_shared / (sa.n_sh + sb.n_sh - n_shared), 4) >= 0.5
+),
+pairs AS (
+  SELECT doc_a, doc_b, n_shared,
+         round(n_shared / (sa.n_sh + sb.n_sh - n_shared), 4) AS jaccard
+  FROM inter
+  JOIN sizes sa ON sa.doc_id = doc_a
+  JOIN sizes sb ON sb.doc_id = doc_b
+  WHERE round(n_shared / (sa.n_sh + sb.n_sh - n_shared), 4) >= 0.5
+)"""
+
+
+# the 25 planted 90%-truncations: floor() mirrors Spark's truncating
+# int cast on the mutation length (CLAUDE.md determinism rules)
+_MUT_TEXT_SQL = "substring(text, 1, CAST(floor(length(text) * 0.9) AS INT))"
+
+NGRAM_JACCARD_SQL = f"""
+WITH corpus AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
+  UNION ALL
+  SELECT 'mut_' || CAST(doc_id AS VARCHAR), {_MUT_TEXT_SQL}
+  FROM documents WHERE doc_id < 25
+),
+""" + _jaccard_pairs_ctes("corpus") + """
+SELECT doc_a, doc_b, CAST(n_shared AS BIGINT) AS n_shared, jaccard
+FROM pairs
 ORDER BY doc_a, doc_b
 """
 
@@ -1891,31 +1917,26 @@ def gopher_repetition_q(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents", below=300)
     did = F.col("doc_id").cast("string")
-    base = docs.select(
-        did.alias("doc_id"), "text")
     line40 = F.regexp_replace(F.substring(F.col("text"), 1, 40), "\n", " ")
-    rep = docs.where(F.col("doc_id") < 30).select(
-        F.concat(F.lit("rep_"), did).alias("doc_id"),
-        F.concat(F.repeat(F.concat(line40, F.lit("\n")), 5),
-                 F.lit("tail "), did).alias("text"))
-    gram = docs.where(F.col("doc_id") < 20).select(
-        F.concat(F.lit("gram_"), did).alias("doc_id"),
-        F.concat(F.repeat(F.lit("spam ham "), 40), F.lit("unique"), did)
-        .alias("text"))
-    corpus = base.unionByName(rep).unionByName(gram)
+    corpus = _planted(
+        docs,
+        _branch(docs, "rep_", 30, F.concat(
+            F.repeat(F.concat(line40, F.lit("\n")), 5), F.lit("tail "), did)),
+        _branch(docs, "gram_", 20, F.concat(
+            F.repeat(F.lit("spam ham "), 40), F.lit("unique"), did)))
     return gopher_repetition(corpus).orderBy("doc_id")
 
 
-def _top_gram_cte(n: int, name: str, out: str,
-                  words_cte: str = "words") -> str:
-    """Most-frequent-REPEATED-word-n-gram CTE: count × gram length /
-    total chars, >=2 repetition floor, (count DESC, gram ASC)
-    tie-break. ONE generator for all four uses (gopher_repetition's
-    g2top/g3top and the quality-curation gate's q_g2top/q_g3top) so a
-    tweak to the floor/tie-break/rounding cannot desync the oracles
-    (review finding)."""
-    return rf"""{name} AS (
-  SELECT doc_id, round(cnt * length(gram) / total_chars, 6) AS {out}
+def _gopher_gate_ctes(src: str) -> str:
+    """Gopher repetition replay over the (doc_id, text) rows of ``src``:
+    duplicate-line fraction/char-fraction and the top-2/3-gram char
+    coverage (most-frequent REPEATED word n-gram: count × gram length /
+    total chars, >=2 floor, (count DESC, gram ASC) tie-break) with the
+    paper's gates → ``q_rep`` (every gopher_repetition column),
+    ``q_gate(doc_id, keep)`` and ``qcorpus``, the rows of ``src`` it
+    keeps. Same trim and whitespace split as the operator."""
+    tops = ",\n".join(rf"""q_g{n}top AS (
+  SELECT doc_id, round(cnt * length(gram) / total_chars, 6) AS top{n}
   FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
                                      ORDER BY cnt DESC, gram ASC) AS rn
         FROM (SELECT doc_id, total_chars, gram, COUNT(*) AS cnt
@@ -1924,37 +1945,20 @@ def _top_gram_cte(n: int, name: str, out: str,
                              [array_to_string(ws[i:i+{n - 1}], ' ')
                               for i in generate_series(1, len(ws) - {n - 1})]
                            ELSE [] END) AS gram
-                    FROM {words_cte})
+                    FROM q_words)
               GROUP BY doc_id, total_chars, gram HAVING COUNT(*) >= 2))
   WHERE rn = 1
-)"""
-
-
-GOPHER_REPETITION_SQL = r"""
-WITH corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, COALESCE(text, '') AS text
-  FROM documents WHERE doc_id < 300
-  UNION ALL
-  SELECT 'rep_' || CAST(doc_id AS VARCHAR),
-         COALESCE(repeat(regexp_replace(substring(text, 1, 40), '\n', ' ')
-                         || chr(10), 5)
-                  || 'tail ' || CAST(doc_id AS VARCHAR), '')
-  FROM documents WHERE doc_id < 30
-  UNION ALL
-  SELECT 'gram_' || CAST(doc_id AS VARCHAR),
-         repeat('spam ham ', 40) || 'unique' || CAST(doc_id AS VARCHAR)
-  FROM documents WHERE doc_id < 20
-),
-lines AS (
+)""" for n in (2, 3))
+    return rf"""q_lines AS (
   SELECT doc_id, trim(l) AS line
-  FROM corpus, unnest(string_split(text, chr(10))) AS t(l)
+  FROM {src}, unnest(string_split(COALESCE(text, ''), chr(10))) AS t(l)
   WHERE trim(l) != ''
 ),
-line_groups AS (
+q_line_groups AS (
   SELECT doc_id, line, COUNT(*) AS cnt, length(line) AS len
-  FROM lines GROUP BY doc_id, line
+  FROM q_lines GROUP BY doc_id, line
 ),
-line_stats AS (
+q_line_stats AS (
   SELECT doc_id,
          CAST(SUM(cnt) AS BIGINT) AS n_lines,
          CAST(SUM(CASE WHEN cnt > 1 THEN cnt - 1 ELSE 0 END) AS BIGINT)
@@ -1962,34 +1966,52 @@ line_stats AS (
          CAST(SUM(cnt * len) AS BIGINT) AS line_chars,
          CAST(SUM(CASE WHEN cnt > 1 THEN (cnt - 1) * len ELSE 0 END)
               AS BIGINT) AS dup_line_chars
-  FROM line_groups GROUP BY doc_id
+  FROM q_line_groups GROUP BY doc_id
 ),
-words AS (
-  SELECT doc_id, length(text) AS total_chars,
-         [w for w in regexp_split_to_array(trim(text), '\s+') if w != '']
-           AS ws
-  FROM corpus
+q_words AS (
+  SELECT doc_id, length(COALESCE(text, '')) AS total_chars,
+         [w for w in regexp_split_to_array(trim(COALESCE(text, '')), '\s+')
+          if w != ''] AS ws
+  FROM {src}
 ),
-""" + _top_gram_cte(2, "g2top", "top2") + ",\n" \
-    + _top_gram_cte(3, "g3top", "top3") + r""",
-joined AS (
-  SELECT c.doc_id,
-         COALESCE(n_lines, 0) AS n_lines,
-         round(COALESCE(CAST(dup_lines AS DOUBLE) / n_lines, 0), 6)
-           AS dup_line_frac,
-         round(COALESCE(CAST(dup_line_chars AS DOUBLE) / line_chars, 0), 6)
-           AS dup_line_char_frac,
-         COALESCE(top2, 0.0) AS top2gram_char_frac,
-         COALESCE(top3, 0.0) AS top3gram_char_frac
-  FROM corpus c
-  LEFT JOIN line_stats USING (doc_id)
-  LEFT JOIN g2top USING (doc_id)
-  LEFT JOIN g3top USING (doc_id)
-)
-SELECT *,
-       (dup_line_frac <= 0.30 AND top2gram_char_frac <= 0.20
-        AND top3gram_char_frac <= 0.18) AS gopher_keep
-FROM joined
+{tops},
+q_rep AS (
+  SELECT *,
+         (dup_line_frac <= 0.30 AND top2gram_char_frac <= 0.20
+          AND top3gram_char_frac <= 0.18) AS gopher_keep
+  FROM (
+    SELECT c.doc_id,
+           COALESCE(n_lines, 0) AS n_lines,
+           round(COALESCE(CAST(dup_lines AS DOUBLE) / n_lines, 0), 6)
+             AS dup_line_frac,
+           round(COALESCE(CAST(dup_line_chars AS DOUBLE) / line_chars, 0), 6)
+             AS dup_line_char_frac,
+           COALESCE(top2, 0.0) AS top2gram_char_frac,
+           COALESCE(top3, 0.0) AS top3gram_char_frac
+    FROM {src} c
+    LEFT JOIN q_line_stats USING (doc_id)
+    LEFT JOIN q_g2top USING (doc_id)
+    LEFT JOIN q_g3top USING (doc_id))
+),
+q_gate AS (SELECT doc_id, gopher_keep AS keep FROM q_rep),
+qcorpus AS (
+  SELECT c.doc_id, c.text FROM {src} c JOIN q_gate g USING (doc_id)
+  WHERE g.keep
+)"""
+
+
+GOPHER_REPETITION_SQL = """
+WITH corpus AS (
+""" + _planted_sql(300, "COALESCE(text, '')", [
+    ("rep_", 30, r"""COALESCE(repeat(regexp_replace(substring(text, 1, 40), '\n', ' ')
+                         || chr(10), 5)
+                  || 'tail ' || CAST(doc_id AS VARCHAR), '')"""),
+    ("gram_", 20,
+     "repeat('spam ham ', 40) || 'unique' || CAST(doc_id AS VARCHAR)"),
+]) + """
+),
+""" + _gopher_gate_ctes("corpus") + """
+SELECT * FROM q_rep
 ORDER BY doc_id
 """
 
@@ -2232,21 +2254,9 @@ def _clean6_sql(expr: str) -> str:
         r", '([0-9]+)([A-Za-z])', '\1 \2', 'g')"
         r", '\s+([.!?,:;])', '\1', 'g')"
         r", '([.!?])\s*([A-Z])', '\1 \2', 'g')"
-        ", ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))"
+        f", {_WS_CHARSET})"
     )
 
-
-_WS_CHARSET = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
-
-_FMT_LANG_SCORES = ",\n".join(
-    f"         (length(all_raw) - length(regexp_replace(all_raw, '{pat}', '', 'g')))"
-    f" / CAST(length(all_raw) AS DOUBLE) AS s_{lang}"
-    for lang, pat in _LANG_PATTERNS_SQL
-)
-_FMT_LANG_PICK = "\n".join(
-    f"            WHEN s_{lang} = best THEN '{lang}'"
-    for lang, _ in _LANG_PATTERNS_SQL
-)
 
 FORMATTED_SQL = rf"""
 WITH base AS (
@@ -2313,19 +2323,8 @@ final_text AS (
          length(body0) > 5000 AND len(headers) > 3 AS has_toc
   FROM toc
 ),
-lang AS (
-  SELECT parent,
-{_FMT_LANG_SCORES}
-  FROM final_text
-),
-best AS (
-  SELECT parent,
-         greatest(s_english, s_spanish, s_french, s_german,
-                  s_chinese, s_arabic, s_russian) AS best,
-         s_english, s_spanish, s_french, s_german,
-         s_chinese, s_arabic, s_russian
-  FROM lang
-),
+fmtlang AS (SELECT parent, all_raw AS text FROM final_text),
+{_lang_detect_ctes("fmtlang", "parent")},
 conf AS (
   SELECT parent, AVG(v) AS confidence_score
   FROM (
@@ -2350,13 +2349,11 @@ SELECT 'fdoc_' || lpad(CAST(f.parent AS VARCHAR), 4, '0') AS doc_id,
        CAST(f.total_page_chars AS DOUBLE) / 4 AS text_density,
        0.0 AS image_density,
        CAST(f.total_page_chars AS DOUBLE) AS content_ratio,
-       CASE WHEN b.best <= 0.5 THEN 'unknown'
-{_FMT_LANG_PICK}
-       END AS language,
-       floor(least(b.best, 1.0) * 1000000) / 1000000 AS language_confidence,
+       b.detected AS language,
+       b.confidence AS language_confidence,
        c.confidence_score
 FROM final_text f
-JOIN best b USING (parent)
+JOIN langdet b USING (parent)
 LEFT JOIN conf c USING (parent)
 ORDER BY doc_id
 """
@@ -2427,17 +2424,8 @@ def curation_keep_list(spark, sf_dir):
 
 # Shared CTE chain for the curation replays: clean6 → md5 window dedup
 # → shingle Jaccard w/ df-cap → recursive-CTE closure → keep-list.
-_CURATION_CORPUS_CTE = r"""corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
-  FROM documents WHERE doc_id < 300
-  UNION ALL
-  SELECT 'copy_' || CAST(doc_id AS VARCHAR), text
-  FROM documents WHERE doc_id < 40
-  UNION ALL
-  SELECT 'mut_' || CAST(doc_id AS VARCHAR),
-         substring(text, 1, CAST(floor(length(text) * 0.9) AS INT))
-  FROM documents WHERE doc_id < 25
-)"""
+_CURATION_CORPUS_CTE = "corpus AS (\n" + _planted_sql(300, "text", [
+    ("copy_", 40, "text"), ("mut_", 25, _MUT_TEXT_SQL)]) + "\n)"
 
 
 def _curation_tail(src: str) -> str:
@@ -2454,40 +2442,8 @@ ranked AS (
            AS canon
   FROM cleaned
 ),
-survivors AS (SELECT doc_id, ct FROM ranked WHERE rn = 1),
-words AS (
-  SELECT doc_id, regexp_split_to_array(trim(ct), '\s+') AS w
-  FROM survivors
-),
-sh_all AS (
-  SELECT doc_id, unnest(CASE WHEN len(w) >= 5
-    THEN [array_to_string(w[i:i+4], ' ') for i in generate_series(1, len(w) - 4)]
-    ELSE [array_to_string(w, ' ')] END) AS shingle
-  FROM words
-),
-sh_distinct AS (SELECT DISTINCT doc_id, shingle FROM sh_all),
-n_docs AS (SELECT COUNT(*) AS n FROM survivors),
-over_cap AS (
-  SELECT shingle FROM sh_distinct, n_docs
-  GROUP BY shingle, n
-  HAVING COUNT(*) > greatest(floor(n * 0.01), 100)
-),
-sh AS (
-  SELECT * FROM sh_distinct WHERE shingle NOT IN (SELECT shingle FROM over_cap)
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE round(n_shared / (sa.n_sh + sb.n_sh - n_shared), 4) >= 0.5
-),
+survivors AS (SELECT doc_id, ct AS text FROM ranked WHERE rn = 1),
+""" + _jaccard_pairs_ctes("survivors") + rf""",
 undirected AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION
@@ -2522,53 +2478,6 @@ CURATION_SQL = (_CURATION_CHAIN_SQL
                   " ORDER BY doc_id\n")
 
 
-# Gopher gate over a (doc_id, text) source CTE (same expressions as
-# GOPHER_REPETITION_SQL, reduced to the keep boolean) — feeds qcorpus
-# into the unchanged curation chain. Parametrized by source so the
-# composition can gate RAW text ('corpus') or C4-cleaned text
-# ('c4corpus').
-def _gopher_gate_ctes(src: str) -> str:
-    return rf"""q_lines AS (
-  SELECT doc_id, trim(l) AS line
-  FROM {src}, unnest(string_split(COALESCE(text, ''), chr(10))) AS t(l)
-  WHERE trim(l) != ''
-),
-q_line_groups AS (
-  SELECT doc_id, line, COUNT(*) AS cnt
-  FROM q_lines GROUP BY doc_id, line
-),
-q_line_stats AS (
-  SELECT doc_id, SUM(cnt) AS n_lines,
-         SUM(CASE WHEN cnt > 1 THEN cnt - 1 ELSE 0 END) AS dup_lines
-  FROM q_line_groups GROUP BY doc_id
-),
-q_words AS (
-  SELECT doc_id, length(COALESCE(text, '')) AS total_chars,
-         [w for w in regexp_split_to_array(trim(COALESCE(text, '')), '\s+')
-          if w != ''] AS ws
-  FROM {src}
-),
-""" + _top_gram_cte(2, "q_g2top", "top2", "q_words") + ",\n" \
-    + _top_gram_cte(3, "q_g3top", "top3", "q_words") + rf""",
-q_gate AS (
-  SELECT c.doc_id,
-         (round(COALESCE(CAST(dup_lines AS DOUBLE) / n_lines, 0), 6) <= 0.30
-          AND COALESCE(top2, 0.0) <= 0.20
-          AND COALESCE(top3, 0.0) <= 0.18) AS keep
-  FROM {src} c
-  LEFT JOIN q_line_stats USING (doc_id)
-  LEFT JOIN q_g2top USING (doc_id)
-  LEFT JOIN q_g3top USING (doc_id)
-),
-qcorpus AS (
-  SELECT c.doc_id, c.text FROM {src} c JOIN q_gate g USING (doc_id)
-  WHERE g.keep
-)"""
-
-
-_GOPHER_GATE_CTES = _gopher_gate_ctes("corpus")
-
-
 def gopher_word_stats_q(spark, sf_dir):
     """GOPHER WORD-RULES ORACLE: the word/line-level half of the Rae
     et al. 2021 A1.1 filter set (word count, mean word length,
@@ -2582,53 +2491,34 @@ def gopher_word_stats_q(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents", below=300)
     did = F.col("doc_id").cast("string")
-    base = docs.select(
-        did.alias("doc_id"), "text")
-    bul = docs.where(F.col("doc_id") < 15).select(
-        F.concat(F.lit("bul_"), did).alias("doc_id"),
-        F.repeat(F.concat(F.lit("• item one two "), did, F.lit("\n")), 20)
-        .alias("text"))
-    ell = docs.where(F.col("doc_id") < 15).select(
-        F.concat(F.lit("ell_"), did).alias("doc_id"),
-        F.repeat(F.lit("the words of and that have trail on and on more...\n"), 10)
-        .alias("text"))
-    num = docs.where(F.col("doc_id") < 10).select(
-        F.concat(F.lit("num_"), did).alias("doc_id"),
-        F.repeat(F.lit("11 22 33 44 55 66 "), 10).alias("text"))
-    # the synthetic corpus's invented vocabulary carries almost no real
-    # English stop words, so natural docs fail the stop-word floor —
-    # plant 20 docs that PASS every gate so the oracle pins both sides
-    eng = docs.where(F.col("doc_id") < 20).select(
-        F.concat(F.lit("eng_"), did).alias("doc_id"),
-        F.concat(F.repeat(
+    corpus = _planted(
+        docs,
+        _branch(docs, "bul_", 15, F.repeat(
+            F.concat(F.lit("• item one two "), did, F.lit("\n")), 20)),
+        _branch(docs, "ell_", 15, F.repeat(
+            F.lit("the words of and that have trail on and on more...\n"), 10)),
+        _branch(docs, "num_", 10, F.repeat(F.lit("11 22 33 44 55 66 "), 10)),
+        # the synthetic corpus's invented vocabulary carries almost no
+        # real English stop words, so natural docs fail the stop-word
+        # floor — plant 20 docs that PASS every gate so the oracle pins
+        # both sides
+        _branch(docs, "eng_", 20, F.concat(F.repeat(
             F.lit("the value of data and methods that have grown with time "),
-            8), F.lit("tail"), did).alias("text"))
-    corpus = (base.unionByName(bul).unionByName(ell).unionByName(num)
-              .unionByName(eng))
+            8), F.lit("tail"), did)))
     return gopher_word_stats(corpus).orderBy("doc_id")
 
 
-GOPHER_WORD_SQL = r"""
+GOPHER_WORD_SQL = """
 WITH corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, COALESCE(text, '') AS text
-  FROM documents WHERE doc_id < 300
-  UNION ALL
-  SELECT 'bul_' || CAST(doc_id AS VARCHAR),
-         repeat('• item one two ' || CAST(doc_id AS VARCHAR) || chr(10), 20)
-  FROM documents WHERE doc_id < 15
-  UNION ALL
-  SELECT 'ell_' || CAST(doc_id AS VARCHAR),
-         repeat('the words of and that have trail on and on more...' || chr(10), 10)
-  FROM documents WHERE doc_id < 15
-  UNION ALL
-  SELECT 'num_' || CAST(doc_id AS VARCHAR),
-         repeat('11 22 33 44 55 66 ', 10)
-  FROM documents WHERE doc_id < 10
-  UNION ALL
-  SELECT 'eng_' || CAST(doc_id AS VARCHAR),
-         repeat('the value of data and methods that have grown with time ',
-                8) || 'tail' || CAST(doc_id AS VARCHAR)
-  FROM documents WHERE doc_id < 20
+""" + _planted_sql(300, "COALESCE(text, '')", [
+    ("bul_", 15,
+     "repeat('• item one two ' || CAST(doc_id AS VARCHAR) || chr(10), 20)"),
+    ("ell_", 15, "repeat('the words of and that have trail on and on more...'"
+                 " || chr(10), 10)"),
+    ("num_", 10, "repeat('11 22 33 44 55 66 ', 10)"),
+    ("eng_", 20, """repeat('the value of data and methods that have grown with time ',
+                8) || 'tail' || CAST(doc_id AS VARCHAR)"""),
+]) + r"""
 ),
 arrs AS (
   SELECT doc_id, text,
@@ -2697,58 +2587,29 @@ def c4_line_filter_q(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents", below=300)
     did = F.col("doc_id").cast("string")
-    base = docs.select(
-        did.alias("doc_id"), "text")
     good = "The good line stays with enough words today.\n"
-    js = docs.where(F.col("doc_id") < 15).select(
-        F.concat(F.lit("js_"), did).alias("doc_id"),
-        F.concat(F.repeat(F.lit(good), 4),
-                 F.lit("Enable javascript to view this page properly.\n"),
-                 F.lit("Tail words for doc "), did, F.lit(".")).alias("text"))
-    lor = docs.where(F.col("doc_id") < 10).select(
-        F.concat(F.lit("lor_"), did).alias("doc_id"),
-        F.concat(F.repeat(F.lit(good), 4),
-                 F.lit("Lorem Ipsum dolor sit amet filler text.")).alias("text"))
-    brc = docs.where(F.col("doc_id") < 10).select(
-        F.concat(F.lit("brc_"), did).alias("doc_id"),
-        F.concat(F.repeat(F.lit(good), 4),
-                 F.lit("if (x) { return y; }")).alias("text"))
-    frg = docs.where(F.col("doc_id") < 10).select(
-        F.concat(F.lit("frg_"), did).alias("doc_id"),
-        F.repeat(F.concat(F.lit("fragment without terminal punctuation "),
-                          did, F.lit("\n")), 5).alias("text"))
-    corpus = (base.unionByName(js).unionByName(lor).unionByName(brc)
-              .unionByName(frg))
+    corpus = _planted(
+        docs,
+        _branch(docs, "js_", 15, F.concat(
+            F.repeat(F.lit(good), 4),
+            F.lit("Enable javascript to view this page properly.\n"),
+            F.lit("Tail words for doc "), did, F.lit("."))),
+        _branch(docs, "lor_", 10, F.concat(
+            F.repeat(F.lit(good), 4),
+            F.lit("Lorem Ipsum dolor sit amet filler text."))),
+        _branch(docs, "brc_", 10, F.concat(
+            F.repeat(F.lit(good), 4), F.lit("if (x) { return y; }"))),
+        _branch(docs, "frg_", 10, F.repeat(
+            F.concat(F.lit("fragment without terminal punctuation "),
+                     did, F.lit("\n")), 5)))
     return c4_line_filter(corpus).orderBy("doc_id")
 
 
-C4_SQL = r"""
-WITH corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, COALESCE(text, '') AS text
-  FROM documents WHERE doc_id < 300
-  UNION ALL
-  SELECT 'js_' || CAST(doc_id AS VARCHAR),
-         repeat('The good line stays with enough words today.' || chr(10), 4)
-         || 'Enable javascript to view this page properly.' || chr(10)
-         || 'Tail words for doc ' || CAST(doc_id AS VARCHAR) || '.'
-  FROM documents WHERE doc_id < 15
-  UNION ALL
-  SELECT 'lor_' || CAST(doc_id AS VARCHAR),
-         repeat('The good line stays with enough words today.' || chr(10), 4)
-         || 'Lorem Ipsum dolor sit amet filler text.'
-  FROM documents WHERE doc_id < 10
-  UNION ALL
-  SELECT 'brc_' || CAST(doc_id AS VARCHAR),
-         repeat('The good line stays with enough words today.' || chr(10), 4)
-         || 'if (x) { return y; }'
-  FROM documents WHERE doc_id < 10
-  UNION ALL
-  SELECT 'frg_' || CAST(doc_id AS VARCHAR),
-         repeat('fragment without terminal punctuation '
-                || CAST(doc_id AS VARCHAR) || chr(10), 5)
-  FROM documents WHERE doc_id < 10
-),
-kept AS (
+def _c4_gate_ctes(src: str) -> str:
+    """C4 cleaning-rule replay (line retention → page gate) over the
+    (doc_id, text) rows of ``src``: ``c4gate`` holds every c4_line_filter
+    column, ``c4corpus(doc_id, text)`` the kept pages' cleaned text."""
+    return rf"""c4kept AS (
   SELECT doc_id, text,
          [l for l in [trim(x) for x in string_split(text, chr(10))]
           if l != ''
@@ -2758,9 +2619,9 @@ kept AS (
                       if w != '']) >= 5
              AND NOT regexp_matches(lower(l), '\bjavascript\b')]
            AS kl
-  FROM corpus
+  FROM {src}
 ),
-rated AS (
+c4rated AS (
   -- COALESCE: DuckDB's array_to_string over an EMPTY list is NULL,
   -- Spark's concat_ws is ''
   SELECT doc_id, clean_text,
@@ -2768,14 +2629,37 @@ rated AS (
          CAST(len([s for s in regexp_split_to_array(clean_text, '[.!?]+')
                    if trim(s) != '']) AS INT) AS n_sentences,
          contains(lower(text), 'lorem ipsum') AS has_lorem_ipsum,
-         contains(text, '{') AS has_brace
+         contains(text, '{{') AS has_brace
   FROM (SELECT *, COALESCE(array_to_string(kl, chr(10)), '') AS clean_text
-        FROM kept)
-)
-SELECT *,
-       (NOT has_lorem_ipsum AND NOT has_brace AND n_sentences >= 3)
-         AS c4_keep
-FROM rated
+        FROM c4kept)
+),
+c4gate AS (
+  SELECT *,
+         (NOT has_lorem_ipsum AND NOT has_brace AND n_sentences >= 3)
+           AS c4_keep
+  FROM c4rated
+),
+c4corpus AS (SELECT doc_id, clean_text AS text FROM c4gate WHERE c4_keep)"""
+
+
+_C4_GOOD_LINES = ("repeat('The good line stays with enough words today.'"
+                  " || chr(10), 4)")
+
+C4_SQL = """
+WITH corpus AS (
+""" + _planted_sql(300, "COALESCE(text, '')", [
+    ("js_", 15, _C4_GOOD_LINES + """
+         || 'Enable javascript to view this page properly.' || chr(10)
+         || 'Tail words for doc ' || CAST(doc_id AS VARCHAR) || '.'"""),
+    ("lor_", 10,
+     _C4_GOOD_LINES + " || 'Lorem Ipsum dolor sit amet filler text.'"),
+    ("brc_", 10, _C4_GOOD_LINES + " || 'if (x) { return y; }'"),
+    ("frg_", 10, """repeat('fragment without terminal punctuation '
+                || CAST(doc_id AS VARCHAR) || chr(10), 5)"""),
+]) + """
+),
+""" + _c4_gate_ctes("corpus") + """
+SELECT * FROM c4gate
 ORDER BY doc_id
 """
 
@@ -2796,80 +2680,52 @@ def c4_span_dedup_q(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents", below=250)
     did = F.col("doc_id").cast("string")
-    base = docs.select(
-        did.alias("doc_id"), "text")
     shared = F.concat(
         F.lit("Shared first sentence number "), did, F.lit(" stays. "),
         F.lit("Shared second sentence number "), did, F.lit(" stays. "),
         F.lit("Shared third sentence number "), did, F.lit(" stays. "))
-    spn_a = docs.where(F.col("doc_id") < 20).select(
-        F.concat(F.lit("spn_a_"), did).alias("doc_id"),
-        F.concat(F.lit("Alpha intro sentence for document "), did,
-                 F.lit(". "), shared,
-                 F.lit("Alpha outro sentence for document "), did,
-                 F.lit(".")).alias("text"))
-    spn_b = docs.where(F.col("doc_id") < 20).select(
-        F.concat(F.lit("spn_b_"), did).alias("doc_id"),
-        F.concat(F.lit("Beta intro sentence for document "), did,
-                 F.lit("! "), shared,
-                 F.lit("Beta outro sentence for document "), did,
-                 F.lit("?")).alias("text"))
-    rep = docs.where(F.col("doc_id") < 15).select(
-        F.concat(F.lit("rep_"), did).alias("doc_id"),
-        F.repeat(F.concat(
+    corpus = _planted(
+        docs,
+        _branch(docs, "spn_a_", 20, F.concat(
+            F.lit("Alpha intro sentence for document "), did, F.lit(". "),
+            shared, F.lit("Alpha outro sentence for document "), did,
+            F.lit("."))),
+        _branch(docs, "spn_b_", 20, F.concat(
+            F.lit("Beta intro sentence for document "), did, F.lit("! "),
+            shared, F.lit("Beta outro sentence for document "), did,
+            F.lit("?"))),
+        _branch(docs, "rep_", 15, F.repeat(F.concat(
             F.lit("Repeat one sentence number "), did, F.lit(" here. "),
             F.lit("Repeat two sentence number "), did, F.lit(" here. "),
             F.lit("Repeat three sentence number "), did,
-            F.lit(" here. ")), 2).alias("text"))
-    cpy = docs.where(F.col("doc_id") < 25).select(
-        F.concat(F.lit("cpy_"), did).alias("doc_id"), "text")
-    corpus = (base.unionByName(spn_a).unionByName(spn_b)
-              .unionByName(rep).unionByName(cpy))
+            F.lit(" here. ")), 2)),
+        _branch(docs, "cpy_", 25, "text"))
     return c4_span_dedup(corpus).orderBy("doc_id")
 
 
-C4_SPAN_SQL = r"""
+_SPAN_SHARED_SQL = " || ".join(
+    f"'Shared {nth} sentence number ' || CAST(doc_id AS VARCHAR) || ' stays. '"
+    for nth in ("first", "second", "third"))
+
+C4_SPAN_SQL = """
 WITH corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
-  FROM documents WHERE doc_id < 250
-  UNION ALL
-  SELECT 'spn_a_' || CAST(doc_id AS VARCHAR),
-         'Alpha intro sentence for document ' || CAST(doc_id AS VARCHAR)
-         || '. '
-         || 'Shared first sentence number ' || CAST(doc_id AS VARCHAR)
-         || ' stays. '
-         || 'Shared second sentence number ' || CAST(doc_id AS VARCHAR)
-         || ' stays. '
-         || 'Shared third sentence number ' || CAST(doc_id AS VARCHAR)
-         || ' stays. '
-         || 'Alpha outro sentence for document ' || CAST(doc_id AS VARCHAR)
-         || '.'
-  FROM documents WHERE doc_id < 20
-  UNION ALL
-  SELECT 'spn_b_' || CAST(doc_id AS VARCHAR),
-         'Beta intro sentence for document ' || CAST(doc_id AS VARCHAR)
-         || '! '
-         || 'Shared first sentence number ' || CAST(doc_id AS VARCHAR)
-         || ' stays. '
-         || 'Shared second sentence number ' || CAST(doc_id AS VARCHAR)
-         || ' stays. '
-         || 'Shared third sentence number ' || CAST(doc_id AS VARCHAR)
-         || ' stays. '
-         || 'Beta outro sentence for document ' || CAST(doc_id AS VARCHAR)
-         || '?'
-  FROM documents WHERE doc_id < 20
-  UNION ALL
-  SELECT 'rep_' || CAST(doc_id AS VARCHAR),
-         repeat('Repeat one sentence number ' || CAST(doc_id AS VARCHAR)
+""" + _planted_sql(250, "text", [
+    ("spn_a_", 20, "'Alpha intro sentence for document ' || CAST(doc_id AS VARCHAR)"
+                   f" || '. ' || {_SPAN_SHARED_SQL}"
+                   " || 'Alpha outro sentence for document '"
+                   " || CAST(doc_id AS VARCHAR) || '.'"),
+    ("spn_b_", 20, "'Beta intro sentence for document ' || CAST(doc_id AS VARCHAR)"
+                   f" || '! ' || {_SPAN_SHARED_SQL}"
+                   " || 'Beta outro sentence for document '"
+                   " || CAST(doc_id AS VARCHAR) || '?'"),
+    ("rep_", 15, """repeat('Repeat one sentence number ' || CAST(doc_id AS VARCHAR)
                 || ' here. '
                 || 'Repeat two sentence number ' || CAST(doc_id AS VARCHAR)
                 || ' here. '
                 || 'Repeat three sentence number ' || CAST(doc_id AS VARCHAR)
-                || ' here. ', 2)
-  FROM documents WHERE doc_id < 15
-  UNION ALL
-  SELECT 'cpy_' || CAST(doc_id AS VARCHAR), text
-  FROM documents WHERE doc_id < 25
+                || ' here. ', 2)"""),
+    ("cpy_", 25, "text"),
+]) + r"""
 ),
 sent AS (
   SELECT doc_id,
@@ -3046,7 +2902,7 @@ def host_cap_keep_list(spark, sf_dir):
     return kept.select("doc_id", "host", "host_rank", "quality")         .orderBy("host", "host_rank")
 
 
-HOST_CAP_SQL = r"""
+HOST_CAP_SQL = rf"""
 WITH corpus AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
          'https://' || source || '.example.com/doc/'
@@ -3070,12 +2926,7 @@ WITH corpus AS (
 ),
 hosted AS (
   SELECT doc_id, quality,
-         regexp_replace(
-           regexp_replace(
-             regexp_extract(lower(COALESCE(url, '')),
-                            '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1),
-             '^www\.', ''),
-           ':\d+$', '') AS host
+         {_host_sql("url")} AS host
   FROM corpus
 ),
 ranked AS (
@@ -3106,16 +2957,42 @@ def curation_quality_keep_list(spark, sf_dir):
                                  use_lsh=False).orderBy("doc_id")
 
 
-CURATION_QUALITY_SQL = (
-    "WITH RECURSIVE " + _CURATION_CORPUS_CTE + ",\n"
-    + _GOPHER_GATE_CTES + ",\n"
-    + _curation_tail("qcorpus")
-    + "SELECT doc_id, status, canonical FROM final\n"
-      "UNION ALL\n"
-      "SELECT doc_id, 'rejected_quality' AS status,"
-      " CAST(NULL AS VARCHAR) AS canonical FROM q_gate WHERE NOT keep\n"
-      "ORDER BY doc_id\n"
-)
+def _gated_curation_sql(src: str) -> str:
+    """The Gopher gate over ``src`` feeding the curation chain, closed
+    by the keep-list SELECT with the gate's rejections."""
+    return (_gopher_gate_ctes(src) + ",\n"
+            + _curation_tail("qcorpus")
+            + "SELECT doc_id, status, canonical FROM final\n"
+              "UNION ALL\n"
+              "SELECT doc_id, 'rejected_quality' AS status,"
+              " CAST(NULL AS VARCHAR) AS canonical FROM q_gate"
+              " WHERE NOT keep\n")
+
+
+CURATION_QUALITY_SQL = ("WITH RECURSIVE " + _CURATION_CORPUS_CTE + ",\n"
+                        + _gated_curation_sql("corpus") + "ORDER BY doc_id\n")
+
+
+# DSIR's hashed unigram+bigram feature space (operators/dsir.py):
+# lower-cased words, md5-prefix buckets (hexlen 3 → 4096)
+_DSIR_WORDS = (r"[w for w in regexp_split_to_array("
+               r"lower(trim(COALESCE(text, ''))), '\s+') if w <> '']")
+_DSIR_BUCKETS = r"""[substring(md5('dsir:' || g), 1, 3) for g in
+          list_concat(ws,
+            CASE WHEN len(ws) >= 2
+                 THEN [ws[i] || ' ' || ws[i + 1]
+                       for i in generate_series(1, len(ws) - 1)]
+                 ELSE CAST([] AS VARCHAR[]) END)]"""
+
+
+def _q16_sql(n: str, d: str) -> str:
+    """-log2(n / d) in sixteenths for integer 0 < n <= d
+    (operators/lm_ppx.py): bin-length floor(log2) plus an integer
+    linear mantissa — no transcendentals, bit-identical to Spark."""
+    return (f"(16 * (len(bin({d} // {n})) - 1)"
+            f" + ({d} * 16)"
+            f" // ({n} * (CAST(1 AS BIGINT) << (len(bin({d} // {n})) - 1)))"
+            " - 16)")
 
 
 def _qclf_cte(train_src: str, pos_cond: str, neg_cond: str,
@@ -3127,29 +3004,17 @@ def _qclf_cte(train_src: str, pos_cond: str, neg_cond: str,
     baseline-adjusted broadcast table → exact BIGINT scores for every
     ``score_src`` row, surfaced as ``qrep(doc_id, n_grams,
     score_q16)``. Both sources must provide (doc_id, text)."""
-    grams = r"""[substring(md5('dsir:' || g), 1, 3) for g in
-          list_concat(ws,
-            CASE WHEN len(ws) >= 2
-                 THEN [ws[i] || ' ' || ws[i + 1]
-                       for i in generate_series(1, len(ws) - 1)]
-                 ELSE CAST([] AS VARCHAR[]) END)]"""
-    tok = (r"[w for w in regexp_split_to_array("
-           r"lower(trim(COALESCE(text, ''))), '\s+') if w <> '']")
-    s16 = ("(16 * (len(bin({d} // {n})) - 1)"
-           " + ({d} * 16)"
-           " // ({n} * (CAST(1 AS BIGINT) << (len(bin({d} // {n})) - 1)))"
-           " - 16)")
-    w_expr = (s16.format(n="nnum", d="nden") + "\n         - "
-              + s16.format(n="pnum", d="pden"))
-    wun_expr = (s16.format(n="CAST(1 AS BIGINT)", d="nden") + "\n         - "
-                + s16.format(n="CAST(1 AS BIGINT)", d="pden"))
+    w_expr = (_q16_sql("nnum", "nden") + "\n         - "
+              + _q16_sql("pnum", "pden"))
+    wun_expr = (_q16_sql("CAST(1 AS BIGINT)", "nden") + "\n         - "
+                + _q16_sql("CAST(1 AS BIGINT)", "pden"))
     return rf"""qfeats_t AS MATERIALIZED (
-  SELECT t.*, {grams} AS bs
-  FROM (SELECT s.*, {tok} AS ws FROM {train_src} s) t
+  SELECT t.*, {_DSIR_BUCKETS} AS bs
+  FROM (SELECT s.*, {_DSIR_WORDS} AS ws FROM {train_src} s) t
 ),
 qfeats_s AS MATERIALIZED (
-  SELECT doc_id, {grams} AS bs
-  FROM (SELECT doc_id, {tok} AS ws FROM {score_src}) t
+  SELECT doc_id, {_DSIR_BUCKETS} AS bs
+  FROM (SELECT doc_id, {_DSIR_WORDS} AS ws FROM {score_src}) t
 ),
 qpcounts AS (
   SELECT bucket, CAST(COUNT(*) AS BIGINT) AS cp
@@ -3352,6 +3217,23 @@ ORDER BY check_id
 """
 
 
+_QCLF_POS_MARK = (" curated encyclopedia citation verified"
+                  " reference archive")
+_QCLF_NEG_MARK = (" clickbait spamword lottery jackpot"
+                  " promo banner")
+
+
+# a planted classifier-class doc: its text (NULL → '') plus the class
+# marker repeated doc_id % 3 + 1 times — SQL for DuckDB and F.expr
+def _marked_sql(marker: str) -> str:
+    return f"repeat('{marker}', CAST(doc_id % 3 + 1 AS INT))"
+
+
+def _marked(marker):
+    return F.concat(F.coalesce(F.col("text"), F.lit("")),
+                    F.expr(_marked_sql(marker)))
+
+
 def classifier_curation_keep_list_q(spark, sf_dir):
     """DEDUP-THEN-CLASSIFY CURATION ORACLE — the DCLM / FineWeb-Edu
     stage order (operators/curation.py::classifier_curation_keep_list):
@@ -3377,7 +3259,6 @@ def classifier_curation_keep_list_q(spark, sf_dir):
         classifier_curation_keep_list)
 
     docs = _t(spark, sf_dir, "documents", below=360)
-    reps = "CAST(doc_id % 3 + 1 AS INT)"
 
     def marked(lo, hi, prefix, marker, even_only=False):
         out = docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
@@ -3386,8 +3267,7 @@ def classifier_curation_keep_list_q(spark, sf_dir):
         return out.select(
             F.concat(F.lit(prefix), F.col("doc_id").cast("string"))
             .alias("doc_id"),
-            F.concat(F.coalesce(F.col("text"), F.lit("")),
-                     F.expr(f"repeat('{marker}', {reps})")).alias("text"))
+            _marked(marker).alias("text"))
 
     corpus = (_curation_corpus(spark, sf_dir)
               .unionByName(marked(300, 330, "qgood_", _QCLF_POS_MARK))
@@ -3397,38 +3277,31 @@ def classifier_curation_keep_list_q(spark, sf_dir):
     return classifier_curation_keep_list(corpus, pos, neg).orderBy("doc_id")
 
 
-_CLF_CUR_CORPUS_CTE = _CURATION_CORPUS_CTE.replace(
-    "corpus AS (", "ccorpus AS (", 1)[:-1] + r"""
+_CLF_CUR_CORPUS_CTE = f"""ccorpus AS (
+  SELECT doc_id, text FROM corpus
   UNION ALL
   SELECT 'qgood_' || CAST(doc_id AS VARCHAR),
-         COALESCE(text, '') || repeat(
-           ' curated encyclopedia citation verified reference archive',
-           CAST(doc_id % 3 + 1 AS INT))
+         COALESCE(text, '') || {_marked_sql(_QCLF_POS_MARK)}
   FROM documents WHERE doc_id >= 300 AND doc_id < 330
   UNION ALL
   SELECT 'qbad_' || CAST(doc_id AS VARCHAR),
-         COALESCE(text, '') || repeat(
-           ' clickbait spamword lottery jackpot promo banner',
-           CAST(doc_id % 3 + 1 AS INT))
+         COALESCE(text, '') || {_marked_sql(_QCLF_NEG_MARK)}
   FROM documents WHERE doc_id >= 330 AND doc_id < 360
 )"""
 
-_CLF_CUR_TRAIN_CTE = r"""qtrain AS (
+_CLF_CUR_TRAIN_CTE = f"""qtrain AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, 'p' AS cls,
-         COALESCE(text, '') || repeat(
-           ' curated encyclopedia citation verified reference archive',
-           CAST(doc_id % 3 + 1 AS INT)) AS text
+         COALESCE(text, '') || {_marked_sql(_QCLF_POS_MARK)} AS text
   FROM documents WHERE doc_id < 60 AND doc_id % 2 = 0
   UNION ALL
   SELECT CAST(doc_id AS VARCHAR), 'n',
-         COALESCE(text, '') || repeat(
-           ' clickbait spamword lottery jackpot promo banner',
-           CAST(doc_id % 3 + 1 AS INT))
+         COALESCE(text, '') || {_marked_sql(_QCLF_NEG_MARK)}
   FROM documents WHERE doc_id >= 60 AND doc_id < 120 AND doc_id % 2 = 0
 )"""
 
 CLASSIFIER_CURATION_SQL = (
-    "WITH RECURSIVE " + _CLF_CUR_CORPUS_CTE + ",\n"
+    "WITH RECURSIVE " + _CURATION_CORPUS_CTE + ",\n"
+    + _CLF_CUR_CORPUS_CTE + ",\n"
     + _curation_tail("ccorpus") + ",\n"
     + _CLF_CUR_TRAIN_CTE + ",\n"
     + "keptdocs AS (\n"
@@ -3468,6 +3341,19 @@ def c4_curation_keep_list_q(spark, sf_dir):
     from n8n_tools_api_spark.operators.curation import c4_curation_keep_list
 
     docs = _t(spark, sf_dir, "documents", below=300)
+    sent4, branches = _c4_fixture_texts()
+    corpus = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
+                         sent4.alias("text"))
+    for prefix, n, text in branches:
+        corpus = corpus.unionByName(_branch(docs, prefix, n, text))
+    return c4_curation_keep_list(corpus).orderBy("doc_id")
+
+
+def _c4_fixture_texts():
+    """Page texts of the C4-first fixtures: each doc's sanitized text
+    cut into four sentence-terminated 60-char lines (the synthetic
+    corpus has no terminal punctuation) → ``(sent4, branches)``, the
+    base page and the planted (prefix, n, text) branches in order."""
     did = F.col("doc_id").cast("string")
     t = F.trim(F.regexp_replace(F.regexp_replace(
         F.coalesce(F.col("text"), F.lit("")), "[^a-z0-9 ]", " "), " +", " "))
@@ -3476,31 +3362,20 @@ def c4_curation_keep_list_q(spark, sf_dir):
         return F.concat(F.substring(t, 1 + 60 * (i - 1), 60), F.lit("."))
 
     sent4 = F.concat_ws("\n", line(1), line(2), line(3), line(4))
-    sent3 = F.concat_ws("\n", line(1), line(2), line(3))
     rep_line = F.concat(F.substring(t, 1, 40), F.lit("."))
-    base = docs.select(
-        did.alias("doc_id"), sent4.alias("text"))
-    copies = docs.where(F.col("doc_id") < 40).select(
-        F.concat(F.lit("copy_"), did).alias("doc_id"), sent4.alias("text"))
-    muts = docs.where(F.col("doc_id") < 25).select(
-        F.concat(F.lit("mut_"), did).alias("doc_id"), sent3.alias("text"))
-    js = docs.where(F.col("doc_id") < 15).select(
-        F.concat(F.lit("js_"), did).alias("doc_id"),
-        F.concat_ws("\n", line(1), line(2),
-                    F.lit("Enable javascript to view this page properly."),
-                    line(3), line(4)).alias("text"))
-    brc = docs.where(F.col("doc_id") < 10).select(
-        F.concat(F.lit("brc_"), did).alias("doc_id"),
-        F.concat_ws("\n", sent4,
-                    F.lit("if (x) { return y; }")).alias("text"))
-    rep = docs.where(F.col("doc_id") < 12).select(
-        F.concat(F.lit("rep_"), did).alias("doc_id"),
-        F.concat_ws("\n", rep_line, rep_line, rep_line, rep_line, rep_line,
-                    F.concat(F.lit("unique tail for doc "), did,
-                             F.lit(" with extra words."))).alias("text"))
-    corpus = (base.unionByName(copies).unionByName(muts).unionByName(js)
-              .unionByName(brc).unionByName(rep))
-    return c4_curation_keep_list(corpus).orderBy("doc_id")
+    return sent4, [
+        ("copy_", 40, sent4),
+        ("mut_", 25, F.concat_ws("\n", line(1), line(2), line(3))),
+        ("js_", 15, F.concat_ws(
+            "\n", line(1), line(2),
+            F.lit("Enable javascript to view this page properly."),
+            line(3), line(4))),
+        ("brc_", 10, F.concat_ws("\n", sent4, F.lit("if (x) { return y; }"))),
+        ("rep_", 12, F.concat_ws(
+            "\n", rep_line, rep_line, rep_line, rep_line, rep_line,
+            F.concat(F.lit("unique tail for doc "), did,
+                     F.lit(" with extra words.")))),
+    ]
 
 
 _C4_FIXTURE_CTES = r"""san AS (
@@ -3510,23 +3385,21 @@ _C4_FIXTURE_CTES = r"""san AS (
   FROM documents WHERE doc_id < 300
 ),
 ln AS (
-  SELECT did, id,
-         substr(t, 1, 60) || '.' AS l1, substr(t, 61, 60) || '.' AS l2,
-         substr(t, 121, 60) || '.' AS l3, substr(t, 181, 60) || '.' AS l4,
-         substr(t, 1, 40) || '.' AS r
-  FROM san
+  SELECT *,
+         l1 || chr(10) || l2 || chr(10) || l3 AS p3,
+         l1 || chr(10) || l2 || chr(10) || l3 || chr(10) || l4 AS p4
+  FROM (SELECT did, id,
+               substr(t, 1, 60) || '.' AS l1, substr(t, 61, 60) || '.' AS l2,
+               substr(t, 121, 60) || '.' AS l3, substr(t, 181, 60) || '.' AS l4,
+               substr(t, 1, 40) || '.' AS r
+        FROM san)
 ),
 c4src AS (
-  SELECT did AS doc_id,
-         l1 || chr(10) || l2 || chr(10) || l3 || chr(10) || l4 AS text
-  FROM ln
+  SELECT did AS doc_id, p4 AS text FROM ln
   UNION ALL
-  SELECT 'copy_' || did,
-         l1 || chr(10) || l2 || chr(10) || l3 || chr(10) || l4
-  FROM ln WHERE id < 40
+  SELECT 'copy_' || did, p4 FROM ln WHERE id < 40
   UNION ALL
-  SELECT 'mut_' || did, l1 || chr(10) || l2 || chr(10) || l3
-  FROM ln WHERE id < 25
+  SELECT 'mut_' || did, p3 FROM ln WHERE id < 25
   UNION ALL
   SELECT 'js_' || did,
          l1 || chr(10) || l2 || chr(10)
@@ -3534,9 +3407,7 @@ c4src AS (
          || l3 || chr(10) || l4
   FROM ln WHERE id < 15
   UNION ALL
-  SELECT 'brc_' || did,
-         l1 || chr(10) || l2 || chr(10) || l3 || chr(10) || l4 || chr(10)
-         || 'if (x) { return y; }'
+  SELECT 'brc_' || did, p4 || chr(10) || 'if (x) { return y; }'
   FROM ln WHERE id < 10
   UNION ALL
   SELECT 'rep_' || did,
@@ -3546,46 +3417,13 @@ c4src AS (
 )"""
 
 
-def _c4_gate_ctes(src: str) -> str:
-    """C4 cleaning-rule CTEs (line retention → page gate → cleaned
-    corpus) over a (doc_id, text) source CTE — same expressions as
-    C4_SQL, reduced to the clean_text/c4_keep pair."""
-    return rf"""c4kept AS (
-  SELECT doc_id, text,
-         [l for l in [trim(x) for x in string_split(text, chr(10))]
-          if l != ''
-             AND (ends_with(l, '.') OR ends_with(l, '!')
-                  OR ends_with(l, '?') OR ends_with(l, '"'))
-             AND len([w for w in regexp_split_to_array(l, '\s+')
-                      if w != '']) >= 5
-             AND NOT regexp_matches(lower(l), '\bjavascript\b')]
-           AS kl
-  FROM {src}
-),
-c4gate AS (
-  SELECT doc_id, clean_text,
-         (NOT contains(lower(text), 'lorem ipsum')
-          AND NOT contains(text, '{{')
-          AND len([s for s in regexp_split_to_array(clean_text, '[.!?]+')
-                   if trim(s) != '']) >= 3) AS c4_keep
-  FROM (SELECT *, COALESCE(array_to_string(kl, chr(10)), '') AS clean_text
-        FROM c4kept)
-),
-c4corpus AS (SELECT doc_id, clean_text AS text FROM c4gate WHERE c4_keep)"""
-
-
 _C4_CURATION_SRC_CTES = _C4_FIXTURE_CTES + ",\n" + _c4_gate_ctes("c4src")
 
 
 C4_CURATION_SQL = (
     "WITH RECURSIVE " + _C4_CURATION_SRC_CTES + ",\n"
-    + _gopher_gate_ctes("c4corpus") + ",\n"
-    + _curation_tail("qcorpus")
-    + "SELECT doc_id, status, canonical FROM final\n"
-      "UNION ALL\n"
-      "SELECT doc_id, 'rejected_quality' AS status,"
-      " CAST(NULL AS VARCHAR) AS canonical FROM q_gate WHERE NOT keep\n"
-      "UNION ALL\n"
+    + _gated_curation_sql("c4corpus")
+    + "UNION ALL\n"
       "SELECT doc_id, 'rejected_c4' AS status,"
       " CAST(NULL AS VARCHAR) AS canonical FROM c4gate WHERE NOT c4_keep\n"
       "ORDER BY doc_id\n"
@@ -3854,36 +3692,34 @@ corpus AS (
 )
 """
 
-STREAM_NEARDUP_AGREEMENT_SQL = (
-    _STREAM_AGREEMENT_CORPUS_SQL.format(dup_branch="") + """
+_STREAM_ADMITTED = ("CAST(SUM(CASE WHEN expect_admitted THEN 1 ELSE 0 END)"
+                    " AS BIGINT)")
+
+
+def _stream_agreement_sql(dup_branch: str, stage_col: str) -> str:
+    """Per-category rollup of the planted stream corpus: every doc's
+    expected disposition IS the oracle row, so stream and twin agree
+    by construction; ``stage_col`` is the stage-specific column."""
+    return _STREAM_AGREEMENT_CORPUS_SQL.format(dup_branch=dup_branch) + f"""
 SELECT category,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN expect_admitted THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_stream_admitted,
-       CAST(SUM(CASE WHEN expect_admitted THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_twin_admitted,
+       {_STREAM_ADMITTED} AS n_stream_admitted,
+       {stage_col},
        CAST(COUNT(*) AS BIGINT) AS n_stream_twin_agree
 FROM corpus
 GROUP BY category
 ORDER BY category
-""")
+"""
 
-STREAM_CURATION_AGREEMENT_SQL = (
-    _STREAM_AGREEMENT_CORPUS_SQL.format(dup_branch="""
+
+STREAM_NEARDUP_AGREEMENT_SQL = _stream_agreement_sql(
+    "", _STREAM_ADMITTED + " AS n_twin_admitted")
+
+STREAM_CURATION_AGREEMENT_SQL = _stream_agreement_sql("""
   UNION ALL
   SELECT 'dup_' || CAST(id AS VARCHAR), 'dup', FALSE
   FROM base WHERE id < 30
-""") + """
-SELECT category,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN expect_admitted THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_stream_admitted,
-       CAST(COUNT(*) AS BIGINT) AS n_stage_agree,
-       CAST(COUNT(*) AS BIGINT) AS n_stream_twin_agree
-FROM corpus
-GROUP BY category
-ORDER BY category
-""")
+""", "CAST(COUNT(*) AS BIGINT) AS n_stage_agree")
 
 
 def boilerplate_strip_q(spark, sf_dir):
@@ -4028,12 +3864,51 @@ def benchmark_decontam_q(spark, sf_dir):
     return ngram_decontaminate(corpus, bench, n=13).orderBy("doc_id")
 
 
-# Full DuckDB replay: same tokenization (lower/trim/\s+ split, empty
-# tokens dropped), same gram fold (13-grams, short-doc whole-sequence
-# convention, wordless → no grams), same benchmark construction
-# (word-slice parity: w[5:25] ≡ Spark slice(words, 5, 21)), distinct
-# overlap counts via a gram equi-join.
-BENCH_DECONTAM_SQL = r"""
+# lower/trim/\s+ split with empty tokens dropped (the decontamination
+# tokenizer, operators/decontaminate.py)
+_LOWER_TOKENS = (r"list_filter(regexp_split_to_array("
+                 r"lower(trim(COALESCE(text, ''))), '\s+'), x -> x <> '')")
+
+
+def _decontam_ctes(bench_src: str, doc_src: str) -> str:
+    """13-gram decontamination replay over the ``text`` rows of
+    ``bench_src`` and the (doc_id, text) rows of ``doc_src``: the
+    distinct benchmark grams (``bgrams``), each doc's distinct grams
+    (``dgrams(doc_id, g)``) and its overlap count (``hits(doc_id,
+    n_hits)``, hitting docs only). A row shorter than 13 words is one
+    whole-sequence gram; a wordless row has none."""
+    grams = r"""CASE
+      WHEN len(w) = 0 THEN CAST([] AS VARCHAR[])
+      WHEN len(w) < 13 THEN [array_to_string(w, ' ')]
+      ELSE [array_to_string(w[i:i+12], ' ')
+            for i in generate_series(1, len(w) - 12)] END"""
+    return f"""bgram_l AS (
+  SELECT {_LOWER_TOKENS} AS w FROM {bench_src}
+),
+bgrams AS (
+  SELECT DISTINCT gram FROM (
+    SELECT unnest({grams}) AS gram
+    FROM bgram_l)
+  WHERE gram <> ''
+),
+dwords AS (
+  SELECT doc_id, {_LOWER_TOKENS} AS w FROM {doc_src}
+),
+dgrams AS (
+  SELECT doc_id, list_distinct({grams}) AS g
+  FROM dwords
+),
+hits AS (
+  SELECT doc_id, COUNT(*) AS n_hits
+  FROM (SELECT doc_id, unnest(g) AS gram FROM dgrams) d
+  JOIN bgrams USING (gram)
+  GROUP BY doc_id
+)"""
+
+
+# The benchmark is built in-query with word-slice parity:
+# w[5:25] ≡ Spark slice(words, 5, 21).
+BENCH_DECONTAM_SQL = f"""
 WITH corpus AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
   FROM documents WHERE doc_id < 600
@@ -4041,9 +3916,7 @@ WITH corpus AS (
   UNION ALL SELECT 'short_doc', 'alpha beta gamma'
 ),
 bwords AS (
-  SELECT list_filter(
-           regexp_split_to_array(lower(trim(COALESCE(text, ''))), '\s+'),
-           x -> x <> '') AS w
+  SELECT {_LOWER_TOKENS} AS w
   FROM documents WHERE doc_id < 600 AND doc_id % 10 = 7
 ),
 bench_rows AS (
@@ -4052,43 +3925,7 @@ bench_rows AS (
   SELECT 'benchmark probe item ' || CAST(i AS VARCHAR) || ' zqxwv'
   FROM generate_series(0, 4) t(i)
 ),
-bgram_l AS (
-  SELECT list_filter(
-           regexp_split_to_array(lower(trim(COALESCE(text, ''))), '\s+'),
-           x -> x <> '') AS w
-  FROM bench_rows
-),
-bgrams AS (
-  SELECT DISTINCT gram FROM (
-    SELECT unnest(CASE
-      WHEN len(w) = 0 THEN CAST([] AS VARCHAR[])
-      WHEN len(w) < 13 THEN [array_to_string(w, ' ')]
-      ELSE [array_to_string(w[i:i+12], ' ')
-            for i in generate_series(1, len(w) - 12)] END) AS gram
-    FROM bgram_l)
-  WHERE gram <> ''
-),
-dwords AS (
-  SELECT doc_id,
-         list_filter(
-           regexp_split_to_array(lower(trim(COALESCE(text, ''))), '\s+'),
-           x -> x <> '') AS w
-  FROM corpus
-),
-dgrams AS (
-  SELECT doc_id, list_distinct(CASE
-    WHEN len(w) = 0 THEN CAST([] AS VARCHAR[])
-    WHEN len(w) < 13 THEN [array_to_string(w, ' ')]
-    ELSE [array_to_string(w[i:i+12], ' ')
-          for i in generate_series(1, len(w) - 12)] END) AS g
-  FROM dwords
-),
-hits AS (
-  SELECT doc_id, COUNT(*) AS n_hits
-  FROM (SELECT doc_id, unnest(g) AS gram FROM dgrams) d
-  JOIN bgrams USING (gram)
-  GROUP BY doc_id
-)
+{_decontam_ctes("bench_rows", "corpus")}
 SELECT d.doc_id,
        CAST(len(g) AS BIGINT) AS n_grams,
        CAST(COALESCE(n_hits, 0) AS BIGINT) AS n_hits,
@@ -4138,14 +3975,61 @@ def url_blocklist_q(spark, sf_dir):
         .otherwise(F.lit(None).cast("string"))
     )
     corpus = docs.select(i.alias("doc_id"), url.alias("url"))
-    domains = spark.range(1).select(
+    return url_blocklist_filter(
+        corpus, _blocked_domains(spark), ["casino", "poker", "xxx"]
+    ).orderBy("doc_id")
+
+
+def _blocked_domains(spark):
+    """The domain blocklist both URL-gate fixtures use."""
+    return spark.range(1).select(
         F.explode(F.array(F.lit("badsite.org"), F.lit("tracker.net")))
         .alias("domain"))
-    return url_blocklist_filter(
-        corpus, domains, ["casino", "poker", "xxx"]).orderBy("doc_id")
 
 
-URL_BLOCKLIST_SQL = r"""
+def _url_blocklist_ctes(src: str, terms) -> str:
+    """URL-blocklist replay (operators/curation.py::url_blocklist_filter)
+    over the (doc_id, url) rows of ``src`` with the domain list
+    {badsite.org, tracker.net}: canonical host, every dot-suffix of it
+    against the domains, then the ``terms`` as substrings of the
+    lower-cased URL → ``urlstat(doc_id, url, host, status, matched)``,
+    a domain hit beating a term hit."""
+    values = ", ".join(f"('{t}')" for t in terms)
+    return f"""uhost AS (
+  SELECT doc_id, url, {_host_sql("url")} AS host FROM {src}
+),
+usuff AS (
+  SELECT doc_id, unnest([array_to_string(p[i:len(p)], '.')
+                         for i in generate_series(1, len(p))]) AS s
+  FROM (SELECT doc_id, string_split(host, '.') AS p FROM uhost)
+),
+udmatch AS (
+  SELECT doc_id, min(s) AS d
+  FROM usuff
+  JOIN (VALUES ('badsite.org'), ('tracker.net')) AS domains(domain)
+    ON s = domain AND s <> ''
+  GROUP BY doc_id
+),
+utmatch AS (
+  SELECT doc_id, min(term) AS t
+  FROM uhost
+  JOIN (VALUES {values}) AS terms(term)
+    ON contains(lower(COALESCE(url, '')), term)
+  GROUP BY doc_id
+),
+urlstat AS (
+  SELECT h.doc_id, h.url, h.host,
+         CASE WHEN d IS NOT NULL THEN 'blocked_domain'
+              WHEN t IS NOT NULL THEN 'blocked_term'
+              ELSE 'kept' END AS status,
+         COALESCE(d, t) AS matched
+  FROM uhost h
+  LEFT JOIN udmatch USING (doc_id)
+  LEFT JOIN utmatch USING (doc_id)
+)"""
+
+
+URL_BLOCKLIST_SQL = f"""
 WITH src AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
     CASE CAST(doc_id % 8 AS INT)
@@ -4160,43 +4044,9 @@ WITH src AS (
       ELSE NULL END AS url
   FROM documents WHERE doc_id < 400
 ),
-hosted AS (
-  SELECT doc_id, url,
-         regexp_replace(
-           regexp_replace(
-             regexp_extract(lower(COALESCE(url, '')),
-                            '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1),
-             '^www\.', ''),
-           ':\d+$', '') AS host
-  FROM src
-),
-suff AS (
-  SELECT doc_id, unnest([array_to_string(p[i:len(p)], '.')
-                         for i in generate_series(1, len(p))]) AS s
-  FROM (SELECT doc_id, string_split(host, '.') AS p FROM hosted)
-),
-dmatch AS (
-  SELECT doc_id, min(s) AS d
-  FROM suff
-  JOIN (VALUES ('badsite.org'), ('tracker.net')) AS domains(domain)
-    ON s = domain AND s <> ''
-  GROUP BY doc_id
-),
-tmatch AS (
-  SELECT doc_id, min(term) AS t
-  FROM src
-  JOIN (VALUES ('casino'), ('poker'), ('xxx')) AS terms(term)
-    ON contains(lower(COALESCE(url, '')), term)
-  GROUP BY doc_id
-)
-SELECT h.doc_id, h.url, h.host,
-       CASE WHEN d IS NOT NULL THEN 'blocked_domain'
-            WHEN t IS NOT NULL THEN 'blocked_term'
-            ELSE 'kept' END AS status,
-       COALESCE(d, t) AS matched
-FROM hosted h
-LEFT JOIN dmatch USING (doc_id)
-LEFT JOIN tmatch USING (doc_id)
+{_url_blocklist_ctes("src", ["casino", "poker", "xxx"])}
+SELECT doc_id, url, host, status, matched
+FROM urlstat
 ORDER BY doc_id
 """
 
@@ -4292,15 +4142,7 @@ def _web_pipeline(spark, sf_dir, use_lsh=False):
     docs = _t(spark, sf_dir, "documents", below=300)
     did = F.col("doc_id").cast("string")
     idn = F.col("doc_id")
-    t = F.trim(F.regexp_replace(F.regexp_replace(
-        F.coalesce(F.col("text"), F.lit("")), "[^a-z0-9 ]", " "), " +", " "))
-
-    def line(i):
-        return F.concat(F.substring(t, 1 + 60 * (i - 1), 60), F.lit("."))
-
-    sent4 = F.concat_ws("\n", line(1), line(2), line(3), line(4))
-    sent3 = F.concat_ws("\n", line(1), line(2), line(3))
-    rep_line = F.concat(F.substring(t, 1, 40), F.lit("."))
+    sent4, branches = _c4_fixture_texts()
     base_url = (
         F.when(idn % 10 == 6,
                F.concat(F.lit("https://www.badsite.org/p"), did))
@@ -4323,32 +4165,17 @@ def _web_pipeline(spark, sf_dir, use_lsh=False):
             F.concat(F.lit("https://"), pid, F.lit(".example/p"))
             .alias("url"))
 
-    corpus = (
-        base
-        .unionByName(branch("copy_", idn < 40, sent4))
-        .unionByName(branch("mut_", idn < 25, sent3))
-        .unionByName(branch("js_", idn < 15, F.concat_ws(
-            "\n", line(1), line(2),
-            F.lit("Enable javascript to view this page properly."),
-            line(3), line(4))))
-        .unionByName(branch("brc_", idn < 10, F.concat_ws(
-            "\n", sent4, F.lit("if (x) { return y; }"))))
-        .unionByName(branch("rep_", idn < 12, F.concat_ws(
-            "\n", rep_line, rep_line, rep_line, rep_line, rep_line,
-            F.concat(F.lit("unique tail for doc "), did,
-                     F.lit(" with extra words.")))))
-    )
+    corpus = base
+    for prefix, n, text in branches:
+        corpus = corpus.unionByName(branch(prefix, idn < n, text))
     bench = (
         docs.where((idn >= 200) & (idn < 300) & (idn % 10 == 3))
         .select(words(sent4, lower=True).alias("_w"))
         .where(F.size("_w") >= 23)
         .select(F.array_join(F.slice("_w", 3, 21), " ").alias("text"))
     )
-    domains = spark.range(1).select(
-        F.explode(F.array(F.lit("badsite.org"), F.lit("tracker.net")))
-        .alias("domain"))
     return web_curation_keep_list(
-        corpus, domains, ["casino"], bench,
+        corpus, _blocked_domains(spark), ["casino"], bench,
         host_cap=5, sample_rate=0.5, use_lsh=use_lsh).orderBy("doc_id")
 
 
@@ -4360,83 +4187,17 @@ def web_curation_keep_list_q(spark, sf_dir):
     return _web_pipeline(spark, sf_dir, use_lsh=False)
 
 
-_WEB_SRC_CTES = r"""wsrc AS (
-  SELECT did AS doc_id,
-         l1 || chr(10) || l2 || chr(10) || l3 || chr(10) || l4 AS text,
-         CASE WHEN id % 10 = 6 THEN 'https://www.badsite.org/p' || did
-              WHEN id >= 100 AND id < 150
-                THEN 'https://bighost.example/p' || did
-              WHEN id >= 150 AND id < 200
-                THEN 'https://www.www.bighost.example/p' || did
-              ELSE 'https://' || did || '.example/p' END AS url
-  FROM ln
-  UNION ALL
-  SELECT 'copy_' || did,
-         l1 || chr(10) || l2 || chr(10) || l3 || chr(10) || l4,
-         'https://copy_' || did || '.example/p'
-  FROM ln WHERE id < 40
-  UNION ALL
-  SELECT 'mut_' || did, l1 || chr(10) || l2 || chr(10) || l3,
-         'https://mut_' || did || '.example/p'
-  FROM ln WHERE id < 25
-  UNION ALL
-  SELECT 'js_' || did,
-         l1 || chr(10) || l2 || chr(10)
-         || 'Enable javascript to view this page properly.' || chr(10)
-         || l3 || chr(10) || l4,
-         'https://js_' || did || '.example/p'
-  FROM ln WHERE id < 15
-  UNION ALL
-  SELECT 'brc_' || did,
-         l1 || chr(10) || l2 || chr(10) || l3 || chr(10) || l4 || chr(10)
-         || 'if (x) { return y; }',
-         'https://brc_' || did || '.example/p'
-  FROM ln WHERE id < 10
-  UNION ALL
-  SELECT 'rep_' || did,
-         r || chr(10) || r || chr(10) || r || chr(10) || r || chr(10) || r
-         || chr(10) || 'unique tail for doc ' || did || ' with extra words.',
-         'https://rep_' || did || '.example/p'
-  FROM ln WHERE id < 12
+_WEB_SRC_CTES = rf"""wsrc AS (
+  SELECT s.doc_id, s.text,
+         CASE WHEN ln.id % 10 = 6 THEN 'https://www.badsite.org/p' || ln.did
+              WHEN ln.id >= 100 AND ln.id < 150
+                THEN 'https://bighost.example/p' || ln.did
+              WHEN ln.id >= 150 AND ln.id < 200
+                THEN 'https://www.www.bighost.example/p' || ln.did
+              ELSE 'https://' || s.doc_id || '.example/p' END AS url
+  FROM c4src s LEFT JOIN ln ON ln.did = s.doc_id
 ),
-whost AS (
-  SELECT doc_id,
-         regexp_replace(
-           regexp_replace(
-             regexp_extract(lower(COALESCE(url, '')),
-                            '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1),
-             '^www\.', ''),
-           ':\d+$', '') AS host,
-         lower(COALESCE(url, '')) AS lurl
-  FROM wsrc
-),
-wsuff AS (
-  SELECT doc_id, unnest([array_to_string(p[i:len(p)], '.')
-                         for i in generate_series(1, len(p))]) AS s
-  FROM (SELECT doc_id, string_split(host, '.') AS p FROM whost)
-),
-wdmatch AS (
-  SELECT doc_id, min(s) AS d
-  FROM wsuff
-  JOIN (VALUES ('badsite.org'), ('tracker.net')) AS domains(domain)
-    ON s = domain AND s <> ''
-  GROUP BY doc_id
-),
-wtmatch AS (
-  SELECT doc_id, min(term) AS tm
-  FROM whost
-  JOIN (VALUES ('casino')) AS terms(term) ON contains(lurl, term)
-  GROUP BY doc_id
-),
-urlstat AS (
-  SELECT h.doc_id, h.host,
-         CASE WHEN d IS NOT NULL THEN 'blocked_domain'
-              WHEN tm IS NOT NULL THEN 'blocked_term'
-              ELSE 'kept' END AS status
-  FROM whost h
-  LEFT JOIN wdmatch USING (doc_id)
-  LEFT JOIN wtmatch USING (doc_id)
-),
+{_url_blocklist_ctes("wsrc", ["casino"])},
 websrc AS (
   SELECT w.doc_id, w.text FROM wsrc w
   JOIN urlstat u USING (doc_id) WHERE u.status = 'kept'
@@ -4454,59 +4215,22 @@ hranked AS (
   FROM hostkept
 ),
 bwords AS (
-  SELECT [w for w in regexp_split_to_array(
-            lower(trim(l1 || chr(10) || l2 || chr(10) || l3 || chr(10)
-                       || l4)), '\s+') if w != ''] AS w
+  SELECT [w for w in regexp_split_to_array(lower(trim(p4)), '\s+')
+          if w != ''] AS w
   FROM ln WHERE id >= 200 AND id % 10 = 3
 ),
 bspans AS (
   SELECT array_to_string(w[3:23], ' ') AS text
   FROM bwords WHERE len(w) >= 23
 ),
-bgram_l AS (
-  SELECT list_filter(
-           regexp_split_to_array(lower(trim(COALESCE(text, ''))), '\s+'),
-           x -> x <> '') AS w
-  FROM bspans
-),
-bgrams AS (
-  SELECT DISTINCT gram FROM (
-    SELECT unnest(CASE
-      WHEN len(w) = 0 THEN CAST([] AS VARCHAR[])
-      WHEN len(w) < 13 THEN [array_to_string(w, ' ')]
-      ELSE [array_to_string(w[i:i+12], ' ')
-            for i in generate_series(1, len(w) - 12)] END) AS gram
-    FROM bgram_l)
-  WHERE gram <> ''
-),
 dtext AS (
-  SELECT h.doc_id, g.clean_text
+  SELECT h.doc_id, g.clean_text AS text
   FROM hranked h JOIN c4gate g USING (doc_id) WHERE hr <= 5
 ),
-dwords AS (
-  SELECT doc_id,
-         list_filter(
-           regexp_split_to_array(lower(trim(COALESCE(clean_text, ''))),
-                                 '\s+'),
-           x -> x <> '') AS w
-  FROM dtext
-),
-dgrams AS (
-  SELECT doc_id, list_distinct(CASE
-    WHEN len(w) = 0 THEN CAST([] AS VARCHAR[])
-    WHEN len(w) < 13 THEN [array_to_string(w, ' ')]
-    ELSE [array_to_string(w[i:i+12], ' ')
-          for i in generate_series(1, len(w) - 12)] END) AS g
-  FROM dwords
-),
-dhits AS (
-  SELECT DISTINCT doc_id
-  FROM (SELECT doc_id, unnest(g) AS gram FROM dgrams) d
-  JOIN bgrams USING (gram)
-),
+""" + _decontam_ctes("bspans", "dtext") + r""",
 decon_ok AS (
   SELECT doc_id FROM dtext
-  WHERE doc_id NOT IN (SELECT doc_id FROM dhits)
+  WHERE doc_id NOT IN (SELECT doc_id FROM hits)
 ),
 sampledkeep AS (
   SELECT doc_id FROM decon_ok
@@ -4541,7 +4265,7 @@ _WEB_CURATION_SQL_RAW = (
       "SELECT doc_id, 'rejected_host_cap', CAST(NULL AS VARCHAR)"
       " FROM hranked WHERE hr > 5\n"
       "UNION ALL\n"
-      "SELECT doc_id, 'contaminated', CAST(NULL AS VARCHAR) FROM dhits\n"
+      "SELECT doc_id, 'contaminated', CAST(NULL AS VARCHAR) FROM hits\n"
       "UNION ALL\n"
       "SELECT doc_id, 'sampled_out', CAST(NULL AS VARCHAR) FROM decon_ok"
       " WHERE doc_id NOT IN (SELECT doc_id FROM sampledkeep)\n"
@@ -4698,6 +4422,36 @@ def token_pack_manifest_q(spark, sf_dir):
         .orderBy("doc_id")
 
 
+def _token_pack_sql(src: str, block: int) -> str:
+    """Concat-and-chunk placement replay (operators/packing.py::
+    token_pack) over the (doc_id, n_tokens) rows of ``src``: docs in
+    doc_id order, one EOS separator each, ``block``-token blocks; the
+    closing SELECT of the manifest."""
+    return f"""placed AS (
+  SELECT doc_id, n_tokens,
+         SUM(n_tokens + 1) OVER (ORDER BY doc_id
+                                 ROWS UNBOUNDED PRECEDING)
+           - (n_tokens + 1) AS start_offset
+  FROM {src}
+),
+blocks AS (
+  SELECT doc_id, n_tokens, start_offset,
+         CAST(floor(start_offset / {block}) AS BIGINT) AS first_block,
+         CAST(floor((CASE WHEN n_tokens > 0
+                          THEN start_offset + n_tokens - 1
+                          ELSE start_offset END) / {block}) AS BIGINT)
+           AS last_block
+  FROM placed
+)
+SELECT doc_id, n_tokens,
+       CAST(start_offset AS BIGINT) AS start_offset,
+       first_block, last_block,
+       CAST(last_block - first_block + 1 AS BIGINT) AS n_blocks
+FROM blocks
+ORDER BY doc_id
+"""
+
+
 TOKEN_PACK_SQL = r"""
 WITH corpus AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
@@ -4712,29 +4466,7 @@ counted AS (
                    if w <> '']) AS BIGINT) AS n_tokens
   FROM corpus
 ),
-placed AS (
-  SELECT doc_id, n_tokens,
-         SUM(n_tokens + 1) OVER (ORDER BY doc_id
-                                 ROWS UNBOUNDED PRECEDING)
-           - (n_tokens + 1) AS start_offset
-  FROM counted
-),
-blocks AS (
-  SELECT doc_id, n_tokens, start_offset,
-         CAST(floor(start_offset / 128) AS BIGINT) AS first_block,
-         CAST(floor((CASE WHEN n_tokens > 0
-                          THEN start_offset + n_tokens - 1
-                          ELSE start_offset END) / 128) AS BIGINT)
-           AS last_block
-  FROM placed
-)
-SELECT doc_id, n_tokens,
-       CAST(start_offset AS BIGINT) AS start_offset,
-       first_block, last_block,
-       CAST(last_block - first_block + 1 AS BIGINT) AS n_blocks
-FROM blocks
-ORDER BY doc_id
-"""
+""" + _token_pack_sql("counted", 128)
 
 
 def dsir_selection_q(spark, sf_dir):
@@ -4781,26 +4513,15 @@ def dsir_selection_q(spark, sf_dir):
 # same ppm-floored ratio weights from identical double expressions
 # (multiplication/division only — no transcendentals), exact BIGINT
 # score sums, same rank tiebreak.
-DSIR_SQL = r"""
+DSIR_SQL = f"""
 WITH corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, lang, COALESCE(text, '') AS text
-  FROM documents
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, lang, text FROM documents
 ),
 tok AS (
-  SELECT doc_id, lang,
-         [w for w in regexp_split_to_array(lower(trim(text)), '\s+')
-          if w <> ''] AS ws
-  FROM corpus
+  SELECT doc_id, lang, {_DSIR_WORDS} AS ws FROM corpus
 ),
 feats AS (
-  SELECT doc_id, lang,
-         [substring(md5('dsir:' || g), 1, 3) for g in
-          list_concat(ws,
-            CASE WHEN len(ws) >= 2
-                 THEN [ws[i] || ' ' || ws[i + 1]
-                       for i in generate_series(1, len(ws) - 1)]
-                 ELSE CAST([] AS VARCHAR[]) END)] AS bs
-  FROM tok
+  SELECT doc_id, lang, {_DSIR_BUCKETS} AS bs FROM tok
 ),
 rcounts AS (
   SELECT bucket, CAST(COUNT(*) AS BIGINT) AS cr
@@ -4846,12 +4567,6 @@ ORDER BY sel_rank
 """
 
 
-_QCLF_POS_MARK = (" curated encyclopedia citation verified"
-                  " reference archive")
-_QCLF_NEG_MARK = (" clickbait spamword lottery jackpot"
-                  " promo banner")
-
-
 def quality_classifier_q(spark, sf_dir):
     """MODEL-BASED QUALITY-FILTER ORACLE: the trained-classifier stage
     of the public canon (CCNet/Llama/DCLM fastText filtering,
@@ -4895,14 +4610,12 @@ def quality_classifier_q(spark, sf_dir):
         F.lit(False).alias("is_train"))
 
     def _classed(lo, hi, cls, marker):
-        reps = "CAST(doc_id % 3 + 1 AS INT)"
         return docs.where(
             (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).select(
             F.concat(F.lit(cls + "_"), F.col("doc_id").cast("string"))
             .alias("doc_id"),
             F.lit(cls).alias("cls"),
-            F.concat(F.coalesce(F.col("text"), F.lit("")),
-                     F.expr(f"repeat('{marker}', {reps})")).alias("text"),
+            _marked(marker).alias("text"),
             (F.col("doc_id") % 2 == 0).alias("is_train"))
 
     qpos = _classed(0, 60, "qpos", _QCLF_POS_MARK)
@@ -4937,23 +4650,19 @@ def quality_classifier_q(spark, sf_dir):
 # (bin-length log2 + integer shift — the lm_ppx quantization), same
 # baseline adjustment and n_grams·w_unseen fold-in, exact BIGINT
 # score sums, same rank tiebreak.
-QUALITY_CLF_SQL = r"""
+QUALITY_CLF_SQL = f"""
 WITH corpus AS MATERIALIZED (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, 'base' AS cls, text,
          false AS is_train
   FROM documents WHERE doc_id < 300
   UNION ALL
   SELECT 'qpos_' || CAST(doc_id AS VARCHAR), 'qpos',
-         COALESCE(text, '') || repeat(
-           ' curated encyclopedia citation verified reference archive',
-           CAST(doc_id % 3 + 1 AS INT)),
+         COALESCE(text, '') || {_marked_sql(_QCLF_POS_MARK)},
          doc_id % 2 = 0
   FROM documents WHERE doc_id >= 0 AND doc_id < 60
   UNION ALL
   SELECT 'qneg_' || CAST(doc_id AS VARCHAR), 'qneg',
-         COALESCE(text, '') || repeat(
-           ' clickbait spamword lottery jackpot promo banner',
-           CAST(doc_id % 3 + 1 AS INT)),
+         COALESCE(text, '') || {_marked_sql(_QCLF_NEG_MARK)},
          doc_id % 2 = 0
   FROM documents WHERE doc_id >= 60 AND doc_id < 120
   UNION ALL SELECT 'zqclf_empty', 'edge', '', false
@@ -5008,28 +4717,21 @@ def lm_perplexity_buckets_q(spark, sf_dir):
     return ccnet_buckets(lm_perplexity(corpus, train)).orderBy("doc_id")
 
 
-# Full DuckDB replay: same word split, same md5-prefix vocabulary
-# buckets, same per-language add-one bigram LM on the same seeded
-# training slice, identical integer sixteenth-bit surprisal (integer
-# division, bin-length log2, integer shift — no transcendentals), same
-# ntile(3) head/middle/tail split with identical remainder placement.
-LM_PPX_SQL = r"""
-WITH corpus AS MATERIALIZED (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, lang, text FROM documents
-  UNION ALL SELECT 'mtppx_1', 'en', ''
-  UNION ALL SELECT 'nulppx_1', 'en', NULL
-  UNION ALL SELECT 'oneppx_1', 'en', 'solitary'
-  UNION ALL SELECT 'xxppx_1', 'xx',
-                   'unseen language words entirely novel here'
-),
-tok AS MATERIALIZED (
-  SELECT doc_id, COALESCE(lang, '') AS grp,
+def _bigram_lm_ctes(src: str, grp: str) -> str:
+    """Per-group add-one hashed-bigram LM replay (operators/lm_ppx.py)
+    over the (doc_id, text) rows of ``src``, grouped by the SQL
+    expression ``grp`` and trained on the seeded 30% slice (md5 key
+    vs '4ccccccc'): same word split and md5-prefix vocabulary buckets,
+    integer sixteenth-bit surprisal, integer-DIV mean →
+    ``rep(doc_id, grp, n_bigrams, surprisal_q16, ppx_q16)``."""
+    return rf"""tok AS MATERIALIZED (
+  SELECT doc_id, {grp} AS grp,
          substring(md5('271828:' || doc_id), 1, 8) < '4ccccccc'
            AS is_train,
          [substring(md5('ppx:' || w), 1, 3) for w in
           regexp_split_to_array(lower(trim(COALESCE(text, ''))), '\s+')
           if w <> ''] AS bs
-  FROM corpus
+  FROM {src}
 ),
 big AS MATERIALIZED (
   SELECT doc_id, grp, is_train, bs[i] AS b1, bs[i + 1] AS b2
@@ -5044,11 +4746,7 @@ trainctx AS MATERIALIZED (
   FROM trainbig GROUP BY grp, b1
 ),
 toks16 AS (
-  SELECT doc_id,
-         16 * (len(bin(den // num)) - 1)
-         + (den * 16)
-           // (num * (CAST(1 AS BIGINT) << (len(bin(den // num)) - 1)))
-         - 16 AS s16
+  SELECT doc_id, {_q16_sql("num", "den")} AS s16
   FROM (SELECT doc_id,
                CAST(COALESCE(cb, 0) + 1 AS BIGINT) AS num,
                CAST(COALESCE(cc, 0) + 4096 AS BIGINT) AS den
@@ -5068,7 +4766,20 @@ rep AS MATERIALIZED (
               THEN CAST(surprisal_q16 // n_bigrams AS BIGINT) END
            AS ppx_q16
   FROM tok t LEFT JOIN scored s USING (doc_id)
+)"""
+
+
+# ntile(3) head/middle/tail split with identical remainder placement.
+LM_PPX_SQL = r"""
+WITH corpus AS MATERIALIZED (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, lang, text FROM documents
+  UNION ALL SELECT 'mtppx_1', 'en', ''
+  UNION ALL SELECT 'nulppx_1', 'en', NULL
+  UNION ALL SELECT 'oneppx_1', 'en', 'solitary'
+  UNION ALL SELECT 'xxppx_1', 'xx',
+                   'unseen language words entirely novel here'
 ),
+""" + _bigram_lm_ctes("corpus", "COALESCE(lang, '')") + r""",
 tiled AS (
   SELECT *, CAST(ntile(3) OVER (PARTITION BY grp
                                 ORDER BY ppx_q16, doc_id) AS BIGINT)
@@ -5128,67 +4839,10 @@ WITH corpus AS MATERIALIZED (
   UNION ALL SELECT 'oneppx_1', 'solitary'
   UNION ALL SELECT 'numppx_1', '123 456 789 101 112'
 ),
-langscored AS (
-  SELECT doc_id, text,
-{_LANG_SCORE_COLS_ALL},
-         text IS NULL
-           OR trim(text, ' ' || chr(9) || chr(10) || chr(13)
-                   || chr(11) || chr(12)) = '' AS is_blank
-  FROM corpus
-),
-det AS MATERIALIZED (
-  SELECT doc_id, text,
-         CASE WHEN is_blank OR best <= 0.5 THEN 'unknown'
-{_LANG_PICK}
-         END AS detected
-  FROM (SELECT *, {_LANG_BEST} AS best FROM langscored)
-),
-tok AS MATERIALIZED (
-  SELECT doc_id, detected AS grp,
-         substring(md5('271828:' || doc_id), 1, 8) < '4ccccccc'
-           AS is_train,
-         [substring(md5('ppx:' || w), 1, 3) for w in
-          regexp_split_to_array(lower(trim(COALESCE(text, ''))), '\\s+')
-          if w <> ''] AS bs
-  FROM det WHERE detected <> 'unknown'
-),
-big AS MATERIALIZED (
-  SELECT doc_id, grp, is_train, bs[i] AS b1, bs[i + 1] AS b2
-  FROM tok, UNNEST(generate_series(1, greatest(len(bs) - 1, 0))) AS t(i)
-),
-trainbig AS MATERIALIZED (
-  SELECT grp, b1, b2, CAST(COUNT(*) AS BIGINT) AS cb
-  FROM big WHERE is_train GROUP BY grp, b1, b2
-),
-trainctx AS MATERIALIZED (
-  SELECT grp, b1, CAST(SUM(cb) AS BIGINT) AS cc
-  FROM trainbig GROUP BY grp, b1
-),
-toks16 AS (
-  SELECT doc_id,
-         16 * (len(bin(den // num)) - 1)
-         + (den * 16)
-           // (num * (CAST(1 AS BIGINT) << (len(bin(den // num)) - 1)))
-         - 16 AS s16
-  FROM (SELECT doc_id,
-               CAST(COALESCE(cb, 0) + 1 AS BIGINT) AS num,
-               CAST(COALESCE(cc, 0) + 4096 AS BIGINT) AS den
-        FROM big LEFT JOIN trainbig USING (grp, b1, b2)
-                 LEFT JOIN trainctx USING (grp, b1))
-),
-scored AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-         CAST(SUM(s16) AS BIGINT) AS surprisal_q16
-  FROM toks16 GROUP BY doc_id
-),
-rep AS MATERIALIZED (
-  SELECT t.doc_id, t.grp,
-         CAST(COALESCE(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-         CASE WHEN COALESCE(n_bigrams, 0) > 0
-              THEN CAST(surprisal_q16 // n_bigrams AS BIGINT) END
-           AS ppx_q16
-  FROM tok t LEFT JOIN scored s USING (doc_id)
-),
+{_lang_detect_ctes("corpus", "doc_id, text")},
+det AS MATERIALIZED (SELECT doc_id, text, detected FROM langdet),
+known AS (SELECT doc_id, text, detected FROM det WHERE detected <> 'unknown'),
+{_bigram_lm_ctes("known", "detected")},
 tiled AS MATERIALIZED (
   SELECT doc_id, grp, n_bigrams, ppx_q16, tile,
          CASE tile WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
@@ -5234,96 +4888,111 @@ def line_dedup_q(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents", below=150)
     did = F.col("doc_id").cast("string")
     g = (F.col("doc_id") % 8).cast("string")
-    base = docs.select(
-        did.alias("doc_id"), "text")
-    cpy = docs.where(F.col("doc_id") < 20).select(
-        F.concat(F.lit("cpy_"), did).alias("doc_id"), "text")
-    ftr = docs.where(F.col("doc_id") < 40).select(
-        F.concat(F.lit("ftr_"), did).alias("doc_id"),
-        F.concat(F.lit("Content line "), did,
-                 F.lit(" one.\nShared footer for group "), g,
-                 F.lit(" subscribe now\nContent line "), did,
-                 F.lit(" two.")).alias("text"))
-    ws = docs.where(F.col("doc_id") < 12).select(
-        F.concat(F.lit("ws_"), did).alias("doc_id"),
-        F.concat(F.lit("Lead line "), did,
-                 F.lit(".\n  Shared footer for group "), g,
-                 F.lit(" subscribe now  \nTrail line "), did,
-                 F.lit(".")).alias("text"))
-    rep = docs.where(F.col("doc_id") < 15).select(
-        F.concat(F.lit("rep_"), did).alias("doc_id"),
-        F.concat(F.lit("Self line "), did,
-                 F.lit(" repeated\nSelf line "), did,
-                 F.lit(" repeated\nTail line "), did).alias("text"))
-    blk = docs.where(F.col("doc_id") < 10).select(
-        F.concat(F.lit("blk_"), did).alias("doc_id"),
-        F.concat(F.lit("   \nReal line "), did, F.lit("\n")).alias("text"))
-    nul = docs.where(F.col("doc_id") < 8).select(
-        F.concat(F.lit("nul_"), did).alias("doc_id"),
-        F.lit(None).cast("string").alias("text"))
-    corpus = (base.unionByName(cpy).unionByName(ftr).unionByName(ws)
-              .unionByName(rep).unionByName(blk).unionByName(nul))
+    corpus = _planted(
+        docs,
+        _branch(docs, "cpy_", 20, "text"),
+        _branch(docs, "ftr_", 40, F.concat(
+            F.lit("Content line "), did,
+            F.lit(" one.\nShared footer for group "), g,
+            F.lit(" subscribe now\nContent line "), did, F.lit(" two."))),
+        _branch(docs, "ws_", 12, F.concat(
+            F.lit("Lead line "), did,
+            F.lit(".\n  Shared footer for group "), g,
+            F.lit(" subscribe now  \nTrail line "), did, F.lit("."))),
+        _self_line_branch(docs),
+        _branch(docs, "blk_", 10, F.concat(
+            F.lit("   \nReal line "), did, F.lit("\n"))),
+        _null_branch(docs))
     return line_dedup(corpus).orderBy("doc_id")
 
 
-LINE_DEDUP_SQL = r"""
-WITH corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
-  FROM documents WHERE doc_id < 150
-  UNION ALL
-  SELECT 'cpy_' || CAST(doc_id AS VARCHAR), text
-  FROM documents WHERE doc_id < 20
-  UNION ALL
-  SELECT 'ftr_' || CAST(doc_id AS VARCHAR),
-         'Content line ' || CAST(doc_id AS VARCHAR) || ' one.' || chr(10)
-         || 'Shared footer for group ' || CAST(doc_id % 8 AS VARCHAR)
-         || ' subscribe now' || chr(10)
-         || 'Content line ' || CAST(doc_id AS VARCHAR) || ' two.'
-  FROM documents WHERE doc_id < 40
-  UNION ALL
-  SELECT 'ws_' || CAST(doc_id AS VARCHAR),
-         'Lead line ' || CAST(doc_id AS VARCHAR) || '.' || chr(10)
-         || '  Shared footer for group ' || CAST(doc_id % 8 AS VARCHAR)
-         || ' subscribe now  ' || chr(10)
-         || 'Trail line ' || CAST(doc_id AS VARCHAR) || '.'
-  FROM documents WHERE doc_id < 12
-  UNION ALL
-  SELECT 'rep_' || CAST(doc_id AS VARCHAR),
-         'Self line ' || CAST(doc_id AS VARCHAR) || ' repeated' || chr(10)
+# Branches both line-dedup fixtures plant: 15 ``rep_`` docs repeating
+# their own unique line (line_dedup keeps it, strip_repeated_lines
+# removes it) and 8 ``nul_`` NULL-text rows.
+def _self_line_branch(docs):
+    did = F.col("doc_id").cast("string")
+    return _branch(docs, "rep_", 15, F.concat(
+        F.lit("Self line "), did, F.lit(" repeated\nSelf line "), did,
+        F.lit(" repeated\nTail line "), did))
+
+
+def _null_branch(docs):
+    return _branch(docs, "nul_", 8, F.lit(None).cast("string"))
+
+
+_SELF_LINE_BRANCH_SQL = (
+    "rep_", 15,
+    """'Self line ' || CAST(doc_id AS VARCHAR) || ' repeated' || chr(10)
          || 'Self line ' || CAST(doc_id AS VARCHAR) || ' repeated' || chr(10)
-         || 'Tail line ' || CAST(doc_id AS VARCHAR)
-  FROM documents WHERE doc_id < 15
-  UNION ALL
-  SELECT 'blk_' || CAST(doc_id AS VARCHAR),
-         '   ' || chr(10) || 'Real line ' || CAST(doc_id AS VARCHAR)
-         || chr(10)
-  FROM documents WHERE doc_id < 10
-  UNION ALL
-  SELECT 'nul_' || CAST(doc_id AS VARCHAR), CAST(NULL AS VARCHAR)
-  FROM documents WHERE doc_id < 8
-),
-lined AS (
-  SELECT doc_id, string_split(COALESCE(text, ''), chr(10)) AS ls
-  FROM corpus
-),
-occ AS (
+         || 'Tail line ' || CAST(doc_id AS VARCHAR)""")
+_NULL_BRANCH_SQL = ("nul_", 8, "CAST(NULL AS VARCHAR)")
+
+
+def _line_dedup_ctes(src: str, min_docs: int) -> str:
+    """Cross-doc boilerplate-line replay (operators/dedup.py::
+    line_dedup) over the (doc_id, ls) line lists of ``src``: a
+    non-blank line whose trimmed md5 key occurs in >= ``min_docs``
+    distinct docs is removed everywhere → ``rebuilt`` = src's columns
+    plus ``kept``, the surviving lines in order."""
+    return f"""occ AS (
   SELECT doc_id, i - 1 AS q, md5(trim(ls[i])) AS h
-  FROM lined, UNNEST(generate_series(1, len(ls))) AS t(i)
+  FROM {src}, UNNEST(generate_series(1, len(ls))) AS t(i)
   WHERE trim(ls[i]) != ''
 ),
 boiler AS (
-  SELECT h FROM occ GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
+  SELECT h FROM occ GROUP BY h HAVING COUNT(DISTINCT doc_id) >= {min_docs}
 ),
 rem AS (
   SELECT doc_id, list(q) AS qs
   FROM occ JOIN boiler USING (h) GROUP BY doc_id
 ),
 rebuilt AS (
-  SELECT l.doc_id, ls,
-         [ls[j] for j in generate_series(1, len(ls))
-          if NOT list_contains(COALESCE(qs, []), j - 1)] AS kept
-  FROM lined l LEFT JOIN rem r USING (doc_id)
-)
+  SELECT l.*,
+         [l.ls[j] for j in generate_series(1, len(l.ls))
+          if NOT list_contains(COALESCE(r.qs, []), j - 1)] AS kept
+  FROM {src} l LEFT JOIN rem r USING (doc_id)
+)"""
+
+
+def _line_strip_ctes(src: str) -> str:
+    """Within-doc repeated-line replay (operators/dedup.py::
+    strip_repeated_lines) over the (doc_id, ls) line lists of ``src``:
+    a line whose trimmed key occurred earlier in the doc is dropped,
+    blank lines never → ``stripped(doc_id, ls, kept)``. 1-based
+    ``list_position`` = the 1-based lambda index here; Spark's lambda
+    index is 0-based (+1)."""
+    return f"""stripped AS (
+  SELECT doc_id, ls,
+         list_filter(ls, (x, i) -> trim(x) = ''
+                                   OR list_position(ks, trim(x)) = i)
+           AS kept
+  FROM (SELECT doc_id, ls, [trim(x) for x in ls] AS ks FROM {src})
+)"""
+
+
+LINE_DEDUP_SQL = """
+WITH corpus AS (
+""" + _planted_sql(150, "text", [
+    ("cpy_", 20, "text"),
+    ("ftr_", 40, """'Content line ' || CAST(doc_id AS VARCHAR) || ' one.' || chr(10)
+         || 'Shared footer for group ' || CAST(doc_id % 8 AS VARCHAR)
+         || ' subscribe now' || chr(10)
+         || 'Content line ' || CAST(doc_id AS VARCHAR) || ' two.'"""),
+    ("ws_", 12, """'Lead line ' || CAST(doc_id AS VARCHAR) || '.' || chr(10)
+         || '  Shared footer for group ' || CAST(doc_id % 8 AS VARCHAR)
+         || ' subscribe now  ' || chr(10)
+         || 'Trail line ' || CAST(doc_id AS VARCHAR) || '.'"""),
+    _SELF_LINE_BRANCH_SQL,
+    ("blk_", 10, """'   ' || chr(10) || 'Real line ' || CAST(doc_id AS VARCHAR)
+         || chr(10)"""),
+    _NULL_BRANCH_SQL,
+]) + r"""
+),
+lined AS (
+  SELECT doc_id, string_split(COALESCE(text, ''), chr(10)) AS ls
+  FROM corpus
+),
+""" + _line_dedup_ctes("lined", 2) + """
 SELECT doc_id,
        COALESCE(array_to_string(kept, chr(10)), '') AS clean_text,
        CAST(len(ls) AS INT) AS n_lines,
@@ -5414,8 +5083,6 @@ def repeated_line_strip_q(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents", below=150)
     did = F.col("doc_id").cast("string")
     g = (F.col("doc_id") % 8).cast("string")
-    base = docs.select(
-        did.alias("doc_id"), "text")
     ws_arr = F.filter(
         F.split(F.coalesce(F.col("text"), F.lit("")), " "),
         lambda w: w != "")
@@ -5436,32 +5103,20 @@ def repeated_line_strip_q(spark, sf_dir):
                         " ")),
                 "\n").alias("text"))
     )
-    pag = docs.where(F.col("doc_id") < 30).select(
-        F.concat(F.lit("pag_"), did).alias("doc_id"),
-        F.concat(F.lit("Page header "), g,
-                 F.lit("\nBody one "), did,
-                 F.lit("\nPage header "), g,
-                 F.lit("\nBody two "), did,
-                 F.lit("\nPage header "), g).alias("text"))
-    rep = docs.where(F.col("doc_id") < 15).select(
-        F.concat(F.lit("rep_"), did).alias("doc_id"),
-        F.concat(F.lit("Self line "), did,
-                 F.lit(" repeated\nSelf line "), did,
-                 F.lit(" repeated\nTail line "), did).alias("text"))
-    ws = docs.where(F.col("doc_id") < 12).select(
-        F.concat(F.lit("ws_"), did).alias("doc_id"),
-        F.concat(F.lit("A shared line "), did,
-                 F.lit("\n  A shared line "), did,
-                 F.lit("  \nA shared line "), did,
-                 F.lit("\nTail "), did).alias("text"))
-    blk = docs.where(F.col("doc_id") < 10).select(
-        F.concat(F.lit("blk_"), did).alias("doc_id"),
-        F.concat(F.lit("   \nReal "), did, F.lit("\n   \n")).alias("text"))
-    nul = docs.where(F.col("doc_id") < 8).select(
-        F.concat(F.lit("nul_"), did).alias("doc_id"),
-        F.lit(None).cast("string").alias("text"))
-    corpus = (base.unionByName(lin).unionByName(pag).unionByName(rep)
-              .unionByName(ws).unionByName(blk).unionByName(nul))
+    corpus = _planted(
+        docs,
+        lin,
+        _branch(docs, "pag_", 30, F.concat(
+            F.lit("Page header "), g, F.lit("\nBody one "), did,
+            F.lit("\nPage header "), g, F.lit("\nBody two "), did,
+            F.lit("\nPage header "), g)),
+        _self_line_branch(docs),
+        _branch(docs, "ws_", 12, F.concat(
+            F.lit("A shared line "), did, F.lit("\n  A shared line "), did,
+            F.lit("  \nA shared line "), did, F.lit("\nTail "), did)),
+        _branch(docs, "blk_", 10, F.concat(
+            F.lit("   \nReal "), did, F.lit("\n   \n"))),
+        _null_branch(docs))
     out = strip_repeated_lines(corpus)
     return out.select(
         "doc_id", "n_lines", "n_removed",
@@ -5470,10 +5125,23 @@ def repeated_line_strip_q(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-REPEATED_LINE_SQL = r"""
+REPEATED_LINE_SQL = """
 WITH corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
-  FROM documents WHERE doc_id < 150
+""" + _planted_sql(150, "text", [
+    ("pag_", 30, """'Page header ' || CAST(doc_id % 8 AS VARCHAR) || chr(10)
+         || 'Body one ' || CAST(doc_id AS VARCHAR) || chr(10)
+         || 'Page header ' || CAST(doc_id % 8 AS VARCHAR) || chr(10)
+         || 'Body two ' || CAST(doc_id AS VARCHAR) || chr(10)
+         || 'Page header ' || CAST(doc_id % 8 AS VARCHAR)"""),
+    _SELF_LINE_BRANCH_SQL,
+    ("ws_", 12, """'A shared line ' || CAST(doc_id AS VARCHAR) || chr(10)
+         || '  A shared line ' || CAST(doc_id AS VARCHAR) || '  ' || chr(10)
+         || 'A shared line ' || CAST(doc_id AS VARCHAR) || chr(10)
+         || 'Tail ' || CAST(doc_id AS VARCHAR)"""),
+    ("blk_", 10, """'   ' || chr(10) || 'Real ' || CAST(doc_id AS VARCHAR)
+         || chr(10) || '   ' || chr(10)"""),
+    _NULL_BRANCH_SQL,
+]) + r"""
   UNION ALL
   SELECT 'lin_' || CAST(doc_id AS VARCHAR),
          array_to_string(
@@ -5485,50 +5153,12 @@ WITH corpus AS (
                [w for w in string_split(COALESCE(text, ''), ' ')
                 if w <> ''] AS ws
         FROM documents WHERE doc_id < 60)
-  UNION ALL
-  SELECT 'pag_' || CAST(doc_id AS VARCHAR),
-         'Page header ' || CAST(doc_id % 8 AS VARCHAR) || chr(10)
-         || 'Body one ' || CAST(doc_id AS VARCHAR) || chr(10)
-         || 'Page header ' || CAST(doc_id % 8 AS VARCHAR) || chr(10)
-         || 'Body two ' || CAST(doc_id AS VARCHAR) || chr(10)
-         || 'Page header ' || CAST(doc_id % 8 AS VARCHAR)
-  FROM documents WHERE doc_id < 30
-  UNION ALL
-  SELECT 'rep_' || CAST(doc_id AS VARCHAR),
-         'Self line ' || CAST(doc_id AS VARCHAR) || ' repeated' || chr(10)
-         || 'Self line ' || CAST(doc_id AS VARCHAR) || ' repeated' || chr(10)
-         || 'Tail line ' || CAST(doc_id AS VARCHAR)
-  FROM documents WHERE doc_id < 15
-  UNION ALL
-  SELECT 'ws_' || CAST(doc_id AS VARCHAR),
-         'A shared line ' || CAST(doc_id AS VARCHAR) || chr(10)
-         || '  A shared line ' || CAST(doc_id AS VARCHAR) || '  ' || chr(10)
-         || 'A shared line ' || CAST(doc_id AS VARCHAR) || chr(10)
-         || 'Tail ' || CAST(doc_id AS VARCHAR)
-  FROM documents WHERE doc_id < 12
-  UNION ALL
-  SELECT 'blk_' || CAST(doc_id AS VARCHAR),
-         '   ' || chr(10) || 'Real ' || CAST(doc_id AS VARCHAR)
-         || chr(10) || '   ' || chr(10)
-  FROM documents WHERE doc_id < 10
-  UNION ALL
-  SELECT 'nul_' || CAST(doc_id AS VARCHAR), CAST(NULL AS VARCHAR)
-  FROM documents WHERE doc_id < 8
 ),
 lined AS (
   SELECT doc_id, string_split(COALESCE(text, ''), chr(10)) AS ls
   FROM corpus
 ),
-keyed AS (
-  SELECT doc_id, ls, [trim(x) for x in ls] AS ks FROM lined
-),
-stripped AS (
-  SELECT doc_id, ls,
-         list_filter(ls, (x, i) -> trim(x) = ''
-                                   OR list_position(ks, trim(x)) = i)
-           AS kept
-  FROM keyed
-)
+""" + _line_strip_ctes("lined") + """
 SELECT doc_id,
        CAST(len(ls) AS INT) AS n_lines,
        CAST(len(ls) - len(kept) AS INT) AS n_removed,
@@ -5553,19 +5183,33 @@ def bpe_merges_q(spark, sf_dir):
     ``F.aggregate``) through all 4 unrolled rounds."""
     from n8n_tools_api_spark.operators.bpe import bpe_learn
 
+    return bpe_learn(_bpe_corpus(spark, sf_dir), 4).orderBy("rank")
+
+
+def _bpe_encoded(spark, sf_dir):
+    """The BPE corpus encoded with the 4 merges learned on it (the
+    merge table is ≤4 rows: the same driver-row budget as learning)."""
+    from n8n_tools_api_spark.operators.bpe import bpe_encode, bpe_learn
+
+    corpus = _bpe_corpus(spark, sf_dir)
+    merge_rows = bpe_learn(corpus, 4).orderBy("rank").collect()
+    return bpe_encode(corpus, [(r["left"], r["right"]) for r in merge_rows])
+
+
+def _bpe_corpus(spark, sf_dir):
+    """documents<120 ∪ the 40 ``run_`` docs: what every BPE oracle
+    learns on."""
     docs = _t(spark, sf_dir, "documents", below=120)
-    did = F.col("doc_id").cast("string")
-    base = docs.select(
-        did.alias("doc_id"), "text")
-    run = docs.where(F.col("doc_id") < 40).select(
-        F.concat(F.lit("run_"), did).alias("doc_id"),
-        F.repeat(F.lit("zzzz zzz zz "), 60).alias("text"))
-    return bpe_learn(base.unionByName(run), 4).orderBy("rank")
+    return _planted(docs, _branch(docs, "run_", 40,
+                                  F.repeat(F.lit("zzzz zzz zz "), 60)))
 
 
-def _bpe_round_cte(k: int, emit_sym: bool, carry: str = "") -> str:
+def _bpe_round_cte(k: int) -> str:
+    """Learning round k: frequency-weighted pair counts of s{k-1}, the
+    total-order argmax b{k}, and s{k}, the vocabulary (word → symbols)
+    after the greedy left-to-right merge fold."""
     prev = f"s{k - 1}"
-    out = f"""
+    return f"""
 p{k} AS (
   SELECT q.s[i] AS l, q.s[i + 1] AS r, CAST(SUM(q.freq) AS BIGINT) AS c
   FROM (SELECT string_split(sym, chr(31)) AS s, freq FROM {prev}) AS q,
@@ -5574,44 +5218,42 @@ p{k} AS (
 ),
 b{k} AS MATERIALIZED (
   SELECT l, r, c FROM p{k} WHERE c >= 2 ORDER BY c DESC, l, r LIMIT 1
-)"""
-    if emit_sym:
-        out += f""",
+),
 s{k} AS MATERIALIZED (
-  SELECT {carry}freq, list_reduce(string_split(sym, chr(31)),
+  SELECT word, freq, list_reduce(string_split(sym, chr(31)),
     (acc, x) -> CASE WHEN x = b{k}.r AND (acc = b{k}.l
                       OR ends_with(acc, chr(31) || b{k}.l))
                 THEN acc || x ELSE acc || chr(31) || x END) AS sym
   FROM {prev} CROSS JOIN b{k}
 )"""
-    return out
 
 
-BPE_MERGES_SQL = (r"""
-WITH corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
-  FROM documents WHERE doc_id < 120
-  UNION ALL
-  SELECT 'run_' || CAST(doc_id AS VARCHAR), repeat('zzzz zzz zz ', 60)
-  FROM documents WHERE doc_id < 40
+# the BPE replay shared by all three BPE oracles: the planted corpus,
+# per-doc word occurrences, the initial vocabulary, and the 4 unrolled
+# learning rounds; s4 keeps the final word → symbols mapping
+_BPE_CTES = ("corpus AS (\n" + _planted_sql(120, "text", [
+    ("run_", 40, "repeat('zzzz zzz zz ', 60)")]) + r"""
 ),
-toks AS (
-  SELECT w AS word
-  FROM corpus,
-       UNNEST([x for x in
-               regexp_split_to_array(trim(COALESCE(text, '')), '\s+')
-               if x != '']) AS t(w)
-  WHERE NOT contains(w, chr(31))
+toksd AS (
+  SELECT doc_id, i AS pos, q.w[i] AS word
+  FROM (SELECT doc_id,
+               [x for x in
+                regexp_split_to_array(trim(COALESCE(text, '')), '\s+')
+                if x != ''] AS w
+        FROM corpus) AS q,
+       UNNEST(generate_series(1, len(q.w))) AS t(i)
+  WHERE NOT contains(q.w[i], chr(31))
 ),
 s0 AS MATERIALIZED (
-  SELECT CAST(COUNT(*) AS BIGINT) AS freq,
+  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq,
          array_to_string([word[i] for i in
                           generate_series(1, length(word))], chr(31))
          || chr(31) || '</w>' AS sym
-  FROM toks GROUP BY word
-),"""
-    + ",".join(_bpe_round_cte(k, emit_sym=(k != 4)) for k in range(1, 5))
-    + "\n"
+  FROM toksd GROUP BY word
+),""" + ",".join(_bpe_round_cte(k) for k in range(1, 5)))
+
+
+BPE_MERGES_SQL = ("WITH " + _BPE_CTES + "\n"
     + "\nUNION ALL\n".join(
         f'SELECT CAST({k - 1} AS INT) AS rank, l AS "left", r AS "right",'
         f' l || r AS merged, c AS pair_count FROM b{k}'
@@ -5633,57 +5275,13 @@ def bpe_encoded_tokens_q(spark, sf_dir):
     the unrolled round CTEs (carrying the word column so the final
     vocabulary keeps its word → symbols mapping), then joins each
     document's word occurrences through that vocabulary."""
-    from n8n_tools_api_spark.operators.bpe import bpe_encode, bpe_learn
-
-    docs = _t(spark, sf_dir, "documents", below=120)
-    did = F.col("doc_id").cast("string")
-    base = docs.select(
-        did.alias("doc_id"), "text")
-    run = docs.where(F.col("doc_id") < 40).select(
-        F.concat(F.lit("run_"), did).alias("doc_id"),
-        F.repeat(F.lit("zzzz zzz zz "), 60).alias("text"))
-    corpus = base.unionByName(run)
-    merge_rows = bpe_learn(corpus, 4).orderBy("rank").collect()
-    merges = [(r["left"], r["right"]) for r in merge_rows]
-    return (bpe_encode(corpus, merges)
+    return (_bpe_encoded(spark, sf_dir)
             .select("doc_id", "n_words", "n_tokens",
                     F.md5("encoded").alias("enc_fp"))
             .orderBy("doc_id"))
 
 
-# shared replay prefix for the encode-side BPE oracles: the planted
-# corpus, per-doc word occurrences, the initial vocabulary, and the 4
-# unrolled learning rounds CARRYING the word column so the final s4
-# vocabulary keeps its word → symbols mapping
-_BPE_ENC_CTES = (r"""corpus AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text
-  FROM documents WHERE doc_id < 120
-  UNION ALL
-  SELECT 'run_' || CAST(doc_id AS VARCHAR), repeat('zzzz zzz zz ', 60)
-  FROM documents WHERE doc_id < 40
-),
-toksd AS (
-  SELECT doc_id, i AS pos, q.w[i] AS word
-  FROM (SELECT doc_id,
-               [x for x in
-                regexp_split_to_array(trim(COALESCE(text, '')), '\s+')
-                if x != ''] AS w
-        FROM corpus) AS q,
-       UNNEST(generate_series(1, len(q.w))) AS t(i)
-  WHERE NOT contains(q.w[i], chr(31))
-),
-s0 AS MATERIALIZED (
-  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq,
-         array_to_string([word[i] for i in
-                          generate_series(1, length(word))], chr(31))
-         || chr(31) || '</w>' AS sym
-  FROM toksd GROUP BY word
-),"""
-    + ",".join(_bpe_round_cte(k, emit_sym=True, carry="word, ")
-               for k in range(1, 5)))
-
-
-BPE_ENCODED_SQL = ("WITH " + _BPE_ENC_CTES
+BPE_ENCODED_SQL = ("WITH " + _BPE_CTES
     + r""",
 docenc AS (
   SELECT d.doc_id,
@@ -5716,25 +5314,14 @@ def bpe_pack_manifest_q(spark, sf_dir):
     prefix-sum layout shifts every downstream offset. DuckDB chains
     the shared learning-replay CTEs into the pack arithmetic in one
     query."""
-    from n8n_tools_api_spark.operators.bpe import bpe_encode, bpe_learn
     from n8n_tools_api_spark.operators.packing import token_pack
 
-    docs = _t(spark, sf_dir, "documents", below=120)
-    did = F.col("doc_id").cast("string")
-    base = docs.select(
-        did.alias("doc_id"), "text")
-    run = docs.where(F.col("doc_id") < 40).select(
-        F.concat(F.lit("run_"), did).alias("doc_id"),
-        F.repeat(F.lit("zzzz zzz zz "), 60).alias("text"))
-    corpus = base.unionByName(run)
-    merge_rows = bpe_learn(corpus, 4).orderBy("rank").collect()
-    merges = [(r["left"], r["right"]) for r in merge_rows]
-    enc = bpe_encode(corpus, merges).select("doc_id", "n_tokens")
+    enc = _bpe_encoded(spark, sf_dir).select("doc_id", "n_tokens")
     return (token_pack(enc, block_size=64, count_col="n_tokens")
             .orderBy("doc_id"))
 
 
-BPE_PACK_SQL = ("WITH " + _BPE_ENC_CTES
+BPE_PACK_SQL = ("WITH " + _BPE_CTES
     + r""",
 counted AS (
   SELECT c.doc_id, CAST(COALESCE(e.n_tokens, 0) AS BIGINT) AS n_tokens
@@ -5744,29 +5331,7 @@ counted AS (
     FROM toksd d JOIN s4 v USING (word)
     GROUP BY d.doc_id) e USING (doc_id)
 ),
-placed AS (
-  SELECT doc_id, n_tokens,
-         SUM(n_tokens + 1) OVER (ORDER BY doc_id
-                                 ROWS UNBOUNDED PRECEDING)
-           - (n_tokens + 1) AS start_offset
-  FROM counted
-),
-blocks AS (
-  SELECT doc_id, n_tokens, start_offset,
-         CAST(floor(start_offset / 64) AS BIGINT) AS first_block,
-         CAST(floor((CASE WHEN n_tokens > 0
-                          THEN start_offset + n_tokens - 1
-                          ELSE start_offset END) / 64) AS BIGINT)
-           AS last_block
-  FROM placed
-)
-SELECT doc_id, n_tokens,
-       CAST(start_offset AS BIGINT) AS start_offset,
-       first_block, last_block,
-       CAST(last_block - first_block + 1 AS BIGINT) AS n_blocks
-FROM blocks
-ORDER BY doc_id
-""")
+""" + _token_pack_sql("counted", 64))
 
 
 def dataset_card_q(spark, sf_dir):
@@ -5885,9 +5450,60 @@ def url_canonical_dedup_q(spark, sf_dir):
     return url_dedup(corpus).orderBy("doc_id")
 
 
-# Full closed-form replay of every canonicalization rule: scheme/host
-# case fold, userinfo/www/default-port strip, trailing-slash strip,
-# tracking-param drop, param sort, fragment drop, identity fallback.
+def _url_canon_ctes(src: str) -> str:
+    """Canonical-URL replay (operators/curation.py::canonical_url) over
+    the rows of ``src``: scheme/host case fold, userinfo/www/default-port
+    strip, trailing-slash strip, tracking-param drop, param sort,
+    fragment drop, identity fallback → ``ucanon`` = src's columns plus
+    ``canonical_url``. Java regex and RE2 agree on these patterns."""
+    return rf"""u1 AS (
+  SELECT *, COALESCE(url, '') AS u FROM {src}
+),
+u2 AS (
+  SELECT *,
+         lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
+           AS scheme,
+         regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)
+           AS auth,
+         regexp_replace(
+           regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1),
+           '/+$', '') AS path,
+         regexp_extract(u, '\?([^#]*)', 1) AS qraw
+  FROM u1
+),
+u3 AS (
+  SELECT *,
+         CASE WHEN scheme = 'http' THEN regexp_replace(h0, ':80$', '')
+              WHEN scheme = 'https' THEN regexp_replace(h0, ':443$', '')
+              ELSE h0 END AS host
+  FROM (SELECT *,
+          regexp_replace(
+            regexp_replace(lower(auth), '^[^@]*@', ''),
+            '^www\.', '') AS h0
+        FROM u2)
+),
+u4 AS (
+  SELECT *,
+         COALESCE(array_to_string(list_sort(
+           [p for p in string_split(qraw, '&')
+            if p <> ''
+               and substr(regexp_replace(p, '=.*$', ''), 1, 4) <> 'utm_'
+               and not list_contains(
+                     ['fbclid', 'gclid', 'mc_cid', 'mc_eid', 'msclkid',
+                      'ref'],
+                     regexp_replace(p, '=.*$', ''))]), '&'), '') AS q
+  FROM u3
+),
+ucanon AS (
+  SELECT *,
+         CASE WHEN auth <> '' THEN
+                scheme || '://' || host || path
+                || CASE WHEN q = '' THEN '' ELSE '?' || q END
+              ELSE u END AS canonical_url
+  FROM u4
+)"""
+
+
 URL_CANONICAL_SQL = r"""
 WITH src AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -5913,54 +5529,7 @@ WITH src AS (
   FROM (SELECT doc_id, CAST(doc_id // 10 AS VARCHAR) AS g
         FROM documents WHERE doc_id < 400)
 ),
-s1 AS (
-  SELECT doc_id, url, COALESCE(url, '') AS u FROM src
-),
-s2 AS (
-  SELECT doc_id, url, u,
-         lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
-           AS scheme,
-         regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)
-           AS auth,
-         regexp_replace(
-           regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1),
-           '/+$', '') AS path,
-         regexp_extract(u, '\?([^#]*)', 1) AS qraw
-  FROM s1
-),
-s3 AS (
-  SELECT doc_id, url, u, scheme, auth, path, qraw,
-         CASE WHEN scheme = 'http' THEN
-                regexp_replace(h0, ':80$', '')
-              WHEN scheme = 'https' THEN
-                regexp_replace(h0, ':443$', '')
-              ELSE h0 END AS host
-  FROM (SELECT *,
-          regexp_replace(
-            regexp_replace(lower(auth), '^[^@]*@', ''),
-            '^www\.', '') AS h0
-        FROM s2)
-),
-s4 AS (
-  SELECT doc_id, url, u, scheme, auth, path, host,
-         COALESCE(array_to_string(list_sort(
-           [p for p in string_split(qraw, '&')
-            if p <> ''
-               and substr(regexp_replace(p, '=.*$', ''), 1, 4) <> 'utm_'
-               and not list_contains(
-                     ['fbclid', 'gclid', 'mc_cid', 'mc_eid', 'msclkid',
-                      'ref'],
-                     regexp_replace(p, '=.*$', ''))]), '&'), '') AS q
-  FROM s3
-),
-canon AS (
-  SELECT doc_id, url,
-         CASE WHEN auth <> '' THEN
-                scheme || '://' || host || path
-                || CASE WHEN q = '' THEN '' ELSE '?' || q END
-              ELSE u END AS canonical_url
-  FROM s4
-)
+""" + _url_canon_ctes("src") + r"""
 SELECT doc_id, url, canonical_url,
        CASE WHEN doc_id = first_doc THEN 'kept' ELSE 'url_dup' END AS status,
        first_doc, group_size
@@ -5969,7 +5538,7 @@ FROM (
          min(doc_id) OVER (PARTITION BY canonical_url) AS first_doc,
          CAST(count(*) OVER (PARTITION BY canonical_url) AS BIGINT)
            AS group_size
-  FROM canon)
+  FROM ucanon)
 ORDER BY doc_id
 """
 
@@ -6023,7 +5592,7 @@ def host_link_stats_q(spark, sf_dir):
 
 # Closed-form replay: same href regex, same canonical-host rules, same
 # distinct-edge collapse, same two all-integer damped rounds.
-HOST_LINK_SQL = r"""
+HOST_LINK_SQL = rf"""
 WITH pages AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
          'https://h' || h || '.example.org/page' || CAST(doc_id AS VARCHAR)
@@ -6052,15 +5621,8 @@ links AS (
 edges AS (
   SELECT DISTINCT src_host, dst_host
   FROM (
-    SELECT
-      regexp_replace(regexp_replace(
-        regexp_extract(lower(COALESCE(url, '')),
-                       '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1),
-        '^www\.', ''), ':\d+$', '') AS src_host,
-      regexp_replace(regexp_replace(
-        regexp_extract(lower(COALESCE(href, '')),
-                       '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1),
-        '^www\.', ''), ':\d+$', '') AS dst_host
+    SELECT {_host_sql("url")} AS src_host,
+           {_host_sql("href")} AS dst_host
     FROM links)
   WHERE src_host <> '' AND dst_host <> '' AND src_host <> dst_host
 ),
@@ -6179,7 +5741,7 @@ def web_dedup_keep_list_q(spark, sf_dir):
     return web_dedup_keep_list(corpus, min_doc_freq=3).orderBy("doc_id")
 
 
-# One chained replay of all four stages: URL canonicalization + window,
+# One chained replay of all four stages: canonical URL + window,
 # within-doc first-occurrence filter, cross-doc trimmed-key
 # distinct-doc boilerplate rule (>= 3), md5 exact window.
 WEB_DEDUP_SQL = r"""
@@ -6208,52 +5770,7 @@ WITH src AS (
                CAST((doc_id // 6) % 8 AS VARCHAR) AS f8
         FROM documents WHERE doc_id < 240)
 ),
-u1 AS (
-  SELECT doc_id, url, text, COALESCE(url, '') AS u FROM src
-),
-u2 AS (
-  SELECT doc_id, url, text, u,
-         lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
-           AS scheme,
-         regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)
-           AS auth,
-         regexp_replace(
-           regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1),
-           '/+$', '') AS path,
-         regexp_extract(u, '\?([^#]*)', 1) AS qraw
-  FROM u1
-),
-u3 AS (
-  SELECT doc_id, url, text, u, scheme, auth, path, qraw,
-         CASE WHEN scheme = 'http' THEN regexp_replace(h0, ':80$', '')
-              WHEN scheme = 'https' THEN regexp_replace(h0, ':443$', '')
-              ELSE h0 END AS host
-  FROM (SELECT *,
-          regexp_replace(
-            regexp_replace(lower(auth), '^[^@]*@', ''),
-            '^www\.', '') AS h0
-        FROM u2)
-),
-u4 AS (
-  SELECT doc_id, url, text, u, scheme, auth, path, host,
-         COALESCE(array_to_string(list_sort(
-           [p for p in string_split(qraw, '&')
-            if p <> ''
-               and substr(regexp_replace(p, '=.*$', ''), 1, 4) <> 'utm_'
-               and not list_contains(
-                     ['fbclid', 'gclid', 'mc_cid', 'mc_eid', 'msclkid',
-                      'ref'],
-                     regexp_replace(p, '=.*$', ''))]), '&'), '') AS q
-  FROM u3
-),
-ucanon AS (
-  SELECT doc_id, text,
-         CASE WHEN auth <> '' THEN
-                scheme || '://' || host || path
-                || CASE WHEN q = '' THEN '' ELSE '?' || q END
-              ELSE u END AS canonical_url
-  FROM u4
-),
+""" + _url_canon_ctes("src") + r""",
 udisp AS (
   SELECT doc_id, text,
          min(doc_id) OVER (PARTITION BY canonical_url) AS first_doc
@@ -6266,52 +5783,22 @@ url_dups AS (
   FROM udisp WHERE doc_id <> first_doc
 ),
 survivors AS (
-  SELECT doc_id, text FROM udisp WHERE doc_id = first_doc
+  SELECT doc_id, string_split(COALESCE(text, ''), chr(10)) AS ls
+  FROM udisp WHERE doc_id = first_doc
 ),
-w1 AS (
-  SELECT doc_id, ls, [trim(x) for x in ls] AS ks
-  FROM (SELECT doc_id, string_split(COALESCE(text, ''), chr(10)) AS ls
-        FROM survivors)
-),
-w2 AS (
-  SELECT doc_id,
-         list_filter(ls, (x, i) -> trim(x) = ''
-                                   OR list_position(ks, trim(x)) = i)
-           AS kept1,
-         CAST(len(ls) - len(list_filter(ls,
-           (x, i) -> trim(x) = ''
-                     OR list_position(ks, trim(x)) = i)) AS INT)
-           AS lines_dropped_within
-  FROM w1
-),
+""" + _line_strip_ctes("survivors") + """,
 l1 AS (
-  SELECT doc_id, kept1 AS ls, lines_dropped_within FROM w2
+  SELECT doc_id, kept AS ls,
+         CAST(len(ls) - len(kept) AS INT) AS lines_dropped_within
+  FROM stripped
 ),
-occ2 AS (
-  SELECT doc_id, i - 1 AS q, md5(trim(ls[i])) AS h
-  FROM l1, UNNEST(generate_series(1, len(ls))) AS t(i)
-  WHERE trim(ls[i]) != ''
-),
-boiler2 AS (
-  SELECT h FROM occ2 GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 3
-),
-rem2 AS (
-  SELECT doc_id, list(q) AS qs
-  FROM occ2 JOIN boiler2 USING (h) GROUP BY doc_id
-),
-cleaned AS (
-  SELECT l.doc_id, l.lines_dropped_within,
-         [l.ls[j] for j in generate_series(1, len(l.ls))
-          if not list_contains(COALESCE(r.qs, []), j - 1)] AS kept2,
-         CAST(len(l.ls) AS INT) AS n_l
-  FROM l1 l LEFT JOIN rem2 r USING (doc_id)
-),
+""" + _line_dedup_ctes("l1", 3) + r""",
 exacted AS (
   SELECT doc_id, lines_dropped_within,
-         CAST(n_l - len(kept2) AS INT) AS lines_dropped_boiler,
+         CAST(len(ls) - len(kept) AS INT) AS lines_dropped_boiler,
          min(doc_id) OVER (
-           PARTITION BY md5(array_to_string(kept2, chr(10)))) AS canonical
-  FROM cleaned
+           PARTITION BY md5(array_to_string(kept, chr(10)))) AS canonical
+  FROM rebuilt
 )
 SELECT doc_id, status, canonical, lines_dropped_within,
        lines_dropped_boiler

@@ -44,14 +44,14 @@ def _py_bpe(texts, n_merges, min_count=2):
     return merges
 
 
-def _learn(spark, texts, n_merges, **kw):
+def _learn(spark, texts, n_merges):
     from n8n_tools_api_spark.operators.bpe import bpe_learn
 
     df = spark.createDataFrame(
         [(str(i), t) for i, t in enumerate(texts)],
         "doc_id string, text string")
     return [(r["rank"], r["left"], r["right"], r["merged"], r["pair_count"])
-            for r in bpe_learn(df, n_merges, **kw).orderBy("rank").collect()]
+            for r in bpe_learn(df, n_merges).orderBy("rank").collect()]
 
 
 class TestBpeLearn:
@@ -84,9 +84,9 @@ class TestBpeLearn:
         assert _learn(spark, texts, 3) == _py_bpe(texts, 3)
 
     def test_early_stop_when_no_pair_reaches_min_count(self, spark):
-        got = _learn(spark, ["ab cd ef"], 5, min_count=2)
+        got = _learn(spark, ["ab cd ef"], 5)
         assert got == []  # every pair is a hapax
-        got1 = _learn(spark, ["ab ab xy"], 5, min_count=2)
+        got1 = _learn(spark, ["ab ab xy"], 5)
         # (a,b) has count 2; after merging, nothing reaches 2 again
         assert [g[1:3] for g in got1] == [("a", "b"), ("ab", "</w>")]
 
@@ -124,8 +124,6 @@ class TestBpeLearn:
         df = spark.createDataFrame([("1", "a b")], "doc_id string, text string")
         with pytest.raises(ValueError):
             bpe_learn(df, 0)
-        with pytest.raises(ValueError):
-            bpe_learn(df, 2, min_count=0)
 
 
 def _py_encode(texts, merges):

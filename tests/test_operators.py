@@ -548,16 +548,15 @@ class TestEmbeddingLsh:
         import random
 
         from n8n_tools_api_spark.operators.dedup import (
-            _hyperplanes, embedding_lsh_signatures)
+            EMBEDDING_LSH_PLANES, _hyperplanes, embedding_lsh_signatures)
 
-        dim, n_planes = 16, 12
+        dim = 16
         rng = random.Random(3)
         vecs = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(20)]
         emb = spark.createDataFrame(vecs, "vec_id int, embedding array<double>")
         got = {r["vec_id"]: r["lsh_bucket"]
-               for r in embedding_lsh_signatures(emb, dim=dim,
-                                                 n_planes=n_planes).collect()}
-        planes = _hyperplanes(n_planes, dim)
+               for r in embedding_lsh_signatures(emb, dim=dim).collect()}
+        planes = _hyperplanes(EMBEDDING_LSH_PLANES, dim)
         for vid, v in vecs:
             expected = 0
             for i, plane in enumerate(planes):
@@ -577,7 +576,7 @@ class TestEmbeddingLsh:
             [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(8)],
             "vec_id int, embedding array<double>",
         )
-        sig = embedding_lsh_signatures(emb, dim=dim, n_planes=12)
+        sig = embedding_lsh_signatures(emb, dim=dim)
         rows = sig.collect()
         assert len(rows) == 8 and all(r["lsh_bucket"] is not None for r in rows)
         # Mistral-sized vectors: the plan must carry ONE flattened
@@ -851,9 +850,6 @@ class TestNearDupComponents:
                 "words": {"lower"},
                 "explode_grams": {"keep", "lower", "name"},
             },
-            "operators/bpe.py": {
-                "bpe_learn": {"min_count"},
-            },
             "operators/curation.py": {
                 "curation_keep_list": {"use_lsh"},
                 "curation_with_quality": {"use_lsh"},
@@ -872,7 +868,6 @@ class TestNearDupComponents:
                 "minhash_banded": {"keep_cols"},
                 "ngram_jaccard_pairs": {"threshold", "candidate_pairs"},
                 "simhash_hamming_pairs": {"max_distance"},
-                "embedding_lsh_signatures": {"n_planes"},
                 "near_dup_components": {"small_graph_max_edges"},
                 "exact_substr_dedup": {"window"},
                 "line_dedup": {"min_doc_freq"},
@@ -962,6 +957,7 @@ class TestNearDupComponents:
         # values no caller set to anything but their default: module
         # constants or inlined literals now
         removed = {
+            "operators/bpe.py": {"bpe_learn": {"min_count"}},
             "operators/curation.py": {
                 "classifier_curation_keep_list": {"use_lsh"},
                 "c4_curation_keep_list": {"use_lsh"},
@@ -972,7 +968,7 @@ class TestNearDupComponents:
                 "minhash_banded": {"num_hashes", "bands", "k"},
                 "minhash_lsh_candidates": {"num_hashes", "bands", "k"},
                 "ngram_jaccard_pairs": {"k"},
-                "embedding_lsh_signatures": {"seed"},
+                "embedding_lsh_signatures": {"seed", "n_planes"},
                 "embedding_near_dups": {"threshold", "n_planes"},
                 "near_dup_components": {"max_iters"},
             },
@@ -1057,7 +1053,7 @@ class TestNearDupComponents:
                                 for k in defaulted(fn)
                                 if k.arg.endswith(("_col", "_cols"))}
         assert public == triples(pinned)
-        assert len(public) == 87
+        assert len(public) == 85
         assert columns == {
             ("operators/lm_ppx.py", "lm_perplexity", "group_col"),
             ("operators/curation.py", "per_host_cap", "quality_col"),
@@ -1071,7 +1067,7 @@ class TestNearDupComponents:
         }
         assert columns <= public
         assert "dims" not in inspect.signature(dataset_card).parameters
-        assert len(triples(removed)) == 57
+        assert len(triples(removed)) == 59
         for mod, fn, arg in triples(removed):
             m = importlib.import_module(
                 "n8n_tools_api_spark." + mod[:-3].replace("/", "."))

@@ -64,6 +64,27 @@ def test_pipeline_golden_covers_registry(pipeline_golden):
     assert set(pipeline_golden) == set(PIPELINE_QUERIES)
 
 
+def test_catalog_replays_are_not_pasted():
+    # a chain oracle and the standalone oracles of its stages share one
+    # fragment per replay: no window of 6 consecutive stripped lines
+    # (each longer than 8 characters) occurs twice in plans/catalog.py
+    from n8n_tools_api_spark.plans import catalog
+
+    with open(catalog.__file__, encoding="utf-8") as f:
+        lines = [line.strip() for line in f]
+    first, repeats = {}, []
+    for i in range(len(lines) - 5):
+        window = tuple(lines[i:i + 6])
+        if all(len(line) > 8 for line in window):
+            if window in first:
+                repeats.append((first[window] + 1, i + 1))
+            else:
+                first[window] = i
+    assert repeats == [], "repeated 6-line windows (first, copy line)"
+    for gone in ("_LANG_SCORE_COLS_ALL", "_FMT_LANG_PICK", "_FMT_LANG_SCORES"):
+        assert not hasattr(catalog, gone), gone
+
+
 @pytest.mark.parametrize("name", sorted(PIPELINE_QUERIES))
 def test_pipeline_queries_run(spark, sf_dir, pipeline_golden, name):
     df = PIPELINE_QUERIES[name](spark, sf_dir)
